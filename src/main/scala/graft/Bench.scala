@@ -89,12 +89,20 @@ object Bench {
         s""""cpu_iters":600000000,"io_bytes":${(16 << 20) * 4L},""" +
         s""""checksum":"${java.lang.Long.toHexString(calChecksum)}"}"""
     var lastPlanned: org.apache.spark.sql.DataFrame = null
-    def run(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
+    // gate -> first failure (class: message). A gate that throws is still
+    // timed like any other, so its time means nothing: the `errors` field
+    // is what tells a crash from a fast gate.
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def run(name: String,
+        fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       try {
         val df = fn(spark, sfDir)
         lastPlanned = df
         df.write.format("noop").mode("overwrite").save()
-      } catch { case _: Throwable => () }
+      } catch { case e: Throwable =>
+        if (!errors.contains(name))
+          errors(name) = (e.getClass.getName + ": " + String.valueOf(e.getMessage)).take(200)
+      }
     // Optimized-plan fingerprint: a STRUCTURAL hash — the pre-order walk
     // of operator node names plus each expression tree's node classes.
     // Literal payloads are deliberately excluded: several gates embed
@@ -150,10 +158,10 @@ object Bench {
       // whatever query runs late.
       spark.sqlContext.clearCache()
       System.gc()
-      if (warmup) run(fn)
+      if (warmup) run(name, fn)
       val times = (1 to repeat).map { _ =>
         val t0 = System.nanoTime()
-        run(fn)
+        run(name, fn)
         (System.nanoTime() - t0) / 1e9
       }.sorted
       val sha = if (lastPlanned != null) planSha(lastPlanned) else "unavailable"
@@ -207,6 +215,12 @@ object Bench {
     val driftJson = s"""{"changed":${arr(changed._2)},""" +
       s""""whitelisted":$whitelistedJson,"added":${arr(added)},""" +
       s""""removed":${arr(removed)},"baseline_n":${baseline.size}}"""
+    def jsonStr(v: String): String = "\"" + v.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
+    val errorsJson = errors.map { case (k, m) => jsonStr(k) + ":" + jsonStr(m) }
+      .mkString("{", ",", "}")
     val setupJson = setupTimes.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val setupTotal = setupTimes.map(_._2).sum
@@ -295,7 +309,7 @@ object Bench {
           baseQs.get(name).map(b => rawSec / math.max(b, 1e-9)) }.sorted
         if (raw.isEmpty) "null" else ms(raw((raw.size - 1) / 2))
     }
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","calibrated_total":$calibratedTotal,"queries":$qs,"plans":$planJson,"plan_drift":$driftJson,"ratios_vs_baseline":$ratiosJson,"ratio_median":$ratioMedian,"ratio_median_raw":$ratioMedianRaw,"setup":$setupJson,"setup_total":$setupTotal,"calibration":$calibrationJson,"repeat":$repeat,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","calibrated_total":$calibratedTotal,"queries":$qs,"plans":$planJson,"errors":$errorsJson,"plan_drift":$driftJson,"ratios_vs_baseline":$ratiosJson,"ratio_median":$ratioMedian,"ratio_median_raw":$ratioMedianRaw,"setup":$setupJson,"setup_total":$setupTotal,"calibration":$calibrationJson,"repeat":$repeat,"sf":"$sfDir"}"""
     if (outPath.nonEmpty) {
       val w = new java.io.PrintWriter(outPath)
       try w.println(line) finally w.close()
@@ -314,7 +328,7 @@ object Bench {
     val slowest = results.sortBy(-_._2).take(20)
       .map { case (k, v, _) => s"\"" + k + "\":" + ms(v) }
       .mkString("{", ",", "}")
-    val compact = s"""{"metric":"total","value":${ms(total)},"unit":"sec","calibrated_total":$calibratedTotal,"queries":$slowest,"n_queries":${results.size},"plan_drift":$driftJson,"ratio_outliers":$outliersJson,"ratio_median":$ratioMedian,"ratio_median_raw":$ratioMedianRaw,"ratio_n":${ratios.size},"setup_total":${ms(setupTotal)},"calibration":$calibrationJson,"repeat":$repeat,"full":"$outPath","plans_file":"$plansPath","sf":"$sfDir"}"""
+    val compact = s"""{"metric":"total","value":${ms(total)},"unit":"sec","calibrated_total":$calibratedTotal,"queries":$slowest,"n_queries":${results.size},"errors":$errorsJson,"plan_drift":$driftJson,"ratio_outliers":$outliersJson,"ratio_median":$ratioMedian,"ratio_median_raw":$ratioMedianRaw,"ratio_n":${ratios.size},"setup_total":${ms(setupTotal)},"calibration":$calibrationJson,"repeat":$repeat,"full":"$outPath","plans_file":"$plansPath","sf":"$sfDir"}"""
     spark.stop()
     println(line)
     println(compact)

@@ -12,10 +12,13 @@ import org.apache.spark.sql.functions._
   * temp table needed), and the writer emits ordered part-files directly —
   * part-file N+1 continues where N ends, so CSV/NDJSON shards are
   * concatenable in name order exactly like the reference's GCS compose.
-  * `singleFile = true` coalesces to one ordered file (small exports only;
-  * at 100 TB keep shards — compose is an object-store concat, not a Spark
-  * job). Parquet shards stay multi-part (reference: storage.py:516-569,
-  * parquet is not byte-concatenable).
+  * `singleFile = true` writes one ordered file (small exports only; at
+  * 100 TB keep shards — compose is an object-store concat, not a Spark
+  * job): the rows move to ONE partition and sort there
+  * (`repartition(1).sortWithinPartitions`), the same order as a range sort
+  * coalesced to one partition but without the range sort's sampling job.
+  * Parquet shards stay multi-part (reference: storage.py:516-569, parquet
+  * is not byte-concatenable).
   */
 object Export {
 
@@ -28,11 +31,12 @@ object Export {
   )
 
   def export(df: DataFrame, outPath: String, opts: ExportOptions = ExportOptions()): Unit = {
-    val ordered = opts.orderBy.filter(df.columns.contains) match {
-      case Some(c) => df.orderBy(col(c).asc)
-      case None    => df
+    val shaped = (opts.orderBy.filter(df.columns.contains), opts.singleFile) match {
+      case (Some(c), true)  => df.repartition(1).sortWithinPartitions(col(c).asc)
+      case (Some(c), false) => df.orderBy(col(c).asc)
+      case (None, true)     => df.coalesce(1)
+      case (None, false)    => df
     }
-    val shaped = if (opts.singleFile) ordered.coalesce(1) else ordered
     val w0 = shaped.write.mode(SaveMode.Overwrite)
     val w = opts.compression.map(c => w0.option("compression", c)).getOrElse(w0)
     opts.format match {

@@ -23,8 +23,12 @@ import java.sql.Timestamp
   * 100 TB target. A full-outer join forces a sort-merge shuffle of the WHOLE
   * target, so when the stage is broadcastable we instead compute
   * `matched ∪ target-anti ∪ inserts` with the stage broadcast — zero shuffle
-  * of the target. For large stages a single full-outer join (one shuffle per
-  * side) wins. `MergeStrategy.Auto` picks by Catalyst's size estimate.
+  * of the target. That shape reads the stage three times, so the deduped
+  * stage is materialized ONCE ([[Lineage.cut]]) and the three branches read
+  * the cut; [[mergeInto]] releases it after the write. For large stages a
+  * single full-outer join (one shuffle per side) wins. `MergeStrategy.Auto`
+  * picks by Catalyst's size estimate against the session's
+  * `autoBroadcastJoinThreshold`.
   */
 object Merge {
 
@@ -64,12 +68,36 @@ object Merge {
     }
   }
 
+  /** The merged table as a frame. On the broadcast path it reads a
+    * materialized stage whose blocks stay until the frame is garbage
+    * collected; a caller that writes the result should use [[mergeInto]],
+    * which releases them as soon as the write returns. */
   def merge(
       target: DataFrame,
       stage: DataFrame,
       jobTimestamp: Timestamp,
       spec: MergeSpec
-  ): DataFrame = {
+  ): DataFrame = plan(target, stage, jobTimestamp, spec)._1
+
+  /** [[merge]] handed to `write` (the table commit); the stage the
+    * broadcast path materialized is released once `write` returns. */
+  def mergeInto[A](
+      target: DataFrame,
+      stage: DataFrame,
+      jobTimestamp: Timestamp,
+      spec: MergeSpec
+  )(write: DataFrame => A): A = {
+    val (merged, cutStage) = plan(target, stage, jobTimestamp, spec)
+    try write(merged) finally cutStage.foreach(Lineage.release)
+  }
+
+  /** The merged frame plus the materialized stage it reads, if any. */
+  private def plan(
+      target: DataFrame,
+      stage: DataFrame,
+      jobTimestamp: Timestamp,
+      spec: MergeSpec
+  ): (DataFrame, Option[DataFrame]) = {
     val keys = spec.uniqueKeys
     require(keys.nonEmpty, "Upsert requires at least one unique key column.")
     val missing = keys.filterNot(stage.columns.contains)
@@ -95,14 +123,14 @@ object Merge {
       case MergeStrategy.BroadcastStage => true
       case MergeStrategy.FullOuter      => false
       case MergeStrategy.Auto =>
-        val thresh = target.sparkSession.conf
-          .get("spark.sql.autoBroadcastJoinThreshold", "10485760").replace("b", "").trim
-        val t = try thresh.toLong catch { case _: NumberFormatException => 10L * 1024 * 1024 }
+        val t = target.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
         t > 0 && deduped.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(t)
     }
 
-    if (useBroadcast) mergeBroadcast(target, deduped, keys, updateCols, jobTimestamp, spec)
-    else mergeFullOuter(target, deduped, keys, updateCols, jobTimestamp, spec)
+    if (useBroadcast) {
+      val cut = Lineage.cut(deduped)
+      (mergeBroadcast(target, cut, keys, updateCols, jobTimestamp, spec), Some(cut))
+    } else (mergeFullOuter(target, deduped, keys, updateCols, jobTimestamp, spec), None)
   }
 
   /** Project a stage row into the target schema for INSERT: stage columns

@@ -8,13 +8,17 @@ import org.apache.spark.sql.functions._
   * predicate/constraint engine (V1, aircan/dependencies/utils/validation.py:
   * 11-102; abort-on-invalid at pipeline_ckan_to_bigquery.py:287-317).
   *
-  * Spark-first design: a single distributed pass builds a per-row array of
+  * Spark-first design: ONE shuffle-free Spark job. Each row gets an array of
   * error structs from `try`-style cast probes (`cast(raw) IS NULL AND raw IS
-  * NOT NULL` = type error) and required-constraint probes, then
-  * `explode + limit(limitErrors)` bounds the driver-side collection — no
-  * second full pass, no driver loop over rows. Unique-key duplicate detection
-  * is one aggregate pass. Error cap default 1000 matches the reference
-  * (validation.py:21).
+  * NOT NULL` = type error) and required/value-constraint probes; each
+  * partition returns its row count and its first `limitErrors` error cells
+  * in scan order. The partitions' cells are concatenated in partition order
+  * and, when the caller has no row-number column, numbered from the
+  * per-partition counts exactly as [[RowNumbers]] numbers rows — so the
+  * reference's streaming counter needs no pre-pass, no separate count and
+  * no per-row loop outside Spark. Unique-key duplicate detection is one
+  * aggregate pass per declared unique field. Error cap default 1000
+  * matches the reference (validation.py:21).
   */
 object Validate {
 
@@ -49,8 +53,11 @@ object Validate {
   /** Validate an all-string frame (as produced by `Reader.allStringSchema`
     * CSV phase 1) against the declared schema.
     *
-    * @param rowIdCol optional column holding the row number for error
-    *   reporting (injected by [[RowNumbers]]).
+    * @param rowIdCol the row-number column for error reporting. When the
+    *   frame has it, its values are the row numbers; when it is absent,
+    *   rows are numbered 1, 2, ... in partition order (what
+    *   [[RowNumbers.withRowNumbers]] would have injected). `None` reports
+    *   no row numbers.
     */
   def validate(
       raw: DataFrame,
@@ -154,24 +161,8 @@ object Validate {
       }
     }
 
-    val rowCount = df0.count()
-
-    val cellErrors: Seq[ValidationError] =
-      if (probes.isEmpty) Nil
-      else {
-        val errCol = filter(array(probes.map(p => p.as("e")): _*), _.isNotNull)
-        df0.select(explode(errCol).as("err"))
-          .select("err.*")
-          .limit(limitErrors)
-          .collect()
-          .toSeq
-          .map(r => ValidationError(
-            if (r.isNullAt(0)) None else Some(r.getLong(0)),
-            r.getString(1),
-            Option(r.getString(2)),
-            r.getString(3),
-            r.getString(4)))
-      }
+    val (rowCount, cellErrors) = scanErrors(df0, probes, limitErrors,
+      positional = rowIdCol.exists(c => !present.contains(c)))
 
     // unique-constraint pass: one aggregate over the declared unique fields
     val uniqueErrs: Seq[ValidationError] = fs.fields
@@ -186,6 +177,52 @@ object Validate {
 
     val errs = (cellErrors ++ uniqueErrs).take(limitErrors)
     ValidationReport(errs.isEmpty, rowCount, errs.size.toLong, errs)
+  }
+
+  /** The one-job pass: per partition, its row count and its first `limit`
+    * error cells (with the row's in-partition index) in scan order. Of
+    * those, the first `limit` cells in partition order are kept — what
+    * `explode(errors).limit(n)` returns — and, if `positional`, numbered
+    * 1-based from the partition row counts. */
+  private def scanErrors(df: DataFrame, probes: Seq[Column], limit: Int,
+      positional: Boolean): (Long, Seq[ValidationError]) = {
+    val errCol =
+      if (probes.isEmpty) lit(null)
+      else filter(array(probes.map(p => p.as("e")): _*), _.isNotNull)
+    val qe = df.select(errCol.as("errs")).queryExecution
+    val parts = org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+      qe, Some("validate")) {
+      qe.toRdd.mapPartitions { rows =>
+        var n = 0L
+        val found = Array.newBuilder[(Long, ValidationError)]
+        var kept = 0
+        while (rows.hasNext) {
+          val r = rows.next()
+          if (kept < limit && !r.isNullAt(0)) {
+            val errs = r.getArray(0)
+            var i = 0
+            while (i < errs.numElements() && kept < limit) {
+              val e = errs.getStruct(i, 5)
+              def str(j: Int) = if (e.isNullAt(j)) null else e.getUTF8String(j).toString
+              found += n -> ValidationError(
+                if (e.isNullAt(0)) None else Some(e.getLong(0)),
+                str(1), Option(str(2)), str(3), str(4))
+              kept += 1
+              i += 1
+            }
+          }
+          n += 1
+        }
+        Iterator.single((n, found.result()))
+      }.collect()
+    }
+    val offsets = parts.scanLeft(1L)(_ + _._1)
+    val errors = parts.iterator.zip(offsets.iterator).flatMap { case ((_, errs), first) =>
+      errs.iterator.map { case (i, e) =>
+        if (positional) e.copy(rowNumber = Some(first + i)) else e
+      }
+    }.take(limit).toVector
+    (parts.map(_._1).sum, errors)
   }
 
   /** Header override (P9): replace declared field names with the actual

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.export.Export
 import graft.ingest.{Reader, SourceFormat}
-import graft.ops.{Merge, RowNumbers, UpdatedAt, Validate}
+import graft.ops.{Merge, UpdatedAt, Validate}
 import graft.schema.FrictionlessSchema
 import graft.table.TableStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -149,8 +149,9 @@ final class Pipeline(
             Reader.ReadOptions(schema = Some(schema)))
         case _ => Reader.readRaw(spark, cfg.resourcePath, fmt, rawOpts)
       }
-      val withId = RowNumbers.withRowNumbers(raw, cfg.rowNumberColumn, 1L)
-      val report = Validate.validate(withId, schema, cfg.limitErrors,
+      // rows are numbered inside the validation pass itself (file order,
+      // 1-based — what the load's RowNumbers injection assigns)
+      val report = Validate.validate(raw, schema, cfg.limitErrors,
         rowIdCol = Some(cfg.rowNumberColumn))
       if (!report.valid) {
         outStatus.update("failed", s"validation failed: ${report.errorCount} errors")
@@ -214,12 +215,12 @@ final class Pipeline(
             store.createLike(cfg.tableName,
               UpdatedAt.stamp(df, jobTs, cfg.updatedAtColumn))
           }
-          val merged = Merge.merge(store.scan(cfg.tableName), df, jobTs,
+          Merge.mergeInto(store.scan(cfg.tableName), df, jobTs,
             Merge.MergeSpec(uniqueKeys = keys,
               preserveColumns = Seq(cfg.rowNumberColumn),
               updatedAtColumn = Some(cfg.updatedAtColumn),
-              dedupOrderCol = Some(cfg.rowNumberColumn)))
-          store.overwrite(cfg.tableName, merged)
+              dedupOrderCol = Some(cfg.rowNumberColumn)))(
+            store.overwrite(cfg.tableName, _))
       }
     } catch {
       case e: PipelineException => throw e

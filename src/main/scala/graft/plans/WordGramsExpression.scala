@@ -32,7 +32,9 @@ case class WordGramsExpression(child: Expression, n: Int)
       TypeCheckResult.TypeCheckFailure("graft_word_grams needs n >= 1")
     else TypeCheckResult.TypeCheckSuccess
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  // nullable elements, as the declarative spec declares them: a shingle
+  // column read back from parquet is nullable, and appends must match it
+  override def dataType: DataType = ArrayType(StringType, containsNull = true)
   override def prettyName: String = "graft_word_grams"
 
   override protected def nullSafeEval(input: Any): Any =

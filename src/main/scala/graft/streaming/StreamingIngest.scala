@@ -85,12 +85,12 @@ object StreamingIngest {
         if (uniqueKeys.isEmpty || !store.exists(table)) {
           store.append(table, stamped)
         } else {
-          store.overwrite(table, Merge.merge(
-            store.scan(table), stamped, ts,
+          Merge.mergeInto(store.scan(table), stamped, ts,
             Merge.MergeSpec(uniqueKeys = uniqueKeys,
               preserveColumns = Seq(rowNumberColumn),
               updatedAtColumn = Some(updatedAtColumn),
-              dedupOrderCol = Some(rowNumberColumn))))
+              dedupOrderCol = Some(rowNumberColumn)))(
+            store.overwrite(table, _))
         }
         ()
       }

@@ -1659,8 +1659,11 @@ final class TableStore(spark: SparkSession, root: String,
 
   private def checkNoTypeChanges(name: String, existing: org.apache.spark.sql.types.StructType,
       incoming: DataFrame): Unit = {
+    // nullability is not a type: tables read back from parquet are nullable
+    // at every level, so a batch that is narrower on nullability is no change
     val old = existing.fields.map(f => f.name -> f.dataType).toMap
-    val changed = incoming.schema.fields.filter(f => old.get(f.name).exists(_ != f.dataType))
+    val changed = incoming.schema.fields.filter(f =>
+      old.get(f.name).exists(o => allNullable(o) != allNullable(f.dataType)))
     if (changed.nonEmpty)
       throw new IllegalArgumentException(
         s"Type change not allowed on append to $name: " +
@@ -2044,15 +2047,101 @@ final class TableStore(spark: SparkSession, root: String,
   }
 
   /** `SELECT COALESCE(MAX(col),0)+1` — next row-number start; missing table
-    * or column → 1, like the reference's fallback (warehouse.py:13-31). */
+    * or column → 1, like the reference's fallback (warehouse.py:13-31).
+    *
+    * Answered from the parquet footers' min/max statistics of the
+    * manifest's data entries (cached per immutable entry directory), so an
+    * append or upsert pays no O(table) scan. The live rows are exactly the
+    * entries' rows unless the manifest holds a deletion vector or an
+    * exclusion entry; those, and any footer without statistics for `col`,
+    * fall back to the scan. */
   def nextRowNumberStart(name: String, col: String = "_id"): Long =
     if (!exists(name)) 1L
     else {
-      val df = scan(name)
-      if (!df.columns.contains(col)) 1L
-      else df.agg(coalesce(max(org.apache.spark.sql.functions.col(col)), lit(0L)))
-        .first().getLong(0) + 1L
+      val entries = readManifest(name)
+      val maxes =
+        if (entries.isEmpty ||
+            entries.exists(e => isDvEntry(e) || parseEntry(e)._2.nonEmpty)) Nil
+        else entries.map(entryColumnMax(name, _, col))
+      if (maxes.nonEmpty && maxes.forall(_.isDefined))
+        maxes.flatten.flatten.maxOption.getOrElse(0L) + 1L
+      else {
+        val df = scan(name)
+        if (!df.columns.contains(col)) 1L
+        else df.agg(coalesce(max(org.apache.spark.sql.functions.col(col)), lit(0L)))
+          .first().getLong(0) + 1L
+      }
     }
+
+  /** MAX of integer column `c` over one data entry's parquet files, from
+    * footer statistics: `Some(None)` when no row holds a value (the entry
+    * lacks the column, or it is all null), `None` when the footers cannot
+    * answer (no statistics, a non-integer column, or `c` is a partition
+    * column). Cached per immutable entry directory. */
+  private def entryColumnMax(name: String, e: String,
+      c: String): Option[Option[Long]] = {
+    import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
+    import scala.jdk.CollectionConverters._
+    val phys = parseEntry(e)._1
+    val p = new Path(tableDir(name), phys)
+    def isPartitionDir(dir: String) = dir.startsWith(c + "=")
+    // the max over parts; one part the footers cannot answer sinks the whole
+    def maxOf(parts: Iterator[Option[Option[Long]]]): Option[Option[Long]] = {
+      var acc = Option.empty[Long]
+      while (parts.hasNext) parts.next() match {
+        case None    => return None
+        case Some(m) => acc = (acc ++ m).maxOption
+      }
+      Some(acc)
+    }
+    def isSignedInt(t: org.apache.parquet.schema.Type): Boolean = t.isPrimitive && {
+      val pt = t.asPrimitiveType
+      val physical = pt.getPrimitiveTypeName
+      (physical == PrimitiveType.PrimitiveTypeName.INT64 ||
+        physical == PrimitiveType.PrimitiveTypeName.INT32) &&
+        (pt.getLogicalTypeAnnotation match {
+          case null => true
+          case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
+          case _ => false
+        })
+    }
+    def chunkMax(chunk: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData)
+        : Option[Option[Long]] = {
+      val stats = chunk.getStatistics
+      if (stats != null && stats.hasNonNullValue)
+        Some(Some(stats.genericGetMax.asInstanceOf[Number].longValue))
+      else if (chunk.getValueCount == 0L || (stats != null && stats.isNumNullsSet &&
+          stats.getNumNulls == chunk.getValueCount)) Some(None) // all null
+      else None
+    }
+    def fileMax(st: org.apache.hadoop.fs.FileStatus): Option[Option[Long]] = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+      try {
+        val schema = r.getFooter.getFileMetaData.getSchema
+        if (!schema.containsField(c)) Some(None)
+        else if (!isSignedInt(schema.getType(schema.getFieldIndex(c)))) None
+        else maxOf(r.getFooter.getBlocks.asScala.iterator.flatMap(
+          _.getColumns.asScala.find(_.getPath.toDotString == c)).map(chunkMax))
+      } finally r.close()
+    }
+    def dirMax(d: Path): Option[Option[Long]] =
+      maxOf(fs(d).listStatus(d).iterator.map { st =>
+        val n = st.getPath.getName
+        if (st.isDirectory) {
+          if (isPartitionDir(n)) None
+          else if (n.startsWith("_") || n.startsWith(".")) Some(None)
+          else dirMax(st.getPath)
+        } else if (n.startsWith("part-") && !n.endsWith(".crc")) fileMax(st)
+        else Some(None)
+      })
+    if (phys.split('/').exists(isPartitionDir)) None
+    else columnMaxCache.computeIfAbsent(
+      fs(p).makeQualified(p).toString + "\u0000" + c, _ => dirMax(p))
+  }
+
+  private val columnMaxCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Option[Option[Long]]]
 
   private[table] def writeSnapshot(name: String, df: DataFrame,
       tagPart: String = "", partitionBy: Seq[String] = Nil): String = {

@@ -25,6 +25,28 @@ class ExportSpec extends SparkSpec {
     assert(ids.toSeq == ids.sorted.toSeq) // ordered by _id
   }
 
+  test("single-file ordered export: the range-sorted file's bytes, no sampling job") {
+    import org.apache.spark.graft.JobRecorder
+    val d = Files.createTempDirectory("graft_export_one")
+    val df = spark.range(0, 5000, 1, 6).toDF("v")
+      .withColumn("_id", (col("v") * 7919) % 5003).select("_id", "v")
+    // the range sort coalesced to one partition: the shape this path replaces
+    val (_, rangeJobs) = JobRecorder.record(spark.sparkContext) {
+      df.orderBy(col("_id").asc).coalesce(1).write
+        .option("header", true).csv(d.resolve("ref").toString)
+    }
+    assert(JobRecorder.sampledForRangeSort(rangeJobs), "the probe must see a range sort's sampling")
+    val (_, jobs) = JobRecorder.record(spark.sparkContext) {
+      Export.export(df, d.resolve("out").toString,
+        Export.ExportOptions(SourceFormat.Csv, singleFile = true))
+    }
+    assert(!JobRecorder.sampledForRangeSort(jobs))
+    assert(jobs.size < rangeJobs.size, s"${jobs.size} jobs vs ${rangeJobs.size}")
+    val Seq(ref) = listFiles(d.resolve("ref"), ".csv")
+    val Seq(out) = listFiles(d.resolve("out"), ".csv")
+    assert(java.util.Arrays.equals(Files.readAllBytes(out), Files.readAllBytes(ref)))
+  }
+
   test("multi-shard export keeps global order across part files (O2)") {
     val d = Files.createTempDirectory("graft_export2")
     val df = spark.range(0, 10000, 1, 8).toDF("_id")

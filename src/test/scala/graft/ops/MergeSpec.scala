@@ -88,4 +88,50 @@ class MergeSpec extends SparkSpec {
     assert(out.length == 4)
     assert(out(2) == Row(3L, 30L, "CHANGED", t1)) // still merges on shared cols
   }
+
+  test("broadcast-path upsert computes the stage once and releases it") {
+    import org.apache.spark.sql.functions._
+    val evals = spark.sparkContext.longAccumulator("stage rows computed")
+    val tick = udf((v: String) => { evals.add(1L); v }).asNondeterministic()
+    val counted = stageDf.withColumn("v", tick(col("v")))
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Merge.mergeInto(targetDf, counted, t1, spec(Merge.MergeStrategy.BroadcastStage))(
+      _.orderBy("k").collect().toSeq)
+    assert(evals.sum == 4L, s"4 stage rows, ${evals.sum} evaluations")
+    assert(out == Merge.merge(targetDf, stageDf, t1, spec(Merge.MergeStrategy.FullOuter))
+      .orderBy("k").collect().toSeq)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore,
+      "the materialized stage must be released after the write")
+  }
+
+  test("Auto reads byte-string broadcast thresholds like the planner does") {
+    import org.apache.spark.sql.functions._
+    // a filter keeps the range's row-count estimate: a big estimate, 4 real rows
+    def stage(estimatedRows: Long) = spark.range(0, estimatedRows, 1, 4).where(col("id") < 4)
+      .select((col("id") + 100).as("_id"), (col("id") * 10).as("k"), lit("z").as("v"))
+    def estimate(df: org.apache.spark.sql.DataFrame) =
+      Merge.dedupStage(df, Seq("k"), Some("_id")).queryExecution.optimizedPlan.stats.sizeInBytes
+    def fullOuter(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.joinType
+      }.contains(org.apache.spark.sql.catalyst.plans.FullOuter)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    val tenMb = BigInt(10L << 20)
+    try {
+      val small = stage(100000L)
+      assert(estimate(small) > BigInt(10L << 10) && estimate(small) < tenMb)
+      spark.conf.set(key, "10k") // below the estimate: shuffle both sides
+      assert(fullOuter(Merge.merge(targetDf, small, t1, spec(Merge.MergeStrategy.Auto))))
+      val large = stage(3000000L)
+      assert(estimate(large) > tenMb && estimate(large) < BigInt(1L << 30))
+      spark.conf.set(key, "1GB") // above the estimate: broadcast the stage
+      val merged = Merge.merge(targetDf, large, t1, spec(Merge.MergeStrategy.Auto))
+      assert(!fullOuter(merged))
+      assert(merged.count() == 4L) // k = 10, 20, 30 matched; k = 0 inserted
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
 }

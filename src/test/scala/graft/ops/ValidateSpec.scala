@@ -114,6 +114,61 @@ class ValidateSpec extends SparkSpec {
     assert(report.errorCount == 10)
   }
 
+  // 1,000 rows in 6 partitions (first ids 0, 166, 333, 500, 666, 833);
+  // bad cells at 165/166 and 332/333 straddle partition boundaries, and
+  // row 332 holds two bad cells
+  private val dirtySchema = FrictionlessSchema(List(
+    FrictionlessField("n", "integer"),
+    FrictionlessField("s", "string", constraints = FieldConstraints(required = true)),
+    FrictionlessField("d", "date")))
+  private val badN = Set(3L, 165L, 166L, 332L, 333L, 600L, 601L, 999L)
+  private val emptyS = Set(4L, 332L, 700L)
+  private def dirty = {
+    import org.apache.spark.sql.functions._
+    spark.range(0, 1000, 1, 6).select(
+      when(col("id").isin(badN.toSeq: _*), lit("bad")).otherwise(col("id").cast("string")).as("n"),
+      when(col("id").isin(emptyS.toSeq: _*), lit("")).otherwise(lit("x")).as("s"),
+      lit("2024-01-01").as("d"))
+  }
+  // every bad cell in row order, then field order: (row number, field, cell, code)
+  private val expectedDirty = (0L until 1000L).flatMap { id =>
+    (if (badN(id)) Seq((id + 1, "n", Option("bad"), "type-error")) else Nil) ++
+      (if (emptyS(id)) Seq((id + 1, "s", Option(""), "constraint-error")) else Nil)
+  }
+
+  test("one-pass report: first N error cells in row order, numbered like RowNumbers") {
+    val numbered = RowNumbers.withRowNumbers(dirty, "_id")
+    for (limit <- Seq(1, 2, 6, 8, 10, 1000)) {
+      val report = Validate.validate(dirty, dirtySchema, limitErrors = limit,
+        rowIdCol = Some("_id"))
+      assert(report.rowCount == 1000L)
+      assert(report.errors.map(e => (e.rowNumber.get, e.fieldName, e.cell, e.code)) ==
+        expectedDirty.take(limit), s"limitErrors = $limit")
+      assert(report.errorCount == math.min(limit, expectedDirty.size).toLong)
+      // the caller's own numbering gives the identical report
+      val viaColumn = Validate.validate(numbered, dirtySchema, limitErrors = limit,
+        rowIdCol = Some("_id"))
+      assert(viaColumn.toJson == report.toJson, s"limitErrors = $limit")
+    }
+    // the positional numbers are RowNumbers' numbers of the bad rows
+    val ids = numbered.where(org.apache.spark.sql.functions.col("n") === "bad")
+      .select("_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids == badN.toSeq.sorted.map(_ + 1))
+    // no row-number column asked for: no row numbers reported
+    assert(Validate.validate(dirty, dirtySchema).errors.forall(_.rowNumber.isEmpty))
+  }
+
+  test("clean input validates in one Spark job with no shuffle") {
+    val clean = dirty.where(!org.apache.spark.sql.functions.col("n").isin("bad") &&
+      org.apache.spark.sql.functions.col("s") =!= "")
+    val (report, jobs) = org.apache.spark.graft.JobRecorder.record(spark.sparkContext) {
+      Validate.validate(clean, dirtySchema, rowIdCol = Some("_id"))
+    }
+    assert(report.valid && report.rowCount == 1000L - (badN ++ emptyS).size)
+    val stagesPerJob = jobs.map(_.stageInfos.size)
+    assert(stagesPerJob == Seq(1), "one job; a second stage would be a shuffle")
+  }
+
   test("declared field absent from data → missing-field errors") {
     val narrow = spark.createDataFrame(
       java.util.List.of(Row("1", "a")),

@@ -354,6 +354,79 @@ class TableStoreSpec extends SparkSpec {
     assert(store.nextRowNumberStart("t") == 7L) // max 6 + 1
   }
 
+  /** The reference answer: `COALESCE(MAX(_id), 0) + 1` over the live rows. */
+  private def scannedNextId(store: TableStore, t: String): Long = {
+    val df = store.scan(t)
+    if (!df.columns.contains("_id")) 1L
+    else df.agg(coalesce(max(col("_id")), lit(0L))).first().getLong(0) + 1L
+  }
+
+  test("nextRowNumberStart from parquet footers: the scan's MAX+1, no Spark job") {
+    val (store, dir) = newStoreAt
+    def check(t: String, what: String): Unit = {
+      val want = scannedNextId(store, t)
+      // a second store on the same root has no cached footers
+      val cold = new TableStore(spark, dir, gcGraceMs = 0L)
+      val (got, jobs) = org.apache.spark.graft.JobRecorder.record(spark.sparkContext) {
+        cold.nextRowNumberStart(t)
+      }
+      assert(got == want, what)
+      val launched = jobs.size
+      assert(launched == 0, what)
+      assert(store.nextRowNumberStart(t) == want, what)
+    }
+    store.append("t", spark.range(1, 6).toDF("_id").withColumn("v", lit("a")))
+    check("t", "one append")
+    store.append("t", spark.range(6, 41, 1, 3).toDF("_id").withColumn("v", lit("b")))
+    store.append("t", spark.range(41, 44).toDF("_id").withColumn("v", lit("c")))
+    check("t", "several appends")
+    store.append("t", spark.range(3).toDF("w").withColumn("v", lit("d")))
+    check("t", "a snapshot without _id")
+    store.append("t", spark.range(2).select(lit(null).cast("long").as("_id"), lit("e").as("v")))
+    check("t", "an all-null _id snapshot")
+    store.compact("t", 1)
+    assert(store.readManifest("t").size == 1)
+    check("t", "compaction")
+    // a partition-subset entry: the dropped partitions hold the largest ids
+    store.overwritePartitioned("p", spark.range(1, 31).toDF("_id").withColumn("lang",
+      when(col("_id") > 20, "fr").when(col("_id") > 10, "de").otherwise("en")), Seq("lang"))
+    assert(store.dropPartitions("p", "lang", Seq("fr", "de")))
+    assert(store.readManifest("p").exists(_.contains("/lang=en")))
+    check("p", "a partition-subset entry")
+    assert(store.nextRowNumberStart("p") == 11L)
+    // an id-less table starts at 1
+    store.append("q", spark.range(3).toDF("w"))
+    check("q", "no _id column")
+  }
+
+  test("nextRowNumberStart falls back to the scan when a deletion vector removes the max row") {
+    val store = newStore
+    store.append("t", spark.range(1, 11).toDF("_id").withColumn("v", lit("a")))
+    store.deleteByKeysDV("t", Seq("_id"), spark.range(10, 11).toDF("_id"))
+    assert(store.nextRowNumberStart("t") == 10L)
+    assert(scannedNextId(store, "t") == 10L)
+  }
+
+  test("append of shingle arrays onto a table read back from parquet") {
+    val store = newStore
+    def shingles(texts: String*) = spark.createDataFrame(
+      java.util.List.of(texts.map(org.apache.spark.sql.Row(_)): _*),
+      org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types.StructField(
+        "text", org.apache.spark.sql.types.StringType))))
+      .select(col("text"), graft.ext.TextHash.shingles(col("text"), 2).as("sh"))
+    store.append("s", shingles("a b c d", "b c d e"))
+    store.append("s", shingles("c d e f"))
+    // narrower nullability at any level is not a type change
+    store.append("s", spark.range(1).select(lit("x").as("text"), array(lit("x y")).as("sh")))
+    assert(store.scan("s").count() == 4L)
+    assert(store.scan("s").where(col("text") === "c d e f")
+      .select("sh").head().getSeq[String](0) == Seq("c d", "d e", "e f"))
+    // a real element-type change still is
+    intercept[IllegalArgumentException] {
+      store.append("s", spark.range(1).select(lit("y").as("text"), array(col("id")).as("sh")))
+    }
+  }
+
   test("deleteWhere: SQL DELETE semantics — null predicate keeps the row") {
     import spark.implicits._
     val store = newStore
