@@ -28,6 +28,9 @@ The previous fetchall()-based compare normalized all numerics to Python
 scalars where 3 == 3.0, and let exactly these classes of drift through
 (they cost rounds 4 and 5 one red gate row each).
 
+A gate Verify lists in errors.json (it threw) counts as a failure:
+`FAIL <gate>: crashed: <Class: message>`.
+
 Usage: python3 scripts/check.py <sfDir> <verifyOutDir>
 """
 import json
@@ -110,8 +113,15 @@ def main(sf_dir, out_dir):
         oracles = json.load(f)
     failed = []
     import os
+    crashed = {}
+    if os.path.exists(f"{out_dir}/errors.json"):
+        with open(f"{out_dir}/errors.json") as f:
+            crashed = json.load(f)
+    for name, err in sorted(crashed.items()):
+        failed.append(name)
+        print(f"FAIL {name}: crashed: {err}")
     declared = sorted(d for d in os.listdir(out_dir)
-                      if os.path.isdir(f"{out_dir}/{d}"))
+                      if os.path.isdir(f"{out_dir}/{d}") and d not in crashed)
     for name in declared:
         try:
             spark = prep(pd.read_parquet(f"{out_dir}/{name}"))
@@ -144,7 +154,8 @@ def main(sf_dir, out_dir):
             print(f"FAIL {name}: vacuous (0 rows on both sides)")
         else:
             print(f"PASS {name} ({len(spark[0])} rows)")
-    print(f"\n{len(declared) - len(failed)}/{len(declared)} passed")
+    total = len(declared) + len(crashed)
+    print(f"\n{total - len(failed)}/{total} passed")
     return 1 if failed else 0
 
 

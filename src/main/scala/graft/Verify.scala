@@ -2,7 +2,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. A gate that
+  * throws leaves no output dir (a stale one from an earlier run is
+  * deleted) and is listed in errors.json as `{gate: "Class: message"}`. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -38,11 +40,16 @@ object Verify {
           case _ => org.apache.spark.sql.functions.col(f.name)
         }
       }.toIndexedSeq: _*)
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     selected.foreach { case (name, fn) =>
+      val out = new java.io.File(s"$outDir/$name")
       try canon(fn(spark, sfDir)).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+        .parquet(out.toString)
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        errors(name) =
+          (e.getClass.getName + ": " + String.valueOf(e.getMessage)).take(200)
+        org.apache.commons.io.FileUtils.deleteDirectory(out)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -60,6 +67,8 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/errors.json"),
+      errors.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     spark.stop()
   }
 }

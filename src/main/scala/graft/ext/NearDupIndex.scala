@@ -115,9 +115,7 @@ object NearDupIndex {
   ): Unit = {
     val rows = docIds.select(col(docIds.columns.head).cast("bigint")
       .as("doc_id"))
-    if (store.exists(s"${name}_tombstones"))
-      store.append(s"${name}_tombstones", rows)
-    else store.overwrite(s"${name}_tombstones", rows)
+    store.append(s"${name}_tombstones", rows)
   }
 
   /** Compact the index: drop tombstoned docs' band and shingle rows and

@@ -961,14 +961,8 @@ object Retention {
     // it cleanly (partition values still live) touching no index, which
     // is correct because the drop below never ran either.
     graft.ops.Overlap.par(Seq(
-      () =>
-        if (store.exists(journalName(table)))
-          store.append(journalName(table), payload)
-        else store.overwrite(journalName(table), payload),
-      () =>
-        if (store.exists(journalStateName(table)))
-          store.append(journalStateName(table), state)
-        else store.overwrite(journalStateName(table), state)))
+      () => store.append(journalName(table), payload),
+      () => store.append(journalStateName(table), state)))
   }
 
   /** Append a `__commit__`/`__done__` progress marker (same schema as

@@ -618,9 +618,7 @@ object Retrieval {
   ): Unit = {
     val rows = docIds.select(col(docIds.columns.head).cast("bigint")
       .as("doc_id"))
-    if (store.exists(s"${name}_pos_tombstones"))
-      store.append(s"${name}_pos_tombstones", rows)
-    else store.overwrite(s"${name}_pos_tombstones", rows)
+    store.append(s"${name}_pos_tombstones", rows)
   }
 
   /** Reciprocal-rank fusion of N ranked-retrieval arms (Cormack, Clarke &

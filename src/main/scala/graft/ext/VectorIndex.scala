@@ -108,9 +108,7 @@ object VectorIndex {
   ): Unit = {
     val rows = vecIds.select(col(vecIds.columns.head).cast("bigint")
       .as("vec_id"))
-    if (store.exists(s"${name}_tombstones"))
-      store.append(s"${name}_tombstones", rows)
-    else store.overwrite(s"${name}_tombstones", rows)
+    store.append(s"${name}_tombstones", rows)
   }
 
   /** Compact the index: physically drop tombstoned vectors and clear the

@@ -91,6 +91,24 @@ object Merge {
     try write(merged) finally cutStage.foreach(Lineage.release)
   }
 
+  /** Upsert `stage` into store table `table`, the one path batch
+    * ([[graft.pipeline.Pipeline]]) and stream
+    * ([[graft.streaming.StreamingIngest.ingestAvailableNow]]) share. An
+    * absent target is first cloned from the stage's schema
+    * (warehouse.py:138-151), so even the first load dedups its keys. */
+  def upsertInto(
+      store: graft.table.TableStore,
+      table: String,
+      stage: DataFrame,
+      jobTimestamp: Timestamp,
+      spec: MergeSpec
+  ): Unit = {
+    store.createLike(table, spec.updatedAtColumn.fold(stage)(
+      UpdatedAt.stamp(stage, jobTimestamp, _)))
+    mergeInto(store.scan(table), stage, jobTimestamp, spec)(
+      store.overwrite(table, _))
+  }
+
   /** The merged frame plus the materialized stage it reads, if any. */
   private def plan(
       target: DataFrame,

@@ -210,17 +210,11 @@ final class Pipeline(
           store.compact(cfg.tableName, cfg.compactAfterSnapshots)
         case IngestionMethod.Upsert =>
           val keys = Validate.requireUniqueKeys(schema, df.columns.toIndexedSeq)
-          if (!store.exists(cfg.tableName)) {
-            // clone-from-stage-schema when target absent (warehouse.py:138-151)
-            store.createLike(cfg.tableName,
-              UpdatedAt.stamp(df, jobTs, cfg.updatedAtColumn))
-          }
-          Merge.mergeInto(store.scan(cfg.tableName), df, jobTs,
+          Merge.upsertInto(store, cfg.tableName, df, jobTs,
             Merge.MergeSpec(uniqueKeys = keys,
               preserveColumns = Seq(cfg.rowNumberColumn),
               updatedAtColumn = Some(cfg.updatedAtColumn),
-              dedupOrderCol = Some(cfg.rowNumberColumn)))(
-            store.overwrite(cfg.tableName, _))
+              dedupOrderCol = Some(cfg.rowNumberColumn)))
       }
     } catch {
       case e: PipelineException => throw e

@@ -1,9 +1,10 @@
 package graft.streaming
 
+import graft.ext.Retention
 import graft.ops.Lineage.CutOps
 import graft.ops.Merge
 import graft.table.TableStore
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
@@ -16,6 +17,12 @@ import java.sql.Timestamp
   * (warehouse.py:13-31); the Spark-native equivalent is a file-source stream
   * with `Trigger.AvailableNow` + checkpointed offsets, where each micro-batch
   * runs the same append/merge the batch pipeline uses (`foreachBatch`).
+  * Every `*IngestAvailableNow` gate drains through the one private `drain`
+  * helper and keeps only its per-batch logic. A gate's first batch creates
+  * its table by appending ([[TableStore.append]] and its tagged and
+  * partitioned forms commit creation through the manifest CAS) or, keyed,
+  * through [[graft.ops.Merge.upsertInto]] — never by an exists-then-
+  * overwrite branch, which lets two first writers drop each other's rows.
   * Windowed aggregation helpers are expressed once and usable from both
   * batch and streaming plans (same functions, same semantics; in streaming
   * add `withWatermark` for state eviction).
@@ -50,6 +57,37 @@ object StreamingIngest {
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.streaming")
 
+  /** Process everything available on `stream` through `onBatch`, then stop
+    * (AvailableNow) — rerunning continues from `checkpointDir`. */
+  private def drain(stream: DataFrame, checkpointDir: String)(
+      onBatch: (DataFrame, Long) => Unit): Unit =
+    stream.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(onBatch)
+      .start()
+      .awaitTermination()
+
+  /** A file-source stream over `sourceDir`; `maxFilesPerTrigger` unset
+    * leaves the trigger sizing to Spark. */
+  private def files(spark: SparkSession, sourceDir: String,
+      schema: StructType, format: String,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val base = spark.readStream.schema(schema)
+    val reader = maxFilesPerTrigger.fold(base)(base.option("maxFilesPerTrigger", _))
+    format match {
+      case "csv"     => reader.option("header", true).csv(sourceDir)
+      case "json"    => reader.json(sourceDir)
+      case "parquet" => reader.parquet(sourceDir)
+      case other     => throw new IllegalArgumentException(s"format: $other")
+    }
+  }
+
+  /** The gates' source: json files, one per micro-batch. */
+  private def jsonFiles(spark: SparkSession, sourceDir: String,
+      schema: StructType): DataFrame =
+    files(spark, sourceDir, schema, "json", maxFilesPerTrigger = Some(1))
+
   /** Incrementally ingest files appearing under `sourceDir` into `table`.
     * Each micro-batch appends (or merges when `uniqueKeys` is set) through
     * the same TableStore used by batch. Processes everything available, then
@@ -65,38 +103,21 @@ object StreamingIngest {
       uniqueKeys: Seq[String] = Nil,
       rowNumberColumn: String = "_id",
       updatedAtColumn: String = "_updated_at"
-  ): Unit = {
-    val reader = spark.readStream.schema(schema)
-    val stream = format match {
-      case "csv"     => reader.option("header", true).csv(sourceDir)
-      case "json"    => reader.json(sourceDir)
-      case "parquet" => reader.parquet(sourceDir)
-      case other     => throw new IllegalArgumentException(s"format: $other")
+  ): Unit =
+    drain(files(spark, sourceDir, schema, format), checkpointDir) { (batch, _) =>
+      val ts = new Timestamp(System.currentTimeMillis())
+      val start = store.nextRowNumberStart(table, rowNumberColumn)
+      val numbered = graft.ops.RowNumbers
+        .withRowNumbers(batch, rowNumberColumn, start)
+      val stamped = graft.ops.UpdatedAt.stamp(numbered, ts, updatedAtColumn)
+      if (uniqueKeys.isEmpty) store.append(table, stamped)
+      else
+        Merge.upsertInto(store, table, stamped, ts,
+          Merge.MergeSpec(uniqueKeys = uniqueKeys,
+            preserveColumns = Seq(rowNumberColumn),
+            updatedAtColumn = Some(updatedAtColumn),
+            dedupOrderCol = Some(rowNumberColumn)))
     }
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ts = new Timestamp(System.currentTimeMillis())
-        val start = store.nextRowNumberStart(table, rowNumberColumn)
-        val numbered = graft.ops.RowNumbers
-          .withRowNumbers(batch, rowNumberColumn, start)
-        val stamped = graft.ops.UpdatedAt.stamp(numbered, ts, updatedAtColumn)
-        if (uniqueKeys.isEmpty || !store.exists(table)) {
-          store.append(table, stamped)
-        } else {
-          Merge.mergeInto(store.scan(table), stamped, ts,
-            Merge.MergeSpec(uniqueKeys = uniqueKeys,
-              preserveColumns = Seq(rowNumberColumn),
-              updatedAtColumn = Some(updatedAtColumn),
-              dedupOrderCol = Some(rowNumberColumn)))(
-            store.overwrite(table, _))
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
 
   /** Incrementally ingest files into a HIVE-PARTITIONED table: each
     * micro-batch lands as one partitioned snapshot
@@ -122,44 +143,31 @@ object StreamingIngest {
       compactAfterSnapshots: Option[Int] = None
   ): Unit = {
     require(partitionCols.nonEmpty, "partitionedIngestAvailableNow: partition columns")
-    val reader = spark.readStream.schema(schema)
-    val stream = format match {
-      case "csv"     => reader.option("header", true).csv(sourceDir)
-      case "json"    => reader.json(sourceDir)
-      case "parquet" => reader.parquet(sourceDir)
-      case other     => throw new IllegalArgumentException(s"format: $other")
+    drain(files(spark, sourceDir, schema, format), checkpointDir) { (batch, _) =>
+      val shaped = derive(batch)
+      // an empty replayed batch must not litter an empty snapshot
+      if (!shaped.isEmpty) store.appendPartitioned(table, shaped, partitionCols)
+      // standing maintenance: fold the micro-batch chain back to one
+      // PARTITIONED snapshot once it crosses the threshold — the
+      // layout-preserving compaction (plain compact would flatten the
+      // hive dirs and break the next retention sweep's O(metadata)
+      // contract), and the point where earlier drops' bytes reclaim.
+      // Guarded on existence: an all-empty replay before the first
+      // data batch has no table to fold and must not fail the stream.
+      // BEST-EFFORT: the appendPartitioned above already committed and
+      // is NOT idempotent — a compaction failure here (e.g. the
+      // conditional rewrite losing 8 races to an external writer) must
+      // not fail the batch, or the checkpoint replay would append the
+      // batch a second time (duplicate rows) just to redo maintenance
+      // the next batch's fold retries anyway.
+      if (store.exists(table))
+        compactAfterSnapshots.foreach(n =>
+          try store.compactPartitioned(table, partitionCols, maxSnapshots = n)
+          catch { case scala.util.control.NonFatal(e) =>
+            log.warn(s"standing compaction of $table failed (batch " +
+              "already committed; next batch retries the fold)", e)
+          })
     }
-    val q = stream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val shaped = derive(batch)
-        // an empty replayed batch must not litter an empty snapshot
-        if (!shaped.isEmpty) store.appendPartitioned(table, shaped, partitionCols)
-        // standing maintenance: fold the micro-batch chain back to one
-        // PARTITIONED snapshot once it crosses the threshold — the
-        // layout-preserving compaction (plain compact would flatten the
-        // hive dirs and break the next retention sweep's O(metadata)
-        // contract), and the point where earlier drops' bytes reclaim.
-        // Guarded on existence: an all-empty replay before the first
-        // data batch has no table to fold and must not fail the stream.
-        // BEST-EFFORT: the appendPartitioned above already committed and
-        // is NOT idempotent — a compaction failure here (e.g. the
-        // conditional rewrite losing 8 races to an external writer) must
-        // not fail the batch, or the checkpoint replay would append the
-        // batch a second time (duplicate rows) just to redo maintenance
-        // the next batch's fold retries anyway.
-        if (store.exists(table))
-          compactAfterSnapshots.foreach(n =>
-            try store.compactPartitioned(table, partitionCols, maxSnapshots = n)
-            catch { case scala.util.control.NonFatal(e) =>
-              log.warn(s"standing compaction of $table failed (batch " +
-                "already committed; next batch retries the fold)", e)
-            })
-        ()
-      }
-      .start()
-    q.awaitTermination()
   }
 
   private def flattenWindow(aggDf: DataFrame, windowCol: String, startAlias: String): DataFrame = {
@@ -493,28 +501,13 @@ object StreamingIngest {
       checkpointDir: String,
       textCol: String,
       idCol: String
-  ): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val keep = graft.ext.Dedup.incrementalNew(
-          if (store.exists(table)) store.scan(table)
-          else batch.sparkSession.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), batch.schema),
-          batch, textCol, idCol)
-          .select(col("keep_id").as(idCol))
-        val fresh = batch.join(keep, idCol)
-        if (store.exists(table)) store.append(table, fresh)
-        else store.overwrite(table, fresh)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+  ): Unit =
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch, _) =>
+      val keep = graft.ext.Dedup.incrementalNew(
+        corpusOrEmpty(store, table, batch), batch, textCol, idCol)
+        .select(col("keep_id").as(idCol))
+      store.append(table, batch.join(keep, idCol))
+    }
 
   /** Streaming LM quality gate: ingest a document stream keeping only
     * docs whose logppl under PRE-TRAINED LM tables clears `maxLogPpl` —
@@ -535,26 +528,14 @@ object StreamingIngest {
       idCol: String,
       lmTables: (DataFrame, DataFrame, DataFrame),
       maxLogPpl: Double
-  ): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val keep = graft.ext.LanguageModel
-          .scoreWithTables(batch, textCol, idCol, lmTables)
-          .where(col("logppl") <= maxLogPpl)
-          .select(col(idCol))
-        val fresh = batch.join(keep, idCol)
-        if (store.exists(table)) store.append(table, fresh)
-        else store.overwrite(table, fresh)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+  ): Unit =
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch, _) =>
+      val keep = graft.ext.LanguageModel
+        .scoreWithTables(batch, textCol, idCol, lmTables)
+        .where(col("logppl") <= maxLogPpl)
+        .select(col(idCol))
+      store.append(table, batch.join(keep, idCol))
+    }
 
   /** Streaming classifier screen: the FineWeb-Edu-style supervised
     * quality gate as a continuous ingest stage — each micro-batch scores
@@ -576,26 +557,14 @@ object StreamingIngest {
       weights: DataFrame,
       buckets: Int,
       minMargin: Long = 0L
-  ): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val keep = graft.ext.LogReg
-          .score(batch, weights, textCol, idCol, buckets)
-          .where(col("zq") >= minMargin)
-          .select(col(idCol))
-        val fresh = batch.join(keep, idCol)
-        if (store.exists(table)) store.append(table, fresh)
-        else store.overwrite(table, fresh)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+  ): Unit =
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch, _) =>
+      val keep = graft.ext.LogReg
+        .score(batch, weights, textCol, idCol, buckets)
+        .where(col("zq") >= minMargin)
+        .select(col(idCol))
+      store.append(table, batch.join(keep, idCol))
+    }
 
   /** Streaming language router: every micro-batch is classified under a
     * PRE-TRAINED char-n-gram NB langid model
@@ -620,26 +589,14 @@ object StreamingIngest {
       priors: DataFrame,
       n: Int = graft.ext.LangId.DefaultN,
       buckets: Int = 2000
-  ): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val preds = graft.ext.LangId.classifyWith(
-          batch, model, priors, textCol, idCol, n, buckets)
-          .select(col(idCol), col("lang").as("lang_pred"))
-        val routed = batch.join(preds, Seq(idCol), "left")
-          .withColumn("lang_pred", coalesce(col("lang_pred"), lit("und")))
-        if (store.exists(table)) store.append(table, routed)
-        else store.overwrite(table, routed)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+  ): Unit =
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch, _) =>
+      val preds = graft.ext.LangId.classifyWith(
+        batch, model, priors, textCol, idCol, n, buckets)
+        .select(col(idCol), col("lang").as("lang_pred"))
+      store.append(table, batch.join(preds, Seq(idCol), "left")
+        .withColumn("lang_pred", coalesce(col("lang_pred"), lit("und"))))
+    }
 
   /** Streaming drift monitor: every micro-batch's token distribution is
     * compared against a PRECOMPUTED reference histogram
@@ -661,38 +618,25 @@ object StreamingIngest {
       buckets: Int,
       maxJs: Double,
       onDrift: (Long, Long, Double) => Unit = (_, _, _) => ()
-  ): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val row = graft.ext.Drift
-          .jsDivergenceAgainstHistogram(refHist, batch, textCol, buckets)
-          .first()
-        // A token-free micro-batch has no distribution to compare:
-        // jsOfHistograms yields js = NULL there, and getDouble on a null
-        // cell would kill the whole stream. Treat it as quarantined
-        // (reported with js = NaN, never appended) — the monitor's job is
-        // to gate batches, not to die on an empty one.
-        val nBatch = if (row.isNullAt(1)) 0L else row.getLong(1)
-        if (nBatch == 0L || row.isNullAt(2)) {
-          onDrift(batchId, nBatch, Double.NaN)
-        } else {
-          val js = row.getDouble(2)
-          onDrift(batchId, nBatch, js)
-          if (js <= maxJs) {
-            if (store.exists(table)) store.append(table, batch)
-            else store.overwrite(table, batch)
-          }
-        }
-        ()
+  ): Unit =
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch, batchId) =>
+      val row = graft.ext.Drift
+        .jsDivergenceAgainstHistogram(refHist, batch, textCol, buckets)
+        .first()
+      // A token-free micro-batch has no distribution to compare:
+      // jsOfHistograms yields js = NULL there, and getDouble on a null
+      // cell would kill the whole stream. Treat it as quarantined
+      // (reported with js = NaN, never appended) — the monitor's job is
+      // to gate batches, not to die on an empty one.
+      val nBatch = if (row.isNullAt(1)) 0L else row.getLong(1)
+      if (nBatch == 0L || row.isNullAt(2)) {
+        onDrift(batchId, nBatch, Double.NaN)
+      } else {
+        val js = row.getDouble(2)
+        onDrift(batchId, nBatch, js)
+        if (js <= maxJs) store.append(table, batch)
       }
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** EXACTLY-ONCE streaming append: every micro-batch commits through
     * [[graft.table.TableStore.appendTagged]] with `<sinkId>_b<batchId>` as
@@ -712,20 +656,10 @@ object StreamingIngest {
       table: String,
       checkpointDir: String,
       sinkId: String = "s0"
-  ): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        store.appendTagged(table, batch, s"${sinkId}_b$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+  ): Unit =
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch, batchId) =>
+      store.appendTagged(table, batch, s"${sinkId}_b$batchId")
+    }
 
   /** Streaming LATE-DATA accounting: rows whose event time falls more
     * than `maxLatenessMs` behind the stream's running high-watermark (the
@@ -759,50 +693,38 @@ object StreamingIngest {
     require(maxLatenessMs >= 0, "maxLatenessMs must be non-negative")
     val wmTable = table + "__wm"
     val lateTable = table + "__late"
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import spark.implicits._
-        val wm: Option[Long] =
-          if (store.exists(wmTable))
-            Some(store.scan(wmTable).first().getLong(0))
-          else None
-        val stamped = batch.withColumn("__ms",
-          expr(s"unix_millis(cast($tsCol as timestamp))"))
-        val isLate = wm match {
-          case Some(w) => col("__ms") < lit(w - maxLatenessMs)
-          case None    => lit(false)
-        }
-        val late = stamped.where(isLate)
-          .withColumn("batch_id", lit(batchId))
-          .withColumn("late_by_ms",
-            lit(wm.getOrElse(0L) - maxLatenessMs) - col("__ms"))
-          .drop("__ms")
-        val onTime = stamped.where(!isLate).drop("__ms")
-        def land(t: String, df: DataFrame): Long = {
-          val n = df.count()
-          if (n > 0) {
-            if (store.exists(t)) store.append(t, df)
-            else store.overwrite(t, df)
-          }
-          n
-        }
-        val nLate = land(lateTable, late)
-        val nOnTime = land(table, onTime)
-        val batchMax = stamped.agg(max(col("__ms"))).first()
-        if (!batchMax.isNullAt(0)) {
-          val newWm = math.max(wm.getOrElse(Long.MinValue), batchMax.getLong(0))
-          store.overwrite(wmTable, Seq(newWm).toDF("wm_ms"))
-        }
-        onBatch(batchId, nOnTime, nLate)
-        ()
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch, batchId) =>
+      import spark.implicits._
+      val wm: Option[Long] =
+        if (store.exists(wmTable))
+          Some(store.scan(wmTable).first().getLong(0))
+        else None
+      val stamped = batch.withColumn("__ms",
+        expr(s"unix_millis(cast($tsCol as timestamp))"))
+      val isLate = wm match {
+        case Some(w) => col("__ms") < lit(w - maxLatenessMs)
+        case None    => lit(false)
       }
-      .start()
-    q.awaitTermination()
+      val late = stamped.where(isLate)
+        .withColumn("batch_id", lit(batchId))
+        .withColumn("late_by_ms",
+          lit(wm.getOrElse(0L) - maxLatenessMs) - col("__ms"))
+        .drop("__ms")
+      val onTime = stamped.where(!isLate).drop("__ms")
+      def land(t: String, df: DataFrame): Long = {
+        val n = df.count()
+        if (n > 0) store.append(t, df)
+        n
+      }
+      val nLate = land(lateTable, late)
+      val nOnTime = land(table, onTime)
+      val batchMax = stamped.agg(max(col("__ms"))).first()
+      if (!batchMax.isNullAt(0)) {
+        val newWm = math.max(wm.getOrElse(Long.MinValue), batchMax.getLong(0))
+        store.overwrite(wmTable, Seq(newWm).toDF("wm_ms"))
+      }
+      onBatch(batchId, nOnTime, nLate)
+    }
   }
 
   /** Streaming EMBEDDING-drift gate: each micro-batch's per-key quantized
@@ -832,35 +754,22 @@ object StreamingIngest {
       refCentroids: DataFrame, // Drift.quantizedCentroids(..., "ref")
       minCosine: Double,
       onBatch: (Long, Long, Double) => Unit = (_, _, _) => () // (id, keys, minCos)
-  ): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val row = graft.ext.Drift
-          .embeddingDriftAgainstCentroids(refCentroids, batch,
-            vecCol, keyCol, nDims)
-          .agg(count(lit(1)).as("k"), min(col("cosine")).as("c"))
-          .first()
-        val nKeys = row.getLong(0)
-        if (nKeys == 0L || row.isNullAt(1)) {
-          onBatch(batchId, nKeys, Double.NaN)
-        } else {
-          val minCos = row.getDouble(1)
-          onBatch(batchId, nKeys, minCos)
-          if (minCos >= minCosine) {
-            if (store.exists(table)) store.append(table, batch)
-            else store.overwrite(table, batch)
-          }
-        }
-        ()
+  ): Unit =
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch, batchId) =>
+      val row = graft.ext.Drift
+        .embeddingDriftAgainstCentroids(refCentroids, batch,
+          vecCol, keyCol, nDims)
+        .agg(count(lit(1)).as("k"), min(col("cosine")).as("c"))
+        .first()
+      val nKeys = row.getLong(0)
+      if (nKeys == 0L || row.isNullAt(1)) {
+        onBatch(batchId, nKeys, Double.NaN)
+      } else {
+        val minCos = row.getDouble(1)
+        onBatch(batchId, nKeys, minCos)
+        if (minCos >= minCosine) store.append(table, batch)
       }
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** Streaming batch-acceptance gate: the dataset-level constraint
     * suite ([[graft.ops.Checks]], the Pipeline's pre-write gate) per
@@ -879,24 +788,13 @@ object StreamingIngest {
       checkpointDir: String,
       checks: Seq[graft.ops.Checks.Check],
       onReject: (Long, Seq[org.apache.spark.sql.Row]) => Unit = (_, _) => ()
-  ): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val verdicts = graft.ops.Checks.run(batch, checks).collect()
-        val failed = verdicts.filter(!_.getBoolean(6)).toSeq
-        if (failed.nonEmpty) onReject(batchId, failed)
-        else if (store.exists(table)) store.append(table, batch)
-        else store.overwrite(table, batch)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+  ): Unit =
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch, batchId) =>
+      val verdicts = graft.ops.Checks.run(batch, checks).collect()
+      val failed = verdicts.filter(!_.getBoolean(6)).toSeq
+      if (failed.nonEmpty) onReject(batchId, failed)
+      else store.append(table, batch)
+    }
 
   /** Streaming blocklist screen: the C4-style badwords drop as a
     * continuous ingest stage — each micro-batch runs the one-pass
@@ -916,34 +814,44 @@ object StreamingIngest {
       patterns: Seq[String],
       maxHits: Long = 0L,
       boundary: Boolean = true
-  ): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val fresh = graft.ext.Blocklist.dropBlocked(
-          batch, textCol, patterns, maxHits, boundary)
-        if (store.exists(table)) store.append(table, fresh)
-        else store.overwrite(table, fresh)
-        ()
+  ): Unit =
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch, _) =>
+      store.append(table, graft.ext.Blocklist.dropBlocked(
+        batch, textCol, patterns, maxHits, boundary))
+    }
+
+  /** The corpus so far, or an empty frame of the batch's shape before the
+    * first batch lands — the exact-dedup screens' probe side. */
+  private def corpusOrEmpty(store: TableStore, table: String,
+      batch: DataFrame): DataFrame =
+    if (store.exists(table)) store.scan(table)
+    else batch.sparkSession.createDataFrame(new java.util.ArrayList[Row](),
+      batch.schema)
+
+  /** The landing shared by the curate-and-index gates: `screened` feeds TWO
+    * writes, so it is eagerly checkpointed first — a lazy frame would
+    * recompute the screen AFTER the corpus append, see its own rows as
+    * duplicates and silently append an empty batch to the index (the
+    * materialization is micro-batch-cheap). Survivors append to `table`;
+    * the first landing then builds the index and registers the
+    * table↔index pairing (retention cascades reach it with `indexes = Nil`
+    * and drift-check explicit lists), later ones `add` to it. */
+  private def landAndIndex(store: TableStore, table: String,
+      screened: DataFrame, target: Retention.IndexTarget)(
+      build: DataFrame => Unit, add: DataFrame => Unit): Unit = {
+    val fresh = screened.cutLineage()
+    try {
+      if (!fresh.isEmpty) {
+        val first = !store.exists(table)
+        store.append(table, fresh)
+        if (first) {
+          build(fresh)
+          Retention.registerIndex(store, table, target)
+        } else add(fresh)
       }
-      .start()
-    q.awaitTermination()
+    } finally graft.ops.Lineage.release(fresh)
   }
 
-  /** Streaming curate-and-index: the steady-state crawl pipeline as ONE
-    * continuous stage. Each micro-batch exact-dedups against the corpus
-    * table ([[graft.ext.Dedup.incrementalNew]] — the corpus side never
-    * shuffles), appends only the genuinely new documents to the corpus
-    * AND into the BM25 inverted index
-    * ([[graft.ext.Retrieval.appendBm25Index]] — bucketed file appends
-    * plus df/stats increments, never an index rewrite). The index is
-    * queryable between micro-batches and after every batch equals a
-    * from-scratch build over the corpus table (spec-pinned); stream
-    * state is the checkpoint offsets alone. */
   /** Streaming VECTOR curate-and-index: embedding batches screen against
     * the persistent IVF index ([[graft.ext.VectorIndex]]) — a batch
     * vector whose nearest indexed neighbor (within probed cells) clears
@@ -967,49 +875,25 @@ object StreamingIngest {
       numBuckets: Int,
       nProbe: Int,
       threshold: Double
-  ): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, _: Long) =>
-        val batch = batch0.withColumn(vecCol,
-          col(vecCol).cast("array<float>"))
-        val fresh =
-          if (!store.exists(table)) batch.cutLineage()
-          else {
-            val dupIds = graft.ext.VectorIndex.ivfTopKIndexed(
-              store, indexName, batch, vecCol, idCol, k = 1, nProbe)
-              .where(col("cosine") >= threshold)
-              .select(col("q_id").as(idCol)).distinct()
-            batch.join(dupIds, Seq(idCol), "left_anti")
-              .cutLineage()
-          }
-        try {
-          if (!fresh.isEmpty) {
-            if (store.exists(table)) {
-              store.append(table, fresh)
-              graft.ext.VectorIndex.appendIvfIndex(store, indexName,
-                fresh, vecCol, idCol, numBuckets)
-            } else {
-              store.overwrite(table, fresh)
-              graft.ext.VectorIndex.buildIvfIndex(store, indexName,
-                fresh, vecCol, idCol, nCells, numBuckets)
-              // persist the table↔index sync contract where the pairing
-              // is created — retention cascades then reach this index
-              // with indexes = Nil and drift-check explicit lists
-              graft.ext.Retention.registerIndex(store, table,
-                graft.ext.Retention.Ivf(indexName, numBuckets))
-            }
-          }
-        } finally graft.ops.Lineage.release(fresh)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+  ): Unit =
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch0, _) =>
+      val batch = batch0.withColumn(vecCol, col(vecCol).cast("array<float>"))
+      val screened =
+        if (!store.exists(table)) batch
+        else {
+          val dupIds = graft.ext.VectorIndex.ivfTopKIndexed(
+            store, indexName, batch, vecCol, idCol, k = 1, nProbe)
+            .where(col("cosine") >= threshold)
+            .select(col("q_id").as(idCol)).distinct()
+          batch.join(dupIds, Seq(idCol), "left_anti")
+        }
+      landAndIndex(store, table, screened,
+        Retention.Ivf(indexName, numBuckets))(
+        graft.ext.VectorIndex.buildIvfIndex(store, indexName,
+          _, vecCol, idCol, nCells, numBuckets),
+        graft.ext.VectorIndex.appendIvfIndex(store, indexName,
+          _, vecCol, idCol, numBuckets))
+    }
 
   /** Streaming NEAR-dup curate-and-index: each micro-batch screens
     * against the persistent LSH band index ([[graft.ext.NearDupIndex]] —
@@ -1030,48 +914,34 @@ object StreamingIngest {
       idCol: String,
       numBuckets: Int,
       threshold: Double
-  ): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val fresh =
-          if (!store.exists(table)) batch.cutLineage()
-          else {
-            val dupIds = graft.ext.NearDupIndex.nearDupAgainstIndex(
-              store, indexName, batch, textCol, idCol, threshold)
-              .select(col("batch_id").as(idCol)).distinct()
-            // result is already eagerly materialized by the screen; the
-            // anti-join output still must pin BEFORE the appends below
-            // (the indexIngest lazy-recompute lesson)
-            batch.join(dupIds, Seq(idCol), "left_anti")
-              .cutLineage()
-          }
-        try {
-          if (!fresh.isEmpty) {
-            if (store.exists(table)) {
-              store.append(table, fresh)
-              graft.ext.NearDupIndex.appendNearDupIndex(store, indexName,
-                fresh, textCol, idCol, numBuckets)
-            } else {
-              store.overwrite(table, fresh)
-              graft.ext.NearDupIndex.buildNearDupIndex(store, indexName,
-                fresh, textCol, idCol, numBuckets)
-              // persist the table↔index sync contract at pairing creation
-              graft.ext.Retention.registerIndex(store, table,
-                graft.ext.Retention.NearDup(indexName, numBuckets))
-            }
-          }
-        } finally graft.ops.Lineage.release(fresh)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+  ): Unit =
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch, _) =>
+      val screened =
+        if (!store.exists(table)) batch
+        else {
+          val dupIds = graft.ext.NearDupIndex.nearDupAgainstIndex(
+            store, indexName, batch, textCol, idCol, threshold)
+            .select(col("batch_id").as(idCol)).distinct()
+          batch.join(dupIds, Seq(idCol), "left_anti")
+        }
+      landAndIndex(store, table, screened,
+        Retention.NearDup(indexName, numBuckets))(
+        graft.ext.NearDupIndex.buildNearDupIndex(store, indexName,
+          _, textCol, idCol, numBuckets),
+        graft.ext.NearDupIndex.appendNearDupIndex(store, indexName,
+          _, textCol, idCol, numBuckets))
+    }
 
+  /** Streaming curate-and-index: the steady-state crawl pipeline as ONE
+    * continuous stage. Each micro-batch exact-dedups against the corpus
+    * table ([[graft.ext.Dedup.incrementalNew]] — the corpus side never
+    * shuffles), appends only the genuinely new documents to the corpus
+    * AND into the BM25 inverted index
+    * ([[graft.ext.Retrieval.appendBm25Index]] — bucketed file appends
+    * plus df/stats increments, never an index rewrite). The index is
+    * queryable between micro-batches and after every batch equals a
+    * from-scratch build over the corpus table (spec-pinned); stream
+    * state is the checkpoint offsets alone. */
   def indexIngestAvailableNow(
       spark: SparkSession,
       sourceDir: String,
@@ -1083,47 +953,18 @@ object StreamingIngest {
       textCol: String,
       idCol: String,
       numBuckets: Int
-  ): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val keep = graft.ext.Dedup.incrementalNew(
-          if (store.exists(table)) store.scan(table)
-          else batch.sparkSession.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), batch.schema),
-          batch, textCol, idCol)
-          .select(col("keep_id").as(idCol))
-        // fresh feeds TWO writes; eagerly checkpoint it so the second
-        // cannot recompute the dedup probe AFTER the corpus append — a
-        // lazy frame would see its own rows as duplicates and silently
-        // append an empty batch to the index (batch-sized, so the
-        // materialization is micro-batch-cheap)
-        val fresh = batch.join(keep, idCol).cutLineage()
-        try {
-          if (!fresh.isEmpty) {
-            if (store.exists(table)) {
-              store.append(table, fresh)
-              graft.ext.Retrieval.appendBm25Index(store, indexName,
-                fresh, textCol, idCol, numBuckets)
-            } else {
-              store.overwrite(table, fresh)
-              graft.ext.Retrieval.buildBm25Index(store, indexName,
-                fresh, textCol, idCol, numBuckets)
-              // persist the table↔index sync contract at pairing creation
-              graft.ext.Retention.registerIndex(store, table,
-                graft.ext.Retention.Bm25(indexName, textCol, numBuckets))
-            }
-          }
-        } finally graft.ops.Lineage.release(fresh)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+  ): Unit =
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch, _) =>
+      val keep = graft.ext.Dedup.incrementalNew(
+        corpusOrEmpty(store, table, batch), batch, textCol, idCol)
+        .select(col("keep_id").as(idCol))
+      landAndIndex(store, table, batch.join(keep, idCol),
+        Retention.Bm25(indexName, textCol, numBuckets))(
+        graft.ext.Retrieval.buildBm25Index(store, indexName,
+          _, textCol, idCol, numBuckets),
+        graft.ext.Retrieval.appendBm25Index(store, indexName,
+          _, textCol, idCol, numBuckets))
+    }
 
   /** Watermarked stream-stream interval join (SURVEY §2.9): each purchase
     * pairs with the clicks of the same user inside its look-back window
@@ -1191,20 +1032,11 @@ object StreamingIngest {
       sinkId: String = "td0"
   ): Unit = {
     require(keys.nonEmpty, "takedownIngestAvailableNow: at least one key column")
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batch.limit(1).count() > 0L)
-          store.deleteByKeysDVTagged(table, keys, batch,
-            s"${sinkId}_b$batchId")
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch, batchId) =>
+      if (batch.limit(1).count() > 0L)
+        store.deleteByKeysDVTagged(table, keys, batch,
+          s"${sinkId}_b$batchId")
+    }
   }
 
   /** [[takedownIngestAvailableNow]] CASCADED into the persistent
@@ -1234,33 +1066,23 @@ object StreamingIngest {
       checkpointDir: String,
       idCol: String,
       indexes: Seq[graft.ext.Retention.IndexTarget] = Nil
-  ): Unit = {
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .json(sourceDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (batch.limit(1).count() > 0L) {
-          // with NO indexes anywhere the cascade degenerates to an
-          // UNTAGGED vector per batch — a replay would commit a second
-          // one (and erase a re-added id with no journal at all); the
-          // plain tagged path exists for exactly that shape
-          require(indexes.nonEmpty ||
-              graft.ext.Retention.registeredIndexes(store, table).nonEmpty,
-            s"takedownCascadeIngestAvailableNow($table): no indexes " +
-              "listed and none registered — use " +
-              "takedownIngestAvailableNow (tagged, exactly-once) for an " +
-              "index-less takedown stream")
-          graft.ext.Retention.deleteByKeysCascade(store, table, idCol,
-            batch.select(idCol), indexes)
-        }
-        ()
+  ): Unit =
+    drain(jsonFiles(spark, sourceDir, schema), checkpointDir) { (batch, _) =>
+      if (batch.limit(1).count() > 0L) {
+        // with NO indexes anywhere the cascade degenerates to an
+        // UNTAGGED vector per batch — a replay would commit a second
+        // one (and erase a re-added id with no journal at all); the
+        // plain tagged path exists for exactly that shape
+        require(indexes.nonEmpty ||
+            Retention.registeredIndexes(store, table).nonEmpty,
+          s"takedownCascadeIngestAvailableNow($table): no indexes " +
+            "listed and none registered — use " +
+            "takedownIngestAvailableNow (tagged, exactly-once) for an " +
+            "index-less takedown stream")
+        Retention.deleteByKeysCascade(store, table, idCol,
+          batch.select(idCol), indexes)
       }
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** Streaming variant with watermark, for unbounded inputs. */
   def tumblingAggStreaming(

@@ -2024,9 +2024,16 @@ final class TableStore(spark: SparkSession, root: String,
       } else None)
   }
 
-  /** Schema-only clone — `CREATE TABLE … WHERE 1=0` (warehouse.py:148-151). */
-  def createLike(name: String, df: DataFrame): Unit =
-    if (!exists(name)) overwrite(name, df.where(lit(false)))
+  /** Schema-only clone — `CREATE TABLE … WHERE 1=0` (warehouse.py:148-151).
+    * A no-op on an existing table, where `df` is not evaluated. The empty
+    * snapshot commits only onto an empty manifest, so a creator racing a
+    * first writer never replaces the writer's data (its orphan snapshot
+    * dir is GC'd by the next commit). */
+  def createLike(name: String, df: => DataFrame): Unit =
+    if (!exists(name)) {
+      val snap = writeSnapshot(name, df.where(lit(false)))
+      commitOwning(name, snap)(cur => if (cur.isEmpty) Some(Seq(snap)) else None)
+    }
 
   def drop(name: String): Unit = {
     val d = tableDir(name)
