@@ -2,7 +2,7 @@ package graft.ext
 
 import graft.ops.Lineage.CutOps
 import graft.table.TableStore
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Full-text retrieval over a document corpus — BM25 (Okapi) scoring for a
@@ -32,6 +32,14 @@ import org.apache.spark.sql.functions._
   *     the SAME single corpus pass (the aggregate is lazily persisted —
   *     docs-scale, not token-scale — because three branches consume it);
   *   - `df` re-groups the tiny filtered tf table;
+  *   - query ids attach to candidate rows by probing a literal
+  *     term → query-ids map, not by joining a query table (no broadcast
+  *     job);
+  *   - served from a persistent index ([[bm25TopKIndexed]]) a query runs
+  *     3 Spark jobs — scan-and-score, top-k, result — with no broadcast:
+  *     the corpus stats (N, Σdl) are plan literals summed from the stats
+  *     table's parquet footers, and df joins the postings on the
+  *     co-bucketed `term` key without an exchange;
   *   - per-term contributions are quantized to decimal(18,9) BEFORE summing,
   *     so the per-(query, doc) score is an EXACT decimal sum — portable
   *     across engines regardless of double addition order — and Spark's
@@ -69,14 +77,9 @@ object Retrieval {
       k1: Double = 1.2,
       b: Double = 0.75
   ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(queries.nonEmpty, "bm25TopK: empty query set")
-    val qterms = queries
-      .flatMap { case (qid, qtext) => queryTerms(qtext).map(qid -> _) }
-      .toDF("query_id", "term")
-    val qvocab = queries.flatMap(q => queryTerms(q._2)).distinct
-    val qvocabLit = array(qvocab.map(lit): _*)
+    val qterms = termQueries(queries)
+    val qvocabLit = array(qterms.keys.toSeq.map(lit): _*)
 
     val toks = df.select(
       col(idCol),
@@ -105,7 +108,11 @@ object Retrieval {
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     // df over the filtered tf table only — query-vocabulary-sized result
     val dft = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    scoreAndRank(tf, qterms, dft, stats, idCol, k, k1, b)
+    scoreAndRank(
+      tf.join(broadcast(dft), "term").crossJoin(broadcast(stats)),
+      qterms, col("n_docs"),
+      col("sum_dl").cast("double") / col("n_docs").cast("double"),
+      idCol, k, k1, b)
   }
 
   /** One scored field of a [[bm25fTopK]] corpus: its column, its saturation
@@ -154,15 +161,10 @@ object Retrieval {
       k: Int,
       k1: Double = 1.2
   ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(queries.nonEmpty, "bm25fTopK: empty query set")
     require(fields.nonEmpty, "bm25fTopK: no fields")
-    val qterms = queries
-      .flatMap { case (qid, qtext) => queryTerms(qtext).map(qid -> _) }
-      .toDF("query_id", "term")
-    val qvocabLit = array(
-      queries.flatMap(q => queryTerms(q._2)).distinct.map(lit): _*)
+    val qterms = termQueries(queries)
+    val qvocabLit = array(qterms.keys.toSeq.map(lit): _*)
 
     // one tagged stream per field, concatenated into ONE explode; the
     // token array is let-bound (the TextHash.shingles idiom) so the split
@@ -217,7 +219,6 @@ object Retrieval {
     val idf = log(lit(1.0) + (nD - dfD + lit(0.5)) / (dfD + lit(0.5)))
     val raw = idf * tfd / (lit(k1) + tfd)
     val contrib = tfw
-      .join(broadcast(qterms), "term")
       .join(broadcast(dft), "term")
       .crossJoin(broadcast(statsN))
       .withColumn("__c",
@@ -226,6 +227,7 @@ object Retrieval {
             lit("graft.bm25fTopK: |contribution| >= 9.0e6 breaks the " +
               "decimal(18,9)->double rank injectivity bound (term "),
             col("term"), lit(")")))))
+      .withColumn("query_id", queryIdsOf(qterms))
     val scored = contrib
       .groupBy(col("query_id"), col(idCol))
       .agg(sum(col("__c")).as("__score"))
@@ -238,32 +240,42 @@ object Retrieval {
         col("t.id").as(idCol), col("t.score").cast("decimal(18,9)").as("score"))
   }
 
-  /** The shared BM25 scoring tail: (doc, dl, term, tf) candidates × query
-    * terms × (term, df) × one-row (N, Σdl) → per-query ranked top-k. All
-    * small sides broadcast; the exact-decimal-sum / quantize-before-rank
+  /** Query ids per distinct query term — the probe map of [[queryIdsOf]]. */
+  private def termQueries(queries: Seq[(Long, String)]): Map[String, Seq[Long]] =
+    queries.flatMap { case (qid, qtext) => queryTerms(qtext).map(_ -> qid) }
+      .groupMap(_._1)(_._2)
+
+  /** The ids of the queries holding the row's `term`, one output row each:
+    * a probe of a literal map, so attaching queries to candidates costs no
+    * join and no broadcast job. Rows reaching it are already filtered to
+    * the query vocabulary, so every probe hits. */
+  private def queryIdsOf(qterms: Map[String, Seq[Long]]): Column =
+    explode(element_at(typedLit(qterms), col("term")))
+
+  /** The shared BM25 scoring tail: (doc, dl, term, tf, df) candidates ×
+    * the literal query-term map, with corpus stats `nDocs` and `avgdl` →
+    * per-query ranked top-k. The exact-decimal-sum / quantize-before-rank
     * portability discipline lives here. */
   private def scoreAndRank(
-      tf: DataFrame, qterms: DataFrame, dft: DataFrame, stats: DataFrame,
+      cand: DataFrame, qterms: Map[String, Seq[Long]],
+      nDocs: Column, avgdl: Column,
       idCol: String, k: Int, k1: Double, b: Double
   ): DataFrame = {
-    val nD = col("n_docs").cast("double")
+    val nD = nDocs.cast("double")
     val dfD = col("df").cast("double")
     val tfD = col("tf").cast("double")
-    val avgdl = col("sum_dl").cast("double") / col("n_docs").cast("double")
     val idf = log(lit(1.0) + (nD - dfD + lit(0.5)) / (dfD + lit(0.5)))
     val tfSat = tfD * lit(k1 + 1.0) /
       (tfD + lit(k1) * (lit(1.0) - lit(b) + lit(b) * (col("dl").cast("double") / avgdl)))
     val raw = idf * tfSat
-    val contrib = tf
-      .join(broadcast(qterms), "term")
-      .join(broadcast(dft), "term")
-      .crossJoin(broadcast(stats))
+    val contrib = cand
       .withColumn("__c",
         when(abs(raw) < lit(9.0e6), raw.cast("decimal(18,9)"))
           .otherwise(raise_error(concat(
             lit("graft.bm25TopK: |contribution| >= 9.0e6 breaks the " +
               "decimal(18,9)->double rank injectivity bound (term "),
             col("term"), lit(")")))))
+      .withColumn("query_id", queryIdsOf(qterms))
     val scored = contrib
       .groupBy(col("query_id"), col(idCol))
       .agg(sum(col("__c")).as("__score")) // exact decimal sum — portable
@@ -520,20 +532,25 @@ object Retrieval {
     * The query vocabulary becomes an `IN` filter on the bucketed `term`
     * column of both index tables, so the scan reads only the buckets (and,
     * within them, the sorted runs) containing query terms: query cost
-    * scales with posting-list sizes, not index size. */
+    * scales with posting-list sizes, not index size.
+    *
+    * A query runs 3 Spark jobs — one scan-and-score stage, one top-k
+    * stage, one result stage — and no broadcast:
+    *   - the corpus stats (N, Σdl) are plan literals from
+    *     [[indexCorpusStats]] (parquet footers, no job);
+    *   - the query terms are a literal map probe ([[queryIdsOf]]);
+    *   - df joins the postings through a merge join on `term`: both
+    *     tables are bucketed on `term` with the same bucket count, so the
+    *     join needs no exchange. */
   def bm25TopKIndexed(
       store: TableStore, name: String,
       queries: Seq[(Long, String)], k: Int,
       k1: Double = 1.2, b: Double = 0.75
   ): DataFrame = {
     require(queries.nonEmpty, "bm25TopKIndexed: empty query set")
-    val stats = store.scan(s"${name}_stats")
-    val spark = stats.sparkSession
-    import spark.implicits._
-    val qterms = queries
-      .flatMap { case (qid, qtext) => queryTerms(qtext).map(qid -> _) }
-      .toDF("query_id", "term")
-    val qvocab = queries.flatMap(q => queryTerms(q._2)).distinct
+    val (nDocs, sumDl) = indexCorpusStats(store, name)
+    val qterms = termQueries(queries)
+    val qvocab = qterms.keys.toSeq
     // postings sum per (term, doc): append-only indexes carry one row per
     // key so this is the identity, but DELETED docs carry a negating row —
     // sum(tf)=0 drops them. The bucketed term partitioning already
@@ -549,9 +566,33 @@ object Retrieval {
     val dft = store.scanBucketed(s"${name}_terms")
       .where(col("term").isin(qvocab: _*))
       .groupBy("term").agg(sum(col("df")).as("df"))
-    val statsSum = stats
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-    scoreAndRank(tf, qterms, dft, statsSum, "doc_id", k, k1, b)
+    // avgdl in local double arithmetic is the same IEEE quotient the
+    // column expression computes; a fully deleted index (N = 0) yields
+    // NaN here but never reaches a row, as no posting survives
+    scoreAndRank(tf.join(dft.hint("merge"), "term"), qterms, lit(nDocs),
+      lit(sumDl.toDouble / nDocs.toDouble), "doc_id", k, k1, b)
+  }
+
+  /** (N, Σdl) of an index: the sums over its `_stats` rows. Every stats
+    * commit is a one-row aggregate, so each row group's footer min IS its
+    * row's value and the sums need no Spark job (footers cached per
+    * immutable entry, see [[TableStore.columnRowGroups]]). A stats table
+    * the footers cannot sum — a deletion vector or exclusion entry, a row
+    * group of more than one row, a footer without statistics — is
+    * scanned. */
+  private def indexCorpusStats(store: TableStore, name: String): (Long, Long) = {
+    val table = s"${name}_stats"
+    def footerSum(c: String): Option[Long] = store.columnRowGroups(table, c)
+      .filter(_.forall(g => g.rows == 0L || (g.rows == 1L && g.min.isDefined)))
+      .map(_.flatMap(_.min).sum)
+    (footerSum("n_docs"), footerSum("sum_dl")) match {
+      case (Some(n), Some(s)) => (n, s)
+      case _ =>
+        val r = store.scan(table).agg(
+          coalesce(sum(col("n_docs")), lit(0L)),
+          coalesce(sum(col("sum_dl")), lit(0L))).first()
+        (r.getLong(0), r.getLong(1))
+    }
   }
 
   /** Positional inverted index: `<name>_pos` (term, doc_id, pos) — one row
@@ -732,11 +773,8 @@ object Retrieval {
         "(2^grade gain must fit int64)")
     require(tfStep >= 1, s"rankingMetrics: tfStep $tfStep < 1")
     val ranked = bm25TopK(df, textCol, idCol, queries, k)
-    val qterms = queries
-      .flatMap { case (qid, qtext) => queryTerms(qtext).map(qid -> _) }
-      .toDF("query_id", "term")
-    val qvocabLit = array(
-      queries.flatMap(q => queryTerms(q._2)).distinct.map(lit): _*)
+    val qterms = termQueries(queries)
+    val qvocabLit = array(qterms.keys.toSeq.map(lit): _*)
     // grade = banded total occurrence count of the query's terms:
     // vocabulary filter before the explode, so the exchange carries only
     // (matched doc, term) occurrences; grade-0 docs drop (gain 0). THREE
@@ -747,7 +785,7 @@ object Retrieval {
       .select(col(idCol), explode(filter(
         TextStats.wsTokens(col(textCol)),
         t => array_contains(qvocabLit, t))).as("term"))
-      .join(broadcast(qterms), "term")
+      .select(col(idCol), queryIdsOf(qterms).as("query_id"))
       .groupBy(col("query_id"), col(idCol))
       .agg(least(lit(gradeMax.toLong),
         expr(s"count(1) div $tfStep")).as("grade"))

@@ -2056,50 +2056,60 @@ final class TableStore(spark: SparkSession, root: String,
   /** `SELECT COALESCE(MAX(col),0)+1` — next row-number start; missing table
     * or column → 1, like the reference's fallback (warehouse.py:13-31).
     *
-    * Answered from the parquet footers' min/max statistics of the
-    * manifest's data entries (cached per immutable entry directory), so an
-    * append or upsert pays no O(table) scan. The live rows are exactly the
-    * entries' rows unless the manifest holds a deletion vector or an
-    * exclusion entry; those, and any footer without statistics for `col`,
-    * fall back to the scan. */
+    * Answered from the footer statistics of [[columnRowGroups]], so an
+    * append or upsert pays no O(table) scan; where the footers cannot
+    * answer (a deletion vector, an exclusion entry, a footer without
+    * statistics for `col`) it falls back to the scan. */
   def nextRowNumberStart(name: String, col: String = "_id"): Long =
     if (!exists(name)) 1L
-    else {
-      val entries = readManifest(name)
-      val maxes =
-        if (entries.isEmpty ||
-            entries.exists(e => isDvEntry(e) || parseEntry(e)._2.nonEmpty)) Nil
-        else entries.map(entryColumnMax(name, _, col))
-      if (maxes.nonEmpty && maxes.forall(_.isDefined))
-        maxes.flatten.flatten.maxOption.getOrElse(0L) + 1L
-      else {
+    else columnRowGroups(name, col) match {
+      case Some(groups) => groups.flatMap(_.max).maxOption.getOrElse(0L) + 1L
+      case None =>
         val df = scan(name)
         if (!df.columns.contains(col)) 1L
         else df.agg(coalesce(max(org.apache.spark.sql.functions.col(col)), lit(0L)))
           .first().getLong(0) + 1L
-      }
     }
 
-  /** MAX of integer column `c` over one data entry's parquet files, from
-    * footer statistics: `Some(None)` when no row holds a value (the entry
-    * lacks the column, or it is all null), `None` when the footers cannot
-    * answer (no statistics, a non-integer column, or `c` is a partition
-    * column). Cached per immutable entry directory. */
-  private def entryColumnMax(name: String, e: String,
-      c: String): Option[Option[Long]] = {
+  /** The live rows of integer column `c` as the parquet footers summarize
+    * them: one [[TableStore.RowGroup]] per row group of the manifest's data
+    * entries, read in this JVM with no Spark job and cached per immutable
+    * entry directory (a commit adds entries, so the cache never goes
+    * stale). A row group of an entry without `c` reads as all null.
+    * `None` when the footers are not the live rows or cannot answer: the
+    * manifest holds a deletion vector or an exclusion entry, a footer has
+    * no statistics for `c`, `c` is not a signed integer, or `c` is a
+    * partition column. */
+  private[graft] def columnRowGroups(name: String,
+      c: String): Option[Seq[TableStore.RowGroup]] = {
+    val entries = readManifest(name)
+    if (entries.isEmpty ||
+        entries.exists(e => isDvEntry(e) || parseEntry(e)._2.nonEmpty)) None
+    else {
+      val perEntry = entries.map(entryRowGroups(name, _, c))
+      if (perEntry.forall(_.isDefined)) Some(perEntry.flatMap(_.get)) else None
+    }
+  }
+
+  /** [[columnRowGroups]] of one data entry; `None` when a footer cannot
+    * answer. */
+  private def entryRowGroups(name: String, e: String,
+      c: String): Option[Seq[TableStore.RowGroup]] = {
+    import TableStore.RowGroup
     import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
     import scala.jdk.CollectionConverters._
     val phys = parseEntry(e)._1
     val p = new Path(tableDir(name), phys)
     def isPartitionDir(dir: String) = dir.startsWith(c + "=")
-    // the max over parts; one part the footers cannot answer sinks the whole
-    def maxOf(parts: Iterator[Option[Option[Long]]]): Option[Option[Long]] = {
-      var acc = Option.empty[Long]
+    // the concatenation of the parts; one part the footers cannot answer
+    // sinks the whole
+    def allOf(parts: Iterator[Option[Seq[RowGroup]]]): Option[Seq[RowGroup]] = {
+      val acc = Seq.newBuilder[RowGroup]
       while (parts.hasNext) parts.next() match {
         case None    => return None
-        case Some(m) => acc = (acc ++ m).maxOption
+        case Some(g) => acc ++= g
       }
-      Some(acc)
+      Some(acc.result())
     }
     def isSignedInt(t: org.apache.parquet.schema.Type): Boolean = t.isPrimitive && {
       val pt = t.asPrimitiveType
@@ -2112,43 +2122,48 @@ final class TableStore(spark: SparkSession, root: String,
           case _ => false
         })
     }
-    def chunkMax(chunk: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData)
-        : Option[Option[Long]] = {
-      val stats = chunk.getStatistics
-      if (stats != null && stats.hasNonNullValue)
-        Some(Some(stats.genericGetMax.asInstanceOf[Number].longValue))
-      else if (chunk.getValueCount == 0L || (stats != null && stats.isNumNullsSet &&
-          stats.getNumNulls == chunk.getValueCount)) Some(None) // all null
-      else None
+    // a block without a chunk for `c` (the file lacks the column) is all null
+    def rowGroup(block: org.apache.parquet.hadoop.metadata.BlockMetaData): Option[RowGroup] = {
+      val rows = block.getRowCount
+      block.getColumns.asScala.find(_.getPath.toDotString == c) match {
+        case None => Some(RowGroup(rows, None, None))
+        case Some(chunk) =>
+          val stats = chunk.getStatistics
+          def long(v: Any) = Some(v.asInstanceOf[Number].longValue)
+          if (stats != null && stats.hasNonNullValue)
+            Some(RowGroup(rows, long(stats.genericGetMin), long(stats.genericGetMax)))
+          else if (chunk.getValueCount == 0L || (stats != null && stats.isNumNullsSet &&
+              stats.getNumNulls == chunk.getValueCount))
+            Some(RowGroup(rows, None, None)) // all null
+          else None
+      }
     }
-    def fileMax(st: org.apache.hadoop.fs.FileStatus): Option[Option[Long]] = {
+    def fileGroups(st: org.apache.hadoop.fs.FileStatus): Option[Seq[RowGroup]] = {
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
       try {
         val schema = r.getFooter.getFileMetaData.getSchema
-        if (!schema.containsField(c)) Some(None)
-        else if (!isSignedInt(schema.getType(schema.getFieldIndex(c)))) None
-        else maxOf(r.getFooter.getBlocks.asScala.iterator.flatMap(
-          _.getColumns.asScala.find(_.getPath.toDotString == c)).map(chunkMax))
+        if (schema.containsField(c) && !isSignedInt(schema.getType(schema.getFieldIndex(c)))) None
+        else allOf(r.getFooter.getBlocks.asScala.iterator.map(rowGroup(_).map(Seq(_))))
       } finally r.close()
     }
-    def dirMax(d: Path): Option[Option[Long]] =
-      maxOf(fs(d).listStatus(d).iterator.map { st =>
+    def dirGroups(d: Path): Option[Seq[RowGroup]] =
+      allOf(fs(d).listStatus(d).iterator.map { st =>
         val n = st.getPath.getName
         if (st.isDirectory) {
           if (isPartitionDir(n)) None
-          else if (n.startsWith("_") || n.startsWith(".")) Some(None)
-          else dirMax(st.getPath)
-        } else if (n.startsWith("part-") && !n.endsWith(".crc")) fileMax(st)
-        else Some(None)
+          else if (n.startsWith("_") || n.startsWith(".")) Some(Nil)
+          else dirGroups(st.getPath)
+        } else if (n.startsWith("part-") && !n.endsWith(".crc")) fileGroups(st)
+        else Some(Nil)
       })
     if (phys.split('/').exists(isPartitionDir)) None
-    else columnMaxCache.computeIfAbsent(
-      fs(p).makeQualified(p).toString + "\u0000" + c, _ => dirMax(p))
+    else rowGroupCache.computeIfAbsent(
+      fs(p).makeQualified(p).toString + "\u0000" + c, _ => dirGroups(p))
   }
 
-  private val columnMaxCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Option[Long]]]
+  private val rowGroupCache =
+    new java.util.concurrent.ConcurrentHashMap[String, Option[Seq[TableStore.RowGroup]]]
 
   private[table] def writeSnapshot(name: String, df: DataFrame,
       tagPart: String = "", partitionBy: Seq[String] = Nil): String = {
@@ -3127,6 +3142,11 @@ final class TableStore(spark: SparkSession, root: String,
 
 object TableStore {
   private[table] val log = org.slf4j.LoggerFactory.getLogger("graft.table")
+
+  /** One parquet row group's footer view of an integer column: its row
+    * count and the column's min and max (`None` when every value is null). */
+  private[graft] final case class RowGroup(rows: Long, min: Option[Long],
+      max: Option[Long])
 
   /** Background reclamation thread: recursive deletes of UNREFERENCED
     * directories (commit GC, drop()'s renamed trash) run here instead of
