@@ -17,6 +17,13 @@ import org.apache.spark.sql.SparkSession
   * the price of a deterministic write/read round-trip for the store's
   * partitioned tables; if an application needs inference for external
   * data, read it through a separate vanilla SparkSession.
+  *
+  * The builder registers [[graft.plans.GraftExtensions]], whose kernels
+  * the `graft.ext` operators call directly. `getOrCreate` hands back an
+  * already-running session unchanged, without the extensions (and
+  * without these settings) — e.g. the session `spark-shell` made. Start
+  * such a shell with `--conf spark.sql.extensions=graft.plans.GraftExtensions`
+  * instead.
   */
 object GraftSession {
   def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =

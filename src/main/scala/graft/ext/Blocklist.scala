@@ -27,23 +27,21 @@ import org.apache.spark.sql.functions._
 object Blocklist {
 
   /** Per-pattern occurrence counts as `array<int>` aligned with
-    * `patterns` — the native kernel when the graft session extensions are
-    * registered, else the declarative HOF form (identical outputs,
-    * spec-pinned). */
+    * `patterns`: the native `graft_ac_counts` kernel. NULL text gives a
+    * NULL array. Its spec is [[matchCountsDeclarative]] (BlocklistSpec,
+    * KernelIdentitySpec). */
   def matchCounts(
-      df: DataFrame,
       textCol: String,
       patterns: Seq[String],
       boundary: Boolean = true): Column =
-    if (df.sparkSession.catalog.functionExists("graft_ac_counts"))
-      call_function("graft_ac_counts", col(textCol),
-        lit(patterns.toArray), lit(boundary))
-    else matchCountsDeclarative(textCol, patterns, boundary)
+    call_function("graft_ac_counts", col(textCol),
+      lit(patterns.toArray), lit(boundary))
 
   /** The readable declarative form — nested HOFs probing every position of
     * every pattern (O(text × patterns), interpreted). Serves as the spec
     * reference and the oracle template; the kernel is pinned
-    * element-identical by BlocklistSpec. */
+    * element-identical by BlocklistSpec. NULL text gives NULL, as in the
+    * kernel. */
   def matchCountsDeclarative(
       textCol: String,
       patterns: Seq[String],
@@ -57,11 +55,11 @@ object Blocklist {
               |      OR NOT substr($textCol, i + length(p), 1) RLIKE '[A-Za-z0-9]')"""
         .stripMargin
     expr(
-      s"""transform(array($pats), p ->
+      s"""CASE WHEN $textCol IS NOT NULL THEN transform(array($pats), p ->
          |  size(filter(sequence(1, greatest(length($textCol) - length(p) + 1, 1)), i ->
          |    i + length(p) - 1 <= length($textCol)
          |    AND substr($textCol, i, length(p)) = p
-         |    AND ($bound))))""".stripMargin)
+         |    AND ($bound)))) END""".stripMargin)
   }
 
   /** Σ over the counts array (total blocklist hits in the document). */
@@ -73,23 +71,18 @@ object Blocklist {
     size(filter(counts, _ > 0))
 
   /** Attach `ac_counts`, `total_hits`, `n_patterns_hit` signal columns.
-    * The counts array is pinned to one evaluation per row when the graft
-    * extensions are registered — a `total_hits <= N` drop predicate must
-    * not re-run the Aho–Corasick scan per conjunct it is inlined into. */
+    * The counts array is pinned to one evaluation per row — a
+    * `total_hits <= N` drop predicate must not re-run the Aho–Corasick
+    * scan per conjunct it is inlined into. */
   def withSignals(
       df: DataFrame,
       textCol: String,
       patterns: Seq[String],
-      boundary: Boolean = true): DataFrame = {
-    val raw = matchCounts(df, textCol, patterns, boundary)
-    val c =
-      if (df.sparkSession.catalog.functionExists("graft_eval_once"))
-        graft.plans.EvalOnceExpression.evalOnce(raw)
-      else raw
-    df.withColumn("ac_counts", c)
+      boundary: Boolean = true): DataFrame =
+    df.withColumn("ac_counts", graft.plans.EvalOnceExpression.evalOnce(
+        matchCounts(textCol, patterns, boundary)))
       .withColumn("total_hits", totalHits(col("ac_counts")).cast("bigint"))
       .withColumn("n_patterns_hit", patternsHit(col("ac_counts")).cast("bigint"))
-  }
 
   /** The C4-style drop: keep documents with at most `maxHits` total
     * blocklist occurrences (default 0 — any hit drops the doc). Pure
@@ -100,7 +93,7 @@ object Blocklist {
       patterns: Seq[String],
       maxHits: Long = 0L,
       boundary: Boolean = true): DataFrame =
-    df.where(totalHits(matchCounts(df, textCol, patterns, boundary)) <= maxHits)
+    df.where(totalHits(matchCounts(textCol, patterns, boundary)) <= maxHits)
 
   /** Corpus-level blocklist profile: one row per pattern with the number
     * of documents hit and total occurrences — the "which phrases fire and
@@ -112,7 +105,7 @@ object Blocklist {
       textCol: String,
       patterns: Seq[String],
       boundary: Boolean = true): DataFrame =
-    df.select(posexplode(matchCounts(df, textCol, patterns, boundary))
+    df.select(posexplode(matchCounts(textCol, patterns, boundary))
         .as(Seq("pat_idx", "c")))
       .groupBy(col("pat_idx"))
       .agg(

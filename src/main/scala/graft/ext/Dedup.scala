@@ -41,20 +41,18 @@ object Dedup {
       .select(col("fingerprint"), col("__w.id").as("keep_id"),
         col("__w.p").as("keep_priority"), col("copies"), col("n_sources"))
 
-  /** MinHash signature column: the codegen'd native expression when the
-    * graft session extensions are registered (≈7× the interpreted HOF
-    * pipeline), else the declarative form — byte-identical outputs. */
-  def minhashSig(df: DataFrame, textCol: String): org.apache.spark.sql.Column =
-    if (df.sparkSession.catalog.functionExists("graft_minhash_sig"))
-      call_function("graft_minhash_sig", col(textCol))
-    else
-      TextHash.minhashSignature(TextHash.shingles(col(textCol)))
+  /** MinHash signature column: the codegen'd `graft_minhash_sig` kernel
+    * (≈7× the interpreted HOF pipeline). Its spec is
+    * `TextHash.minhashSignature(TextHash.shinglesDeclarative(text))`
+    * (MinHashNativeSpec, KernelIdentitySpec). */
+  def minhashSig(textCol: String): Column =
+    call_function("graft_minhash_sig", col(textCol))
 
   /** Per-document MinHash signature + LSH band keys. Narrow transform. */
   def minhashBands(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val withSig = df
       .withColumn("shingles", TextHash.shingles(col(textCol)))
-      .withColumn("sig", minhashSig(df, textCol))
+      .withColumn("sig", minhashSig(textCol))
     val bandCols = (0 until TextHash.Bands).map { b =>
       val slice = (0 until TextHash.RowsPerBand)
         .map(r => element_at(col("sig"), b * TextHash.RowsPerBand + r + 1))
@@ -90,7 +88,7 @@ object Dedup {
     // write.)
     val shingled = df
       .select(col(idCol), TextHash.shingles(col(textCol)).as("shingles"),
-        minhashSig(df, textCol).as("sig"))
+        minhashSig(textCol).as("sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = shingled
 
@@ -281,11 +279,11 @@ object Dedup {
     }
     val bShingled = graft.ops.Lineage.cut(batch
       .select(col(idCol), TextHash.shingles(col(textCol)).as("b_sh"),
-        minhashSig(batch, textCol).as("sig")),
+        minhashSig(textCol).as("sig")),
       eager = false) // lineage-cut: bands + verify sides
     val bBands = bandsOf(bShingled, col("sig"), "batch_id")
     val probe = bBands.select("band", "key").distinct()
-    val cBands = bandsOf(corpus, minhashSig(corpus, textCol), "corpus_id")
+    val cBands = bandsOf(corpus, minhashSig(textCol), "corpus_id")
     val pairs = cBands
       .join(broadcast(probe), Seq("band", "key"), "left_semi")
       .join(broadcast(bBands), Seq("band", "key"))
@@ -672,15 +670,11 @@ object Dedup {
         col("n_paras"), coalesce(col("n_kept"), lit(0L)).as("n_kept"))
   }
 
-  /** Exact Jaccard similarity of two string-array columns (as sets).
-    * The codegen'd zero-allocation kernel when the graft extensions are
-    * registered, else the declarative spec — byte-identical
-    * (JaccardNativeSpec; the simhash dispatch pattern). */
+  /** Exact Jaccard similarity of two string-array columns (as sets): the
+    * codegen'd zero-allocation `graft_jaccard` kernel. Its spec is
+    * [[jaccardDeclarative]] (JaccardNativeSpec, KernelIdentitySpec). */
   def jaccard(a: Column, b: Column): Column =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-          .exists(_.catalog.functionExists("graft_jaccard")))
-      call_function("graft_jaccard", a, b)
-    else jaccardDeclarative(a, b)
+    call_function("graft_jaccard", a, b)
 
   /** The readable spec of [[jaccard]] (and the oracle-generation
     * template). */
@@ -688,16 +682,12 @@ object Dedup {
     size(array_intersect(a, b)).cast("double") /
       size(array_union(a, b)).cast("double")
 
-  /** Per-document 60-bit SimHash fingerprint. Narrow transform; the
-    * codegen'd kernel when the graft extensions are registered, else the
-    * declarative HOF spec — byte-identical (TextNativeSpec). */
-  def simhash(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val sim =
-      if (df.sparkSession.catalog.functionExists("graft_simhash"))
-        call_function("graft_simhash", col(textCol))
-      else TextHash.simhash(split(col(textCol), " "))
-    df.select(col(idCol), sim.as("simhash"))
-  }
+  /** Per-document 60-bit SimHash fingerprint. Narrow transform: the
+    * codegen'd `graft_simhash` kernel. Its spec is
+    * `TextHash.simhash(split(text, " "))` (TextNativeSpec,
+    * KernelIdentitySpec). */
+  def simhash(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    df.select(col(idCol), call_function("graft_simhash", col(textCol)).as("simhash"))
 
   /** Hamming distance between two simhash columns. */
   def hamming(a: Column, b: Column): Column =
@@ -863,7 +853,7 @@ object Dedup {
   ): DataFrame = {
     val shingled = df
       .select(col(idCol), TextHash.shingles(col(textCol)).as("shingles"),
-        minhashSig(df, textCol).as("sig"))
+        minhashSig(textCol).as("sig"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bandCols = (0 until TextHash.Bands).map { b =>
       val slice = (0 until TextHash.RowsPerBand)

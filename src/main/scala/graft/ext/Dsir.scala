@@ -48,27 +48,22 @@ object Dsir {
   /** Hashed unigram+bigram bucket stream of a text column — one element
     * per n-gram OCCURRENCE (counts enter the weight by repetition), each
     * in [0, buckets). Empty docs yield an empty stream. The codegen'd
-    * native kernel when the graft extensions are registered (the
-    * [[graft.plans.MinHashSigExpression]] posture — one md5 per gram, no
-    * interpreted HOF tree); the declarative form below stays the spec the
-    * DuckDB oracle mirrors, byte-identity pinned by
-    * FeatureBucketsNativeSpec. */
+    * `graft_feature_buckets` kernel (one md5 per gram, no interpreted HOF
+    * tree). Its spec, which the DuckDB oracle mirrors, is
+    * [[featureBucketsHof]] (FeatureBucketsNativeSpec, KernelIdentitySpec). */
   private[graft] def featureBuckets(text: Column, buckets: Int): Column =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-          .exists(_.catalog.functionExists("graft_feature_buckets")))
-      call_function("graft_feature_buckets", text, lit(buckets))
-    else featureBucketsHof(text, buckets)
+    call_function("graft_feature_buckets", text, lit(buckets))
 
   /** The declarative (HOF) spec of [[featureBuckets]]. */
   private[graft] def featureBucketsHof(text: Column, buckets: Int): Column =
     element_at(
       transform(array(TextStats.wsTokens(text)), { toks =>
-        val uni = transform(toks, t => TextHash.hmod(t) % buckets)
-        val bg = when(size(toks) < 2, array().cast("array<bigint>"))
+        val uni = transform(toks, t => TextHash.hmodBucket(t, buckets))
+        val bg = when(size(toks) < 2, TextHash.emptyBuckets)
           .otherwise(transform(
             sequence(lit(0), size(toks) - 2),
-            i => TextHash.hmod(concat_ws(" ",
-              element_at(toks, i + 1), element_at(toks, i + 2))) % buckets))
+            i => TextHash.hmodBucket(concat_ws(" ",
+              element_at(toks, i + 1), element_at(toks, i + 2)), buckets)))
         concat(uni, bg)
       }),
       1)

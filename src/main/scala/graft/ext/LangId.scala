@@ -39,28 +39,27 @@ object LangId {
 
   /** Hashed char-n-gram bucket stream of a text column — one element per
     * n-gram occurrence, each in [0, buckets). Texts shorter than `n`
-    * yield an empty stream. The text is let-bound (computed once per
-    * row) through a single-element transform, the featureBuckets trick. */
+    * yield an empty stream. The codegen'd `graft_chargrams` kernel; its
+    * spec is [[charGramBucketsDeclarative]]. */
   def charGramBuckets(n: Int)(text: Column, buckets: Int): Column = {
     require(n > 0, "charGramBuckets: n must be positive")
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-          .exists(_.catalog.functionExists("graft_chargrams")))
-      call_function("graft_chargrams", text, lit(n), lit(buckets))
-    else charGramBucketsDeclarative(n)(text, buckets)
+    call_function("graft_chargrams", text, lit(n), lit(buckets))
   }
 
   /** The readable spec of [[charGramBuckets]] (and the oracle-generation
     * template): interpreted HOF pipeline, same values bit-for-bit
-    * (TextNativeSpec). The native kernel exists because this form pays
-    * substring → md5-hex-string → BigInteger-conv per CHARACTER — it
+    * (TextNativeSpec, KernelIdentitySpec). The text is let-bound
+    * (computed once per row) through a single-element transform, the
+    * featureBuckets trick. The native kernel exists because this form
+    * pays substring → md5-hex-string → BigInteger-conv per CHARACTER — it
     * dominated the langid gates. */
   def charGramBucketsDeclarative(n: Int)(text: Column, buckets: Int): Column =
     element_at(
       transform(array(lower(text)), { t =>
-        when(length(t) < n, array().cast("array<bigint>"))
+        when(length(t) < n, TextHash.emptyBuckets)
           .otherwise(transform(
             sequence(lit(1), length(t) - (n - 1)),
-            i => TextHash.hmod(substring(t, i, lit(n))) % buckets))
+            i => TextHash.hmodBucket(substring(t, i, lit(n)), buckets)))
       }),
       1)
 

@@ -137,11 +137,11 @@ object Sampling {
     * corpus-balancing step of a pretraining pipeline: cap overrepresented
     * domains/languages before mixing.
     *
-    * Scale shape: routed through the bounded `graft_topk` aggregate when
-    * registered — each mapper retains ≤ k candidates per group, so the
-    * shuffle carries mappers × k rows per group instead of the ENTIRE
-    * overrepresented group (the window formulation's cost, which at 100 TB
-    * is precisely the domain you are trying to cap). Hash values are
+    * Scale shape: routed through the bounded `graft_topk` aggregate —
+    * each mapper retains ≤ k candidates per group, so the shuffle carries
+    * mappers × k rows per group instead of the ENTIRE overrepresented
+    * group (a window formulation's cost, which at 100 TB is precisely the
+    * domain you are trying to cap). Hash values are
     * < 2^31 (mod-P md5), so negating into a double score is exact.
     * Returns (groupCol, idCol, rank ∈ 1..k). */
   def quotaCap(
@@ -154,19 +154,11 @@ object Sampling {
     val h = TextHash.hmod(concat(col(idCol).cast("string"), lit(":" + salt)))
     val keyed = df.select(col(groupCol), col(idCol).cast("long").as(idCol))
       .withColumn("__qh", h)
-    if (df.sparkSession.catalog.functionExists("graft_topk")) {
-      keyed.groupBy(groupCol)
-        .agg(call_function("graft_topk",
-          negate(col("__qh").cast("double")), col(idCol), lit(k)).as("top"))
-        .select(col(groupCol), posexplode(col("top")).as(Seq("pos", "t")))
-        .select(col(groupCol), col("t.id").as(idCol), (col("pos") + 1).as("rank"))
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(groupCol).orderBy(col("__qh").asc, col(idCol).asc)
-      keyed.withColumn("rank", row_number().over(w))
-        .where(col("rank") <= k)
-        .select(col(groupCol), col(idCol), col("rank"))
-    }
+    keyed.groupBy(groupCol)
+      .agg(call_function("graft_topk",
+        negate(col("__qh").cast("double")), col(idCol), lit(k)).as("top"))
+      .select(col(groupCol), posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col(groupCol), col("t.id").as(idCol), (col("pos") + 1).as("rank"))
   }
 
   /** Deterministic weighted sampling WITHOUT replacement (Efraimidis–
@@ -205,21 +197,12 @@ object Sampling {
     // behavior rather than the documented contract.
     val keyed = df.where(col(weightCol) > 0 && col(idCol).isNotNull)
       .select(col(idCol).cast("long").as("__id"), keyq.as("__k"))
-    if (df.sparkSession.catalog.functionExists("graft_topk")) {
-      keyed
-        .agg(call_function("graft_topk",
-          col("__k").cast("double"), col("__id"), lit(k)).as("top"))
-        .select(posexplode(col("top")).as(Seq("pos", "t")))
-        .select(col("t.id").as(idCol), col("t.score").cast("long").as("key_q"),
-          (col("pos") + 1).cast("long").as("rank"))
-    } else {
-      // fallback: global sort prefix (k rows), then rank the prefix
-      val w = org.apache.spark.sql.expressions.Window
-        .orderBy(col("__k").desc, col("__id").asc)
-      keyed.orderBy(col("__k").desc, col("__id").asc).limit(k)
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .select(col("__id").as(idCol), col("__k").as("key_q"), col("rank"))
-    }
+    keyed
+      .agg(call_function("graft_topk",
+        col("__k").cast("double"), col("__id"), lit(k)).as("top"))
+      .select(posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("t.id").as(idCol), col("t.score").cast("long").as("key_q"),
+        (col("pos") + 1).cast("long").as("rank"))
   }
 
   /** Per-group weighted draw: [[weightedSample]] within every `groupCol`
@@ -246,22 +229,13 @@ object Sampling {
     val keyed = df.where(col(weightCol) > 0 && col(idCol).isNotNull)
       .select(col(groupCol), col(idCol).cast("long").as("__id"),
         keyq.as("__k"))
-    if (df.sparkSession.catalog.functionExists("graft_topk")) {
-      keyed.groupBy(groupCol)
-        .agg(call_function("graft_topk",
-          col("__k").cast("double"), col("__id"), lit(k)).as("top"))
-        .select(col(groupCol), posexplode(col("top")).as(Seq("pos", "t")))
-        .select(col(groupCol), col("t.id").as(idCol),
-          col("t.score").cast("long").as("key_q"),
-          (col("pos") + 1).cast("long").as("rank"))
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(groupCol).orderBy(col("__k").desc, col("__id").asc)
-      keyed.withColumn("rank", row_number().over(w).cast("long"))
-        .where(col("rank") <= k)
-        .select(col(groupCol), col("__id").as(idCol), col("__k").as("key_q"),
-          col("rank"))
-    }
+    keyed.groupBy(groupCol)
+      .agg(call_function("graft_topk",
+        col("__k").cast("double"), col("__id"), lit(k)).as("top"))
+      .select(col(groupCol), posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col(groupCol), col("t.id").as(idCol),
+        col("t.score").cast("long").as("key_q"),
+        (col("pos") + 1).cast("long").as("rank"))
   }
 
   /** Temperature-scaled domain mix (square-root temperature, τ=2): keep

@@ -31,16 +31,13 @@ object Similarity {
   /** Exact scaled dot product of two float-array columns: int64 sum of
     * round(x*y*1e15). Divide by [[DotScale]] for the real value.
     *
-    * Routes through the codegen'd native kernel
-    * ([[graft.plans.DotScaledExpression]]) when the graft session
-    * extensions are registered — the declarative HOF form is interpreted
-    * (per-element lambda dispatch), which dominates candidate-pair joins
-    * that evaluate one dot per pair. Byte-identical outputs (DotNativeSpec). */
+    * The codegen'd `graft_dot_scaled` kernel
+    * ([[graft.plans.DotScaledExpression]]): the declarative HOF form is
+    * interpreted (per-element lambda dispatch), which dominates
+    * candidate-pair joins that evaluate one dot per pair. Its spec is
+    * [[dotScaledDeclarative]] (DotNativeSpec, KernelIdentitySpec). */
   def dotScaled(a: Column, b: Column): Column =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-          .exists(_.catalog.functionExists("graft_dot_scaled")))
-      call_function("graft_dot_scaled", a, b)
-    else dotScaledDeclarative(a, b)
+    call_function("graft_dot_scaled", a, b)
 
   /** The readable spec of [[dotScaled]] (also the oracle-generation
     * template): interpreted HOF pipeline, same values bit-for-bit. */
@@ -62,31 +59,20 @@ object Similarity {
   /** Rank scored candidates to (q_id, c_id, rank, cosine), keeping k per
     * query under the total order (cosine desc, c_id asc).
     *
-    * Uses the bounded `graft_topk` aggregate when registered: partial
-    * aggregation keeps ≤ k candidates per mapper per query, so the shuffle
-    * carries mappers × k rows instead of EVERY scored candidate — the
-    * window formulation (fallback) shuffles the full scored set to rank it.
-    * Identical output either way (TopKAggregateSpec): both paths exclude
-    * null-score/null-id rows (the aggregate skips them in update; the
-    * fallback filters them explicitly below), and NaN scores rank first in
-    * both (Spark sorts NaN above all doubles; the buffer uses
+    * Uses the bounded `graft_topk` aggregate: partial aggregation keeps
+    * ≤ k candidates per mapper per query, so the shuffle carries
+    * mappers × k rows instead of EVERY scored candidate, which a window
+    * formulation would shuffle to rank. Output equals that window over
+    * the rows with non-null score and id (TopKAggregateSpec): the
+    * aggregate skips null-score/null-id rows in update, and NaN scores
+    * rank first (Spark sorts NaN above all doubles; the buffer uses
     * java.lang.Double.compare). */
   private[graft] def rankTopK(scored: DataFrame, k: Int): DataFrame =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-          .exists(_.catalog.functionExists("graft_topk"))) {
-      scored.groupBy("q_id")
-        .agg(call_function("graft_topk", col("cosine"), col("c_id"), lit(k)).as("top"))
-        .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "t")))
-        .select(col("q_id"), col("t.id").as("c_id"),
-          (col("pos") + 1).as("rank"), col("t.score").as("cosine"))
-    } else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("q_id").orderBy(col("cosine").desc, col("c_id").asc)
-      scored.where(col("cosine").isNotNull && col("c_id").isNotNull)
-        .withColumn("rank", row_number().over(w))
-        .where(col("rank") <= k)
-        .select("q_id", "c_id", "rank", "cosine")
-    }
+    scored.groupBy("q_id")
+      .agg(call_function("graft_topk", col("cosine"), col("c_id"), lit(k)).as("top"))
+      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("q_id"), col("t.id").as("c_id"),
+        (col("pos") + 1).as("rank"), col("t.score").as("cosine"))
 
   /** Brute-force cosine top-k: for each query vector (small set, broadcast),
     * rank all corpus vectors by cosine, keep k. */
@@ -141,7 +127,7 @@ object Similarity {
   /** Deterministic small-int hyperplane coefficient c(i,j) ∈ [-3,3]. */
   def coeff(i: Int, j: Int): Long = ((i * 37 + j * 101) % 7) - 3
 
-  /** Max (bits, dims) the SRP coefficient table covers. */
+  /** SRP signature width (bits) and the vector dimension it covers. */
   val SrpMaxBits = 60
   val SrpMaxDim = 64
 
@@ -162,7 +148,7 @@ object Similarity {
     }
   }
 
-  /** Signed-random-projection signature: `bits` sign bits of exact int64
+  /** Signed-random-projection signature: 60 sign bits of exact int64
     * dot products between the 1e7-quantized vector and the [[srpCoeffs]]
     * hyperplanes — the binary embedding code that makes vector near-dup
     * searchable EXACTLY at corpus scale through
@@ -171,25 +157,23 @@ object Similarity {
     * radius). Identical vectors collide at distance 0 by construction.
     * Production planes would be Gaussian; these are small-int and
     * deterministic so both engines reproduce signatures bit-for-bit —
-    * the same trade every hash in this codebase makes. */
-  def srpSignature(vec: Column, dim: Int, bits: Int = SrpMaxBits): Column = {
-    require(bits >= 1 && bits <= SrpMaxBits, s"srpSignature: bits $bits")
-    require(dim >= 1 && dim <= SrpMaxDim, s"srpSignature: dim $dim")
-    // full-width signatures route through the codegen'd kernel when a
-    // GraftSession registered it (54 µs -> sub-µs per vector; SrpNativeSpec
-    // pins bit-parity); partial widths keep the declarative formulation
-    val active = org.apache.spark.sql.SparkSession.getActiveSession
-    if (bits == SrpMaxBits && dim == SrpMaxDim &&
-        active.exists(_.catalog.functionExists("graft_srp")))
-      return call_function("graft_srp", vec)
+    * the same trade every hash in this codebase makes. The codegen'd
+    * `graft_srp` kernel over [[SrpMaxDim]]-element vectors (54 µs ->
+    * sub-µs per vector against [[srpDeclarative]], its spec). */
+  def srpSignature(vec: Column): Column = call_function("graft_srp", vec)
+
+  /** The declarative spec of the `graft_srp` kernel (SrpNativeSpec,
+    * KernelIdentitySpec): per-plane HOF dot products. A NULL vector
+    * gives NULL, as in the kernel. */
+  private[graft] def srpDeclarative(vec: Column): Column = {
     val quantized = transform(vec, x => round(x.cast("double") * lit(1e7)).cast("long"))
-    val dots = (0 until bits).map { i =>
-      val coeffs = array((0 until dim).map(j => lit(srpCoeffs(i)(j))): _*)
+    val dots = (0 until SrpMaxBits).map { i =>
+      val coeffs = array((0 until SrpMaxDim).map(j => lit(srpCoeffs(i)(j))): _*)
       aggregate(zip_with(quantized, coeffs, (x, c) => x * c), lit(0L), (a, x) => a + x)
     }
-    dots.zipWithIndex.map { case (d, i) =>
+    when(vec.isNotNull, dots.zipWithIndex.map { case (d, i) =>
       when(d >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
+    }.reduce(_ + _))
   }
 
   /** LSH bucket id: sign bits of integer dot products between the
@@ -288,27 +272,17 @@ object Similarity {
         .select(col(idCol).as("cell_id"), col(vecCol).as("cell_vec")))
       .withColumn("cell_norm", normDecimal(col("cell_vec")))
 
-    // nearest-`keep` cells per vector. Bounded-aggregate path: the window
-    // formulation sorts rows×cells within each vector's partition; the
-    // graft_topk aggregate reduces each vector's nCells scored copies to a
-    // ≤keep buffer map-side, so the shuffle carries one row per vector.
-    def assign(df: DataFrame, id: String, vec: String, norm: String, keep: Int): DataFrame = {
-      val scored = df.crossJoin(broadcast(cells))
+    // nearest-`keep` cells per vector. A window formulation sorts
+    // rows×cells within each vector's partition; the graft_topk aggregate
+    // reduces each vector's nCells scored copies to a ≤keep buffer
+    // map-side, so the shuffle carries one row per vector.
+    def assign(df: DataFrame, id: String, vec: String, norm: String, keep: Int): DataFrame =
+      df.crossJoin(broadcast(cells))
         .withColumn("cell_cos",
           dotDecimal(col(vec), col("cell_vec")) / (col(norm) * col("cell_norm")))
-      if (org.apache.spark.sql.SparkSession.getActiveSession
-            .exists(_.catalog.functionExists("graft_topk"))) {
-        scored.groupBy(col(id), col(vec), col(norm))
-          .agg(call_function("graft_topk", col("cell_cos"), col("cell_id"), lit(keep)).as("top"))
-          .select(col(id), col(vec), col(norm), explode(col("top.id")).as("cell_id"))
-      } else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(id).orderBy(col("cell_cos").desc, col("cell_id").asc)
-        scored.withColumn("cell_rank", row_number().over(w))
-          .where(col("cell_rank") <= keep)
-          .drop("cell_vec", "cell_norm", "cell_cos", "cell_rank")
-      }
-    }
+        .groupBy(col(id), col(vec), col(norm))
+        .agg(call_function("graft_topk", col("cell_cos"), col("cell_id"), lit(keep)).as("top"))
+        .select(col(id), col(vec), col(norm), explode(col("top.id")).as("cell_id"))
 
     val c = assign(
       corpus.select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))
@@ -671,24 +645,15 @@ object Similarity {
       corpus.select(col(idCol).as("c_id"), col(vecCol).as("c_vec")),
       "c_vec", "c_id", nCells, Some(cellsRaw))
 
-    // queries → nProbe cells each, via the bounded aggregate when present
+    // queries → nProbe cells each, via the bounded aggregate
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
       .withColumn("q_norm", normDecimal(col("q_vec")))
-    val qScored = q.crossJoin(broadcast(cells))
+    val qProbe = q.crossJoin(broadcast(cells))
       .withColumn("cell_cos",
         dotDecimal(col("q_vec"), col("cell_vec")) / (col("q_norm") * col("cell_norm")))
-    val qProbe =
-      if (org.apache.spark.sql.SparkSession.getActiveSession
-            .exists(_.catalog.functionExists("graft_topk")))
-        qScored.groupBy(col("q_id"))
-          .agg(call_function("graft_topk", col("cell_cos"), col("cell_id"), lit(nProbe)).as("top"))
-          .select(col("q_id"), explode(col("top.id")).as("cell_id"))
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("q_id").orderBy(col("cell_cos").desc, col("cell_id").asc)
-        qScored.withColumn("r", row_number().over(w)).where(col("r") <= nProbe)
-          .select("q_id", "cell_id")
-      }
+      .groupBy(col("q_id"))
+      .agg(call_function("graft_topk", col("cell_cos"), col("cell_id"), lit(nProbe)).as("top"))
+      .select(col("q_id"), explode(col("top.id")).as("cell_id"))
 
     // PQ index: codes + recon norm per vector, joined with its cell
     val cbb = pqBook.getOrElse(pqCodebook(corpus, vecCol, idCol, m, ksub, dim))
@@ -857,6 +822,23 @@ object Similarity {
     if (materialize) out.cutLineage() else out
   }
 
+  /** The interpreted nearest-cell fold — the readable spec the codegen'd
+    * `graft_argmax_cell` kernel must reproduce selection-for-selection
+    * (DotNativeSpec, KernelIdentitySpec): fold over the literal codebook,
+    * keep the best dotScaled/cell_norm on STRICT improvement (id-ordered
+    * cells → lowest-id ties; NaN scores never selected). A NULL vector
+    * gives NULL, as in the kernel. */
+  private[graft] def nearestCellFoldForSpec(vec: Column, cellsLit: Column): Column =
+    when(vec.isNotNull, aggregate(
+      cellsLit,
+      struct(lit(Double.NegativeInfinity).as("s"), lit(-1L).as("id")),
+      (acc, cell) => {
+        val score = dotScaledDeclarative(vec, cell.getField("_2")).cast("double") /
+          cell.getField("_3")
+        when(score > acc.getField("s"),
+          struct(score.as("s"), cell.getField("_1").as("id"))).otherwise(acc)
+      }).getField("id"))
+
   /** Incremental (steady-state crawl) semantic dedup — SemDeDup composed
     * with the [[graft.ext.Dedup.incrementalNew]] posture: which BATCH
     * vectors near-duplicate the MEANING of content already in the corpus,
@@ -866,12 +848,12 @@ object Similarity {
     * and NEVER shuffled — not even one row per vector. Cell assignment
     * runs as a per-row expression against the DRIVER-COLLECTED codebook
     * literal (nCells × dim floats — codebook-class data, the same collect
-    * [[kmeansCodebook]] and [[pcaWhiten]] already make): an HOF argmax of
-    * the exact scaled-int64 dot over the literal cells, ties to the
-    * lowest cell id. The batch's distinct cell ids broadcast into a
-    * left-semi probe of that narrow pipeline, the batch itself broadcasts
-    * into the within-cell pair join, and the cosine threshold filters
-    * map-side. Plan: scan → project → two broadcast joins → filter; the
+    * [[kmeansCodebook]] and [[pcaWhiten]] already make): the
+    * `graft_argmax_cell` kernel's argmax of the exact scaled-int64 dot
+    * over the literal cells, ties to the lowest cell id. The batch's
+    * distinct cell ids broadcast into a left-semi probe of that narrow
+    * pipeline, the batch itself broadcasts into the within-cell pair
+    * join, and the cosine threshold filters map-side. Plan: scan → project → two broadcast joins → filter; the
     * only exchange anywhere belongs to the batch side's tiny distinct.
     *
     * Assignment ranks cells by `dotScaled/cell_norm` — the query-vector
@@ -884,22 +866,6 @@ object Similarity {
     *
     * Returns (batch_id, corpus_id, cosine) for every within-cell pair
     * meeting `threshold`; ids are assumed distinct across the tables. */
-  /** The interpreted nearest-cell fold — the readable spec the codegen'd
-    * `graft_argmax_cell` kernel must reproduce selection-for-selection
-    * (DotNativeSpec): fold over the literal codebook, keep the best
-    * dotScaled/cell_norm on STRICT improvement (id-ordered cells →
-    * lowest-id ties; NaN scores never selected). */
-  private[graft] def nearestCellFoldForSpec(vec: Column, cellsLit: Column): Column =
-    aggregate(
-      cellsLit,
-      struct(lit(Double.NegativeInfinity).as("s"), lit(-1L).as("id")),
-      (acc, cell) => {
-        val score = dotScaled(vec, cell.getField("_2")).cast("double") /
-          cell.getField("_3")
-        when(score > acc.getField("s"),
-          struct(score.as("s"), cell.getField("_1").as("id"))).otherwise(acc)
-      }).getField("id")
-
   def semDedupIncremental(
       corpus: DataFrame,
       batch: DataFrame,
@@ -926,15 +892,12 @@ object Similarity {
     val cellsLit = typedLit(cellRows) // struct<_1: id, _2: vec, _3: norm>
     // per-row nearest cell: best dotScaled/cell_norm (strict >, cells in
     // id order → lowest-id ties). The codegen'd kernel runs the whole
-    // codebook scan in one static call — the interpreted fold dispatches
-    // a lambda per CELL per row, which at corpus scale × 256 cells
-    // dominated the entire incremental pass (DotNativeSpec pins the
-    // kernel's selection bit-identical to this fold)
+    // codebook scan in one static call — the interpreted fold
+    // ([[nearestCellFoldForSpec]], its spec) dispatches a lambda per CELL
+    // per row, which at corpus scale × 256 cells dominated the entire
+    // incremental pass
     def nearestCell(vec: Column): Column =
-      if (org.apache.spark.sql.SparkSession.getActiveSession
-            .exists(_.catalog.functionExists("graft_argmax_cell")))
-        call_function("graft_argmax_cell", vec, cellsLit)
-      else nearestCellFoldForSpec(vec, cellsLit)
+      call_function("graft_argmax_cell", vec, cellsLit)
     val b = batch.select(col(idCol).as("batch_id"), col(vecCol).as("b_vec"))
       .withColumn("cell_id", nearestCell(col("b_vec")))
       .withColumn("b_norm", normDecimal(col("b_vec")))

@@ -39,20 +39,29 @@ object TextHash {
   def hmod(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long") % P
 
+  /** [[hmod]] mod `buckets`, for the declarative specs of the bucket
+    * kernels. An md5 hex prefix always parses, so the coalesce never
+    * fires: it declares the non-null elements the kernels declare. */
+  private[graft] def hmodBucket(c: Column, buckets: Int): Column =
+    coalesce(hmod(c) % buckets, lit(0L))
+
+  /** The empty `array<bigint>` with non-null elements, as the bucket
+    * kernels declare them. */
+  private[graft] def emptyBuckets: Column =
+    array().cast(org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.LongType, containsNull = false))
+
   /** SQL fragment equivalent of [[hmod]] for DuckDB oracle generation. */
   def hmodSql(e: String): String =
     s"(('0x' || substr(md5($e),1,15))::BIGINT % $P)"
 
   /** Word n-gram shingles of a text column (falls back to the whole text
-    * when fewer than n tokens). The codegen'd native kernel when the
-    * graft extensions are registered (HOF lambdas are interpreted row
-    * kernels AND a large chunk of generated plan source), else the
-    * declarative spec — byte-identical (WordGramsNativeSpec). */
+    * when fewer than n tokens): the codegen'd `graft_word_grams` kernel
+    * (HOF lambdas are interpreted row kernels AND a large chunk of
+    * generated plan source). Its spec is [[shinglesDeclarative]]
+    * (WordGramsNativeSpec, KernelIdentitySpec). */
   def shingles(text: Column, n: Int = 3): Column =
-    if (org.apache.spark.sql.SparkSession.getActiveSession
-          .exists(_.catalog.functionExists("graft_word_grams")))
-      call_function("graft_word_grams", text, lit(n))
-    else shinglesDeclarative(text, n)
+    call_function("graft_word_grams", text, lit(n))
 
   /** The readable spec of [[shingles]] (and the oracle-generation
     * template; [[shinglesSql]] mirrors it in DuckDB).

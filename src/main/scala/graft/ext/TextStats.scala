@@ -30,29 +30,21 @@ object TextStats {
     * arithmetic in a fixed expression order — deterministic. */
   val Stopwords = Seq("the", "a", "of", "and", "to", "in")
 
-  /** With the graft extensions registered, pin `c` to one per-row
-    * evaluation ([[graft.plans.EvalOnceExpression]]) — a downstream
-    * filter on a derived column otherwise alias-inlines the whole
-    * tokenize/shingle pass into every pushed conjunct (no subexpression
-    * elimination inside a codegen'd FilterExec). Without the registry
-    * the raw expression stands, the pre-extensions behavior. */
-  private def pinOnce(df: DataFrame, c: Column): Column =
-    if (df.sparkSession.catalog.functionExists("graft_eval_once"))
-      graft.plans.EvalOnceExpression.evalOnce(c)
-    else c
-
   def qualityScore(df: DataFrame, textCol: String): DataFrame = {
     val toks = wsTokens(col(textCol))
     val nTok = size(toks)
     val nChar = length(col(textCol))
     val punct = length(regexp_replace(col(textCol), "[a-zA-Z0-9 ]", ""))
     val stops = size(filter(toks, t => t.isin(Stopwords.map(lit(_)): _*)))
-    // one let-bound counter struct (pinned to a single evaluation): the
-    // signals and the composite are field extractions, so a curation
-    // filter over them costs ONE tokenize pass per row, not one per rule
+    // one let-bound counter struct, pinned to a single evaluation
+    // ([[graft.plans.EvalOnceExpression]]): the signals and the composite
+    // are field extractions, so a curation filter over them costs ONE
+    // tokenize pass per row, not one per rule (a downstream filter would
+    // otherwise alias-inline the whole pass into every pushed conjunct;
+    // a codegen'd FilterExec has no subexpression elimination)
     val cCol = "__q_c"
     require(!df.columns.contains(cCol), s"column $cCol already exists")
-    val counters = pinOnce(df, struct(
+    val counters = graft.plans.EvalOnceExpression.evalOnce(struct(
       nTok.as("n_tok"), nChar.as("n_char"),
       punct.as("punct"), stops.as("stops")))
     val c = col(cCol)
@@ -98,13 +90,12 @@ object TextStats {
       minAlphaWordRatio: Double = 0.8,
       minStopwords: Int = 2
   ): DataFrame = {
-    // The five counters come from ONE pass: the codegen'd
-    // graft_gopher_counts kernel when the graft extensions are registered
-    // (whole-stage codegen + subexpression elimination make repeated
-    // references — e.g. a .where(pass_gopher) whose predicate gets pushed
-    // through the projection — evaluate the scan once), else a
-    // materialized struct of the declarative HOF counters (byte-identical;
-    // TextNativeSpec pins the equivalence). Signals below are cheap FIELD
+    // The five counters come from ONE pass of the codegen'd
+    // graft_gopher_counts kernel (whole-stage codegen + subexpression
+    // elimination make repeated references — e.g. a .where(pass_gopher)
+    // whose predicate gets pushed through the projection — evaluate the
+    // scan once; TextNativeSpec pins it against a struct of the
+    // declarative HOF counters). Signals below are cheap FIELD
     // EXTRACTIONS of the struct, so alias substitution duplicates only
     // GetStructField, never the tokenize pass.
     val cCol = "__gopher_c"
@@ -118,19 +109,8 @@ object TextStats {
     // expression. With it, the plan is Project(kernel once) with cheap
     // field-extraction filters above, and unrelated conjuncts still push
     // past to the scan.
-    val counters =
-      if (df.sparkSession.catalog.functionExists("graft_gopher_counts"))
-        graft.plans.EvalOnceExpression.evalOnce(
-          call_function("graft_gopher_counts", col(textCol)))
-      else {
-        val toks = wsTokens(col(textCol))
-        struct(
-          size(toks).as("n_words"),
-          aggregate(toks, lit(0L), (acc, t) => acc + length(t)).as("char_sum"),
-          size(filter(toks, t => t.contains("#") || t.contains("..."))).as("n_symbol"),
-          size(filter(toks, t => t.rlike("[a-zA-Z]"))).as("n_alpha"),
-          size(filter(toks, t => t.isin(Stopwords.map(lit(_)): _*))).as("n_stops"))
-      }
+    val counters = graft.plans.EvalOnceExpression.evalOnce(
+      call_function("graft_gopher_counts", col(textCol)))
     val c = col(cCol)
     val nWords = c.getField("n_words")
     val denom = nullif(nWords, lit(0)).cast("double")
@@ -210,7 +190,7 @@ object TextStats {
     // shingle pass, not one per conjunct referencing it
     val cCol = "__rep_c"
     require(!df.columns.contains(cCol), s"column $cCol already exists")
-    val counters = pinOnce(df, struct(
+    val counters = graft.plans.EvalOnceExpression.evalOnce(struct(
       size(grams).as("n_bi"), size(array_distinct(grams)).as("n_dist")))
     val c = col(cCol)
     df.withColumn(cCol, counters)
@@ -273,23 +253,13 @@ object TextStats {
 
   /** Document fingerprints: md5 of whitespace-normalized lowercase text,
     * plus a 31-multiplier polynomial rolling hash mod 2^31-1 (byte-exact in
-    * any engine; char-positional, ASCII-safe).
-    *
-    * The normalized string is LET-BOUND via the single-element-array
-    * transform (same pattern as [[TextHash.shingles]]): Catalyst has no let
-    * expression, so referencing the regexp_replace pipeline inside the
-    * per-character lambda would re-run the O(n) regex for every character —
-    * O(n²) per document, which dominated the whole bench before binding. */
+    * any engine; char-positional, ASCII-safe): the codegen'd
+    * `graft_fp_rolling` kernel (per-character interpreted lambdas dominate
+    * otherwise). Its spec is [[rollingDeclarative]]. */
   def fingerprint(df: DataFrame, textCol: String): DataFrame = {
     val norm = trim(regexp_replace(lower(col(textCol)), "\\s+", " "))
-    val rolling =
-      if (df.sparkSession.catalog.functionExists("graft_fp_rolling"))
-        // codegen'd kernel (per-character interpreted lambdas dominate
-        // otherwise); byte-identical to the declarative form below
-        call_function("graft_fp_rolling", norm)
-      else rollingDeclarative(norm)
     df.withColumn("fp_md5", md5(norm))
-      .withColumn("fp_rolling", rolling)
+      .withColumn("fp_rolling", call_function("graft_fp_rolling", norm))
   }
 
   /** Per-document top-k TF-IDF terms — the classic keyword extractor
@@ -382,7 +352,11 @@ object TextStats {
         col("v.tf").as("tf"), col("v.df").as("df"), col("tfidf"))
   }
 
-  /** Declarative spec of the rolling hash (also the oracle template). */
+  /** Declarative spec of the rolling hash (also the oracle template).
+    * The normalized string is LET-BOUND via the single-element-array
+    * transform: Catalyst has no let expression, so referencing the
+    * regexp_replace pipeline inside the per-character lambda would re-run
+    * the O(n) regex for every character — O(n²) per document. */
   def rollingDeclarative(norm: Column): Column =
     element_at(
       transform(array(norm), s => // bind the normalized text once per row

@@ -3,7 +3,6 @@ package graft.ext
 import graft.ops.Lineage.CutOps
 import graft.table.TableStore
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import Similarity.{dotDecimal, normDecimal}
@@ -139,7 +138,6 @@ object VectorIndex {
       queries: DataFrame, vecCol: String, idCol: String,
       k: Int, nProbe: Int
   ): DataFrame = {
-    val spark = queries.sparkSession
     val cells = store.scan(s"${name}_cells")
       .withColumn("cell_norm", normDecimal(col("cell_vec")))
     val q = queries.select(col(idCol).cast("bigint").as("q_id"),
@@ -149,20 +147,11 @@ object VectorIndex {
       .withColumn("cell_cos",
         dotDecimal(col("q_vec"), col("cell_vec")) /
           (col("q_norm") * col("cell_norm")))
-    val qAssign =
-      if (spark.catalog.functionExists("graft_topk")) {
-        scoredCells.groupBy(col("q_id"), col("q_vec"), col("q_norm"))
-          .agg(call_function("graft_topk", col("cell_cos"), col("cell_id"),
-            lit(nProbe)).as("top"))
-          .select(col("q_id"), col("q_vec"), col("q_norm"),
-            explode(col("top.id")).as("cell_id"))
-      } else {
-        val w = Window.partitionBy("q_id")
-          .orderBy(col("cell_cos").desc, col("cell_id").asc)
-        scoredCells.withColumn("__r", row_number().over(w))
-          .where(col("__r") <= nProbe)
-          .select("q_id", "q_vec", "q_norm", "cell_id")
-      }
+    val qAssign = scoredCells.groupBy(col("q_id"), col("q_vec"), col("q_norm"))
+      .agg(call_function("graft_topk", col("cell_cos"), col("cell_id"),
+        lit(nProbe)).as("top"))
+      .select(col("q_id"), col("q_vec"), col("q_norm"),
+        explode(col("top.id")).as("cell_id"))
     // probed cells → driver literals (≤ |queries|·nProbe longs) so the
     // bucketed scan prunes on an IN filter, like the BM25 term filter
     val probed = qAssign.select("cell_id").distinct()

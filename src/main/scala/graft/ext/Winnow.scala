@@ -41,9 +41,10 @@ object Winnow {
 
   /** The declarative pick pipeline — the oracle-shaped spec the codegen'd
     * `graft_winnow` kernel must reproduce element-for-element
-    * (WinnowSpec pins it). */
-  private[graft] def picksDeclarative(s: Column, k: Int, w: Int): Column =
-    element_at(
+    * (WinnowSpec, KernelIdentitySpec). NULL text gives NULL, as in the
+    * kernel. */
+  private[graft] def picksDeclarative(s: Column, k: Int, w: Int): Column = {
+    val picks = element_at(
       transform(
         array(element_at(
           transform(array(s), t =>
@@ -64,23 +65,25 @@ object Winnow {
                       .otherwise(acc)))))
             .otherwise(array().cast("array<struct<h:bigint,p:int>>"))), 1)),
       1)
+    // lambda results are nullable to Catalyst; the coalesces never fire
+    // and declare the non-null elements and fields the kernel declares
+    when(s.isNotNull, transform(picks, f => struct(
+      coalesce(f.getField("h"), lit(0L)).as("h"),
+      coalesce(f.getField("p"), lit(0)).as("p"))))
+  }
 
   /** Fingerprints as (idCol, pos, fp): `pos` the 1-indexed char position of
     * the selected k-gram, `fp` its polynomial hash. Texts shorter than
     * k + w − 1 chars produce no fingerprints (no complete window).
-    * Dispatches to the codegen'd `graft_winnow` kernel when a GraftSession
-    * registered it (one fused loop, no per-window interpreted lambdas —
-    * 16.7 s → sub-second on the sf0.1 gate); the declarative pipeline is
-    * the fallback and the spec. */
+    * The codegen'd `graft_winnow` kernel (one fused loop, no per-window
+    * interpreted lambdas — 16.7 s → sub-second on the sf0.1 gate); the
+    * declarative pipeline [[picksDeclarative]] is its spec. */
   def fingerprints(
       df: DataFrame, textCol: String, idCol: String,
       k: Int = 8, w: Int = 8
   ): DataFrame = {
     require(k >= 1 && w >= 1, "winnow: k and w must be >= 1")
-    val picks =
-      if (df.sparkSession.catalog.functionExists("graft_winnow"))
-        call_function("graft_winnow", col(textCol), lit(k), lit(w))
-      else picksDeclarative(col(textCol), k, w)
+    val picks = call_function("graft_winnow", col(textCol), lit(k), lit(w))
     df.select(col(idCol), explode(picks).as("f"))
       .select(col(idCol), col("f.p").cast("bigint").as("pos"),
         col("f.h").as("fp"))

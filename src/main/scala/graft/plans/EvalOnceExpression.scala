@@ -64,7 +64,7 @@ object EvalOnceExpression {
   /** Column-level wrapper: `evalOnce(expensive)` pins `expensive` to a
     * single per-row evaluation at its projection site. Requires the graft
     * extensions (it rides the same `call_function` registry as every
-    * kernel); callers degrade to the unwrapped column when absent. */
+    * kernel). */
   def evalOnce(c: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_eval_once", c)
 }

@@ -10,11 +10,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst expression `graft_feature_buckets(text, buckets)` — the
   * codegen'd hashed unigram+bigram feature kernel behind the LR/NB/DSIR
-  * family ([[graft.ext.Dsir.featureBuckets]] is the declarative spec and
-  * stays the oracle-shared definition; FeatureBucketsNativeSpec pins
-  * byte-identity). One md5 per n-gram occurrence, zero intermediate
-  * Catalyst arrays — the same Expression-over-HOF upgrade that took the
-  * MinHash signature ≈7× ([[MinHashSigExpression]]).
+  * family ([[graft.ext.Dsir.featureBucketsHof]] is the declarative spec
+  * and stays the oracle-shared definition; FeatureBucketsNativeSpec and
+  * KernelIdentitySpec pin byte-identity). One md5 per n-gram occurrence,
+  * zero intermediate Catalyst arrays — the same Expression-over-HOF
+  * upgrade that took the MinHash signature ≈7× ([[MinHashSigExpression]]).
   */
 case class FeatureBucketsExpression(child: Expression, buckets: Int)
     extends UnaryExpression {

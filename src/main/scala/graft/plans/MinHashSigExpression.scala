@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -38,201 +36,4 @@ case class MinHashSigExpression(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSigExpression =
     copy(child = newChild)
-}
-
-/** Session extensions: `GraftSession` builders call
-  * `.withExtensions(GraftExtensions.apply)`; spark-submit users set
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit =
-    GraftExtensions.register(ext)
-}
-
-object GraftExtensions {
-  def apply(ext: SparkSessionExtensions): Unit = register(ext)
-
-  def register(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSigExpression].getName, "graft_minhash_sig"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_minhash_sig(text) takes one argument")
-        MinHashSigExpression(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot_scaled"),
-      new ExpressionInfo(classOf[DotScaledExpression].getName, "graft_dot_scaled"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_dot_scaled(a, b) takes two arguments")
-        DotScaledExpression(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHashExpression].getName, "graft_simhash"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_simhash(text) takes one argument")
-        SimHashExpression(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_chargrams"),
-      new ExpressionInfo(classOf[CharGramBucketsExpression].getName, "graft_chargrams"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "graft_chargrams(text, n, buckets) takes three arguments")
-        def lit(i: Int): Int = {
-          require(children(i).foldable, "graft_chargrams n/buckets must be literals")
-          children(i).eval(null).asInstanceOf[Number].intValue()
-        }
-        CharGramBucketsExpression(children.head, lit(1), lit(2))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_feature_buckets"),
-      new ExpressionInfo(classOf[FeatureBucketsExpression].getName, "graft_feature_buckets"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_feature_buckets(text, buckets) takes two arguments")
-        require(children(1).foldable, "graft_feature_buckets buckets must be a literal")
-        FeatureBucketsExpression(children.head,
-          children(1).eval(null).asInstanceOf[Number].intValue())
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_word_grams"),
-      new ExpressionInfo(classOf[WordGramsExpression].getName, "graft_word_grams"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          "graft_word_grams(text, n) takes two arguments")
-        require(children(1).foldable, "graft_word_grams n must be a literal")
-        WordGramsExpression(children.head,
-          children(1).eval(null).asInstanceOf[Number].intValue())
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_jaccard"),
-      new ExpressionInfo(classOf[JaccardExpression].getName, "graft_jaccard"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_jaccard(a, b) takes two arguments")
-        JaccardExpression(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_fp_rolling"),
-      new ExpressionInfo(classOf[RollingFingerprintExpression].getName, "graft_fp_rolling"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_fp_rolling(text) takes one argument")
-        RollingFingerprintExpression(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_nfc"),
-      new ExpressionInfo(classOf[NfcNormalizeExpression].getName, "graft_nfc"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_nfc(text) takes one argument")
-        NfcNormalizeExpression(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_gopher_counts"),
-      new ExpressionInfo(classOf[GopherCountsExpression].getName, "graft_gopher_counts"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_gopher_counts(text) takes one argument")
-        GopherCountsExpression(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_eval_once"),
-      new ExpressionInfo(classOf[EvalOnceExpression].getName, "graft_eval_once"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_eval_once(expr) takes one argument")
-        EvalOnceExpression(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_argmax_cell"),
-      new ExpressionInfo(classOf[ArgmaxCellExpression].getName, "graft_argmax_cell"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_argmax_cell(vec, cells) takes two arguments")
-        ArgmaxCellExpression(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowExpression].getName, "graft_winnow"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3, "graft_winnow(text, k, w) takes three arguments")
-        WinnowExpression(children.head, children(1), children(2))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKByAggregate].getName, "graft_topk"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3, "graft_topk(score, id, k) takes three arguments")
-        TopKByAggregate(children.head, children(1), children(2))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cms"),
-      new ExpressionInfo(classOf[CmsAggregate].getName, "graft_cms"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3, "graft_cms(item, d, w) takes three arguments")
-        CmsAggregate(children.head, children(1), children(2))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_kmv"),
-      new ExpressionInfo(classOf[KmvAggregate].getName, "graft_kmv"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2, "graft_kmv(item, k) takes two arguments")
-        KmvAggregate(children.head, children(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cdc_chunks"),
-      new ExpressionInfo(classOf[CdcChunksExpression].getName, "graft_cdc_chunks"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "graft_cdc_chunks(bin, minSize, avgBits, maxSize) takes four arguments")
-        def lit(i: Int): Int = {
-          require(children(i).foldable, "graft_cdc_chunks sizes must be literals")
-          children(i).eval(null).asInstanceOf[Number].intValue()
-        }
-        CdcChunksExpression(children.head, lit(1), lit(2), lit(3))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_lz_stats"),
-      new ExpressionInfo(classOf[LzStatsExpression].getName, "graft_lz_stats"),
-      (children: Seq[Expression]) => {
-        require(children.size == 4,
-          "graft_lz_stats(text, window, minMatch, maxMatch) takes four arguments")
-        def lit(i: Int): Int = {
-          require(children(i).foldable, "graft_lz_stats params must be literals")
-          children(i).eval(null).asInstanceOf[Number].intValue()
-        }
-        LzStatsExpression(children.head, lit(1), lit(2), lit(3))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_ac_counts"),
-      new ExpressionInfo(classOf[AcCountsExpression].getName, "graft_ac_counts"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "graft_ac_counts(text, patterns, boundary) takes three arguments")
-        require(children(1).foldable && children(2).foldable,
-          "graft_ac_counts patterns and boundary must be literals")
-        val arr = children(1).eval(null)
-          .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-        val ps = (0 until arr.numElements()).map(i => arr.getUTF8String(i).toString)
-        AcCountsExpression(children.head, ps,
-          children(2).eval(null).asInstanceOf[Boolean])
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_srp"),
-      new ExpressionInfo(classOf[SrpExpression].getName, "graft_srp"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_srp(vec) takes one argument")
-        SrpExpression(children.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_avg_hash"),
-      new ExpressionInfo(classOf[AvgHashExpression].getName, "graft_avg_hash"),
-      (children: Seq[Expression]) => {
-        require(children.size == 1, "graft_avg_hash(bin) takes one argument")
-        AvgHashExpression(children.head)
-      }))
-    // plan rewrite: window row_number-top-k → bounded graft_topk aggregate
-    ext.injectOptimizerRule(_ => TopKWindowRewrite)
-    // conjunct splitting around graft_eval_once barriers: unrelated
-    // predicates keep reaching the scan (pushdown + partition pruning)
-    ext.injectOptimizerRule(_ => PushThroughEvalOnce)
-    // physical operator: AsOfJoinNode → AsOfJoinExec (sorted streaming merge)
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-  }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, LongType}
   * ([[graft.ext.Similarity.srpCoeffs]], the full-rank md5-derived table
   * shared verbatim with the declarative path and the DuckDB oracles).
   *
-  * Bit-identical to [[graft.ext.Similarity.srpSignature]]'s
+  * Bit-identical to [[graft.ext.Similarity.srpDeclarative]], the
   * higher-order-function formulation (SrpNativeSpec asserts parity,
   * including negative-half rounding: quantization is HALF_UP AWAY FROM
   * ZERO, the `round()` semantics of both engines — `Math.round`'s
@@ -57,7 +57,7 @@ object SrpNative {
   /** One pass: quantize then 60 integer dots; static for codegen.
     * The contract is exactly-[[Dim]]-element vectors (the parity spec's
     * scope); shorter input zero-pads here, whereas the declarative
-    * fallback's zip_with null-pads — don't feed ragged vectors to
+    * formulation's zip_with null-pads — don't feed ragged vectors to
     * either. */
   def srp(arr: ArrayData): Long = {
     val n = math.min(arr.numElements(), Dim)

@@ -21,8 +21,7 @@ import org.apache.spark.sql.types._
   * total order as the window formulation — byte-identical results
   * (TopKAggregateSpec, and the similarity gate queries route through it).
   *
-  * Contract: rows with a null score or null id are EXCLUDED (the window
-  * fallback in Similarity.rankTopK filters them identically); NaN scores
+  * Contract: rows with a null score or null id are EXCLUDED; NaN scores
   * rank above all doubles and -0.0 == 0.0, matching Spark's sort order.
   */
 case class TopKByAggregate(

@@ -491,8 +491,8 @@ object Ext {
       // failure-chain emits, not just leaf matches.
       val docs = t(s, dir, "documents")
       docs.select(col("doc_id"),
-          Blocklist.matchCounts(docs, "text", BlocklistPats, boundary = false).as("cs"),
-          Blocklist.matchCounts(docs, "text", BlocklistPats, boundary = true).as("cw"))
+          Blocklist.matchCounts("text", BlocklistPats, boundary = false).as("cs"),
+          Blocklist.matchCounts("text", BlocklistPats, boundary = true).as("cw"))
         .select(col("doc_id"),
           concat_ws(",", transform(col("cs"), _.cast("string"))).as("counts_sub_s"),
           concat_ws(",", transform(col("cw"), _.cast("string"))).as("counts_word_s"),
@@ -596,7 +596,7 @@ object Ext {
     "ext_minhash_signature" -> ((s, dir) =>
       // the NATIVE codegen'd expression, validated against the SQL oracle
       t(s, dir, "documents")
-        .withColumn("sig", Dedup.minhashSig(t(s, dir, "documents"), "text"))
+        .withColumn("sig", Dedup.minhashSig("text"))
         .select(col("doc_id"),
           element_at(col("sig"), 1).as("m0"),
           element_at(col("sig"), 6).as("m5"),
@@ -880,7 +880,7 @@ object Ext {
             transform(col("embedding"), (x, i) =>
               when(i === 0, x + lit(0.01f)).otherwise(x)).as("embedding")))
       val sigs = corpus.select(col("vec_id"),
-        Similarity.srpSignature(col("embedding"), 64).as("srp"))
+        Similarity.srpSignature(col("embedding")).as("srp"))
       Dedup.hammingNeighbors(sigs, "vec_id", "srp", maxDist = 4, blocks = 6)
         .orderBy("a_id", "b_id")
     }),

@@ -196,10 +196,10 @@ object StreamingIngest {
     *
     * Scale shape: the per-(window, key) count is a partial-agg shuffle of
     * narrow rows; the rank stage then reduces each window's distinct-key
-    * counts through the bounded `graft_topk` aggregate when registered —
+    * counts through the bounded `graft_topk` aggregate —
     * ≤ k candidates survive per mapper per window, so the second exchange
-    * carries mappers × k rows, never the key universe (the window-function
-    * fallback shuffles all distinct keys to rank them; identical output,
+    * carries mappers × k rows, never the key universe (a window-function
+    * rank would shuffle all distinct keys; identical output,
     * TopKAggregateSpec discipline). Counts and shares are exact integer
     * arithmetic (`div` truncation, engine-portable).
     *
@@ -223,11 +223,10 @@ object StreamingIngest {
     * so a foreachBatch sink can maintain the count state as append-only
     * deltas and compact by sum (the BM25 postings discipline).
     *
-    * Null keys are excluded HERE so both rank paths agree: the bounded
-    * `graft_topk` aggregate skips null ids in update, while the
-    * window-function fallback would happily rank them — and a null key
-    * in the share denominator would make the two paths' `share_ppm`
-    * diverge. Count null-key traffic via [[graft.ops.Profile.profile]]. */
+    * Null keys are excluded HERE: the bounded `graft_topk` aggregate
+    * skips null ids in update, so a null key would still count in the
+    * window's `share_ppm` denominator while never ranking. Count null-key
+    * traffic via [[graft.ops.Profile.profile]]. */
   def windowKeyCounts(
       df: DataFrame,
       tsCol: String,
@@ -242,33 +241,16 @@ object StreamingIngest {
     * table — exposed separately so incrementally-maintained count state
     * ranks through the same code path as the one-shot operator. */
   def rankHeavyHitters(counts: DataFrame, keyCol: String, k: Int): DataFrame = {
-    val spark = counts.sparkSession
-    val ranked =
-      if (spark.catalog.functionExists("graft_topk")) {
-        counts.groupBy(col("window"))
-          .agg(
-            call_function("graft_topk",
-              col("n").cast("double"), col(keyCol).cast("long"), lit(k)).as("top"),
-            sum(col("n")).as("n_window"))
-          .select(col("window"), col("n_window"),
-            posexplode(col("top")).as(Seq("pos", "t")))
-          .select(col("window"), col("t.id").as(keyCol),
-            (col("pos") + 1).cast("int").as("rank"),
-            col("t.score").cast("long").as("n"), col("n_window"))
-      } else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("window").orderBy(col("n").desc, col(keyCol).asc)
-        val tot = org.apache.spark.sql.expressions.Window.partitionBy("window")
-        counts
-          .withColumn("rank", row_number().over(w))
-          .withColumn("n_window", sum(col("n")).over(tot))
-          .where(col("rank") <= k)
-          .select(col("window"), col(keyCol), col("rank"), col("n"),
-            col("n_window"))
-      }
-    ranked
-      .select(col("window.start").as("window_start"), col(keyCol),
-        col("rank"), col("n"), col("n_window"))
+    counts.groupBy(col("window"))
+      .agg(
+        call_function("graft_topk",
+          col("n").cast("double"), col(keyCol).cast("long"), lit(k)).as("top"),
+        sum(col("n")).as("n_window"))
+      .select(col("window"), col("n_window"),
+        posexplode(col("top")).as(Seq("pos", "t")))
+      .select(col("window.start").as("window_start"), col("t.id").as(keyCol),
+        (col("pos") + 1).cast("int").as("rank"),
+        col("t.score").cast("long").as("n"), col("n_window"))
       .withColumn("share_ppm", expr("(n * 1000000) div n_window"))
   }
 

@@ -1429,7 +1429,7 @@ object ScaleSmoke {
       val plants = vecs.where(col("id") % 100 === 0)
         .select((col("id") + n).as("id"), col("embedding"))
       val sigs = vecs.unionByName(plants).select(col("id"),
-        graft.ext.Similarity.srpSignature(col("embedding"), 64).as("srp"))
+        graft.ext.Similarity.srpSignature(col("embedding")).as("srp"))
       val pairs = graft.ext.Dedup.hammingNeighbors(
         sigs, "id", "srp", maxDist = 2, blocks = 6)
       val found = pairs.agg(count(lit(1)),

@@ -242,7 +242,7 @@ class ExtSpec extends SparkSpec {
     val df = spark.createDataFrame(java.util.List.of(
       Row(1L, vec), Row(2L, vec), Row(3L, pert), Row(4L, anti)), schema)
     val sigs = df.select(col("vec_id"),
-      Similarity.srpSignature(col("embedding"), 64).as("s"))
+      Similarity.srpSignature(col("embedding")).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sigs(1L) == sigs(2L), "identical vectors share the signature")
     assert(sigs.values.forall(s => s >= 0 && s < (1L << 60)))

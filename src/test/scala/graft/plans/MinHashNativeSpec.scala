@@ -11,7 +11,7 @@ class MinHashNativeSpec extends SparkSpec {
       .select("doc_id", "text")
     val both = docs.select(
       col("doc_id"),
-      TextHash.minhashSignature(TextHash.shingles(col("text"))).as("hof"),
+      TextHash.minhashSignature(TextHash.shinglesDeclarative(col("text"), 3)).as("hof"),
       call_function("graft_minhash_sig", col("text")).as("native"))
     assert(both.where(not(col("hof") === col("native"))).count() == 0)
     assert(both.count() == 500)
@@ -24,7 +24,7 @@ class MinHashNativeSpec extends SparkSpec {
       java.util.List.of(Row("one"), Row("two words"), Row("a b c"), Row(" ")),
       StructType(Seq(StructField("text", StringType))))
     val both = df.select(
-      TextHash.minhashSignature(TextHash.shingles(col("text"))).as("hof"),
+      TextHash.minhashSignature(TextHash.shinglesDeclarative(col("text"), 3)).as("hof"),
       call_function("graft_minhash_sig", col("text")).as("native"))
     assert(both.where(not(col("hof") === col("native"))).count() == 0)
   }

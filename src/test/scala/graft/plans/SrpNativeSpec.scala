@@ -15,18 +15,6 @@ class SrpNativeSpec extends SparkSpec {
   private val schema = StructType(Seq(StructField("id", LongType),
     StructField("embedding", ArrayType(FloatType))))
 
-  /** The declarative path, forced (bits=59 skips the kernel routing). */
-  private def hofSig(vec: org.apache.spark.sql.Column) = {
-    val quantized = transform(vec, x => round(x.cast("double") * lit(1e7)).cast("long"))
-    val dots = (0 until 60).map { i =>
-      val coeffs = array((0 until 64).map(j => lit(Similarity.srpCoeffs(i)(j))): _*)
-      aggregate(zip_with(quantized, coeffs, (x, c) => x * c), lit(0L), (a, x) => a + x)
-    }
-    dots.zipWithIndex.map { case (d, i) =>
-      when(d >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
   test("kernel == HOF on random vectors incl. exact negative halves") {
     val rnd = new Random(17)
     val rows: Seq[Row] = (0 until 200).map { i =>
@@ -40,12 +28,12 @@ class SrpNativeSpec extends SparkSpec {
     val df = spark.createDataFrame(java.util.List.of(rows: _*), schema)
     val out = df.select(col("id"),
       call_function("graft_srp", col("embedding")).as("k"),
-      hofSig(col("embedding")).as("h")).collect()
+      Similarity.srpDeclarative(col("embedding")).as("h")).collect()
     out.foreach(r => assert(r.getLong(1) == r.getLong(2),
       s"id ${r.getLong(0)}: kernel ${r.getLong(1).toBinaryString} != " +
         s"hof ${r.getLong(2).toBinaryString}"))
     // and the public API routes full-width calls to the kernel
-    val p = df.select(Similarity.srpSignature(col("embedding"), 64))
+    val p = df.select(Similarity.srpSignature(col("embedding")))
       .queryExecution.executedPlan.toString
     assert(p.contains("graft_srp"), s"srpSignature must use the kernel:\n$p")
   }

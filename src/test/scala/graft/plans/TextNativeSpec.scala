@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.SparkSpec
 import graft.ext.{TextHash, TextStats}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -32,7 +32,6 @@ class TextNativeSpec extends SparkSpec {
   }
 
   test("gopher counts: native kernel == declarative HOF struct everywhere") {
-    import graft.ext.TextStats.Stopwords
     // extra adversarials for this kernel: symbols, ellipses, supplementary
     // plane chars (length() counts code points, not UTF-16 units),
     // stopwords at edges, digit-only tokens
@@ -43,15 +42,9 @@ class TextNativeSpec extends SparkSpec {
         "123 456 #",
         "... ... ...",
         "the the the the") : _*))
-    val toks = TextStats.wsTokens(col("text"))
-    val dec = struct(
-      size(toks).as("n_words"),
-      aggregate(toks, lit(0L), (acc, t) => acc + length(t)).as("char_sum"),
-      size(filter(toks, t => t.contains("#") || t.contains("..."))).as("n_symbol"),
-      size(filter(toks, t => t.rlike("[a-zA-Z]"))).as("n_alpha"),
-      size(filter(toks, t => t.isin(Stopwords.map(lit(_)): _*))).as("n_stops"))
     val mism = docs.select(
-      call_function("graft_gopher_counts", col("text")).as("nat"), dec.as("dec"))
+      call_function("graft_gopher_counts", col("text")).as("nat"),
+      TextNativeSpec.gopherCounters(col("text")).as("dec"))
       .where(not(col("nat") <=> col("dec")))
     assert(mism.count() == 0, mism.collect().take(3).mkString("; "))
   }
@@ -110,5 +103,25 @@ class TextNativeSpec extends SparkSpec {
     val fpPlan = graft.SparkEntry.queries("ext_fingerprint")(spark, "/root/testdata/sf0.001")
       .queryExecution.executedPlan.toString
     assert(fpPlan.contains("graft_fp_rolling"))
+  }
+}
+
+object TextNativeSpec {
+
+  /** The declarative spec of `graft_gopher_counts`: the five counters as
+    * a struct of HOF expressions over one token array. NULL text gives
+    * NULL, as in the kernel. Under the NULL guard no counter is null; the
+    * coalesces declare the kernel's non-null fields and never fire. */
+  def gopherCounters(text: Column): Column = {
+    import TextStats.Stopwords
+    val toks = TextStats.wsTokens(text)
+    def nOf(p: Column => Column) = coalesce(size(filter(toks, p)), lit(0))
+    when(text.isNotNull, struct(
+      coalesce(size(toks), lit(0)).as("n_words"),
+      coalesce(aggregate(toks, lit(0L), (acc, t) => acc + length(t)), lit(0L))
+        .as("char_sum"),
+      nOf(t => t.contains("#") || t.contains("...")).as("n_symbol"),
+      nOf(t => t.rlike("[a-zA-Z]")).as("n_alpha"),
+      nOf(t => t.isin(Stopwords.map(lit(_)): _*)).as("n_stops")))
   }
 }

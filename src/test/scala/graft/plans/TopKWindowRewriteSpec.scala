@@ -25,7 +25,7 @@ class TopKWindowRewriteSpec extends SparkSpec {
 
   // `id % 13` types as nullable (x % 0 → null), so the rewrite's null-safety
   // guard requires the IS NOT NULL guarantee — the same shape real scoring
-  // queries have (rankTopK's fallback filters nulls explicitly too)
+  // queries have
   private val windowSql =
     """SELECT q, i, s, rnk FROM (
       |  SELECT q, i, s,
