@@ -2,7 +2,7 @@
 """Paired A/B runs of the benchmark: a base revision against a change.
 
     python3 scripts/bench_ab.py --workload curate_serve --seed 3 --pairs 10 \\
-        --workdir /tmp/ab [--base HEAD] [--reuse] [--out ab.json]
+        --workdir /tmp/ab [--base HEAD] [--swap] [--reuse] [--out ab.json]
 
 Run from the repository root. `git archive` unpacks the base revision into
 <workdir>/A and the working tree into <workdir>/B, tracked and untracked
@@ -11,6 +11,14 @@ untouched). Both copies are siblings, so their paths differ in one letter
 only: builds from different directories have measured a few percent apart
 on identical code, and comparing a clean copy against the repository
 checkout mixes that into the result.
+
+--swap unpacks the change into <workdir>/A and the base into <workdir>/B:
+the directory control. A copy has once run a few percent slower in one of
+the two directories whichever revision it held, so a gap of that size is
+the code's only if it keeps its sign with the sides swapped. Results are
+reported as base and change either way. The side holding the change is
+recorded in <workdir>/CHANGE; --reuse refuses copies unpacked the other
+way round.
 
 Each fresh copy first makes one discarded run on seed 1, which builds it;
 --reuse keeps the copies and builds of an earlier call instead. Then the
@@ -106,6 +114,8 @@ def main():
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--workdir", required=True, help="directory for the two copies")
     ap.add_argument("--base", default="HEAD", help="base revision (default HEAD)")
+    ap.add_argument("--swap", action="store_true",
+                    help="unpack the change into A and the base into B")
     ap.add_argument("--reuse", action="store_true",
                     help="keep existing copies under --workdir (and their builds)")
     ap.add_argument("--out", help="write every run's result here as JSON")
@@ -114,10 +124,21 @@ def main():
         bench = json.load(f)
     seconds, metrics = bench["run_seconds"], bench["end_to_end"]
 
-    sides = [os.path.join(os.path.abspath(a.workdir), d) for d in ("A", "B")]
-    if not (a.reuse and all(os.path.isdir(s) for s in sides)):
+    # sides[0] holds the base, sides[1] the change
+    workdir = os.path.abspath(a.workdir)
+    dirs = ("B", "A") if a.swap else ("A", "B")
+    sides = [os.path.join(workdir, d) for d in dirs]
+    marker = os.path.join(workdir, "CHANGE")
+    if a.reuse and all(os.path.isdir(s) for s in sides):
+        held = open(marker).read().strip() if os.path.exists(marker) else "B"
+        if held != dirs[1]:
+            sys.exit(f"bench_ab: {workdir} holds the change in {held}; "
+                     f"{'drop' if a.swap else 'pass'} --swap")
+    else:
         unpack(a.base, sides[0])
         unpack(worktree_tree(), sides[1])
+        with open(marker, "w") as f:
+            f.write(dirs[1] + "\n")
         for side in sides:
             if run(side, a.workload, 1, seconds) is None:
                 sys.exit(f"bench_ab: warm-up run failed in {side}")
@@ -131,7 +152,7 @@ def main():
         if None in got:
             sys.exit(f"bench_ab: pair {i + 1} had a failed run")
         pairs.append(got)
-        print(f"pair {i + 1}/{a.pairs} ({'AB' if order == (0, 1) else 'BA'}): " +
+        print(f"pair {i + 1}/{a.pairs} ({''.join(dirs[s] for s in order)}): " +
               " ".join(f"{m['name']} {value(got[0], m['name']):.4g}->"
                        f"{value(got[1], m['name']):.4g}" for m in metrics[:5]),
               flush=True)
@@ -141,12 +162,13 @@ def main():
                if not p[k]["correct"] or p[k]["failed"]]
         print(f"{label}: {len(pairs) - len(bad)}/{len(pairs)} runs correct with 0 failed"
               + (f"; others: {bad}" if bad else ""))
-    print(f"{a.workload} seed {a.seed}, {len(pairs)} pairs, --seconds {seconds}")
+    print(f"{a.workload} seed {a.seed}, {len(pairs)} pairs, --seconds {seconds}, "
+          f"base in {dirs[0]}, change in {dirs[1]}")
     report(metrics, pairs)
     if a.out:
         with open(a.out, "w") as f:
             json.dump({"workload": a.workload, "seed": a.seed, "seconds": seconds,
-                       "pairs": pairs}, f, indent=1)
+                       "swap": a.swap, "pairs": pairs}, f, indent=1)
     return 0
 
 

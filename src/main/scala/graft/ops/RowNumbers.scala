@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 /** Gap-free, order-preserving global row numbers starting at an offset — the
@@ -15,12 +16,16 @@ import org.apache.spark.sql.functions._
   *   - `row_number().over(Window.orderBy(...))` collapses to ONE partition —
   *     a non-starter at 100 TB.
   *
-  * Strategy (two jobs, no shuffle, no global sort):
-  *   pass 1: count rows per partition (cheap job),
-  *   pass 2: exclusive prefix-sum of counts → per-partition offset, applied
-  *     via a broadcast-small literal map + `monotonically_increasing_id()`
-  *     delta within the partition. Both passes stay in whole-stage codegen
-  *     (no RDD conversion).
+  * Strategy (no shuffle, no global sort — the shape of Spark's own
+  * `ZippedWithIndexRDD`):
+  *   pass 1: count the rows of every partition but the last, in ONE job
+  *     over a column-pruned projection of the input (the scan reads no
+  *     columns). An input that plans to a single partition runs no job:
+  *     its ids are `start + monotonically_increasing_id()`.
+  *   pass 2: exclusive prefix-sum of the counts → per-partition offset,
+  *     applied via a broadcast-small literal map (partitions counted empty
+  *     are left out) + `monotonically_increasing_id()` delta within the
+  *     partition, in whole-stage codegen.
   *
   * Ordering contract: row numbers follow Spark's partition order, which is
   * file/offset order for a file scan. For multi-file inputs needing strict
@@ -42,39 +47,48 @@ object RowNumbers {
       start: Long = 1L,
       cache: Boolean = false
   ): DataFrame = {
-    val work0 = if (cache) df.cache() else df
-    val work = work0
-      .withColumn(PidCol, spark_partition_id())
-      .withColumn(MonoCol, monotonically_increasing_id())
+    val work = if (cache) df.cache() else df
 
-    // Pass 1: per-partition (count, first mono id). monotonically_increasing_id
-    // is consecutive within a partition, so mono - min(mono) is the in-partition
-    // row index.
-    val stats = work
-      .groupBy(col(PidCol))
-      .agg(count(lit(1)).as("cnt"), min(col(MonoCol)).as("mn"))
-      .collect()
-      .map(r => (r.getInt(0), (r.getLong(1), r.getLong(2))))
-      .sortBy(_._1)
-
-    // Exclusive prefix sum of counts → offset of each partition's first row.
-    var acc = start
-    val adjust: Map[Int, Long] = stats.map { case (pid, (cnt, mn)) =>
-      val offset = acc // global id of first row in this partition
-      acc += cnt
-      pid -> (offset - mn) // id = mono + adjust
-    }.toMap
-
-    if (adjust.isEmpty) {
-      // empty input: just add the column
-      return df.select(lit(null).cast("long").as(colName) +: df.columns.toIndexedSeq.map(col): _*)
+    // Pass 1: row counts of partitions 0 .. n-2 (the last one's count only
+    // moves ids past the end). `select()` prunes every column, so the scan
+    // reads none — what a `count(1)` aggregate reads, without its shuffle.
+    val qe = work.select().queryExecution
+    val counts = SQLExecution.withNewExecutionId(qe, Some("row numbers")) {
+      val rows = qe.toRdd
+      val counted = 0 until (rows.getNumPartitions - 1)
+      if (counted.isEmpty) Array.empty[Long]
+      else rows.sparkContext.runJob(rows, countRows _, counted)
     }
 
-    val adjustCol: Column = element_at(typedLit(adjust), col(PidCol))
+    // Offset of each partition's first row, minus the partition's first
+    // monotonically_increasing_id (documented as the partition id in the
+    // upper 31 bits, the in-partition index in the lower 33): id = mono +
+    // adjust(pid).
+    val offsets = partitionOffsets(counts, start)
+    val adjust: Map[Int, Long] = offsets.indices
+      .filter(pid => pid == counts.length || counts(pid) > 0)
+      .map(pid => pid -> (offsets(pid) - (pid.toLong << 33)))
+      .toMap
+
     work
-      .withColumn(colName, adjustCol + col(MonoCol))
+      .withColumn(PidCol, spark_partition_id())
+      .withColumn(MonoCol, monotonically_increasing_id())
+      .withColumn(colName, element_at(typedLit(adjust), col(PidCol)) + col(MonoCol))
       .select(col(colName) +: df.columns.toIndexedSeq.map(col): _*)
   }
+
+  private def countRows(rows: Iterator[_]): Long = {
+    var n = 0L
+    while (rows.hasNext) { rows.next(); n += 1 }
+    n
+  }
+
+  /** The first row number of each partition, numbering from `start` in
+    * partition order: the exclusive prefix sum of the partitions' row
+    * counts, plus one entry past the last counted partition. [[Validate]]
+    * numbers its error rows with it, so both number a file's rows alike. */
+  private[ops] def partitionOffsets(counts: Array[Long], start: Long): Array[Long] =
+    counts.scanLeft(start)(_ + _)
 
   /** Row numbers in a caller-defined total order (used when strict order
     * matters across splittable multi-file reads): range-partitioned sort then

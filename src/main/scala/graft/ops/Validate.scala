@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * partition returns its row count and its first `limitErrors` error cells
   * in scan order. The partitions' cells are concatenated in partition order
   * and, when the caller has no row-number column, numbered from the
-  * per-partition counts exactly as [[RowNumbers]] numbers rows — so the
+  * per-partition counts by [[RowNumbers]]' own offsets function — so the
   * reference's streaming counter needs no pre-pass, no separate count and
   * no per-row loop outside Spark. Unique-key duplicate detection is one
   * aggregate pass per declared unique field. Error cap default 1000
@@ -216,7 +216,7 @@ object Validate {
         Iterator.single((n, found.result()))
       }.collect()
     }
-    val offsets = parts.scanLeft(1L)(_ + _._1)
+    val offsets = RowNumbers.partitionOffsets(parts.map(_._1), 1L)
     val errors = parts.iterator.zip(offsets.iterator).flatMap { case ((_, errs), first) =>
       errs.iterator.map { case (i, e) =>
         if (positional) e.copy(rowNumber = Some(first + i)) else e

@@ -67,6 +67,49 @@ class PipelineSpec extends SparkSpec {
     assert(store.scan("t").count() == 3L, "passing checks load normally")
   }
 
+  test("append of a one-file CSV with a declared schema runs one Spark job: the write") {
+    val work = Files.createTempDirectory("graft_pipejobs")
+    Files.writeString(work.resolve("a.csv"),
+      "id,amount\n" + (1 to 3000).map(i => s"$i,$i.5").mkString("\n") + "\n")
+    val store = new TableStore(spark, work.resolve("t").toString)
+    val pipe = new Pipeline(spark, store)
+    val cfg = PipelineConfig(work.resolve("a.csv").toString, "t",
+      IngestionMethod.Append, format = Some(SourceFormat.Csv),
+      schema = Some(schema), validate = false, compactAfterSnapshots = 16)
+    pipe.run(cfg)
+    val (_, jobs) = org.apache.spark.graft.JobRecorder.record(spark.sparkContext) {
+      pipe.run(cfg)
+    }
+    assert(jobs.size == 1, jobs.flatMap(_.stageInfos.map(_.name)))
+    val ids = store.scan("t").select("_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids == (1L to 6000L), "the second append continues at MAX(_id)+1")
+  }
+
+  test("upsert of a one-file CSV runs six Spark jobs: stage cut, three broadcasts, write") {
+    val work = Files.createTempDirectory("graft_pipeupjobs")
+    def csv(name: String, ids: Range, amount: String) = {
+      Files.writeString(work.resolve(name),
+        "id,amount\n" + ids.map(i => s"$i,$amount").mkString("\n") + "\n")
+      work.resolve(name).toString
+    }
+    val store = new TableStore(spark, work.resolve("t").toString)
+    val pipe = new Pipeline(spark, store)
+    def cfg(path: String, method: IngestionMethod) = PipelineConfig(path, "t", method,
+      format = Some(SourceFormat.Csv), schema = Some(schema), validate = false)
+    pipe.run(cfg(csv("base.csv", 1 to 3000, "1.0"), IngestionMethod.Overwrite))
+    val stage = csv("stage.csv", 2001 to 5000, "2.0")
+    val (_, jobs) = org.apache.spark.graft.JobRecorder.record(spark.sparkContext) {
+      pipe.run(cfg(stage, IngestionMethod.Upsert))
+    }
+    // the stage's dedup shuffle-map and checkpoint jobs (Merge.plan's
+    // Lineage.cut); the broadcasts of the stage, of its keys and of the
+    // matched keys; the table write
+    val tags = jobs.map(j => Option(j.properties.getProperty("spark.job.tags")).getOrElse(""))
+    assert(jobs.size == 6, tags)
+    assert(tags.count(_.contains("broadcast exchange")) == 3, tags)
+    assert(store.scan("t").where(col("amount") === 2.0).count() == 3000L)
+  }
+
   test("append pipeline compacts the snapshot chain past the configured threshold") {
     val work = Files.createTempDirectory("graft_pipecompact")
     Files.writeString(work.resolve("a.csv"), "id,amount\n1,1.0\n")
