@@ -68,9 +68,7 @@ object GramIndex {
       store: TableStore, name: String, numBuckets: Int
   ): Unit =
     store.overwriteBucketed(s"${name}_grams",
-      store.scanBucketed(s"${name}_grams").distinct()
-        .cutLineage(),
-      Seq("gh"), numBuckets)
+      store.scan(s"${name}_grams").distinct(), Seq("gh"), numBuckets)
 
   /** [[Dedup.ngramNovelty]] served from the persistent index: identical
     * output by construction (the index IS the reference's distinct-gram
@@ -95,7 +93,7 @@ object GramIndex {
     val seen = cand
       .select(col(idCol), explode(col("__grams")).as("g"))
       .select(col(idCol), TextHash.hmod60(col("g")).as("gh"))
-      .join(store.scanBucketed(s"${name}_grams"), Seq("gh"), "left_semi")
+      .join(store.scan(s"${name}_grams"), Seq("gh"), "left_semi")
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_seen"))
     cand.select(col(idCol), col("n_grams"))

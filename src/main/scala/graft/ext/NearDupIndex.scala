@@ -127,27 +127,19 @@ object NearDupIndex {
     if (!store.exists(s"${name}_tombstones")) return
     // size-gated anti-join (TableStore.antiJoinKeys): a routine takedown
     // list broadcasts, a bulk-erasure tombstone table past the session
-    // broadcast threshold shuffles instead of OOMing an executor
-    // the two anti-join captures and the two rewrites are pairwise
-    // independent — overlap both phases (§2.6); the captures must fully
-    // materialize BEFORE either overwrite clobbers the files they read
-    var bands: DataFrame = null
-    var docsT: DataFrame = null
+    // broadcast threshold shuffles instead of OOMing an executor. The two
+    // rewrites are independent — overlap them (§2.6); each reads the
+    // snapshots its overwrite replaces, which stay on disk until GC.
     graft.ops.Overlap.par(Seq(
-      () => bands = Lineage.cut(
-        store.antiJoinKeys(store.scanBucketed(s"${name}_bands"),
+      () => store.overwriteBucketed(s"${name}_bands",
+        store.antiJoinKeys(store.scan(s"${name}_bands"),
             s"${name}_tombstones", "doc_id", "doc_id")
-          .select("band", "key", "doc_id")),
-      () => docsT = Lineage.cut(
+          .select("band", "key", "doc_id"), Seq("key"), numBuckets),
+      () => store.overwrite(s"${name}_docs",
         store.antiJoinKeys(store.scan(s"${name}_docs"),
             s"${name}_tombstones", "doc_id", "doc_id")
           .select("doc_id", "shingles"))))
-    graft.ops.Overlap.par(Seq(
-      () => store.overwriteBucketed(s"${name}_bands", bands,
-        Seq("key"), numBuckets),
-      () => store.overwrite(s"${name}_docs", docsT)))
     store.drop(s"${name}_tombstones")
-    Lineage.release(bands); Lineage.release(docsT)
   }
 
   /** Screen a crawl batch against the indexed corpus: candidate pairs from
@@ -171,7 +163,7 @@ object NearDupIndex {
       .select(col("band"), col("key"), col("doc_id").as("batch_id"))
     val probeKeys = bBands.select("key").distinct()
       .limit(maxProbeLiterals + 1).collect().map(_.getString(0))
-    val bandsTable = store.scanBucketed(s"${name}_bands")
+    val bandsTable = store.scan(s"${name}_bands")
     val pruned =
       if (probeKeys.length <= maxProbeLiterals)
         bandsTable.where(col("key").isin(probeKeys.toIndexedSeq: _*))

@@ -492,19 +492,16 @@ object Retrieval {
   def compactBm25Index(
       store: TableStore, name: String, numBuckets: Int
   ): Unit = {
-    val postings = store.scanBucketed(s"${name}_postings")
+    val postings = store.scan(s"${name}_postings")
       .groupBy("term", "doc_id")
       .agg(sum(col("tf")).as("tf"), max(col("dl")).as("dl"))
       .where(col("tf") > 0)
       .select("term", "doc_id", "dl", "tf")
-      .cutLineage() // read fully before the overwrite clobbers it
-    val terms = store.scanBucketed(s"${name}_terms")
+    val terms = store.scan(s"${name}_terms")
       .groupBy("term").agg(sum(col("df")).as("df"))
       .where(col("df") > 0)
-      .cutLineage()
     val stats = store.scan(s"${name}_stats")
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-      .cutLineage()
     store.overwriteBucketed(s"${name}_postings", postings,
       Seq("term"), numBuckets)
     store.overwriteBucketed(s"${name}_terms", terms, Seq("term"), numBuckets)
@@ -520,10 +517,9 @@ object Retrieval {
     if (!store.exists(s"${name}_pos_tombstones")) return
     // size-gated anti-join (TableStore.antiJoinKeys): bulk-erasure
     // tombstone tables shuffle instead of forcing an executor-OOM build
-    val live = store.antiJoinKeys(store.scanBucketed(s"${name}_pos"),
+    val live = store.antiJoinKeys(store.scan(s"${name}_pos"),
         s"${name}_pos_tombstones", "doc_id", "doc_id")
       .select("term", "doc_id", "pos")
-      .cutLineage()
     store.overwriteBucketed(s"${name}_pos", live, Seq("term"), numBuckets)
     store.drop(s"${name}_pos_tombstones")
   }
@@ -555,7 +551,7 @@ object Retrieval {
     // key so this is the identity, but DELETED docs carry a negating row —
     // sum(tf)=0 drops them. The bucketed term partitioning already
     // clusters (term, doc_id), so the aggregate plans without an exchange.
-    val tf = store.scanBucketed(s"${name}_postings")
+    val tf = store.scan(s"${name}_postings")
       .where(col("term").isin(qvocab: _*))
       .groupBy("term", "doc_id")
       .agg(sum(col("tf")).as("tf"), max(col("dl")).as("dl"))
@@ -563,7 +559,7 @@ object Retrieval {
     // df increments and per-batch stats rows sum at query time (integer
     // sums — engine-exact), so incremental appends and deletes never
     // rewrite the index
-    val dft = store.scanBucketed(s"${name}_terms")
+    val dft = store.scan(s"${name}_terms")
       .where(col("term").isin(qvocab: _*))
       .groupBy("term").agg(sum(col("df")).as("df"))
     // avgdl in local double arithmetic is the same IEEE quotient the
@@ -628,7 +624,7 @@ object Retrieval {
   ): DataFrame = {
     val terms = phrase.split(" ", -1).filter(_.nonEmpty).toSeq
     require(terms.nonEmpty, "phraseOccurrences: empty phrase")
-    val pos = store.scanBucketed(s"${name}_pos")
+    val pos = store.scan(s"${name}_pos")
       .where(col("term").isin(terms.distinct: _*))
     val base = pos.where(col("term") === terms.head)
       .select(col("doc_id"), col("pos").as("start_pos"))

@@ -1,6 +1,5 @@
 package graft.ext
 
-import graft.ops.Lineage.CutOps
 import graft.table.TableStore
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -120,10 +119,9 @@ object VectorIndex {
     if (!store.exists(s"${name}_tombstones")) return
     // size-gated anti-join (TableStore.antiJoinKeys): bulk-erasure
     // tombstone tables shuffle instead of forcing an executor-OOM build
-    val live = store.antiJoinKeys(store.scanBucketed(s"${name}_vecs"),
+    val live = store.antiJoinKeys(store.scan(s"${name}_vecs"),
         s"${name}_tombstones", "vec_id", "vec_id")
       .select("cell_id", "vec_id", "vec")
-      .cutLineage()
     store.overwriteBucketed(s"${name}_vecs", live, Seq("cell_id"), numBuckets)
     store.drop(s"${name}_tombstones")
   }
@@ -156,7 +154,7 @@ object VectorIndex {
     // bucketed scan prunes on an IN filter, like the BM25 term filter
     val probed = qAssign.select("cell_id").distinct()
       .collect().map(_.getLong(0)).toIndexedSeq
-    val vecs = store.scanBucketed(s"${name}_vecs")
+    val vecs = store.scan(s"${name}_vecs")
     // tombstoned vectors drop at query time (size-gated anti-join: a
     // dimension-sized takedown list broadcasts, a bulk-erasure one
     // shuffles) — the deleteFromIvfIndex path

@@ -2,8 +2,10 @@ package graft.table
 
 import graft.ops.Lineage.CutOps
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import java.nio.charset.StandardCharsets
 
 /** Named parquet tables with atomic manifest swap.
@@ -26,6 +28,13 @@ import java.nio.charset.StandardCharsets
   *   evolution happens at read time via unionByName(allowMissingColumns);
   *   type CHANGES on an existing column remain a hard error, like the
   *   reference (api_loader.py:133-134).
+  * - `overwriteBucketed`/`appendBucketed` write a BUCKETED snapshot: files
+  *   hash-bucketed and sorted on key columns, each named with its bucket
+  *   id, plus a `_bucketspec` file recording (bucket count, keys, schema)
+  *   with the snapshot. [[scan]] reads a manifest whose data snapshots
+  *   all carry one spec as ONE bucketed relation, so two tables bucketed
+  *   alike join on the keys with no exchange — in any process, with no
+  *   catalog entry.
   *
   * A crash between snapshot write and manifest flip leaves the previous
   * state live (orphan dirs are GC'd on the next commit). Works on any
@@ -205,7 +214,9 @@ final class TableStore(spark: SparkSession, root: String,
     * deletion-vector entries ([[deleteByKeysDV]]) anti-join their key list
     * out of everything that PRECEDES them, so a key re-appended after a
     * takedown is live again — exactly the state a rewrite at each step
-    * would have produced, at O(batch)/O(deleted) commit cost. */
+    * would have produced, at O(batch)/O(deleted) commit cost. Data
+    * snapshots that all carry one bucket spec ([[overwriteBucketed]]) and
+    * no deletion vector read as ONE bucketed relation. */
   def scan(name: String): DataFrame = {
     val entries = readManifest(name)
     if (entries.isEmpty)
@@ -285,7 +296,7 @@ final class TableStore(spark: SparkSession, root: String,
     // to the union's own coercion. LAZY on purpose: the dominant shape —
     // one snapshot, no pruning — reads straight through readSnap and
     // must not pay a footer pass it never uses.
-    lazy val foldedSchema: Option[org.apache.spark.sql.types.StructType] =
+    lazy val foldedSchema: Option[StructType] =
       try Some(dataEntries.map(entryFooterSchema(name, _)).reduce(mergeEvolved))
       catch { case _: TypeConflict => None }
     lazy val fullSchema = foldedSchema.getOrElse(dataEntries
@@ -312,8 +323,7 @@ final class TableStore(spark: SparkSession, root: String,
       else {
         // all-nullable: a later-added column IS null for earlier files,
         // exactly as the unionByName chain would have widened it
-        val readSchema = org.apache.spark.sql.types.StructType(
-          fullSchema.fields.map(_.copy(nullable = true)))
+        val readSchema = StructType(fullSchema.fields.map(_.copy(nullable = true)))
         run.map(e => enumerateEntry(name, e))
           .groupBy(_._1).toSeq.sortBy(_._1.mkString(","))
           .map { case (cols, group) =>
@@ -324,9 +334,19 @@ final class TableStore(spark: SparkSession, root: String,
             else mergedPartitionedRead(readSchema, cols, leaves)
           }
       }
-    if (keepFile.isEmpty && !withFile && dataEntries.sizeIs == entries.size)
-      return mergedRun(dataEntries)
-        .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+    if (keepFile.isEmpty && !withFile && dataEntries.sizeIs == entries.size) {
+      // every data snapshot bucketed alike: ONE relation carrying the spec
+      // (bucket i of every snapshot is one bucket of the scan); any other
+      // manifest reads unbucketed
+      return dataEntries.map(entryBucketing(name, _).map(_._1)).distinct match {
+        case Seq(Some(b)) if foldedSchema.isDefined =>
+          fileIndexRead(dataEntries.map(e => new Path(tableDir(name), e)),
+            org.apache.spark.sql.execution.datasources.PartitionSpec.emptySpec,
+            foldedSchema.get, Some(b))
+        case _ => mergedRun(dataEntries)
+          .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
+      }
+    }
     def decorate(df: DataFrame): DataFrame =
       if (!withFile) df
       else df.select(col("_metadata.file_path").as("__file") +:
@@ -413,18 +433,19 @@ final class TableStore(spark: SparkSession, root: String,
   }
 
   /** Parquet schema of one manifest entry's physical directory, partition
-    * columns included (basePath-anchored for subset prefixes). Entry dirs
+    * columns included (basePath-anchored for subset prefixes); a bucketed
+    * snapshot's is the one its `_bucketspec` records (a zero-row bucketed
+    * write leaves no data file to read a footer from). Entry dirs
     * are immutable once committed, so the footer read caches for the
     * store's lifetime — repeated scans of an N-snapshot table pay N footer
     * reads ONCE, then O(new entries). */
-  private def entryFooterSchema(name: String,
-      e: String): org.apache.spark.sql.types.StructType = {
+  private def entryFooterSchema(name: String, e: String): StructType = {
     val dir = tableDir(name)
     val phys = parseEntry(e)._1
     val p = new Path(dir, phys)
     footerSchemaCache.computeIfAbsent(
       fs(p).makeQualified(p).toString,
-      _ => {
+      _ => entryBucketing(name, e).map(_._2).getOrElse {
         val r =
           if (phys.contains('/'))
             spark.read.option("basePath", new Path(dir, snapRootOf(e)).toString)
@@ -433,8 +454,36 @@ final class TableStore(spark: SparkSession, root: String,
       })
   }
 
-  private val footerSchemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]
+  private val footerSchemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]
+
+  /** The bucket spec and schema a bucketed snapshot was written with,
+    * from the `_bucketspec` file in its directory (Spark's file listing
+    * skips `_`-prefixed names); None for plain snapshots, partition
+    * subsets and deletion vectors. Recorded once with the snapshot and
+    * never rewritten, so it caches for the store's lifetime like
+    * [[entryFooterSchema]]; [[writeDataDir]] primes it for its own
+    * snapshots. */
+  private def entryBucketing(name: String,
+      e: String): Option[(BucketSpec, StructType)] =
+    if (isDvEntry(e) || e.contains('/')) None
+    else {
+      val p = new Path(tableDir(name), e)
+      bucketingCache.computeIfAbsent(fs(p).makeQualified(p).toString, _ =>
+        readSmallFile(new Path(p, BucketingFile)).map { txt =>
+          import org.json4s.jackson.JsonMethods
+          val j = JsonMethods.parse(txt)
+          val keys = (j \ "keys").values.asInstanceOf[List[String]]
+          (BucketSpec((j \ "numBuckets").values.asInstanceOf[BigInt].toInt,
+            keys, keys), org.apache.spark.sql.types.DataType.fromJson(
+              JsonMethods.compact(j \ "schema")).asInstanceOf[StructType])
+        })
+    }
+
+  private val BucketingFile = "_bucketspec"
+
+  private val bucketingCache = new java.util.concurrent.ConcurrentHashMap[
+    String, Option[(BucketSpec, StructType)]]
 
   /** One data entry resolved to its partition-column chain and leaf
     * partition directories with their (unescaped, null-mapped) values —
@@ -573,32 +622,40 @@ final class TableStore(spark: SparkSession, root: String,
     * partition pruning, pushdown, and metadata columns ride the standard
     * FileSourceScan path. Partition values are strings by the store's
     * layout contract. */
-  private def mergedPartitionedRead(
-      readSchema: org.apache.spark.sql.types.StructType,
+  private def mergedPartitionedRead(readSchema: StructType,
       cols: Seq[String], leaves: Seq[(Path, Seq[String])]): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{
-      FileStatusCache, HadoopFsRelation, InMemoryFileIndex, PartitionPath,
-      PartitionSpec}
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import org.apache.spark.sql.execution.datasources.{PartitionPath, PartitionSpec}
+    import org.apache.spark.sql.types.{StringType, StructField}
     val partSchema = StructType(
       cols.map(c => StructField(c, StringType, nullable = true)))
     val dataSchema = StructType(
       readSchema.fields.filterNot(f => cols.contains(f.name)))
-    // qualified paths: the index matches a partition's files by comparing
-    // its PartitionPath against the listed files' (qualified) parent dirs
-    val qualified = leaves.map { case (p, vs) => (fs(p).makeQualified(p), vs) }
-    val partitions = qualified.map { case (p, vs) =>
+    val partitions = leaves.map { case (p, vs) =>
       PartitionPath(
         org.apache.spark.sql.catalyst.InternalRow.fromSeq(vs.map(v =>
           if (v == null) null
           else org.apache.spark.unsafe.types.UTF8String.fromString(v))),
-        p)
+        fs(p).makeQualified(p))
     }
-    val index = new InMemoryFileIndex(spark, qualified.map(_._1), Map.empty,
-      Some(dataSchema), FileStatusCache.getOrCreate(spark),
-      Some(PartitionSpec(partSchema, partitions)))
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
-      dataSchema, None,
+    fileIndexRead(leaves.map(_._1), PartitionSpec(partSchema, partitions),
+      dataSchema, None)
+  }
+
+  /** ONE parquet relation over `dirs` with the partition spec given, never
+    * inferred, and optionally a bucket spec — what a path read cannot
+    * build (Spark records bucketing only for catalog tables). */
+  private def fileIndexRead(dirs: Seq[Path],
+      partSpec: org.apache.spark.sql.execution.datasources.PartitionSpec,
+      dataSchema: StructType, bucketSpec: Option[BucketSpec]): DataFrame = {
+    import org.apache.spark.sql.execution.datasources.{
+      FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+    // qualified paths: the index matches a partition's files by comparing
+    // its PartitionPath against the listed files' (qualified) parent dirs
+    val index = new InMemoryFileIndex(spark, dirs.map(p => fs(p).makeQualified(p)),
+      Map.empty, Some(dataSchema), FileStatusCache.getOrCreate(spark),
+      Some(partSpec))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index,
+      partSpec.partitionColumns, dataSchema, bucketSpec,
       new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
       Map.empty[String, String])(spark))
   }
@@ -1107,11 +1164,10 @@ final class TableStore(spark: SparkSession, root: String,
 
   /** Overwrite with the data CLUSTERED on `clusterKeys`: range-partitioned
     * and sorted within files, so parquet row-group min/max statistics make
-    * key-predicate scans prune most of the table (the path-table stand-in
-    * for metastore bucketing — Spark cannot record output partitioning for
-    * path tables, but data skipping needs only the file statistics). The
-    * natural layout for tables merged/exported by `_id` or joined on a
-    * stable key at 100 TB. */
+    * key-predicate scans prune most of the table (data skipping needs only
+    * the file statistics; [[overwriteBucketed]] also spares the shuffle of
+    * joins on the keys). The natural layout for tables merged/exported by
+    * `_id` or filtered on a stable key at 100 TB. */
   def overwriteClustered(name: String, df: DataFrame, clusterKeys: Seq[String],
       numFiles: Option[Int] = None): Unit = {
     val keys = clusterKeys.map(org.apache.spark.sql.functions.col)
@@ -1485,156 +1541,54 @@ final class TableStore(spark: SparkSession, root: String,
       "cannot partition on every column (no data columns would remain)")
   }
 
-  /** Overwrite as a BUCKETED catalog table: hash-bucketed (and sorted)
-    * on `keys` into `numBuckets` files per writer task. Two tables bucketed
-    * identically join/merge on those keys with NO exchange on either side —
-    * the co-location lever for 100 TB steady-state merges: bucket the
-    * target once, bucket each staging batch the same way, and the per-batch
-    * full-outer MERGE stops reshuffling the target. Bucketing metadata
-    * needs the session catalog (Spark cannot record output partitioning
-    * for path tables — see [[overwriteClustered]] for the path-table
-    * stand-in, which gives file skipping but not shuffle elimination);
-    * data lands under this store's root, catalog entry
-    * `graft_bkt_<rootHash>_<name>` (root-hashed so same-named tables in
-    * different stores never collide in the shared session catalog).
-    * Scan through [[scanBucketed]]; plain [[scan]] would read the files
-    * but lose the bucketing guarantee. */
+  /** Overwrite with ONE bucketed snapshot: rows hash-bucketed (and
+    * sorted within each file) on `keys` into `numBuckets` buckets, each
+    * file named with its bucket id, the spec recorded with the snapshot.
+    * Two tables bucketed identically join/merge on those keys with NO
+    * exchange on either side — the co-location lever for 100 TB
+    * steady-state merges: bucket the target once, bucket each staging
+    * batch the same way, and the per-batch full-outer MERGE stops
+    * reshuffling the target. Commits like [[overwrite]]: a failed write
+    * leaves the previous state live, and [[scan]], [[scanAsOf]] and GC
+    * treat the table like any other. A new spec (re-bucketing) is just an
+    * overwrite with it. */
   def overwriteBucketed(name: String, df: DataFrame, keys: Seq[String],
       numBuckets: Int): Unit = {
-    val dir = new Path(tableDir(name), s"bucketed").toString
-    val catalog = bucketedCatalogName(name)
-    spark.sql(s"DROP TABLE IF EXISTS `$catalog`")
-    df.write.format("parquet").option("path", dir)
-      .bucketBy(numBuckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .mode("overwrite")
-      .saveAsTable(catalog)
-    // Persist the bucket spec NEXT TO THE DATA: the session catalog
-    // holding the bucketed-table registration is in-memory and per-JVM,
-    // so without this sidecar a NEW process could scan the files but
-    // never append into the buckets — a crashed cascade's BM25 negation
-    // would be unreplayable by the takeover operator (caught for real by
-    // the two-JVM chaos leg; every in-JVM spec shares the catalog and
-    // cannot see it). Crash atomicity is inherited from saveAsTable
-    // (itself non-atomic): a death inside this method leaves a broken
-    // bucketed table either way; the next overwriteBucketed repairs both.
-    val specF = new Path(tableDir(name), "BUCKETSPEC")
-    val out = fs(specF).create(specF, true)
-    try out.write(s"$numBuckets\n${keys.mkString(",")}\n"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    bucketSpecValidated.put(bucketedCatalogName(name),
-      fs(specF).getFileStatus(specF).getModificationTime)
+    val snap = writeSnapshot(name, df, bucketBy = Some(bucketSpec(df, keys, numBuckets)))
+    val done = commitOwning(name, snap)(_ => Some(Seq(snap)))
+    assert(done, s"unconditional bucketed overwrite of $name cannot abort")
   }
 
-  /** Re-register a bucketed table from its [[overwriteBucketed]] sidecar
-    * when the (per-JVM, in-memory) session catalog has no entry — the
-    * cross-process durability half of the bucketed-table contract. No-op
-    * when already registered or when no sidecar/data exists (the caller's
-    * own existence check then fires its usual error). */
-  /** catalog name → BUCKETSPEC modification time at last validation, so
-    * the steady-state scan/append path pays ONE getFileStatus instead of
-    * a sidecar read + DESCRIBE per call; any cross-process re-bucket
-    * rewrites the sidecar and bumps its mtime, invalidating the entry. */
-  private val bucketSpecValidated =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def ensureBucketedRegistered(name: String): Unit = {
-    val catalog = bucketedCatalogName(name)
-    val specF = new Path(tableDir(name), "BUCKETSPEC")
-    val dataDir = new Path(tableDir(name), "bucketed")
-    if (!fs(specF).exists(specF) || !fs(dataDir).exists(dataDir)) return
-    val specMtime = fs(specF).getFileStatus(specF).getModificationTime
-    val cached = bucketSpecValidated.get(catalog)
-    if (cached != null && cached.longValue == specMtime &&
-        spark.catalog.tableExists(catalog)) return
-    val txt = {
-      val in = fs(specF).open(specF)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    val lines = txt.split("\n")
-    val nb = lines(0).trim.toInt
-    val keys = lines(1).trim.split(",").toSeq
-    if (spark.catalog.tableExists(catalog)) {
-      // cross-session staleness guard: another PROCESS may have
-      // re-bucketed this table (overwriteBucketed rewrites files +
-      // sidecar in ITS session only) — a stale registration here would
-      // silently plan exchange-free joins assuming the old bucket
-      // count/keys over the new files. The sidecar is authoritative;
-      // a mismatched entry drops and re-registers.
-      val desc = spark.sql(s"DESCRIBE FORMATTED `$catalog`").collect()
-      val catNb = desc.find(_.getString(0) == "Num Buckets")
-        .flatMap(_.getString(1).trim.toIntOption)
-      val catKeys = desc.find(_.getString(0) == "Bucket Columns")
-        .map(_.getString(1).replaceAll("[\\[\\]`\\s]", "")
-          .split(",").toSeq)
-      if (catNb.contains(nb) && catKeys.contains(keys)) {
-        bucketSpecValidated.put(catalog, specMtime)
-        return
-      }
-      TableStore.log.warn(s"bucketed table '$name': session-catalog " +
-        s"spec (buckets=${catNb.orNull}, keys=${catKeys.orNull}) no " +
-        s"longer matches the BUCKETSPEC sidecar (buckets=$nb, " +
-        s"keys=$keys) — another process re-bucketed it; re-registering " +
-        "from the sidecar")
-      spark.sql(s"DROP TABLE `$catalog`")
-      ()
-    }
-    val cols = spark.read.parquet(dataDir.toString).schema.toDDL
-    val keyList = keys.map(k => s"`$k`").mkString(", ")
-    // backslash escaping, not SQL-92 quote doubling: Spark's lexer reads
-    // '…''…' as two adjacent strings, so a path with an apostrophe would
-    // fail to parse instead of escaping
-    val loc = dataDir.toString.replace("\\", "\\\\").replace("'", "\\'")
-    spark.sql(s"CREATE TABLE `$catalog` ($cols) USING parquet " +
-      s"CLUSTERED BY ($keyList) SORTED BY ($keyList) INTO $nb BUCKETS " +
-      s"LOCATION '$loc'")
-    bucketSpecValidated.put(catalog, specMtime)
-    ()
-  }
-
-  /** Append to a BUCKETED catalog table created by [[overwriteBucketed]]
-    * with the SAME keys and bucket count (Spark validates the spec and
-    * refuses a mismatch). Each append adds one file per (writer task,
-    * bucket); bucket pruning and exchange-free joins keep working — the
-    * per-bucket data is just split across more files. Sort order is
+  /** Append a batch as one more bucketed snapshot with the SAME keys and
+    * bucket count as the table's bucketed snapshots (a differing spec is
+    * an IllegalArgumentException — re-bucket through
+    * [[overwriteBucketed]]). O(batch) like [[append]]; the scan stays
+    * bucketed, each bucket now spread over more files. Sort order is
     * per-file, so merge-sorted reads across appends are NOT guaranteed;
-    * callers needing one sorted run per bucket should compact by
-    * re-calling [[overwriteBucketed]] with the scan. */
+    * compact by re-calling [[overwriteBucketed]] with the scan. */
   def appendBucketed(name: String, df: DataFrame, keys: Seq[String],
       numBuckets: Int): Unit = {
-    ensureBucketedRegistered(name)
-    require(spark.catalog.tableExists(bucketedCatalogName(name)),
-      s"appendBucketed: no bucketed table '$name' — overwriteBucketed first")
-    df.write.format("parquet")
-      .bucketBy(numBuckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .mode("append")
-      .saveAsTable(bucketedCatalogName(name))
-    // `df` may belong to another session (e.g. Structured Streaming's
-    // cloned micro-batch session); its write only invalidates THAT
-    // session's relation cache, and a reader on this store's session would
-    // keep serving the pre-append file listing. Refresh here so appends
-    // are immediately visible wherever the store reads from.
-    spark.catalog.refreshTable(bucketedCatalogName(name))
+    val spec = bucketSpec(df, keys, numBuckets)
+    if (exists(name)) checkNoTypeChanges(name, tableSchema(name), df)
+    val snap = writeSnapshot(name, df, bucketBy = Some(spec))
+    // checked against the manifest AT COMMIT TIME: a racing re-bucket
+    // refuses this append instead of mixing bucket counts
+    val done = commitOwning(name, snap) { cur =>
+      cur.flatMap(entryBucketing(name, _)).map(_._1)
+        .find(_ != spec).foreach(t => throw new IllegalArgumentException(
+          s"appendBucketed($name): table is bucketed ${t.numBuckets} ways " +
+            s"on ${t.bucketColumnNames.mkString(",")}, not $numBuckets " +
+            s"on ${keys.mkString(",")} — overwriteBucketed to re-bucket"))
+      Some(cur :+ snap)
+    }
+    assert(done, s"bucketed append to $name cannot abort")
   }
 
-  /** Scan a bucketed table WITH its bucketing metadata (via the catalog;
-    * re-registered from the BUCKETSPEC sidecar in a fresh process). */
-  def scanBucketed(name: String): DataFrame = {
-    ensureBucketedRegistered(name)
-    spark.table(bucketedCatalogName(name))
-  }
-
-  /** Catalog entries are session-global while stores are root-scoped, so the
-    * name embeds a stable hash of this store's root — two stores with the
-    * same table name in one SparkSession get distinct catalog entries
-    * instead of silently repointing each other's. */
-  private def bucketedCatalogName(name: String): String = {
-    val rootHash = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(new Path(root).toString))
-    s"graft_bkt_${rootHash}_" + name.replaceAll("[^a-zA-Z0-9_]", "_")
+  private def bucketSpec(df: DataFrame, keys: Seq[String],
+      numBuckets: Int): BucketSpec = {
+    require(keys.nonEmpty, "at least one bucket key")
+    keys.foreach(k => require(df.columns.contains(k), s"no such bucket key: $k"))
+    BucketSpec(numBuckets, keys, keys)
   }
 
   /** Append ONLY the incoming batch as a new snapshot (no table rewrite);
@@ -1657,7 +1611,7 @@ final class TableStore(spark: SparkSession, root: String,
     assert(done, s"append to $name cannot abort")
   }
 
-  private def checkNoTypeChanges(name: String, existing: org.apache.spark.sql.types.StructType,
+  private def checkNoTypeChanges(name: String, existing: StructType,
       incoming: DataFrame): Unit = {
     // nullability is not a type: tables read back from parquet are nullable
     // at every level, so a batch that is narrower on nullability is no change
@@ -1683,7 +1637,7 @@ final class TableStore(spark: SparkSession, root: String,
     * the union's coercion semantics (`scan(name).schema`) rather than
     * guessing — reachable only through historic data written before this
     * store's no-type-change append contract. */
-  def tableSchema(name: String): org.apache.spark.sql.types.StructType = {
+  def tableSchema(name: String): StructType = {
     val entries = readManifest(name)
     if (entries.isEmpty)
       throw new IllegalArgumentException(s"Table not found: $name")
@@ -1757,8 +1711,7 @@ final class TableStore(spark: SparkSession, root: String,
     * caller falls back to the union's own coercion — LOUDLY, because that
     * fallback re-opens the O(snapshots) per-snapshot planning path this
     * fold exists to avoid. */
-  private def mergeEvolved(a: org.apache.spark.sql.types.StructType,
-      b: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType = {
+  private def mergeEvolved(a: StructType, b: StructType): StructType = {
     val known = a.fields.map(f => f.name -> f.dataType).toMap
     val widenTo = b.fields.flatMap { f =>
       known.get(f.name) match {
@@ -1776,21 +1729,19 @@ final class TableStore(spark: SparkSession, root: String,
         case _ => None
       }
     }.toMap
-    org.apache.spark.sql.types.StructType(
+    StructType(
       a.fields.map(f => widenTo.get(f.name)
         .map(w => f.copy(dataType = w)).getOrElse(f)) ++
         b.fields.filterNot(f => known.contains(f.name)))
   }
 
   private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Seq[String], org.apache.spark.sql.types.StructType)]
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[String], StructType)]
 
   /** Evolved schema of an arbitrary manifest (branch heads, captured
     * bases) via the same cached footer fold as [[tableSchema]] — no
     * replay union analyzed just to compare field types. */
-  private def entriesSchema(name: String,
-      entries: Seq[String]): org.apache.spark.sql.types.StructType =
+  private def entriesSchema(name: String, entries: Seq[String]): StructType =
     try entries.filterNot(isDvEntry).map(entryFooterSchema(name, _))
       .reduce(mergeEvolved)
     catch { case _: TypeConflict => readState(name, entries).schema }
@@ -2024,7 +1975,7 @@ final class TableStore(spark: SparkSession, root: String,
       } else None)
   }
 
-  /** Schema-only clone — `CREATE TABLE … WHERE 1=0` (warehouse.py:148-151).
+  /** Schema-only clone — the reference's `WHERE 1=0` table copy (warehouse.py:148-151).
     * A no-op on an existing table, where `df` is not evaluated. The empty
     * snapshot commits only onto an empty manifest, so a creator racing a
     * first writer never replaces the writer's data (its orphan snapshot
@@ -2166,10 +2117,12 @@ final class TableStore(spark: SparkSession, root: String,
     new java.util.concurrent.ConcurrentHashMap[String, Option[Seq[TableStore.RowGroup]]]
 
   private[table] def writeSnapshot(name: String, df: DataFrame,
-      tagPart: String = "", partitionBy: Seq[String] = Nil): String = {
+      tagPart: String = "", partitionBy: Seq[String] = Nil,
+      bucketBy: Option[BucketSpec] = None)
+      : String = {
     val snap = "snap-" + System.currentTimeMillis() + "-" + tagPart +
       java.util.UUID.randomUUID().toString.take(8)
-    writeDataDir(name, snap, df, partitionBy)
+    writeDataDir(name, snap, df, partitionBy, bucketBy)
   }
 
   /** A deletion vector's key list, written like a snapshot (the dv's
@@ -2189,51 +2142,66 @@ final class TableStore(spark: SparkSession, root: String,
     * registry grows unboundedly and orphans become un-GC-able for the
     * JVM's lifetime); a failed WRITE clears it here. */
   private def writeDataDir(name: String, entry: String, df: DataFrame,
-      partitionBy: Seq[String] = Nil): String = {
+      partitionBy: Seq[String] = Nil,
+      bucketBy: Option[BucketSpec] = None)
+      : String = {
     val dir = tableDir(name)
     fs(dir).mkdirs(dir)
     val p = new Path(dir, entry)
     TableStore.markPending(pendingKey(name, entry))
-    var wroteFlat = partitionBy.isEmpty
-    try {
-      val w = df.write.mode("overwrite")
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .parquet(p.toString)
-      // a partitioned write of a ZERO-ROW frame creates no partition dirs
-      // and no data files (a flat empty write leaves a schema-bearing
-      // empty part file) — committing that dir would leave the table
-      // permanently unreadable ('Unable to infer schema'). Detect and
-      // rewrite flat: zero-row snapshots pass the layout contract as the
-      // documented nothing-to-drop case.
-      if (partitionBy.nonEmpty &&
-          !fs(p).listStatus(p).exists(s => s.isDirectory ||
-            s.getPath.getName.startsWith("part-"))) {
-        df.write.mode("overwrite").parquet(p.toString)
-        wroteFlat = true
-      }
-    } catch { case e: Throwable =>
-      TableStore.unmarkPending(pendingKey(name, entry)); throw e
-    }
-    // Prime the footer-schema cache from the frame just written: the
+    // Prime the footer-schema cache from the frame being written: the
     // read-back schema is deterministic — file-source reads force every
     // level nullable, and hive partition columns move to the END as
     // STRINGS (partition-type inference is disabled session-wide) — so
     // later scans of this immutable directory skip the footer-inference
     // Spark job entirely (one job per fresh directory otherwise; the
     // commit-heavy gates paid it on every journal/marker/stats read).
+    val flatReadBack = StructType(df.schema.fields.map(f =>
+      f.copy(dataType = allNullable(f.dataType), nullable = true)))
+    var wroteFlat = partitionBy.isEmpty
+    try bucketBy match {
+      case Some(spec) =>
+        org.apache.spark.sql.GraftBridge.writeBucketed(df, p.toString, spec)
+        // recorded AFTER the data (the write clears its directory first),
+        // schema included: a zero-row bucketed write leaves no data file,
+        // and a flat empty file would break the bucketed scan (every file
+        // must carry a bucket id)
+        import org.json4s.JsonDSL._
+        import org.json4s.jackson.JsonMethods
+        val out = fs(p).create(new Path(p, BucketingFile), false)
+        try out.write(JsonMethods.compact(("numBuckets" -> spec.numBuckets) ~
+            ("keys" -> spec.bucketColumnNames) ~
+            ("schema" -> JsonMethods.parse(flatReadBack.json)))
+          .getBytes(StandardCharsets.UTF_8))
+        finally out.close()
+      case None =>
+        val w = df.write.mode("overwrite")
+        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+          .parquet(p.toString)
+        // a partitioned write of a ZERO-ROW frame creates no partition dirs
+        // and no data files (a flat empty write leaves a schema-bearing
+        // empty part file) — committing that dir would leave the table
+        // permanently unreadable ('Unable to infer schema'). Detect and
+        // rewrite flat: zero-row snapshots pass the layout contract as the
+        // documented nothing-to-drop case.
+        if (partitionBy.nonEmpty &&
+            !fs(p).listStatus(p).exists(s => s.isDirectory ||
+              s.getPath.getName.startsWith("part-"))) {
+          df.write.mode("overwrite").parquet(p.toString)
+          wroteFlat = true
+        }
+    } catch { case e: Throwable =>
+      TableStore.unmarkPending(pendingKey(name, entry)); throw e
+    }
+    val qualified = fs(p).makeQualified(p).toString
+    bucketingCache.put(qualified, bucketBy.map(_ -> flatReadBack))
     val readBack =
-      if (wroteFlat)
-        org.apache.spark.sql.types.StructType(
-          df.schema.fields.map(f =>
-            f.copy(dataType = allNullable(f.dataType), nullable = true)))
-      else
-        org.apache.spark.sql.types.StructType(
-          df.schema.fields.filterNot(f => partitionBy.contains(f.name))
-            .map(f =>
-              f.copy(dataType = allNullable(f.dataType), nullable = true)) ++
+      if (wroteFlat) flatReadBack
+      else StructType(
+        flatReadBack.fields.filterNot(f => partitionBy.contains(f.name)) ++
           partitionBy.map(c => org.apache.spark.sql.types.StructField(
             c, org.apache.spark.sql.types.StringType, nullable = true)))
-    footerSchemaCache.put(fs(p).makeQualified(p).toString, readBack)
+    footerSchemaCache.put(qualified, readBack)
     entry
   }
 

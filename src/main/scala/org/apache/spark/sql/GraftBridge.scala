@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * Spark deliberately exposes no public "DataFrame from LogicalPlan"
   * constructor, yet `SparkSessionExtensions` explicitly supports custom
   * logical nodes + planner strategies — every extension library (including
-  * Spark's own connectors) uses exactly this one-hop bridge. Only the two
+  * Spark's own connectors) uses exactly this one-hop bridge. Only the
   * calls graft needs are exposed; nothing else of the internal API leaks.
   */
 object GraftBridge {
@@ -19,6 +19,35 @@ object GraftBridge {
   /** The analyzed logical plan of a DataFrame (stable attribute ids). */
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[Row]].queryExecution.analyzed
+
+  /** Write `df` as parquet files under `path`, hash-bucketed and sorted
+    * by `spec` — the files `bucketBy` writes for a catalog table, with no
+    * catalog: each file's name carries its bucket id
+    * (`part-…_00003.c000.snappy.parquet`), which is all a bucketed scan
+    * needs besides the spec. `DataFrameWriter` refuses `bucketBy` on a
+    * path write; the write command it would plan takes the spec as is. */
+  def writeBucketed(df: DataFrame, path: String,
+      spec: catalyst.catalog.BucketSpec): Unit = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val session = ds.sparkSession
+    val query = ds.queryExecution.analyzed
+    val out = new org.apache.hadoop.fs.Path(path)
+    val command = execution.datasources.InsertIntoHadoopFsRelationCommand(
+      outputPath = out.getFileSystem(session.sessionState.newHadoopConf())
+        .makeQualified(out),
+      staticPartitions = Map.empty,
+      ifPartitionNotExists = false,
+      partitionColumns = Nil,
+      bucketSpec = Some(spec),
+      fileFormat = new execution.datasources.parquet.ParquetFileFormat,
+      options = Map.empty,
+      query = query,
+      mode = SaveMode.Overwrite,
+      catalogTable = None,
+      fileIndex = None,
+      outputColumnNames = query.output.map(_.name))
+    session.sessionState.executePlan(command).assertCommandExecuted()
+  }
 
   /** Materialize `df` like an eager `localCheckpoint` (persisted
     * InternalRow RDD wrapped as a LogicalRDD — plan truncated to a leaf)

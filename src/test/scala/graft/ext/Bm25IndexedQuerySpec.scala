@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.table.TableStore
 import org.apache.spark.graft.JobRecorder
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.sum
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange}
@@ -128,5 +129,70 @@ class Bm25IndexedQuerySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(results(store).isEmpty)
     Retrieval.compactBm25Index(store, "c", numBuckets)
     assert(results(store).isEmpty)
+  }
+
+  /** Both index scans of an indexed query: bucketed, with their bucket
+    * counts. */
+  private def indexScanBuckets(df: DataFrame): Seq[Int] = {
+    val scans = collect(df.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.size == 2 && scans.forall(_.bucketedScan),
+      s"both index scans read bucketed\n${df.queryExecution.executedPlan}")
+    scans.map(_.relation.bucketSpec.get.numBuckets)
+  }
+
+  test("an emptied index reads back from a new store: no rows, its schema") {
+    val dir = newDir("graft_bm25_emptied")
+    val store = new TableStore(spark, dir)
+    Retrieval.buildBm25Index(store, "c", frame(docs), "text", "doc_id", numBuckets)
+    Retrieval.deleteFromBm25Index(store, "c", frame(docs), "text", "doc_id", numBuckets)
+    Retrieval.compactBm25Index(store, "c", numBuckets)
+    // a new process starts with an empty session catalog
+    spark.catalog.listTables().collect().foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
+    val fresh = new TableStore(spark, dir)
+    val postings = fresh.scan("c_postings")
+    assert(postings.columns.toSeq == Seq("term", "doc_id", "dl", "tf"))
+    assert(postings.count() == 0)
+    val terms = fresh.scan("c_terms")
+    assert(terms.columns.toSeq == Seq("term", "df"))
+    assert(terms.count() == 0)
+    assert(results(fresh).isEmpty)
+  }
+
+  test("time travel reads the postings before a compaction, bucketed") {
+    val store = new TableStore(spark, newDir("graft_bm25_tt"), retainVersions = 2)
+    Retrieval.buildBm25Index(store, "c", frame(docs.take(30)), "text", "doc_id", numBuckets)
+    Retrieval.deleteFromBm25Index(store, "c", frame(docs.take(5)), "text", "doc_id", numBuckets)
+    val before = store.versions("c_postings").last
+    val termsBefore = store.versions("c_terms").last
+    val rowsBefore = store.scan("c_postings").orderBy("term", "doc_id", "tf").collect().toSeq
+    assert(rowsBefore.exists(_.getLong(3) < 0), "the delete appended negated rows")
+    Retrieval.compactBm25Index(store, "c", numBuckets)
+    assert(store.scan("c_postings").where("tf <= 0").count() == 0)
+    val old = store.scanAsOf("c_postings", before)
+    assert(old.orderBy("term", "doc_id", "tf").collect().toSeq == rowsBefore)
+    val q = old.where("term = 'hash'").groupBy("term", "doc_id").agg(sum("tf").as("tf"))
+      .join(store.scanAsOf("c_terms", termsBefore)
+        .where("term = 'hash'").groupBy("term").agg(sum("df").as("df")).hint("merge"), "term")
+    assert(indexScanBuckets(q) == Seq(numBuckets, numBuckets))
+  }
+
+  test("a compaction reaps the snapshot dirs it replaces") {
+    val dir = newDir("graft_bm25_gc")
+    val store = new TableStore(spark, dir, gcGraceMs = 0L)
+    Retrieval.buildBm25Index(store, "c", frame(docs.take(30)), "text", "doc_id", numBuckets)
+    Retrieval.appendBm25Index(store, "c", frame(docs.drop(30)), "text", "doc_id", numBuckets)
+    def snapDirs(t: String) = new java.io.File(dir, t).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("snap-")).map(_.getName).toSet
+    val replaced = snapDirs("c_postings")
+    assert(replaced.size == 2)
+    val want = results(store)
+    Retrieval.compactBm25Index(store, "c", numBuckets)
+    TableStore.awaitReap()
+    val live = snapDirs("c_postings")
+    assert(live.size == 1 && (live & replaced).isEmpty,
+      s"replaced ${replaced.mkString(",")}, left ${live.mkString(",")}")
+    assert(store.manifestEntries("c_postings").toSet == live)
+    assert(results(store) == want)
   }
 }

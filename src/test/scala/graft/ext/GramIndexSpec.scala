@@ -54,15 +54,15 @@ class GramIndexSpec extends SparkSpec {
     GramIndex.appendGramIndex(grown, "g",
       reference.where(col("doc_id") =!= 1L), "text", 8, numBuckets = 2)
     assert(probe(grown) == probe(whole), "grown index must probe identically")
-    val distinct = grown.scanBucketed("g_grams").distinct().count()
+    val distinct = grown.scan("g_grams").distinct().count()
     // docs 1 and 2 share the gram n5..n12, so the append already landed
     // one duplicate row (appends never read the index); pile on more
     GramIndex.appendGramIndex(grown, "g", reference, "text", 8, numBuckets = 2)
-    val dup = grown.scanBucketed("g_grams").count()
+    val dup = grown.scan("g_grams").count()
     assert(dup > distinct, "overlapping appends land duplicate rows")
     assert(probe(grown) == probe(whole), "duplicates never change membership")
     GramIndex.compactGramIndex(grown, "g", numBuckets = 2)
-    assert(grown.scanBucketed("g_grams").count() == distinct,
+    assert(grown.scan("g_grams").count() == distinct,
       "compaction collapses duplicates")
     assert(probe(grown) == probe(whole))
   }

@@ -73,8 +73,8 @@ class NearDupIndexSpec extends SparkSpec {
       rows(NearDupIndex.nearDupAgainstIndex(full, "nd", b,
         "text", "doc_id", threshold = 0.5)))
     // append adds files, never rewrites
-    assert(grown.scanBucketed("nd_bands").inputFiles.length >
-      full.scanBucketed("nd_bands").inputFiles.length)
+    assert(grown.scan("nd_bands").inputFiles.length >
+      full.scan("nd_bands").inputFiles.length)
   }
 
   test("tombstoned corpus docs stop matching immediately") {
@@ -106,7 +106,7 @@ class NearDupIndexSpec extends SparkSpec {
       "text", "doc_id", threshold = 0.5))
     NearDupIndex.compactNearDupIndex(store, "nd", numBuckets = 4)
     assert(!store.exists("nd_tombstones"))
-    assert(store.scanBucketed("nd_bands").where(col("doc_id") === 0L).count() == 0)
+    assert(store.scan("nd_bands").where(col("doc_id") === 0L).count() == 0)
     assert(store.scan("nd_docs").where(col("doc_id") === 0L).count() == 0)
     assert(rows(NearDupIndex.nearDupAgainstIndex(store, "nd", b,
       "text", "doc_id", threshold = 0.5)) == before)

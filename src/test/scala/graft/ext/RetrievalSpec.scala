@@ -272,14 +272,14 @@ class RetrievalSpec extends SparkSpec {
       docs.filter(_._1 == 2L).toDF("doc_id", "text"), "text", "doc_id",
       numBuckets = 4)
     val before = results(store)
-    val filesBefore = store.scanBucketed("c_postings").inputFiles.length
+    val filesBefore = store.scan("c_postings").inputFiles.length
     Retrieval.compactBm25Index(store, "c", numBuckets = 4)
     assert(results(store) == before, "compaction must not change results")
-    assert(store.scanBucketed("c_postings").inputFiles.length < filesBefore)
+    assert(store.scan("c_postings").inputFiles.length < filesBefore)
     // negative rows are physically gone
-    assert(store.scanBucketed("c_postings")
+    assert(store.scan("c_postings")
       .where(col("tf") <= 0).count() == 0)
-    assert(store.scanBucketed("c_postings")
+    assert(store.scan("c_postings")
       .where(col("doc_id") === 2L).count() == 0)
   }
 
@@ -293,7 +293,7 @@ class RetrievalSpec extends SparkSpec {
     Retrieval.deleteFromPositionalIndex(store, "c", Seq(1L).toDF("doc_id"))
     Retrieval.compactPositionalIndex(store, "c", numBuckets = 2)
     assert(!store.exists("c_pos_tombstones"))
-    assert(store.scanBucketed("c_pos").where(col("doc_id") === 1L).count() == 0)
+    assert(store.scan("c_pos").where(col("doc_id") === 1L).count() == 0)
     // re-add the taken-down doc id with fresh content after compaction
     store.appendBucketed("c_pos",
       Seq((1L, "hash join returns")).toDF("doc_id", "text")

@@ -98,7 +98,7 @@ class TombstoneGateSpec extends SparkSpec {
     NearDupIndex.buildNearDupIndex(fresh, "nd", survivors, "text", "doc_id",
       numBuckets = 2)
     def bandRows(s: graft.table.TableStore) =
-      s.scanBucketed("nd_bands").orderBy("band", "key", "doc_id")
+      s.scan("nd_bands").orderBy("band", "key", "doc_id")
         .collect().toSeq
     assert(bandRows(store) == bandRows(fresh),
       "compaction through the non-broadcast path must equal a rebuild")

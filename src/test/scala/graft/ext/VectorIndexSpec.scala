@@ -69,8 +69,8 @@ class VectorIndexSpec extends SparkSpec {
       "embedding", "vec_id", k = 6, nProbe = 3)
     assert(rows(a) == rows(b))
     // and an append never rewrites what was already there: file count grows
-    assert(grown.scanBucketed("e_vecs").inputFiles.length >
-      full.scanBucketed("e_vecs").inputFiles.length)
+    assert(grown.scan("e_vecs").inputFiles.length >
+      full.scan("e_vecs").inputFiles.length)
   }
 
   test("tombstoned vectors drop from probes; equals a rebuild without them") {
@@ -106,7 +106,7 @@ class VectorIndexSpec extends SparkSpec {
       "embedding", "vec_id", k = 6, nProbe = 3))
     VectorIndex.compactIvfIndex(store, "e", numBuckets = 4)
     assert(!store.exists("e_tombstones"))
-    assert(store.scanBucketed("e_vecs")
+    assert(store.scan("e_vecs")
       .where(col("vec_id").isin(10L, 20L)).count() == 0)
     assert(rows(VectorIndex.ivfTopKIndexed(store, "e", q,
       "embedding", "vec_id", k = 6, nProbe = 3)) == before)

@@ -2,17 +2,51 @@ package graft.table
 
 import graft.SparkSpec
 import graft.ops.Merge
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.sql.Timestamp
 
 /** The 100 TB steady-state claim, proven in the plan: a full-outer MERGE
   * between a bucketed target and an identically bucketed staging batch
-  * runs with ZERO hash-partitioning exchanges — neither side reshuffles. */
-class BucketedMergeSpec extends SparkSpec {
+  * runs with ZERO hash-partitioning exchanges — neither side reshuffles.
+  * Bucketed tables are ordinary manifest tables: their bucketing travels
+  * with the snapshots, so any store on the root scans them bucketed and
+  * the session catalog is never touched. */
+class BucketedMergeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  private def newRoot(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  /** A session starts with an empty catalog: dropping every entry is the
+    * in-JVM stand-in for a new process opening the store. */
+  private def dropCatalogTables(): Unit =
+    spark.catalog.listTables().collect().foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS `${t.name}`"))
+
+  /** Bucket counts of the file scans of an a ⋈ b sort-merge join on `k`,
+    * after asserting that the join plans no exchange (broadcast off, so
+    * only the bucketing can spare the shuffle). */
+  private def coBucketedJoin(a: DataFrame, b: DataFrame): Seq[Int] = {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val joined = a.as("a").join(b.as("b"), "k")
+      val plan = joined.queryExecution.executedPlan
+      assert(plan.toString.contains("SortMergeJoin"), s"expected a merge join:\n$plan")
+      assert(!plan.toString.contains("Exchange hashpartitioning"),
+        s"a co-bucketed join must not reshuffle either side:\n$plan")
+      val scans = collect(plan) { case s: FileSourceScanExec => s }
+      assert(scans.nonEmpty && scans.forall(_.bucketedScan),
+        s"every scan must read bucketed:\n$plan")
+      scans.map(_.relation.bucketSpec.get.numBuckets)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
 
   test("full-outer merge over co-bucketed tables has no exchange") {
-    val store = new TableStore(spark, Files.createTempDirectory("graft_bktm").toString)
+    val store = new TableStore(spark, newRoot("graft_bktm"))
     val target = spark.range(0, 5000, 1, 8).toDF("k")
       .withColumn("_id", col("k") + 1)
       .withColumn("v", (col("k") % 17).cast("double"))
@@ -24,7 +58,7 @@ class BucketedMergeSpec extends SparkSpec {
     store.overwriteBucketed("tgt", target, Seq("k"), numBuckets = 8)
     store.overwriteBucketed("stg", stage, Seq("k"), numBuckets = 8)
     val merged = Merge.merge(
-      store.scanBucketed("tgt"), store.scanBucketed("stg"),
+      store.scan("tgt"), store.scan("stg"),
       Timestamp.valueOf("2026-02-02 00:00:00"),
       Merge.MergeSpec(uniqueKeys = Seq("k"),
         preserveColumns = Seq("_id"), updatedAtColumn = Some("_updated_at"),
@@ -39,98 +73,95 @@ class BucketedMergeSpec extends SparkSpec {
     assert(merged.where(col("v") === -1.0).count() == 500)
   }
 
-  test("a new process re-registers a bucketed table from its BUCKETSPEC sidecar") {
-    // the session catalog is in-memory and per-JVM: dropping the entry is
-    // the faithful in-JVM proxy for a NEW process opening the store (the
-    // two-JVM chaos leg covers the real thing — a takeover operator
-    // replaying a dead cascade's BM25 negation in a fresh JVM)
-    val root = Files.createTempDirectory("graft_bkts").toString
-    val store = new TableStore(spark, root)
+  test("a new store on the same root scans bucketed and appends into it") {
+    val root = newRoot("graft_bkts")
     val df = spark.range(0, 1000, 1, 4).toDF("k")
       .withColumn("v", (col("k") % 13).cast("double"))
-    store.overwriteBucketed("t", df, Seq("k"), numBuckets = 4)
-    // the store's catalog-name scheme, replicated (root-hashed prefix)
-    val catalogName = "graft_bkt_" + Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(
-        new org.apache.hadoop.fs.Path(root).toString)) + "_t"
-    assert(spark.catalog.tableExists(catalogName))
-    spark.sql(s"DROP TABLE `$catalogName`") // external: files survive
-    // scan re-registers WITH the bucket spec (not just the files)
-    val scanned = store.scanBucketed("t")
-    assert(scanned.count() == 1000)
-    // the restored registration still eliminates the exchange on a
-    // co-bucketed self-join — proof the BUCKETING metadata came back,
-    // not just the data
-    val joined = scanned.as("a").join(store.scanBucketed("t").as("b"), "k")
-    assert(!joined.queryExecution.executedPlan.toString
-      .contains("Exchange hashpartitioning"),
-      "re-registered bucketing must keep the exchange-free join")
-    // and appends into the restored buckets work (the chaos-leg failure)
-    spark.sql(s"DROP TABLE `$catalogName`")
+    new TableStore(spark, root).overwriteBucketed("t", df, Seq("k"), numBuckets = 4)
+    dropCatalogTables()
+    val store = new TableStore(spark, root)
+    assert(store.scan("t").count() == 1000)
+    assert(coBucketedJoin(store.scan("t"), store.scan("t")) == Seq(4, 4))
     store.appendBucketed("t",
       spark.range(1000, 1100, 1, 2).toDF("k")
         .withColumn("v", lit(0.0)), Seq("k"), numBuckets = 4)
-    assert(store.scanBucketed("t").count() == 1100)
+    assert(store.scan("t").count() == 1100)
+    assert(coBucketedJoin(store.scan("t"), store.scan("t")) == Seq(4, 4))
   }
 
-  test("a foreign re-bucket invalidates this session's stale registration") {
-    // another PROCESS re-buckets a table (new files + new BUCKETSPEC);
-    // this session's catalog still holds the old spec — trusting it
-    // would plan exchange-free joins assuming the old bucket count over
-    // the new files, silently. The sidecar is authoritative: the next
-    // access must re-register. Proxy for the foreign process: build the
-    // re-bucketed table in a second store (distinct catalog entry) and
-    // copy its files + sidecar over this store's.
-    val rootA = Files.createTempDirectory("graft_bktf_a").toString
-    val rootB = Files.createTempDirectory("graft_bktf_b").toString
-    val a = new TableStore(spark, rootA)
-    val b = new TableStore(spark, rootB)
-    val dfOld = spark.range(0, 400, 1, 4).toDF("k")
-      .withColumn("v", lit(1.0))
-    val dfNew = spark.range(0, 900, 1, 4).toDF("k")
-      .withColumn("v", lit(2.0))
-    a.overwriteBucketed("t", dfOld, Seq("k"), numBuckets = 4)
-    assert(a.scanBucketed("t").count() == 400)
-    b.overwriteBucketed("t", dfNew, Seq("k"), numBuckets = 8)
-    // "foreign process": replace a's files + sidecar with b's
-    def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-      java.nio.file.Files.walk(src).forEach { p =>
-        val to = dst.resolve(src.relativize(p))
-        if (java.nio.file.Files.isDirectory(p))
-          java.nio.file.Files.createDirectories(to)
-        else java.nio.file.Files.copy(p, to,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-    val aDir = java.nio.file.Paths.get(rootA, "t", "bucketed")
-    org.apache.commons.io.FileUtils.deleteDirectory(aDir.toFile)
-    copyTree(java.nio.file.Paths.get(rootB, "t", "bucketed"), aDir)
-    // Hadoop's local fs pairs each file with a .crc sidecar — replace
-    // both, or the read fails its checksum against the stale crc
-    Seq("BUCKETSPEC", ".BUCKETSPEC.crc").foreach { f =>
-      val src = java.nio.file.Paths.get(rootB, "t", f)
-      if (java.nio.file.Files.exists(src))
-        java.nio.file.Files.copy(src,
-          java.nio.file.Paths.get(rootA, "t", f),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    // the stale 4-bucket registration must be replaced from the sidecar
-    assert(a.scanBucketed("t").count() == 900)
+  test("a re-bucket by a second store reaches the first store's next scan") {
+    val root = newRoot("graft_bktf")
+    val a = new TableStore(spark, root)
+    val b = new TableStore(spark, root)
+    a.overwriteBucketed("t", spark.range(0, 400, 1, 4).toDF("k")
+      .withColumn("v", lit(1.0)), Seq("k"), numBuckets = 4)
+    assert(coBucketedJoin(a.scan("t"), a.scan("t")) == Seq(4, 4))
+    b.overwriteBucketed("t", spark.range(0, 900, 1, 4).toDF("k")
+      .withColumn("v", lit(2.0)), Seq("k"), numBuckets = 8)
+    assert(a.scan("t").count() == 900)
+    assert(coBucketedJoin(a.scan("t"), a.scan("t")) == Seq(8, 8))
+    // the old spec is refused, the new one lands
+    intercept[IllegalArgumentException](a.appendBucketed("t",
+      spark.range(900, 950).toDF("k").withColumn("v", lit(3.0)),
+      Seq("k"), numBuckets = 4))
     a.appendBucketed("t", spark.range(900, 950, 1, 2).toDF("k")
       .withColumn("v", lit(3.0)), Seq("k"), numBuckets = 8)
-    assert(a.scanBucketed("t").count() == 950)
+    assert(a.scan("t").count() == 950)
+    assert(coBucketedJoin(a.scan("t"), b.scan("t")) == Seq(8, 8))
   }
 
-  test("same table name in two stores gets distinct catalog entries") {
-    val a = new TableStore(spark, Files.createTempDirectory("graft_bkta").toString)
-    val b = new TableStore(spark, Files.createTempDirectory("graft_bktb").toString)
+  test("the same bucketed table name in two roots stays independent") {
+    val a = new TableStore(spark, newRoot("graft_bkta"))
+    val b = new TableStore(spark, newRoot("graft_bktb"))
     val dfA = spark.range(0, 10).toDF("k").withColumn("src", lit("a"))
     val dfB = spark.range(0, 20).toDF("k").withColumn("src", lit("b"))
     a.overwriteBucketed("t", dfA, Seq("k"), numBuckets = 2)
-    b.overwriteBucketed("t", dfB, Seq("k"), numBuckets = 2)
-    // store A's entry must survive store B's overwrite of the same name
-    assert(a.scanBucketed("t").count() == 10)
-    assert(b.scanBucketed("t").count() == 20)
-    assert(a.scanBucketed("t").select("src").distinct().collect().head.getString(0) == "a")
+    b.overwriteBucketed("t", dfB, Seq("k"), numBuckets = 4)
+    assert(a.scan("t").count() == 10)
+    assert(b.scan("t").count() == 20)
+    assert(a.scan("t").select("src").distinct().collect().head.getString(0) == "a")
+    assert(coBucketedJoin(a.scan("t"), a.scan("t")) == Seq(2, 2))
+    assert(coBucketedJoin(b.scan("t"), b.scan("t")) == Seq(4, 4))
+  }
+
+  test("an index build leaves the session catalog unchanged") {
+    import spark.implicits._
+    val before = spark.catalog.listTables().collect().map(_.name).toSet
+    val store = new TableStore(spark, newRoot("graft_bktcat"))
+    val corpus = Seq(1L -> "hash join", 2L -> "sort merge join", 3L -> "hash")
+      .toDF("doc_id", "text")
+    graft.ext.Retrieval.buildBm25Index(store, "c", corpus, "text", "doc_id", 2)
+    graft.ext.Retrieval.appendBm25Index(store, "c",
+      Seq(4L -> "merge").toDF("doc_id", "text"), "text", "doc_id", 2)
+    graft.ext.Retrieval.compactBm25Index(store, "c", 2)
+    assert(spark.catalog.listTables().collect().map(_.name).toSet == before)
+    assert(store.scan("c_postings").count() == 7)
+  }
+
+  test("a failed bucketed overwrite keeps the previous rows, bucketed") {
+    val store = new TableStore(spark, newRoot("graft_bktfail"))
+    store.overwriteBucketed("t", spark.range(0, 1000, 1, 4).toDF("k"),
+      Seq("k"), numBuckets = 4)
+    val failing = spark.range(0, 500, 1, 4).select(
+      when(col("id") === 250L, raise_error(lit("planted failure")))
+        .otherwise(col("id")).as("k"))
+    intercept[Exception](
+      store.overwriteBucketed("t", failing, Seq("k"), numBuckets = 4))
+    assert(store.scan("t").count() == 1000)
+    assert(coBucketedJoin(store.scan("t"), store.scan("t")) == Seq(4, 4))
+  }
+
+  test("a plain append onto a bucketed table reads unbucketed, every row") {
+    val store = new TableStore(spark, newRoot("graft_bktmix"))
+    store.overwriteBucketed("t", spark.range(0, 300, 1, 3).toDF("k"),
+      Seq("k"), numBuckets = 4)
+    store.append("t", spark.range(300, 350).toDF("k"))
+    val mixed = store.scan("t")
+    assert(mixed.count() == 350)
+    assert(mixed.agg(sum("k")).first().getLong(0) == (0L until 350L).sum)
+    val scans = collect(mixed.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty && scans.forall(_.relation.bucketSpec.isEmpty),
+      "a manifest of mixed specs must not claim bucketing")
   }
 }

@@ -253,7 +253,7 @@ class TableStoreSpec extends SparkSpec {
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      val joined = store.scanBucketed("ta").join(store.scanBucketed("tb"), "k")
+      val joined = store.scan("ta").join(store.scan("tb"), "k")
       val plan = joined.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), s"expected a sort-merge join:\n$plan")
       assert(!plan.contains("Exchange hashpartitioning"),
@@ -271,9 +271,9 @@ class TableStoreSpec extends SparkSpec {
   test("bucketed scan preserves rows and overwrite replaces content") {
     val store = newStore
     store.overwriteBucketed("tw", spark.range(100).toDF("k"), Seq("k"), 4)
-    assert(store.scanBucketed("tw").count() == 100)
+    assert(store.scan("tw").count() == 100)
     store.overwriteBucketed("tw", spark.range(40).toDF("k"), Seq("k"), 4)
-    assert(store.scanBucketed("tw").count() == 40)
+    assert(store.scan("tw").count() == 40)
   }
 
   test("time travel: retained versions stay readable; retention prunes; retain=1 keeps none") {
