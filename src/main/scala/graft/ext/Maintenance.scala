@@ -3,9 +3,9 @@ package graft.ext
 import graft.table.TableStore
 
 /** The single maintenance entry point — one call an operator schedules on
-  * a cadence instead of remembering eight primitives spread across
-  * compact/compactPartitioned, two sidecar refreshes, four per-family
-  * index compactions, and the retention-journal drain. */
+  * a cadence instead of remembering seven primitives spread across
+  * compact/compactPartitioned, the Bloom sidecar refresh, four
+  * per-family index compactions, and the retention-journal drain. */
 object Maintenance {
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.maintenance")
@@ -30,10 +30,11 @@ object Maintenance {
     *     hard-error, breaking a standing pipeline from one scheduled
     *     call. The fold also materializes accumulated deletion vectors
     *     and lets GC reclaim dropped partitions' bytes;
-    *  3. refresh the zone-map / Bloom sidecars INCREMENTALLY with their
-    *     own recorded column sets — O(new files) after appends; a fold in
-    *     step 2 rewrites the files, making this the one full re-analyze
-    *     the new layout needs;
+    *  3. refresh the Bloom sidecar INCREMENTALLY with its own recorded
+    *     column set — O(new files) after appends; a fold in step 2
+    *     rewrites the files, making this the one full re-analyze the new
+    *     layout needs. Range skipping ([[TableStore.scanPruned]]) reads
+    *     the parquet footers and has nothing to refresh;
     *  4. physically compact each index family (tombstoned rows
     *     dropped, tombstone table cleared; BM25 postings/df/stats runs
     *     summed and zero rows dropped). `indexes = Nil` resolves to the
@@ -71,7 +72,6 @@ object Maintenance {
         "stray flat snapshots into the partition scheme) to restore " +
         "folding")
     else store.compact(table, maxSnapshots)
-    store.refreshZoneMaps(table)
     store.refreshBloomFilters(table)
     // the per-family compactions and view refreshes touch DISJOINT
     // tables (each family its own index tables, each view its own table;

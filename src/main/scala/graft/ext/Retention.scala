@@ -494,8 +494,8 @@ object Retention {
     *
     * The capture is ONE semi-join scan of the table against the
     * takedown-sized (broadcastable) id list — the floor for learning
-    * the indexed text of the doomed docs; cluster or zone-map the id
-    * column to prune it. The DV commit is conditional on the capture's
+    * the indexed text of the doomed docs; cluster the id column to
+    * prune it. The DV commit is conditional on the capture's
     * manifest ([[TableStore.deleteByKeysDVFromBasis]]) — an id
     * re-appended mid-cascade forces a re-capture instead of being
     * erased from the table while staying findable — and carries the

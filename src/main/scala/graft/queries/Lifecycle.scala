@@ -183,16 +183,15 @@ object Lifecycle {
 
     "w_zonemap_scan" -> ((s, dir) => {
       // manifest-level file skipping: cluster on the key so per-file
-      // ranges are tight, analyze the zone map, then read a key range
-      // through scanPruned — files outside [500, 1500] never enter the
-      // plan (ZoneMapSpec asserts the skip; this gate pins the VALUES:
-      // pruning must never change the answer)
+      // ranges are tight, then read a key range through scanPruned —
+      // files whose footer ranges lie outside [500, 1500] never enter
+      // the plan (ZoneMapSpec asserts the skip; this gate pins the
+      // VALUES: pruning must never change the answer)
       val store = new TableStore(s,
         Files.createTempDirectory("graft_q_zm").toString)
       store.overwriteClustered("li",
         t(s, dir, "lineitem").select("l_orderkey", "l_quantity"),
         Seq("l_orderkey"), numFiles = Some(16))
-      store.analyzeZoneMaps("li", Seq("l_orderkey"))
       store.scanPruned("li", "l_orderkey", 500L, 1500L)
         .groupBy("l_orderkey")
         .agg(count(lit(1)).as("n_rows"),
@@ -264,7 +263,7 @@ object Lifecycle {
     "w_bloom_scan" -> ((s, dir) => {
       // manifest-level Bloom skipping: the layout clusters on l_orderkey,
       // so file min/max on l_partkey spans nearly everything — an equality
-      // probe on partkey is exactly what zone maps CANNOT prune and the
+      // probe on partkey is exactly what footer min/max CANNOT prune and the
       // Bloom sidecar can (BloomScanSpec measures the skipping; the gate
       // pins that pruning never changes the answer)
       val store = new TableStore(s,
@@ -743,11 +742,10 @@ object Lifecycle {
 
     // the ONE maintenance entry point is equivalence-preserving by
     // contract: grow a partitioned table, expire a partition, DV-delete
-    // keys, analyze zone maps, then maintain() — the fold materializes
-    // the deletion vectors, preserves the hive layout, and refreshes the
-    // sidecar with its own recorded columns. The result is read THROUGH
-    // the refreshed zone map (scanPruned), so sidecar correctness is
-    // load-bearing; the oracle computes the plain survivor algebra.
+    // keys, then maintain() — the fold materializes the deletion vectors
+    // and preserves the hive layout. The result is read through
+    // scanPruned, so the folded files' footer ranges decide which files
+    // are read; the oracle computes the plain survivor algebra.
     "w_maintain_fold" -> ((s, dir) => {
       val store = new TableStore(s,
         Files.createTempDirectory("graft_q_maint").toString)
@@ -759,7 +757,6 @@ object Lifecycle {
       store.expirePartitionsBelow("docs", "lang", "en")
       store.deleteByKeysDV("docs", Seq("doc_id"),
         docs.where(col("doc_id") % 11 === 4).select("doc_id"))
-      store.analyzeZoneMaps("docs", Seq("doc_id"))
       graft.ext.Maintenance.maintain(store, "docs", maxSnapshots = 0)
       require(store.manifestEntries("docs").sizeIs == 1,
         "w_maintain_fold: maintain must fold the manifest to one snapshot")

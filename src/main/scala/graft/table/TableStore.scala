@@ -253,7 +253,8 @@ final class TableStore(spark: SparkSession, root: String,
     * interleaved unions positionally safe.
     *
     * @param keepFile when set, each snapshot reads only its physical
-    *   files passing the predicate (zone-map / Bloom file skipping);
+    *   files passing the predicate (footer min/max or Bloom file
+    *   skipping);
     *   snapshots with no surviving file drop out of the replay, DVs still
     *   apply. The per-snapshot grouping is what keeps replay order
     *   correct under pruning.
@@ -355,17 +356,14 @@ final class TableStore(spark: SparkSession, root: String,
       val (phys, excl) = parseEntry(sn)
       def minusDropped(df: DataFrame) =
         if (excl.isEmpty) df else df.where(exclusionFilter(excl))
-      val whole = anchored(sn, spark.read.schema(fullSchema))
-        .parquet(snapPath(phys))
       keepFile match {
-        case None => Some(decorate(minusDropped(whole)))
+        case None => Some(decorate(minusDropped(
+          anchored(sn, spark.read.schema(fullSchema)).parquet(snapPath(phys)))))
         case Some(p) =>
-          // files under an excluded partition dir leave the list here (one
-          // fewer file read); the row filter below still guards them, so
-          // correctness never rides on path-string rendering
-          val dropDirs = excl.map(d => "/" + d + "/")
-          val kept = whole.inputFiles
-            .filter(f => p(f) && !dropDirs.exists(f.contains)).toIndexedSeq
+          // the entry's own listing (an excluded partition's files never
+          // enter it), not a relation built just to list files
+          val kept = entryFiles(name, sn)
+            .filter(f => p(f.toUri.toString)).map(_.toString)
           if (kept.isEmpty) None
           // basePath: a hive-partitioned snapshot's partition columns live
           // in the directory names ABOVE the kept leaf files — without the
@@ -772,11 +770,6 @@ final class TableStore(spark: SparkSession, root: String,
     df.join(side, col(dfCol) === col("__graft_anti_key"), "left_anti")
   }
 
-  /** Name of the zone-map sidecar table for `name` (a regular store table,
-    * so it commits/GCs/time-travels like any other — the `_postings`
-    * suffix convention). */
-  def zoneMapTable(name: String): String = s"${name}_zonemap"
-
   /** Per-snapshot frames with the physical file path attached (replay
     * semantics identical to [[scan]], DVs applied). */
   private def scanWithFile(name: String): DataFrame = {
@@ -784,84 +777,6 @@ final class TableStore(spark: SparkSession, root: String,
     if (entries.isEmpty)
       throw new IllegalArgumentException(s"Table not found: $name")
     readState(name, entries, withFile = true)
-  }
-
-  /** Build/refresh the manifest-level zone map of `name`: one row per
-    * physical file with row count and per-column min/max for `cols`.
-    *
-    * Parquet row-group statistics already prune WITHIN a file the scan has
-    * opened; the zone map prunes the FILE LIST itself, before Spark plans
-    * a single split — at 100 TB (millions of files) that is the difference
-    * between a driver-side listing-and-footer storm and reading a
-    * file-count-of-matches plan (the role of min/max file stats in
-    * Delta/Iceberg manifests, rebuilt here on plain parquet + the atomic
-    * manifest this store already has). Cost: one narrow scan of the table
-    * (only `cols` + the metadata path), full map-side partial aggregation,
-    * zone map output is file-count-sized. Pairs naturally with
-    * [[overwriteClustered]]/[[overwriteZOrdered]], which make the
-    * per-file ranges tight. */
-  def analyzeZoneMaps(name: String, cols: Seq[String]): Unit = {
-    require(cols.nonEmpty, "analyzeZoneMaps: at least one column")
-    val df = scanWithFile(name)
-    cols.foreach(c => require(df.columns.contains(c),
-      s"analyzeZoneMaps: no such column $c in $name"))
-    val aggs = cols.flatMap(c => Seq(
-      min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max")))
-    val zm = df.groupBy(col("__file").as("file"))
-      .agg(count(lit(1)).as("n_rows"), aggs: _*)
-    overwrite(zoneMapTable(name), zm)
-  }
-
-  /** Incrementally refresh the zone map: ONLY files not yet in the
-    * sidecar are scanned (the appends since the last analyze/refresh);
-    * sidecar rows for files no longer live drop out. Content-equivalent
-    * to a fresh [[analyzeZoneMaps]] over the same state at O(new files)
-    * cost instead of O(table) — the only refresh cadence that survives a
-    * 100 TB append stream (re-analyzing 100 TB to index a 100 GB append
-    * is the zone-map equivalent of the rewrite-per-takedown trap).
-    * Falls back to the full analyze when no sidecar exists or the
-    * requested columns changed. Stats rows for files whose rows were
-    * since DV-deleted keep their (wider) ranges — skipping stays
-    * conservative, the residual predicate still decides every row. */
-  def refreshZoneMaps(name: String, cols: Seq[String]): Unit = {
-    require(cols.nonEmpty, "refreshZoneMaps: at least one column")
-    val zmName = zoneMapTable(name)
-    if (!exists(zmName)) return analyzeZoneMaps(name, cols)
-    val zm = scan(zmName)
-    // EXACT column-set match or full re-analyze: a subset would leave
-    // the new files without the other columns' stats (and the union
-    // would not even resolve), a superset lacks stats for the new ones
-    val analyzed = zm.columns.collect {
-      case c if c.endsWith("__min") => c.stripSuffix("__min") }.toSet
-    if (analyzed != cols.toSet) return analyzeZoneMaps(name, cols)
-    val d = sidecarDelta(name, zm)
-    val aggs = cols.flatMap(c => Seq(
-      min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max")))
-    val next =
-      if (!d.hasFresh) d.survivors
-      else {
-        val newPart = readState(name, readManifest(name),
-            keepFile = Some(f => !d.knownPaths.contains(pathOf(f))),
-            withFile = true)
-          .groupBy(col("__file").as("file"))
-          .agg(count(lit(1)).as("n_rows"), aggs: _*)
-        d.survivors.unionByName(newPart)
-      }
-    overwrite(zmName, next)
-  }
-
-  /** [[refreshZoneMaps]] with the sidecar's OWN recorded column set (the
-    * `__min`-suffixed fields — derived from the cached footer fold, no
-    * scan analyzed) — the maintenance-cadence form, so callers can't
-    * drift from the sidecar owner's naming policy. No-op without a
-    * sidecar. */
-  def refreshZoneMaps(name: String): Unit = {
-    val zmName = zoneMapTable(name)
-    if (!exists(zmName)) return
-    val cols = tableSchema(zmName).fieldNames.collect {
-      case c if c.endsWith("__min") => c.stripSuffix("__min")
-    }.toSeq
-    if (cols.nonEmpty) refreshZoneMaps(name, cols)
   }
 
   /** [[refreshBloomFilters]] with the sidecar's own recorded column set
@@ -882,10 +797,8 @@ final class TableStore(spark: SparkSession, root: String,
     * it, a refresh that finds all recorded files dead and nothing fresh
     * would overwrite the sidecar EMPTY — and the no-argument
     * [[refreshBloomFilters]] (the maintenance cadence) would then no-op
-    * forever, silently never regaining pruning (the zone-map twin
-    * survives emptiness because its column set lives in the SCHEMA via
-    * `__min` suffixes; this is the long-format equivalent). Probes never
-    * match it: no data file is named `__analyzed__`. */
+    * forever, silently never regaining pruning. Probes never match it:
+    * no data file is named `__analyzed__`. */
   private val BloomSentinel = "__analyzed__"
 
   private def bloomSentinelRows(cols: Seq[String], bits: Int,
@@ -907,19 +820,23 @@ final class TableStore(spark: SparkSession, root: String,
     * silently break). Pure directory metadata — no parquet relation is
     * analyzed just to list files. */
   private def dataFiles(name: String): Seq[String] =
-    readManifest(name).filterNot(isDvEntry).flatMap { sn =>
-      enumerateEntry(name, sn)._2.flatMap { case (leaf, _) =>
-        fs(leaf).listStatus(leaf).collect {
-          case s if !s.isDirectory && s.getPath.getName.startsWith("part-") =>
-            // toUri, not toString: [[pathOf]] normalization parses these
-            // as URIs, and a raw rendering of an escaped-value partition
-            // dir (spaces, '%') is not a parseable URI
-            s.getPath.toUri.toString
-        }
+    // toUri, not toString: [[pathOf]] normalization parses these as URIs,
+    // and a raw rendering of an escaped-value partition dir (spaces, '%')
+    // is not a parseable URI
+    readManifest(name).filterNot(isDvEntry)
+      .flatMap(entryFiles(name, _)).map(_.toUri.toString)
+
+  /** The part files of one data entry, listed from its leaf directories
+    * ([[enumerateEntry]]), so an exclusion entry's dropped directories
+    * never enter the list. */
+  private def entryFiles(name: String, e: String): Seq[Path] =
+    enumerateEntry(name, e)._2.flatMap { case (leaf, _) =>
+      fs(leaf).listStatus(leaf).toSeq.collect {
+        case s if !s.isDirectory && s.getPath.getName.startsWith("part-") => s.getPath
       }
     }
 
-  /** Shared incremental-refresh scaffolding for the sidecar tables:
+  /** Incremental-refresh scaffolding of the Bloom sidecar:
     * given the sidecar's `file` values, split the world into SURVIVORS
     * (sidecar rows for still-live files, filtered by the exact values
     * the column holds) and the known set for fresh-file discovery.
@@ -941,10 +858,10 @@ final class TableStore(spark: SparkSession, root: String,
     SidecarDelta(survivors, known, !liveSet.forall(known.contains))
   }
 
-  /** Incremental Bloom-sidecar refresh — [[refreshZoneMaps]]'s contract
-    * for [[analyzeBloomFilters]]: only unseen files scanned, dead files
-    * dropped, build parameters taken from the existing sidecar so probe
-    * and build can never hash differently. */
+  /** Incremental Bloom-sidecar refresh: only files unseen by
+    * [[analyzeBloomFilters]] or an earlier refresh are scanned, dead
+    * files' rows dropped, build parameters taken from the existing
+    * sidecar so probe and build can never hash differently. */
   def refreshBloomFilters(name: String, cols: Seq[String]): Unit = {
     require(cols.nonEmpty, "refreshBloomFilters: at least one column")
     val btName = bloomTable(name)
@@ -953,7 +870,6 @@ final class TableStore(spark: SparkSession, root: String,
     // EXACT column-set match or full re-analyze — a subset would index
     // fresh files for only the requested columns while still marking
     // them known, so the other columns' rows would NEVER be backfilled
-    // (the zone-map path enforces the same policy for the same reason)
     val have = bt.select("column").distinct().collect().map(_.getString(0)).toSet
     if (have != cols.toSet) return analyzeBloomFilters(name, cols)
     val params = bt.select("bits", "hashes").distinct().collect()
@@ -986,32 +902,45 @@ final class TableStore(spark: SparkSession, root: String,
       next.unionByName(bloomSentinelRows(cols, bits, hashes)))
   }
 
-  /** `scan(name).where(colName BETWEEN lo AND hi)` with zone-map file
-    * skipping: files whose [min, max] cannot intersect [lo, hi] (or that
-    * hold no non-null value of the column) are dropped from the read plan
-    * entirely; the residual predicate still applies to whatever is read,
-    * so the result is ALWAYS exactly the filtered table.
+  /** `scan(name).where(colName BETWEEN lo AND hi)` with file skipping by
+    * the parquet footers: a data file whose every row group is all-null
+    * in the column or lies wholly outside [lo, hi] is dropped from the
+    * read plan. The footers are the ones [[columnRowGroups]] reads, cached
+    * per immutable entry, so a fresh append is skippable by the next read
+    * with nothing to analyze or refresh. The residual predicate still
+    * decides every row, so the result is ALWAYS exactly the filtered
+    * table; deletion vectors and exclusion entries do not block skipping
+    * (a file's footer range covers its live rows).
     *
-    * Staleness is safe by construction: files appended after the last
-    * [[analyzeZoneMaps]] aren't in the map and are read unpruned
-    * (correctness first, re-analyze to regain skipping); map entries for
-    * files GC'd since are ignored. No zone map at all → plain filtered
-    * scan. Skipping NEVER decides row membership — only the residual
-    * predicate does. */
+    * Files are kept wherever the footers cannot answer: a column that is
+    * not a signed integer (timestamp, decimal, date, string, double), a
+    * partition column, a footer without statistics, or a bound that is
+    * not an integer (a `25.5` is never truncated). `colName` resolves the
+    * way Spark resolves it. A read that skips nothing is plain [[scan]]. */
   def scanPruned(name: String, colName: String, lo: Any, hi: Any): DataFrame = {
-    def resid(df: DataFrame) =
-      df.where(col(colName) >= lit(lo) && col(colName) <= lit(hi))
-    if (!exists(zoneMapTable(name))) return resid(scan(name))
-    val zm = scan(zoneMapTable(name))
-    require(zm.columns.contains(s"${colName}__min"),
-      s"scanPruned: zone map of $name was not analyzed for $colName — " +
-        s"re-run analyzeZoneMaps(${name}, Seq(..., $colName, ...))")
-    // NaN bounds make both comparisons false → file kept (conservative)
-    val skip = zm.where(col(s"${colName}__min").isNull ||
-        col(s"${colName}__max") < lit(lo) || col(s"${colName}__min") > lit(hi))
-      .select("file").collect().map(r => pathOf(r.getString(0))).toSet
-    resid(readState(name, readManifest(name),
-      keepFile = Some(f => !skip.contains(pathOf(f)))))
+    val entries = readManifest(name)
+    if (entries.isEmpty)
+      throw new IllegalArgumentException(s"Table not found: $name")
+    def integral(v: Any): Option[Long] = v match {
+      case n: Long  => Some(n)
+      case n: Int   => Some(n.toLong)
+      case n: Short => Some(n.toLong)
+      case n: Byte  => Some(n.toLong)
+      case _        => None
+    }
+    val skip = (integral(lo), integral(hi)) match {
+      case (Some(l), Some(h)) =>
+        entries.filterNot(isDvEntry)
+          .flatMap(entryRowGroups(name, _, colName).getOrElse(Nil))
+          .collect { case (file, groups)
+            if groups.forall(g => g.max.forall(_ < l) || g.min.exists(_ > h)) => file }
+          .toSet
+      case _ => Set.empty[String]
+    }
+    val df =
+      if (skip.isEmpty) readState(name, entries)
+      else readState(name, entries, keepFile = Some(f => !skip.contains(pathOf(f))))
+    df.where(col(colName) >= lit(lo) && col(colName) <= lit(hi))
   }
 
   /** Scheme-independent path component ("file:/x", "file:///x", "/x" all
@@ -1025,7 +954,7 @@ final class TableStore(spark: SparkSession, root: String,
     * per (physical file, column) holding the file's set of Bloom bit
     * positions for that column's values.
     *
-    * Zone maps ([[analyzeZoneMaps]]) prune RANGE predicates, but min/max
+    * Footer min/max ([[scanPruned]]) prunes RANGE predicates, but min/max
     * is blind to EQUALITY on high-cardinality unordered columns (a host
     * name or doc hash is "within range" of almost every file). This is
     * the file-level Bloom index Delta/Iceberg keep in manifests, rebuilt
@@ -1239,7 +1168,7 @@ final class TableStore(spark: SparkSession, root: String,
     * (`PartitionFilters` in the scan), before any footer is opened. The
     * conventional layout for a 100 TB crawl corpus (date/source
     * partitions): retention, takedown scoping, and time-sliced scans
-    * prune by directory first; zone maps/Bloom then skip files WITHIN
+    * prune by directory first; footers/Bloom then skip files WITHIN
     * surviving partitions, and deletion vectors / time travel / branches
     * compose unchanged (a snapshot is a snapshot, whatever its internal
     * layout).
@@ -1834,7 +1763,7 @@ final class TableStore(spark: SparkSession, root: String,
     * under the broadcast threshold, shuffled past it, and consecutive
     * vectors coalesce into one join): rows re-appended after the
     * takedown are untouched, time travel and [[diffVersions]] see the
-    * deletes, zone-map/Bloom file skipping composes (the residual DV
+    * deletes, footer/Bloom file skipping composes (the residual DV
     * join still decides row membership). At 100 TB this is the takedown
     * primitive: a right-to-erasure batch commits in seconds regardless
     * of table size, and the accumulated vectors fold into a real rewrite
@@ -2010,23 +1939,35 @@ final class TableStore(spark: SparkSession, root: String,
     * Answered from the footer statistics of [[columnRowGroups]], so an
     * append or upsert pays no O(table) scan; where the footers cannot
     * answer (a deletion vector, an exclusion entry, a footer without
-    * statistics for `col`) it falls back to the scan. */
+    * statistics for `col`) it falls back to the scan. `col` resolves the
+    * way Spark resolves a column name ([[resolveName]]), as the
+    * reference's `MAX` does. */
   def nextRowNumberStart(name: String, col: String = "_id"): Long =
     if (!exists(name)) 1L
     else columnRowGroups(name, col) match {
       case Some(groups) => groups.flatMap(_.max).maxOption.getOrElse(0L) + 1L
       case None =>
         val df = scan(name)
-        if (!df.columns.contains(col)) 1L
+        if (resolveName(df.columns.toSeq, col).isEmpty) 1L
         else df.agg(coalesce(max(org.apache.spark.sql.functions.col(col)), lit(0L)))
           .first().getLong(0) + 1L
     }
+
+  /** The names among `names` that column name `c` refers to, the way
+    * Spark resolves a column (case-insensitive unless
+    * `spark.sql.caseSensitive`): the exact match alone when there is one,
+    * more than one when `c` is ambiguous. */
+  private def resolveName(names: Seq[String], c: String): Seq[String] =
+    if (names.contains(c)) Seq(c)
+    else names.filter(spark.sessionState.conf.resolver(_, c))
 
   /** The live rows of integer column `c` as the parquet footers summarize
     * them: one [[TableStore.RowGroup]] per row group of the manifest's data
     * entries, read in this JVM with no Spark job and cached per immutable
     * entry directory (a commit adds entries, so the cache never goes
-    * stale). A row group of an entry without `c` reads as all null.
+    * stale). `c` resolves against each file's own footer schema the way
+    * Spark resolves it ([[resolveName]]); a row group of a file without
+    * `c` reads as all null.
     * `None` when the footers are not the live rows or cannot answer: the
     * manifest holds a deletion vector or an exclusion entry, a footer has
     * no statistics for `c`, `c` is not a signed integer, or `c` is a
@@ -2038,24 +1979,27 @@ final class TableStore(spark: SparkSession, root: String,
         entries.exists(e => isDvEntry(e) || parseEntry(e)._2.nonEmpty)) None
     else {
       val perEntry = entries.map(entryRowGroups(name, _, c))
-      if (perEntry.forall(_.isDefined)) Some(perEntry.flatMap(_.get)) else None
+      if (perEntry.forall(_.isDefined)) Some(perEntry.flatMap(_.get.flatMap(_._2)))
+      else None
     }
   }
 
-  /** [[columnRowGroups]] of one data entry; `None` when a footer cannot
+  /** [[columnRowGroups]] of one data entry, per data file: each file's
+    * [[pathOf]] path with its row groups. `None` when a footer cannot
     * answer. */
   private def entryRowGroups(name: String, e: String,
-      c: String): Option[Seq[TableStore.RowGroup]] = {
+      c: String): Option[Seq[(String, Seq[TableStore.RowGroup])]] = {
     import TableStore.RowGroup
     import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
     import scala.jdk.CollectionConverters._
     val phys = parseEntry(e)._1
     val p = new Path(tableDir(name), phys)
-    def isPartitionDir(dir: String) = dir.startsWith(c + "=")
+    def isPartitionDir(dir: String) =
+      dir.contains('=') && resolveName(Seq(dir.takeWhile(_ != '=')), c).nonEmpty
     // the concatenation of the parts; one part the footers cannot answer
     // sinks the whole
-    def allOf(parts: Iterator[Option[Seq[RowGroup]]]): Option[Seq[RowGroup]] = {
-      val acc = Seq.newBuilder[RowGroup]
+    def allOf[A](parts: Iterator[Option[Seq[A]]]): Option[Seq[A]] = {
+      val acc = Seq.newBuilder[A]
       while (parts.hasNext) parts.next() match {
         case None    => return None
         case Some(g) => acc ++= g
@@ -2073,10 +2017,11 @@ final class TableStore(spark: SparkSession, root: String,
           case _ => false
         })
     }
-    // a block without a chunk for `c` (the file lacks the column) is all null
-    def rowGroup(block: org.apache.parquet.hadoop.metadata.BlockMetaData): Option[RowGroup] = {
+    // a block without a chunk for field `f` (the file lacks it) is all null
+    def rowGroup(block: org.apache.parquet.hadoop.metadata.BlockMetaData,
+        f: String): Option[RowGroup] = {
       val rows = block.getRowCount
-      block.getColumns.asScala.find(_.getPath.toDotString == c) match {
+      block.getColumns.asScala.find(_.getPath.toDotString == f) match {
         case None => Some(RowGroup(rows, None, None))
         case Some(chunk) =>
           val stats = chunk.getStatistics
@@ -2089,16 +2034,23 @@ final class TableStore(spark: SparkSession, root: String,
           else None
       }
     }
-    def fileGroups(st: org.apache.hadoop.fs.FileStatus): Option[Seq[RowGroup]] = {
+    def fileGroups(
+        st: org.apache.hadoop.fs.FileStatus): Option[Seq[(String, Seq[RowGroup])]] = {
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
       try {
         val schema = r.getFooter.getFileMetaData.getSchema
-        if (schema.containsField(c) && !isSignedInt(schema.getType(schema.getFieldIndex(c)))) None
-        else allOf(r.getFooter.getBlocks.asScala.iterator.map(rowGroup(_).map(Seq(_))))
+        val field = resolveName(schema.getFields.asScala.map(_.getName).toSeq, c) match {
+          case Seq() => Some(c) // absent: all null
+          case Seq(f) if isSignedInt(schema.getType(schema.getFieldIndex(f))) => Some(f)
+          case _ => None
+        }
+        field.flatMap(f => allOf(r.getFooter.getBlocks.asScala.iterator
+            .map(rowGroup(_, f).map(Seq(_)))))
+          .map(groups => Seq(pathOf(st.getPath.toUri.toString) -> groups))
       } finally r.close()
     }
-    def dirGroups(d: Path): Option[Seq[RowGroup]] =
+    def dirGroups(d: Path): Option[Seq[(String, Seq[RowGroup])]] =
       allOf(fs(d).listStatus(d).iterator.map { st =>
         val n = st.getPath.getName
         if (st.isDirectory) {
@@ -2113,8 +2065,8 @@ final class TableStore(spark: SparkSession, root: String,
       fs(p).makeQualified(p).toString + "\u0000" + c, _ => dirGroups(p))
   }
 
-  private val rowGroupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Option[Seq[TableStore.RowGroup]]]
+  private val rowGroupCache = new java.util.concurrent.ConcurrentHashMap[
+    String, Option[Seq[(String, Seq[TableStore.RowGroup])]]]
 
   private[table] def writeSnapshot(name: String, df: DataFrame,
       tagPart: String = "", partitionBy: Seq[String] = Nil,

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** `Maintenance.maintain` is the one scheduled call: post-maintain, every
   * observable result is identical while the physical state is folded —
-  * manifest down to one snapshot, sidecars refreshed, index tombstones
+  * manifest down to one snapshot, Bloom sidecar refreshed, index tombstones
   * materialized and cleared, pending cascade journals drained. */
 class MaintenanceSpec extends SparkSpec {
 
@@ -36,7 +36,6 @@ class MaintenanceSpec extends SparkSpec {
     store.dropPartitions("docs", "date", Seq("2026-01-01"))
     store.deleteByKeysDV("docs", Seq("doc_id"),
       docs.where(col("doc_id") % 13 === 5).select("doc_id"))
-    store.analyzeZoneMaps("docs", Seq("doc_id"))
     // an index with pending tombstones
     NearDupIndex.buildNearDupIndex(store, "nd", docs, "text", "doc_id",
       numBuckets = 2)
@@ -65,10 +64,10 @@ class MaintenanceSpec extends SparkSpec {
     // …results identical
     assert(rows(store.scan("docs")) == beforeScan)
     assert(rows(probe()) == beforeProbe)
-    // sidecar covers exactly the folded files (== a fresh analyze)
-    val zm = rows(store.scan(store.zoneMapTable("docs")))
-    store.analyzeZoneMaps("docs", Seq("doc_id"))
-    assert(zm == rows(store.scan(store.zoneMapTable("docs"))))
+    // the folded files' footers prune a key range, exactly
+    val pruned = store.scanPruned("docs", "doc_id", 10L, 40L)
+    assert(rows(pruned) == rows(store.scan("docs").where(col("doc_id").between(10L, 40L))))
+    assert(pruned.inputFiles.length < store.scan("docs").inputFiles.length)
     // retention keeps its O(metadata) contract after the fold
     assert(store.expirePartitionsBelow("docs", "date", "2026-01-03"))
     assert(store.partitionValues("docs", "date") == Seq("2026-01-03"))

@@ -112,7 +112,6 @@ class DvDeleteSpec extends SparkSpec {
   test("zone-map file skipping composes with DVs (result stays exact)") {
     val (store, _) = newStoreAt()
     store.overwriteClustered("t", base, Seq("k"), numFiles = Some(5))
-    store.analyzeZoneMaps("t", Seq("k"))
     store.deleteByKeysDV("t", Seq("k"),
       spark.range(30, 41).selectExpr("id AS k"))
     val got = rows(store.scanPruned("t", "k", 25, 50))

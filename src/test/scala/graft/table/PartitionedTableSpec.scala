@@ -6,7 +6,7 @@ import java.nio.file.Files
 
 /** Hive-partitioned snapshots: directory-level pruning composes with the
   * store's replay semantics — appends, deletion vectors, time travel,
-  * zone-map file skipping, and compact all behave exactly as on flat
+  * footer file skipping, and compact all behave exactly as on flat
   * snapshots; the only new physics is `PartitionFilters` at the scan. */
 class PartitionedTableSpec extends SparkSpec {
 
@@ -83,7 +83,6 @@ class PartitionedTableSpec extends SparkSpec {
   test("zone-map pruned file reads keep partition columns (basePath anchor)") {
     val (store, _) = newStoreAt()
     store.overwritePartitioned("t", base, Seq("lang"))
-    store.analyzeZoneMaps("t", Seq("k"))
     val got = store.scanPruned("t", "k", 10L, 40L).select("k", "lang", "v")
     assert(rows(got) == rows(base.where(col("k").between(10, 40))),
       "pruned per-file reads must recover partition-directory columns")
@@ -306,8 +305,7 @@ class PartitionedTableSpec extends SparkSpec {
     // time travel: pre-drop version still whole
     val vs = store.versions("t")
     assert(store.scanAsOf("t", vs.head).count() == 300)
-    // zone-map pruned reads respect the exclusion (file skipping + filter)
-    store.analyzeZoneMaps("t", Seq("k"))
+    // pruned reads respect the exclusion (file skipping + filter)
     assert(rows(store.scanPruned("t", "k", 0L, 400L).select("k", "day", "v"))
       == rows(expect))
     // retention cascade entry point: expire below a cutoff over excl form

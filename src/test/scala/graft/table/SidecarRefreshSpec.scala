@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
-/** Incremental zone-map / Bloom sidecar refresh: content-equivalent to a
-  * full re-analyze while scanning ONLY the files appended since the last
+/** Incremental Bloom sidecar refresh: content-equivalent to a full
+  * re-analyze while scanning ONLY the files appended since the last
   * refresh — the O(new files) cadence an append-heavy 100 TB table needs. */
 class SidecarRefreshSpec extends SparkSpec {
 
@@ -17,95 +17,6 @@ class SidecarRefreshSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toSeq.map(String.valueOf).mkString("|"))
       .toIndexedSeq.sorted
-
-  test("zone-map refresh == full analyze; only new files are scanned") {
-    val (store, _) = newStoreAt
-    store.overwrite("t", spark.range(0, 1000)
-      .selectExpr("id AS k", "id * 2 AS v"))
-    store.analyzeZoneMaps("t", Seq("k"))
-    val firstFiles = store.scan("t").inputFiles.toSet
-
-    store.append("t", spark.range(5000, 6000)
-      .selectExpr("id AS k", "id * 2 AS v"))
-    store.refreshZoneMaps("t", Seq("k"))
-    val incremental = rows(store.scan(store.zoneMapTable("t")))
-
-    // the reference: a from-scratch analyze over the same table state
-    store.analyzeZoneMaps("t", Seq("k"))
-    val full = rows(store.scan(store.zoneMapTable("t")))
-    assert(incremental == full,
-      "incremental refresh must equal the full analyze row-for-row")
-
-    // pruning works through the refreshed sidecar and stays exact
-    store.refreshZoneMaps("t", Seq("k")) // no new files -> survivors only
-    val got = store.scanPruned("t", "k", 5100, 5200)
-      .select("k").collect().map(_.getLong(0)).sorted.toSeq
-    assert(got == (5100L to 5200L))
-    // ... and the pruned read skips the first snapshot's files entirely
-    val read = store.scanPruned("t", "k", 5100, 5200).inputFiles.toSet
-    assert(firstFiles.intersect(read).isEmpty,
-      "zone map must prune the pre-append files for a post-append range")
-  }
-
-  test("zone-map refresh drops sidecar rows of files the table no longer has") {
-    val (store, _) = newStoreAt
-    store.overwrite("t", spark.range(0, 100).selectExpr("id AS k"))
-    store.analyzeZoneMaps("t", Seq("k"))
-    store.overwrite("t", spark.range(500, 600).selectExpr("id AS k")) // old files GC
-    store.refreshZoneMaps("t", Seq("k"))
-    val zm = store.scan(store.zoneMapTable("t"))
-    val mins = zm.select("k__min").collect().map(_.getLong(0))
-    assert(mins.forall(_ >= 500L), "dead files' stats must drop out")
-    assert(rows(zm) == {
-      store.analyzeZoneMaps("t", Seq("k"))
-      rows(store.scan(store.zoneMapTable("t")))
-    })
-  }
-
-  test("zone-map refresh after a partition drop of hive-ESCAPED values") {
-    // dropped-partition liveness is derived from the manifest's own leaf
-    // enumeration, not from substring-matching rendered path strings —
-    // values whose hive dir names carry %XX escapes (here '=' and ' ')
-    // are exactly where a path-rendering dependency would silently keep
-    // dropped files live in the sidecar
-    val (store, _) = newStoreAt
-    val df = spark.range(0, 90).selectExpr("id AS k",
-      "CASE WHEN id % 3 = 0 THEN 'a=b' WHEN id % 3 = 1 THEN 'c d' " +
-        "ELSE 'plain' END AS src")
-    store.overwritePartitioned("t", df, Seq("src"))
-    store.analyzeZoneMaps("t", Seq("k"))
-    assert(store.dropPartitions("t", "src", Seq("a=b")))
-    store.refreshZoneMaps("t", Seq("k"))
-    val zm = store.scan(store.zoneMapTable("t"))
-    // sidecar rows for the dropped partition's files are gone: every
-    // surviving stats row covers only k % 3 != 0 rows
-    val liveKs = store.scan("t").select("k").collect().map(_.getLong(0)).toSet
-    val zmCount = zm.agg(sum(col("n_rows"))).first().getLong(0)
-    assert(zmCount == liveKs.size.toLong,
-      s"sidecar must cover exactly the live files' rows, got $zmCount")
-    assert(rows(zm) == {
-      store.analyzeZoneMaps("t", Seq("k"))
-      rows(store.scan(store.zoneMapTable("t")))
-    }, "refresh after an escaped-value drop must equal the full analyze")
-  }
-
-  test("zone-map refresh with a changed column set falls back to the full analyze") {
-    val (store, _) = newStoreAt
-    store.overwrite("t", spark.range(0, 100)
-      .selectExpr("id AS k", "id * 3 AS v"))
-    store.analyzeZoneMaps("t", Seq("k"))
-    store.refreshZoneMaps("t", Seq("k", "v")) // superset: v missing in sidecar
-    assert(store.scan(store.zoneMapTable("t")).columns.contains("v__min"))
-    // SUBSET after appends: survivors carry v stats the delta lacks — a
-    // naive incremental union would not even resolve; must re-analyze
-    store.append("t", spark.range(500, 600)
-      .selectExpr("id AS k", "id * 3 AS v"))
-    store.refreshZoneMaps("t", Seq("k"))
-    val zm = store.scan(store.zoneMapTable("t"))
-    assert(!zm.columns.contains("v__min") && zm.columns.contains("k__min"))
-    assert(zm.select(max(col("k__max"))).first().getLong(0) == 599L,
-      "the re-analyze must cover the appended files")
-  }
 
   test("bloom analyzed-column set survives an all-files-dead refresh") {
     val (store, _) = newStoreAt

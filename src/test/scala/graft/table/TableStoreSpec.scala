@@ -407,6 +407,15 @@ class TableStoreSpec extends SparkSpec {
     assert(scannedNextId(store, "t") == 10L)
   }
 
+  test("nextRowNumberStart resolves the column name as Spark does") {
+    val store = newStore
+    store.append("t", spark.range(1, 11).toDF("_id").withColumn("v", lit("a")))
+    assert(store.nextRowNumberStart("t", "_ID") == 11L)
+    // the scan fallback resolves the same way
+    store.deleteByKeysDV("t", Seq("_id"), spark.range(10, 11).toDF("_id"))
+    assert(store.nextRowNumberStart("t", "_ID") == 10L)
+  }
+
   test("append of shingle arrays onto a table read back from parquet") {
     val store = newStore
     def shingles(texts: String*) = spark.createDataFrame(
