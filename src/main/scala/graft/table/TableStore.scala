@@ -1,7 +1,7 @@
 package graft.table
 
 import graft.ops.Lineage.CutOps
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -239,175 +239,87 @@ final class TableStore(spark: SparkSession, root: String,
   /** The replay core shared by every read path: fold the manifest in
     * commit order — data snapshots union in, deletion vectors anti-join
     * the accumulated state on THEIR OWN columns (the key tuple each DV
-    * was written with). CONSECUTIVE vectors — no data snapshot between
-    * them, the shape a takedown cadence produces — coalesce into ONE
+    * was written with). A run of consecutive data entries (no vector
+    * between them, so their union order is irrelevant) reads through
+    * [[fileIndexRead]]: ONE relation per partition-column chain, against
+    * the evolved schema folded from the entries' cached footer schemas
+    * (parquet null-fills a column a file lacks — exactly the
+    * unionByName(allowMissingColumns) semantics). That is the plan-width
+    * guard at streaming commit counts: a 600-snapshot un-compacted table
+    * planned in ~31 s as a 600-way union and ~1 s merged. CONSECUTIVE
+    * vectors — the shape a takedown cadence produces — coalesce into ONE
     * anti-join per key-column set (row removal commutes within the run),
-    * so K takedowns cost one join, not K chained joins per scan. Each
-    * anti-join BROADCASTS its key side only while the vectors' on-disk
-    * size clears the session's autoBroadcastJoinThreshold; a bulk
-    * right-to-erasure batch (a 100M-key vector) plans a shuffled
-    * anti-join instead of a forced executor-OOM broadcast, and AQE may
-    * still pick broadcast at runtime if the built side turns out small.
-    * Every snapshot is read against the full evolved
-    * schema (parquet fills absent columns with null), which keeps the
-    * interleaved unions positionally safe.
+    * so K takedowns cost one join, not K chained joins per scan; a data
+    * snapshot between two vectors is a hard barrier (the later vector
+    * must also kill re-appended rows). Each anti-join BROADCASTS its key
+    * side only while the vectors' on-disk size clears the session's
+    * autoBroadcastJoinThreshold; a bulk right-to-erasure batch plans a
+    * shuffled anti-join instead of a forced executor-OOM broadcast.
     *
-    * @param keepFile when set, each snapshot reads only its physical
-    *   files passing the predicate (footer min/max or Bloom file
-    *   skipping);
-    *   snapshots with no surviving file drop out of the replay, DVs still
-    *   apply. The per-snapshot grouping is what keeps replay order
-    *   correct under pruning.
+    * A historic type disagreement the fold cannot widen (pre-contract
+    * data) reads one relation per ENTRY, each with its own footer schema,
+    * and leaves the coercion to the union. Data snapshots that all carry
+    * one bucket spec, with no vector, file filter or `__file`, read as ONE
+    * bucketed relation.
+    *
+    * @param keepFile when set, only the data files passing the predicate
+    *   (footer min/max or Bloom file skipping) enter the relations; a run
+    *   with no surviving file drops out of the replay, DVs still apply. A
+    *   read whose every file is skipped is an empty local relation with
+    *   the evolved schema, which runs no Spark job.
     * @param withFile prepend `__file` (= `_metadata.file_path`) to every
-    *   row, selected per-snapshot because hidden metadata columns don't
+    *   row, selected per relation because hidden metadata columns don't
     *   survive unions. */
   private[table] def readState(name: String, entries: Seq[String],
       keepFile: Option[String => Boolean] = None,
       withFile: Boolean = false): DataFrame = {
     val dataEntries = entries.filterNot(isDvEntry)
     require(dataEntries.nonEmpty, s"manifest of $name holds no data snapshots")
-    def snapPath(sn: String) = new Path(tableDir(name), sn).toString
-    // a PARTITION-SUBSET entry ("snap-x/lang=en", from [[dropPartitions]])
-    // must anchor basePath at the snapshot ROOT so the partition column
-    // encoded in the directory name survives the read
-    def anchored(sn: String, reader: org.apache.spark.sql.DataFrameReader) =
-      if (sn.contains('/'))
-        reader.option("basePath", snapPath(snapRootOf(sn)))
-      else reader
-    // EXCLUSION entries ("snap-x/!lang=fr") read their physical prefix and
-    // filter the dropped partitions out — a partition-column-only predicate
-    // that prunes directories at listing time, keeping the replay ONE scan
-    // relation however many partitions a retention sweep removed
-    def readSnap(sn: String) = {
-      val (phys, excl) = parseEntry(sn)
-      // explicit schema from the per-entry footer cache: without it every
-      // snapshot read launches Spark's footer-inference job (one per
-      // fresh directory — measured as SchemaMergeUtils.mergeSchemasInParallel
-      // hotspots in the commit-heavy gates); entry dirs are immutable so
-      // the cached schema is exact, and writeDataDir primes the cache for
-      // directories this store just wrote
-      val df = anchored(sn, spark.read.schema(entryFooterSchema(name, sn)))
-        .parquet(snapPath(phys))
-      if (excl.isEmpty) df else df.where(exclusionFilter(excl))
-    }
-    // Evolved schema = what the per-snapshot unionByName chain would
-    // produce. The footer fold is O(entries) CACHED footer reads (entry
-    // dirs are immutable), not O(entries) analyzed relations; a historic
-    // type disagreement between snapshots (pre-contract data) falls back
-    // to the union's own coercion. LAZY on purpose: the dominant shape —
-    // one snapshot, no pruning — reads straight through readSnap and
-    // must not pay a footer pass it never uses.
-    lazy val foldedSchema: Option[StructType] =
+    val folded: Option[StructType] =
       try Some(dataEntries.map(entryFooterSchema(name, _)).reduce(mergeEvolved))
       catch { case _: TypeConflict => None }
-    lazy val fullSchema = foldedSchema.getOrElse(dataEntries
-      .map(readSnap)
-      .reduce((a, b) => a.unionByName(b, allowMissingColumns = true)).schema)
-    // Merged read of one RUN of data entries (no deletion vector between
-    // them — union order within a run is irrelevant): ONE relation per
-    // partition-column chain instead of one per snapshot, with the
-    // evolved schema applied explicitly (parquet null-fills absent
-    // columns — exactly the unionByName(allowMissingColumns) semantics).
-    // This is the plan-width guard at streaming commit counts: a
-    // 600-snapshot un-compacted table planned in ~31 s as a 600-way
-    // union and ~1 s merged. Flat snapshots share one multi-path read;
-    // hive-partitioned snapshots cannot (partition discovery demands a
-    // single base), so their group gets a manifest-built
-    // InMemoryFileIndex with an EXPLICIT PartitionSpec — the
-    // Delta/Iceberg file-index pattern on this store's own metadata.
-    // Include/exclusion subset entries dissolve into the spec (their
-    // dropped directories simply never enter the index), so a
-    // post-retention table needs neither row filters nor extra
-    // relations.
-    def mergedRun(run: Seq[String]): Seq[DataFrame] =
-      if (run.sizeIs == 1 || foldedSchema.isEmpty) run.map(readSnap)
-      else {
-        // all-nullable: a later-added column IS null for earlier files,
-        // exactly as the unionByName chain would have widened it
-        val readSchema = StructType(fullSchema.fields.map(_.copy(nullable = true)))
-        run.map(e => enumerateEntry(name, e))
-          .groupBy(_._1).toSeq.sortBy(_._1.mkString(","))
-          .map { case (cols, group) =>
-            val leaves = group.flatMap(_._2)
-            if (cols.isEmpty)
-              spark.read.schema(readSchema)
-                .parquet(leaves.map(_._1.toString): _*)
-            else mergedPartitionedRead(readSchema, cols, leaves)
-          }
+    // bucket i of every snapshot is one bucket of the scan
+    val bucketSpec =
+      if (keepFile.isDefined || withFile || folded.isEmpty ||
+          dataEntries.sizeIs < entries.size) None
+      else dataEntries.map(entryBucketing(name, _).map(_._1)).distinct match {
+        case Seq(spec) => spec
+        case _         => None
       }
-    if (keepFile.isEmpty && !withFile && dataEntries.sizeIs == entries.size) {
-      // every data snapshot bucketed alike: ONE relation carrying the spec
-      // (bucket i of every snapshot is one bucket of the scan); any other
-      // manifest reads unbucketed
-      return dataEntries.map(entryBucketing(name, _).map(_._1)).distinct match {
-        case Seq(Some(b)) if foldedSchema.isDefined =>
-          fileIndexRead(dataEntries.map(e => new Path(tableDir(name), e)),
-            org.apache.spark.sql.execution.datasources.PartitionSpec.emptySpec,
-            foldedSchema.get, Some(b))
-        case _ => mergedRun(dataEntries)
-          .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-      }
-    }
-    def decorate(df: DataFrame): DataFrame =
-      if (!withFile) df
-      else df.select(col("_metadata.file_path").as("__file") +:
-        fullSchema.fieldNames.map(col).toIndexedSeq: _*)
-    def snapFrame(sn: String): Option[DataFrame] = {
-      val (phys, excl) = parseEntry(sn)
-      def minusDropped(df: DataFrame) =
-        if (excl.isEmpty) df else df.where(exclusionFilter(excl))
-      keepFile match {
-        case None => Some(decorate(minusDropped(
-          anchored(sn, spark.read.schema(fullSchema)).parquet(snapPath(phys)))))
-        case Some(p) =>
-          // the entry's own listing (an excluded partition's files never
-          // enter it), not a relation built just to list files
-          val kept = entryFiles(name, sn)
-            .filter(f => p(f.toUri.toString)).map(_.toString)
-          if (kept.isEmpty) None
-          // basePath: a hive-partitioned snapshot's partition columns live
-          // in the directory names ABOVE the kept leaf files — without the
-          // anchor a file-list read would silently drop them
-          else Some(decorate(minusDropped(spark.read.schema(fullSchema)
-            .option("basePath", snapPath(snapRootOf(sn))).parquet(kept: _*))))
-      }
-    }
-    // segment the manifest: consecutive DATA entries as one run (their
-    // union order is irrelevant, so a run reads merged), consecutive DV
-    // entries as one run (anti-joins against the same accumulated state
-    // commute, so a run can regroup freely; a data snapshot between two
-    // vectors is a hard barrier — the later vector must also kill
-    // re-appended rows)
+    def union(a: DataFrame, b: DataFrame) =
+      a.unionByName(b, allowMissingColumns = true)
+    // segment the manifest: consecutive DATA entries as one run,
+    // consecutive DV entries as one run (anti-joins against the same
+    // accumulated state commute, so a run can regroup freely)
     val segments = entries.foldLeft(List.empty[Either[List[String], List[String]]]) {
       case (Right(run) :: rest, e) if isDvEntry(e) => Right(run :+ e) :: rest
       case (acc, e) if isDvEntry(e)                => Right(List(e)) :: acc
       case (Left(run) :: rest, e)                  => Left(run :+ e) :: rest
       case (acc, e)                                => Left(List(e)) :: acc
     }.reverse
-    // per-snapshot frames only where file pruning or the metadata column
-    // demands them; merged multi-path relations otherwise
-    def runFrames(run: List[String]): Seq[DataFrame] =
-      if (keepFile.isEmpty && !withFile) mergedRun(run)
-      else run.flatMap(snapFrame)
     val replayed = segments.foldLeft(Option.empty[DataFrame]) { (acc, seg) =>
       seg match {
-        case Right(run) => acc.map(df => applyDvRun(name, df, run))
-        case Left(run) => runFrames(run) match {
-          case Seq() => acc
-          case fs =>
-            val f = fs.reduce(_.unionByName(_, allowMissingColumns = true))
-            Some(acc
-              .map(_.unionByName(f, allowMissingColumns = true))
-              .getOrElse(f))
-        }
+        case Right(run) => acc.map(applyDvRun(name, _, run))
+        case Left(run) =>
+          fileIndexRead(name, run, folded, keepFile, bucketSpec, withFile)
+            .reduceOption(union) match {
+              case None    => acc
+              case Some(f) => Some(acc.fold(f)(union(_, f)))
+            }
       }
     }
-    replayed.getOrElse(
-      // every file of every snapshot pruned away: an empty frame that
-      // still carries the table's evolved schema
-      decorate(anchored(dataEntries.head,
-        spark.read.schema(fullSchema)).parquet(snapPath(dataEntries.head)))
-        .where(lit(false)))
+    replayed.getOrElse {
+      // no file left to read: a local relation (no Spark job) with the
+      // schema the union would have carried
+      import org.apache.spark.sql.types.{StringType, StructField}
+      def empty(schema: StructType) = spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+      val schema = folded.getOrElse(dataEntries
+        .map(e => empty(entryFooterSchema(name, e))).reduce(union).schema)
+      empty(if (!withFile) schema
+        else StructType(StructField("__file", StringType, nullable = false) +:
+          schema.fields))
+    }
   }
 
   /** The snapshot-directory segment of a manifest entry — the entry
@@ -430,25 +342,38 @@ final class TableStore(spark: SparkSession, root: String,
     (inc.mkString("/"), exc.map(_.stripPrefix("!")).toIndexedSeq)
   }
 
-  /** Parquet schema of one manifest entry's physical directory, partition
-    * columns included (basePath-anchored for subset prefixes); a bucketed
-    * snapshot's is the one its `_bucketspec` records (a zero-row bucketed
-    * write leaves no data file to read a footer from). Entry dirs
-    * are immutable once committed, so the footer read caches for the
-    * store's lifetime — repeated scans of an N-snapshot table pay N footer
-    * reads ONCE, then O(new entries). */
+  /** The schema a read of one manifest entry carries, read on the driver
+    * with no Spark job from the footer of the entry's first data file:
+    * the Spark row metadata the writer recorded, else the parquet schema
+    * converted under the session conf — what Spark's own inference reads
+    * (`ParquetFileFormat.readSchemaFromFooter`) — forced all-nullable as a
+    * file-source relation forces it, with the entry's partition columns
+    * appended as strings. A bucketed snapshot's is the one its
+    * `_bucketspec` records (a zero-row bucketed write leaves no data file
+    * to read a footer from). Entry dirs are immutable once committed, so
+    * the schema caches for the store's lifetime — repeated scans of an
+    * N-snapshot table pay N footer reads ONCE, then O(new entries) — and
+    * [[writeDataDir]] primes it for the entries it writes. */
   private def entryFooterSchema(name: String, e: String): StructType = {
-    val dir = tableDir(name)
-    val phys = parseEntry(e)._1
-    val p = new Path(dir, phys)
+    val p = new Path(tableDir(name), parseEntry(e)._1)
     footerSchemaCache.computeIfAbsent(
       fs(p).makeQualified(p).toString,
       _ => entryBucketing(name, e).map(_._2).getOrElse {
-        val r =
-          if (phys.contains('/'))
-            spark.read.option("basePath", new Path(dir, snapRootOf(e)).toString)
-          else spark.read
-        r.parquet(p.toString).schema
+        import org.apache.spark.sql.execution.datasources.parquet.{
+          ParquetFileFormat, ParquetToSparkSchemaConverter}
+        import org.apache.spark.sql.types.{StringType, StructField}
+        val (chain, leaves) = enumerateEntry(name, e)
+        val file = leaves.iterator.flatMap(_._3).nextOption().getOrElse(
+          throw new IllegalStateException(s"entry $e of $name holds no data file"))
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf))
+        val footer = try r.getFooter finally r.close()
+        val data = ParquetFileFormat.readSchemaFromFooter(
+          new org.apache.parquet.hadoop.Footer(file.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        StructType(data.fields.filterNot(f => chain.contains(f.name)).map(f =>
+          f.copy(dataType = allNullable(f.dataType), nullable = true)) ++
+          chain.map(StructField(_, StringType, nullable = true)))
       })
   }
 
@@ -483,37 +408,41 @@ final class TableStore(spark: SparkSession, root: String,
   private val bucketingCache = new java.util.concurrent.ConcurrentHashMap[
     String, Option[(BucketSpec, StructType)]]
 
-  /** One data entry resolved to its partition-column chain and leaf
-    * partition directories with their (unescaped, null-mapped) values —
-    * the rows of the explicit PartitionSpec a merged read is built from.
-    * A flat snapshot is `(Nil, Seq(dir -> Nil))`; an include entry pins
-    * its path segments' values; an exclusion entry's dropped directories
-    * are skipped at enumeration, so they never reach a file index.
-    * Directory listings cache per immutable entry subtree. */
-  private def enumerateEntry(name: String,
-      e: String): (Seq[String], Seq[(Path, Seq[String])]) = {
+  /** One manifest entry resolved to its partition-column chain and leaf
+    * partition directories, each with its (unescaped, null-mapped) values
+    * and its data files — the rows of the explicit PartitionSpec
+    * [[fileIndexRead]] builds from. A flat snapshot is
+    * `(Nil, Seq((dir, Nil, files)))`; an include entry pins its path
+    * segments' values; an exclusion entry's dropped directories are
+    * skipped at enumeration, so they never reach a file index. Every
+    * directory listing caches per store ([[listDirCached]]). */
+  private def enumerateEntry(name: String, e: String)
+      : (Seq[String], Seq[(Path, Seq[String], Seq[FileStatus])]) = {
     val segs = e.split('/')
     val incSegs = segs.drop(1).filterNot(_.startsWith("!")).toSeq
     val exclSet = segs.drop(1).filter(_.startsWith("!"))
       .map(_.stripPrefix("!")).toSet
-    val physPath = new Path(tableDir(name), (segs.head +: incSegs).mkString("/"))
+    val physPath = {
+      val p = new Path(tableDir(name), (segs.head +: incSegs).mkString("/"))
+      fs(p).makeQualified(p)
+    }
     def valueOf(seg: String): String = {
       val v = unescapePart(seg.dropWhile(_ != '=').drop(1))
       if (v == org.apache.spark.sql.catalyst.catalog
             .ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
       else v
     }
-    def descend(p: Path,
-        skip: Set[String]): (Seq[String], Seq[(Path, Seq[String])]) = {
-      val kids = listPartDirsCached(p)
-      if (kids.isEmpty) (Nil, Seq(p -> Nil))
+    def descend(p: Path, skip: Set[String])
+        : (Seq[String], Seq[(Path, Seq[String], Seq[FileStatus])]) = {
+      val (kids, files) = listDirCached(p)
+      if (kids.isEmpty) (Nil, Seq((p, Nil, files)))
       else {
         val c = kids.head.takeWhile(_ != '=')
         val parts = kids.filter(_.startsWith(c + "=")).filterNot(skip)
           .map { d =>
             val (subCols, leaves) = descend(new Path(p, d), Set.empty)
             (subCols,
-              leaves.map { case (lp, lv) => (lp, valueOf(d) +: lv) })
+              leaves.map { case (lp, lv, lf) => (lp, valueOf(d) +: lv, lf) })
           }
         val subCols = parts.headOption.map(_._1).getOrElse(Nil)
         (c +: subCols, parts.flatMap(_._2))
@@ -523,7 +452,7 @@ final class TableStore(spark: SparkSession, root: String,
     val fixedCols = incSegs.map(_.takeWhile(_ != '='))
     val fixedVals = incSegs.map(valueOf)
     (fixedCols ++ belowCols,
-      leaves.map { case (p, vs) => (p, fixedVals ++ vs) })
+      leaves.map { case (p, vs, files) => (p, fixedVals ++ vs, files) })
   }
 
   /** [[writeSnapshot]] preserving the uniform hive layout of `basis`
@@ -573,17 +502,22 @@ final class TableStore(spark: SparkSession, root: String,
   def entryLayouts(name: String): Seq[Seq[String]] =
     entryChains(name, readManifest(name))
 
-  /** Hive partition subdirectory names of one immutable entry directory,
-    * listed once per store. */
-  private def listPartDirsCached(p: Path): Seq[String] =
-    partDirsCache.computeIfAbsent(
+  /** One immutable entry directory's hive partition subdirectory names
+    * and data (`part-`) files, listed once per store: every read, footer
+    * and layout probe of the entry shares this listing. */
+  private def listDirCached(p: Path): (Seq[String], Seq[FileStatus]) =
+    dirListingCache.computeIfAbsent(
       fs(p).makeQualified(p).toString,
-      _ => fs(p).listStatus(p)
-        .filter(s => s.isDirectory && s.getPath.getName.contains('='))
-        .map(_.getPath.getName).sorted.toSeq)
+      _ => {
+        val st = fs(p).listStatus(p).toSeq
+        (st.collect { case s if s.isDirectory && s.getPath.getName.contains('=') =>
+            s.getPath.getName }.sorted,
+          st.filter(s => !s.isDirectory && s.getPath.getName.startsWith("part-"))
+            .sortBy(_.getPath.getName))
+      })
 
-  private val partDirsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]
+  private val dirListingCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Seq[String], Seq[FileStatus])]
 
   /** True iff entry directory `p` holds only zero-row `part-` files — the
     * shape [[writeDataDir]]'s partitioned-write fallback leaves behind
@@ -593,14 +527,14 @@ final class TableStore(spark: SparkSession, root: String,
     * ([[dropPartitions]], [[partitionValues]], [[inferredLayout]]) treat
     * it as the documented zero-row nothing-to-drop case instead of
     * hard-erroring a standing retention sweep on a table a takedown
-    * emptied. Footer metadata only (parquet row counts), cached for the
-    * store's lifetime like every immutable-entry stat. */
+    * emptied. Footer metadata only (parquet row counts) over the cached
+    * listing, cached for the store's lifetime like every immutable-entry
+    * stat. */
   private def isZeroRowDir(p: Path): Boolean =
     zeroRowCache.computeIfAbsent(
       fs(p).makeQualified(p).toString,
       _ => {
-        val parts = fs(p).listStatus(p).filter(s =>
-          !s.isDirectory && s.getPath.getName.startsWith("part-"))
+        val parts = listDirCached(p)._2
         java.lang.Boolean.valueOf(parts.nonEmpty && parts.forall { s =>
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(
             org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf))
@@ -611,71 +545,67 @@ final class TableStore(spark: SparkSession, root: String,
   private val zeroRowCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]
 
-  /** ONE relation over many hive-partitioned snapshot directories: Spark's
-    * partition discovery refuses multiple bases, so the partition spec is
-    * built EXPLICITLY from the manifest enumeration and handed to an
-    * [[org.apache.spark.sql.execution.datasources.InMemoryFileIndex]] —
-    * the Delta/Iceberg manifest-file-index pattern. Listings share the
-    * session [[org.apache.spark.sql.execution.datasources.FileStatusCache]];
-    * partition pruning, pushdown, and metadata columns ride the standard
+  /** The one way manifest entries become relations: ONE parquet relation
+    * per partition-column chain of `run` (per ENTRY, each with its own
+    * footer schema, when `schema` is None), over the store's own cached
+    * listing of the entries' leaf directories, with the manifest's
+    * partition values as an EXPLICIT PartitionSpec — the Delta/Iceberg
+    * manifest-file-index pattern. Spark lists and infers nothing: an
+    * exclusion entry's dropped directories never enter the listing, and
+    * partition pruning, pushdown and metadata columns ride the standard
     * FileSourceScan path. Partition values are strings by the store's
-    * layout contract. */
-  private def mergedPartitionedRead(readSchema: StructType,
-      cols: Seq[String], leaves: Seq[(Path, Seq[String])]): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.{PartitionPath, PartitionSpec}
-    import org.apache.spark.sql.types.{StringType, StructField}
-    val partSchema = StructType(
-      cols.map(c => StructField(c, StringType, nullable = true)))
-    val dataSchema = StructType(
-      readSchema.fields.filterNot(f => cols.contains(f.name)))
-    val partitions = leaves.map { case (p, vs) =>
-      PartitionPath(
-        org.apache.spark.sql.catalyst.InternalRow.fromSeq(vs.map(v =>
-          if (v == null) null
-          else org.apache.spark.unsafe.types.UTF8String.fromString(v))),
-        fs(p).makeQualified(p))
-    }
-    fileIndexRead(leaves.map(_._1), PartitionSpec(partSchema, partitions),
-      dataSchema, None)
-  }
-
-  /** ONE parquet relation over `dirs` with the partition spec given, never
-    * inferred, and optionally a bucket spec — what a path read cannot
-    * build (Spark records bucketing only for catalog tables). */
-  private def fileIndexRead(dirs: Seq[Path],
-      partSpec: org.apache.spark.sql.execution.datasources.PartitionSpec,
-      dataSchema: StructType, bucketSpec: Option[BucketSpec]): DataFrame = {
+    * layout contract; the read schema is top-level nullable (a
+    * later-added column IS null for earlier files).
+    *
+    * @param keepFile only the files passing it are read; a group with no
+    *   file left yields no relation
+    * @param bucketSpec recorded on the relation — what a path read cannot
+    *   build (Spark records bucketing only for catalog tables)
+    * @param withFile prepend `__file` (= `_metadata.file_path`) */
+  private def fileIndexRead(name: String, run: Seq[String],
+      schema: Option[StructType], keepFile: Option[String => Boolean] = None,
+      bucketSpec: Option[BucketSpec] = None,
+      withFile: Boolean = false): Seq[DataFrame] = {
     import org.apache.spark.sql.execution.datasources.{
-      FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
-    // qualified paths: the index matches a partition's files by comparing
-    // its PartitionPath against the listed files' (qualified) parent dirs
-    val index = new InMemoryFileIndex(spark, dirs.map(p => fs(p).makeQualified(p)),
-      Map.empty, Some(dataSchema), FileStatusCache.getOrCreate(spark),
-      Some(partSpec))
-    spark.baseRelationToDataFrame(HadoopFsRelation(index,
-      partSpec.partitionColumns, dataSchema, bucketSpec,
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-      Map.empty[String, String])(spark))
+      HadoopFsRelation, PartitionPath, PartitionSpec}
+    import org.apache.spark.sql.types.{StringType, StructField}
+    val listed = run.map(e => e -> enumerateEntry(name, e))
+    val groups =
+      if (schema.isEmpty) listed.map(Seq(_))
+      else listed.groupBy(_._2._1).toSeq.sortBy(_._1.mkString(",")).map(_._2)
+    groups.flatMap { group =>
+      val cols = group.head._2._1
+      val leaves = group.flatMap(_._2._2).map { case (dir, vals, files) =>
+        (dir, vals,
+          keepFile.fold(files)(k => files.filter(f => k(f.getPath.toUri.toString))))
+      }
+      if (leaves.forall(_._3.isEmpty)) None
+      else {
+        val partSchema = StructType(
+          cols.map(c => StructField(c, StringType, nullable = true)))
+        val dataSchema = StructType(
+          schema.getOrElse(entryFooterSchema(name, group.head._1)).fields
+            .filterNot(f => cols.contains(f.name)).map(_.copy(nullable = true)))
+        val spec = PartitionSpec(partSchema, leaves.map { case (dir, vals, _) =>
+          PartitionPath(
+            org.apache.spark.sql.catalyst.InternalRow.fromSeq(vals.map(v =>
+              if (v == null) null
+              else org.apache.spark.unsafe.types.UTF8String.fromString(v))),
+            dir)
+        })
+        val df = spark.baseRelationToDataFrame(HadoopFsRelation(
+          new TableStore.ListedFileIndex(spark, spec,
+            leaves.map { case (dir, _, files) => dir -> files }),
+          partSchema, dataSchema, bucketSpec,
+          new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+          Map.empty[String, String])(spark))
+        Some(
+          if (!withFile) df
+          else df.select(col("_metadata.file_path").as("__file") +:
+            df.columns.map(col).toIndexedSeq: _*))
+      }
+    }
   }
-
-  /** Row-level rendering of an exclusion entry's dropped partitions: the
-    * filter is on partition COLUMNS only, so Catalyst routes it to
-    * `PartitionFilters` and the excluded directories are pruned at
-    * file-listing time — the scan stays one relation however many
-    * partitions were dropped. Hive's null sentinel maps back to IS NULL;
-    * rows with a null partition value survive a drop of real values
-    * (the `coalesce(..., true)` keeps the NOT-IN null-safe). */
-  private def exclusionFilter(dirs: Seq[String]): org.apache.spark.sql.Column =
-    dirs.groupBy(_.takeWhile(_ != '=')).map { case (c, segs) =>
-      val vals = segs.map(s => unescapePart(s.drop(c.length + 1)))
-      val nullName = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-      val (nulls, real) = vals.partition(_ == nullName)
-      val notIn =
-        if (real.isEmpty) lit(true)
-        else coalesce(!col(c).isin(real: _*), lit(true))
-      if (nulls.nonEmpty) col(c).isNotNull && notIn else notIn
-    }.reduce(_ && _)
 
   /** Apply one run of consecutive deletion vectors to `df` as ONE
     * anti-join per distinct key-column SET (vectors sharing a key tuple
@@ -698,19 +628,16 @@ final class TableStore(spark: SparkSession, root: String,
     val order = metas.map(_._1).distinct // deterministic: first appearance
     order.foldLeft(df) { (acc, cols) =>
       val group = metas.collect { case (c, e) if c == cols => e }
-      // one MULTI-PATH relation per key-column set, not one relation per
-      // vector — K takedowns before a compaction stay one scan node.
-      // Explicit schema (same column set across the group by construction;
-      // parquet matches fields by name) skips the footer-inference job.
-      val keys = spark.read.schema(entryFooterSchema(name, group.head))
-        .parquet(group.map(e => new Path(tableDir(name), e).toString): _*)
-        .select(cols.map(col): _*)
       val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-      val side =
-        if (threshold > 0 &&
-            group.map(entryBytes(name, _)).sum <= threshold) broadcast(keys)
-        else keys
-      acc.join(side, cols, "left_anti")
+      val hint = threshold > 0 && group.map(entryBytes(name, _)).sum <= threshold
+      // ONE relation per key-column set (the group shares one column set
+      // by construction; parquet matches fields by name), not one per
+      // vector — K takedowns before a compaction stay one scan node
+      fileIndexRead(name, group, Some(entryFooterSchema(name, group.head)))
+        .foldLeft(acc) { (a, read) =>
+          val keys = read.select(cols.map(col): _*)
+          a.join(if (hint) broadcast(keys) else keys, cols, "left_anti")
+        }
     }
   }
 
@@ -824,17 +751,8 @@ final class TableStore(spark: SparkSession, root: String,
     // and a raw rendering of an escaped-value partition dir (spaces, '%')
     // is not a parseable URI
     readManifest(name).filterNot(isDvEntry)
-      .flatMap(entryFiles(name, _)).map(_.toUri.toString)
-
-  /** The part files of one data entry, listed from its leaf directories
-    * ([[enumerateEntry]]), so an exclusion entry's dropped directories
-    * never enter the list. */
-  private def entryFiles(name: String, e: String): Seq[Path] =
-    enumerateEntry(name, e)._2.flatMap { case (leaf, _) =>
-      fs(leaf).listStatus(leaf).toSeq.collect {
-        case s if !s.isDirectory && s.getPath.getName.startsWith("part-") => s.getPath
-      }
-    }
+      .flatMap(enumerateEntry(name, _)._2.flatMap(_._3))
+      .map(_.getPath.toUri.toString)
 
   /** Incremental-refresh scaffolding of the Bloom sidecar:
     * given the sidecar's `file` values, split the world into SURVIVORS
@@ -1992,10 +1910,6 @@ final class TableStore(spark: SparkSession, root: String,
     import TableStore.RowGroup
     import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
     import scala.jdk.CollectionConverters._
-    val phys = parseEntry(e)._1
-    val p = new Path(tableDir(name), phys)
-    def isPartitionDir(dir: String) =
-      dir.contains('=') && resolveName(Seq(dir.takeWhile(_ != '=')), c).nonEmpty
     // the concatenation of the parts; one part the footers cannot answer
     // sinks the whole
     def allOf[A](parts: Iterator[Option[Seq[A]]]): Option[Seq[A]] = {
@@ -2035,7 +1949,7 @@ final class TableStore(spark: SparkSession, root: String,
       }
     }
     def fileGroups(
-        st: org.apache.hadoop.fs.FileStatus): Option[Seq[(String, Seq[RowGroup])]] = {
+        st: FileStatus): Option[Seq[(String, Seq[RowGroup])]] = {
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
       try {
@@ -2050,19 +1964,14 @@ final class TableStore(spark: SparkSession, root: String,
           .map(groups => Seq(pathOf(st.getPath.toUri.toString) -> groups))
       } finally r.close()
     }
-    def dirGroups(d: Path): Option[Seq[(String, Seq[RowGroup])]] =
-      allOf(fs(d).listStatus(d).iterator.map { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory) {
-          if (isPartitionDir(n)) None
-          else if (n.startsWith("_") || n.startsWith(".")) Some(Nil)
-          else dirGroups(st.getPath)
-        } else if (n.startsWith("part-") && !n.endsWith(".crc")) fileGroups(st)
-        else Some(Nil)
-      })
-    if (phys.split('/').exists(isPartitionDir)) None
+    // the entry's cached listing: an exclusion entry's dropped files never
+    // enter it; a partition column has no footer statistics
+    val (chain, leaves) = enumerateEntry(name, e)
+    val dir = tableDir(name)
+    if (resolveName(chain, c).nonEmpty) None
     else rowGroupCache.computeIfAbsent(
-      fs(p).makeQualified(p).toString + "\u0000" + c, _ => dirGroups(p))
+      fs(dir).makeQualified(dir).toString + "/" + e + "\u0000" + c,
+      _ => allOf(leaves.iterator.flatMap(_._3).map(fileGroups)))
   }
 
   private val rowGroupCache = new java.util.concurrent.ConcurrentHashMap[
@@ -2277,17 +2186,12 @@ final class TableStore(spark: SparkSession, root: String,
       .toSeq.sorted
   }
 
-  private def unionRead(name: String, snaps: Seq[String]): DataFrame = {
-    require(snaps.nonEmpty, s"empty manifest for $name")
-    readState(name, snaps)
-  }
-
   /** Scan a branch head — same replay + schema evolution as [[scan]]
     * (a branch forked after a DV delete inherits the DV entry). */
   def scanBranch(name: String, branch: String): DataFrame = {
     val f = branchFile(name, branch)
     require(fs(tableDir(name)).exists(f), s"Branch not found: $name@$branch")
-    unionRead(name, readManifestFile(f))
+    readState(name, readManifestFile(f))
   }
 
   /** Append to a branch head (atomic branch-pointer flip; main untouched).
@@ -2468,7 +2372,7 @@ final class TableStore(spark: SparkSession, root: String,
     require(keys.nonEmpty, "three-way merge: at least one key column")
     val f = branchFile(name, branch)
     require(fs(tableDir(name)).exists(f), s"Branch not found: $name@$branch")
-    val base = unionRead(name, readManifestFile(branchBaseFile(name, branch)))
+    val base = readState(name, readManifestFile(branchBaseFile(name, branch)))
     // basis manifests captured ONCE and frames built from them — the
     // commit is conditional on these exact states, so a concurrent main
     // or branch writer makes the merge fail loudly instead of silently
@@ -2476,7 +2380,7 @@ final class TableStore(spark: SparkSession, root: String,
     val basisMain = readManifest(name)
     val basisBranch = readManifestFile(f)
     val ours = readState(name, basisMain)
-    val theirs = unionRead(name, basisBranch)
+    val theirs = readState(name, basisBranch)
 
     val bd = diffFrames(base, theirs, keys)
       .select(keys.map(col) :+ col("op").as("op_branch"): _*)
@@ -3132,6 +3036,25 @@ object TableStore {
     * Fail refuses and commits nothing; OursWins keeps main's rows on
     * conflicted keys; TheirsWins keeps the branch's. Either resolving
     * policy still returns the conflict report for audit. */
+  /** A parquet file index over files the store has already listed, one
+    * entry per leaf directory of `spec`: a scan plans from these statuses
+    * and the manifest's partition values, and Spark lists nothing. */
+  private final class ListedFileIndex(spark: SparkSession,
+      spec: org.apache.spark.sql.execution.datasources.PartitionSpec,
+      leaves: Seq[(Path, Seq[FileStatus])])
+      extends org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex(
+        spark, Map.empty, None) {
+    override def partitionSpec()
+        : org.apache.spark.sql.execution.datasources.PartitionSpec = spec
+    override protected lazy val leafFiles = scala.collection.mutable.LinkedHashMap(
+      leaves.flatMap(_._2).map(f => f.getPath -> f): _*)
+    override protected lazy val leafDirToChildrenFiles = leaves.map {
+      case (dir, files) => dir -> files.toArray }.toMap
+    override def allFiles(): Seq[FileStatus] = leaves.flatMap(_._2)
+    override def rootPaths: Seq[Path] = leaves.map(_._1)
+    override def refresh(): Unit = ()
+  }
+
   sealed trait MergePolicy
   object MergePolicy {
     case object Fail extends MergePolicy

@@ -960,6 +960,25 @@ class PlanSpec extends AnyFunSuite {
     assert(pruned.queryExecution.executedPlan.toString
       .contains("PartitionFilters: ["), "merged index must keep PartitionFilters")
     assert(pruned.count() == base.where(col("day") === "1").count())
+    // file-skipping reads keep one relation too: files kept from several
+    // snapshots share their chain's file index (entry i holds k = i mod 6,
+    // all in one day directory)
+    def scanNodes(df: org.apache.spark.sql.DataFrame) = "Scan parquet".r
+      .findAllIn(df.queryExecution.executedPlan.toString).length
+    def snaps(df: org.apache.spark.sql.DataFrame) = df.inputFiles
+      .map(_.split('/').find(_.startsWith("snap-")).get).toSet
+    val ranged = store.scanPruned("t", "k", 57L, 59L)
+    assert(snaps(ranged).size == 3, "k 57..59 lives in three snapshots")
+    assert(ranged.inputFiles.length < store.scan("t").inputFiles.length)
+    assert(scanNodes(ranged) == 1,
+      s"a pruned read over three snapshots is one relation:\n${ranged.queryExecution.executedPlan}")
+    assert(ranged.select("k").collect().map(_.getLong(0)).toSet == Set(57L, 58L, 59L))
+    store.analyzeBloomFilters("t", Seq("day"))
+    val probed = store.scanBloomPruned("t", "day", "1")
+    assert(snaps(probed).size == 2, "day 1 lives in two snapshots")
+    assert(scanNodes(probed) == 1,
+      s"a Bloom-pruned read over two snapshots is one relation:\n${probed.queryExecution.executedPlan}")
+    assert(probed.count() == base.where(col("day") === "1").count())
     // mixed layouts still split: a flat append alongside partitioned ones
     store.append("t", spark.range(100, 103).select(col("id").as("k"),
       lit("9").as("day"), (col("id") * 2).as("v")))

@@ -500,6 +500,25 @@ class PartitionedTableSpec extends SparkSpec {
       withNulls.where(col("day") === "d2").count())
   }
 
+  test("a one-entry exclusion read keeps null-partition rows and lists no dropped file") {
+    val (store, _) = newStoreAt()
+    val withNulls = spark.range(0, 40).selectExpr(
+      "id AS k",
+      "CASE WHEN id % 4 = 0 THEN NULL ELSE CONCAT('d', CAST(id % 4 AS STRING)) END AS day",
+      "CAST(id AS DOUBLE) AS v")
+    store.overwritePartitioned("t", withNulls, Seq("day"))
+    assert(store.dropPartitions("t", "day", Seq("d1")))
+    val Seq(entry) = store.readManifest("t")
+    assert(entry.endsWith("/!day=d1"), entry)
+    val df = store.scan("t")
+    assert(rows(df.select("k", "day", "v")) ==
+      rows(withNulls.where(col("day").isNull || col("day") =!= "d1")))
+    assert(df.where(col("day").isNull).count() == 10)
+    assert(df.inputFiles.exists(_.contains("day=__HIVE_DEFAULT_PARTITION__")))
+    assert(!df.inputFiles.exists(_.contains("day=d1")),
+      s"a dropped directory's files were read: ${df.inputFiles.mkString(", ")}")
+  }
+
   test("partition-column validation: missing column and all-columns rejected") {
     val (store, _) = newStoreAt()
     intercept[IllegalArgumentException](

@@ -51,6 +51,26 @@ class SidecarRefreshSpec extends SparkSpec {
     assert(params.length == 1 && params.head.getInt(0) == 4096)
   }
 
+  test("bloom refresh records an appended file under the scan's own file path") {
+    val (store, _) = newStoreAt
+    def path(f: String) = new java.net.URI(f).getPath
+    def sidecarFiles = store.scan(store.bloomTable("t"))
+      .where(col("file") =!= "__analyzed__").select("file").distinct()
+      .collect().map(r => path(r.getString(0))).toSet
+    def liveFiles = store.scan("t").inputFiles.map(path).toSet
+    store.overwrite("t", spark.range(0, 300)
+      .selectExpr("CAST(id AS STRING) AS h", "id AS v"))
+    store.analyzeBloomFilters("t", Seq("h"), bits = 4096, hashes = 3)
+    assert(sidecarFiles == liveFiles)
+    val before = liveFiles
+    store.append("t", spark.range(9000, 9300)
+      .selectExpr("CAST(id AS STRING) AS h", "id AS v"))
+    assert((liveFiles -- before).nonEmpty)
+    store.refreshBloomFilters("t", Seq("h"))
+    assert(sidecarFiles == liveFiles,
+      "the appended files must be read as fresh and kept as live")
+  }
+
   test("bloom refresh == full analyze, params inherited, pruning exact") {
     val (store, _) = newStoreAt
     store.overwrite("t", spark.range(0, 500)

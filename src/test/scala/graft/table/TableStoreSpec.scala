@@ -69,6 +69,31 @@ class TableStoreSpec extends SparkSpec {
       "flat: primed schema must equal cold footer inference")
     assert(primed.scan("t").orderBy("id").collect().toSeq ==
       cold.scan("t").orderBy("id").collect().toSeq)
+    // both against Spark's own inference of the snapshot directory: the
+    // primed prediction and the cold store's driver-side footer read
+    for (t <- Seq("t", "flat")) {
+      val Seq(snap) = primed.readManifest(t)
+      val inferred = spark.read.parquet(s"$dir/$t/$snap").schema
+      assert(primed.tableSchema(t) == inferred, s"$t: primed != Spark's inference")
+      assert(new TableStore(spark, dir, gcGraceMs = 0L).tableSchema(t) == inferred,
+        s"$t: footer read != Spark's inference")
+    }
+  }
+
+  test("a cold store reads a 5-snapshot table's schema and builds its scan with no Spark job") {
+    val (store, dir) = newStoreAt
+    (0 until 5).foreach(i => store.append("t",
+      spark.range(i * 10, i * 10 + 10).toDF("k").withColumn(s"c$i", lit(i))))
+    def cold = new TableStore(spark, dir, gcGraceMs = 0L)
+    val sc = spark.sparkContext
+    val (schema, schemaJobs) =
+      org.apache.spark.graft.JobRecorder.record(sc)(cold.tableSchema("t"))
+    assert(schemaJobs.isEmpty, s"tableSchema ran ${schemaJobs.size} jobs")
+    assert(schema == store.tableSchema("t"))
+    val (df, scanJobs) = org.apache.spark.graft.JobRecorder.record(sc)(cold.scan("t"))
+    assert(scanJobs.isEmpty, s"building scan ran ${scanJobs.size} jobs")
+    assert(df.schema == store.scan("t").schema)
+    assert(df.count() == 50L)
   }
 
   test("overwrite replaces state atomically (old snapshot GC'd)") {

@@ -38,6 +38,21 @@ class ZoneMapSpec extends SparkSpec {
     assert(store.scanPruned("t", "k", 5000L, 6000L).count() == 0L)
   }
 
+  test("a read whose every file is skipped runs no Spark job and keeps the table schema") {
+    val store = tmpStore()
+    store.overwrite("t", spark.range(0, 100).selectExpr("id AS k", "id * 2 AS v"))
+    store.append("t", spark.range(100, 200)
+      .selectExpr("id AS k", "id * 2 AS v", "'x' AS extra"))
+    store.deleteByKeysDV("t", Seq("k"), spark.range(3, 4).toDF("k"))
+    val df = store.scanPruned("t", "k", 5000L, 6000L)
+    assert(df.schema == store.tableSchema("t"))
+    val (got, jobs) = org.apache.spark.graft.JobRecorder.record(spark.sparkContext) {
+      df.collect()
+    }
+    assert(got.isEmpty)
+    assert(jobs.isEmpty, s"a fully skipped read ran ${jobs.size} jobs")
+  }
+
   test("stale map: files appended after analyze are read unpruned") {
     import spark.implicits._
     val store = tmpStore()
