@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *     not counting) and are reclaimed by [[compactGramIndex]];
   *   - membership has no meaningful row-level delete (a gram seen once has
   *     been seen; removing a document does not un-publish its n-grams), so
-  *     no tombstone surface exists — rebuild if the reference must shrink.
+  *     no delete surface exists — rebuild if the reference must shrink.
   *
   * Scale shape of the probe: the index side is BUCKETED on `gh`, so the
   * semi join plans with zero exchange on the (large, persistent) index

@@ -17,8 +17,9 @@ object Maintenance {
     *
     *  1. drain any pending retention-cascade journal
     *     ([[Retention.drainPendingCascades]]) — a crashed cascade's
-    *     index deletes must land before anything compacts the
-    *     tombstones they write;
+    *     index deletes must land before step 4 folds the deletion
+    *     vectors they write, whose entry names carry the tags the
+    *     replay checks;
     *  2. fold the manifest once it exceeds `maxSnapshots`, LAYOUT-AWARE:
     *     a uniformly hive-partitioned table folds through
     *     [[TableStore.compactPartitioned]] (preserving the O(metadata)
@@ -35,9 +36,11 @@ object Maintenance {
     *     rewrites the files, making this the one full re-analyze the new
     *     layout needs. Range skipping ([[TableStore.scanPruned]]) reads
     *     the parquet footers and has nothing to refresh;
-    *  4. physically compact each index family (tombstoned rows
-    *     dropped, tombstone table cleared; BM25 postings/df/stats runs
-    *     summed and zero rows dropped). `indexes = Nil` resolves to the
+    *  4. physically compact each index family (near-dup, positional
+    *     and IVF tables fold their deletion vectors through
+    *     [[TableStore.compactDeletes]], only when they hold one; BM25
+    *     postings/df/stats runs summed and zero rows dropped).
+    *     `indexes = Nil` resolves to the
     *     table's REGISTERED index list ([[Retention.registerIndex]]); an
     *     explicit list is drift-checked against the registry. Targets
     *     with `numBuckets = 0` are delete-only and skipped here;
@@ -50,7 +53,8 @@ object Maintenance {
     *
     * Observable results are unchanged by construction — every step is a
     * fold or an equivalence-preserving rewrite; MaintenanceSpec pins scan
-    * rows, probe rows, manifest/sidecar/tombstone sizes across the pass. */
+    * rows, probe rows, manifest/sidecar sizes and the index tables'
+    * deletion vectors across the pass. */
   def maintain(store: TableStore, table: String,
       indexes: Seq[Retention.IndexTarget] = Nil,
       maxSnapshots: Int = 16): Unit = Retention.withLease(store, table) {
@@ -81,11 +85,11 @@ object Maintenance {
     // same fold it was, just concurrent with its siblings.
     graft.ops.Overlap.par(resolved.map(target => () => target match {
       case Retention.NearDup(n, nb) if nb > 0 =>
-        NearDupIndex.compactNearDupIndex(store, n, nb)
+        NearDupIndex.compactNearDupIndex(store, n)
       case Retention.Positional(n, nb) if nb > 0 =>
-        Retrieval.compactPositionalIndex(store, n, nb)
+        Retrieval.compactPositionalIndex(store, n)
       case Retention.Ivf(n, nb) if nb > 0 =>
-        VectorIndex.compactIvfIndex(store, n, nb)
+        VectorIndex.compactIvfIndex(store, n)
       case Retention.Bm25(n, _, nb) if nb > 0 =>
         Retrieval.compactBm25Index(store, n, nb)
       case Retention.View(n) =>

@@ -105,48 +105,37 @@ object NearDupIndex {
     Lineage.release(b)
   }
 
-  /** DELETE corpus docs from the index (takedowns): a tombstone table the
-    * probe anti-joins before verification — tombstoned docs stop
-    * producing matches immediately; their band/shingle rows stay until a
-    * compaction rebuild. Re-adding a tombstoned id requires that rebuild
-    * first. */
+  /** DELETE corpus docs from the index (takedowns): one deletion vector
+    * ([[TableStore.deleteByKeysDVTagged]]) on `_bands` and one on `_docs`,
+    * keyed on `doc_id` = the first column of `docIds`, cast to bigint.
+    * Every probe's scan replays them, so the docs stop matching at once;
+    * their rows stay in the files until [[compactNearDupIndex]], and a doc
+    * re-added afterwards through [[appendNearDupIndex]] is served at once.
+    * Both vectors carry `tag`, and each table checks its own manifest for
+    * it: a replay after a crash between the two commits writes only the
+    * missing one, and never erases a doc re-added since. */
   def deleteFromNearDupIndex(
-      store: TableStore, name: String, docIds: DataFrame
+      store: TableStore, name: String, docIds: DataFrame, tag: String
   ): Unit = {
     val rows = docIds.select(col(docIds.columns.head).cast("bigint")
       .as("doc_id"))
-    store.append(s"${name}_tombstones", rows)
+    Seq("_bands", "_docs").foreach(t =>
+      store.deleteByKeysDVTagged(name + t, Seq("doc_id"), rows, tag))
   }
 
-  /** Compact the index: drop tombstoned docs' band and shingle rows and
-    * clear the tombstone table (after which a tombstoned id may re-enter
-    * via [[appendNearDupIndex]]). */
-  def compactNearDupIndex(
-      store: TableStore, name: String, numBuckets: Int
-  ): Unit = {
-    if (!store.exists(s"${name}_tombstones")) return
-    // size-gated anti-join (TableStore.antiJoinKeys): a routine takedown
-    // list broadcasts, a bulk-erasure tombstone table past the session
-    // broadcast threshold shuffles instead of OOMing an executor. The two
-    // rewrites are independent — overlap them (§2.6); each reads the
-    // snapshots its overwrite replaces, which stay on disk until GC.
-    graft.ops.Overlap.par(Seq(
-      () => store.overwriteBucketed(s"${name}_bands",
-        store.antiJoinKeys(store.scan(s"${name}_bands"),
-            s"${name}_tombstones", "doc_id", "doc_id")
-          .select("band", "key", "doc_id"), Seq("key"), numBuckets),
-      () => store.overwrite(s"${name}_docs",
-        store.antiJoinKeys(store.scan(s"${name}_docs"),
-            s"${name}_tombstones", "doc_id", "doc_id")
-          .select("doc_id", "shingles"))))
-    store.drop(s"${name}_tombstones")
-  }
+  /** Compact the index: fold the deletion vectors of `_bands` and `_docs`
+    * into their files ([[TableStore.compactDeletes]]; bucketing kept). A
+    * no-op for a table without vectors. */
+  def compactNearDupIndex(store: TableStore, name: String): Unit =
+    graft.ops.Overlap.par(Seq("_bands", "_docs").map(t =>
+      () => store.compactDeletes(name + t)))
 
   /** Screen a crawl batch against the indexed corpus: candidate pairs from
     * shared band keys (bucket-pruned), exact-Jaccard verified against the
     * stored shingles. Output (batch_id, corpus_id, jaccard) — identical to
     * [[Dedup.incrementalNearDupPairs]] over the same corpus (minus any
-    * tombstoned docs). Result is candidate-pair-sized and eagerly
+    * deleted docs, which the scans' deletion-vector replay drops). Result
+    * is candidate-pair-sized and eagerly
     * materialized (the `incrementalNearDupPairs` cache-scope posture). */
   def nearDupAgainstIndex(
       store: TableStore, name: String,
@@ -177,13 +166,7 @@ object NearDupIndex {
       .join(broadcast(bBands), Seq("band", "key"))
       .select(col("batch_id"), col("doc_id").as("corpus_id"))
       .distinct()
-    val pairs1 =
-      if (store.exists(s"${name}_tombstones"))
-        // size-gated: bulk-erasure tombstones shuffle instead of OOMing
-        store.antiJoinKeys(pairs0, s"${name}_tombstones",
-          "doc_id", "corpus_id")
-      else pairs0
-    val pairs = if (materialize) Lineage.cut(pairs1) else pairs1
+    val pairs = if (materialize) Lineage.cut(pairs0) else pairs0
     val candIds = pairs.select(col("corpus_id")).distinct()
     val cShingles = store.scan(s"${name}_docs")
       .select(col("doc_id").as("corpus_id"), col("shingles").as("c_sh"))

@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   * subset FIRST (a partition-pruned scan — directories outside the
   * doomed values are never listed, so the capture costs O(dropped data),
   * the floor for learning which ids die), then the O(metadata) partition
-  * drop, then the per-family index delete. Tombstone families (near-dup,
-  * positional, IVF) need only the ids; BM25 is log-structured count
-  * negation and needs the indexed (id, text) rows re-derived — which is
+  * drop, then the per-family index delete. Deletion-vector families
+  * (near-dup, positional, IVF) need only the ids; BM25 is log-structured
+  * count negation and needs the indexed (id, text) rows re-derived — which is
   * why the capture happens before the manifest commit, while the doomed
   * partitions are still scannable. [[deleteByKeysCascade]] is the
   * ID-LEVEL form of the same operation: specific doc ids erased through
@@ -52,15 +52,15 @@ import org.apache.spark.sql.functions._
   * cascade can be re-run); resolving it the other way could erase
   * live docs from the indexes, the worse failure.
   *
-  * The index deletes are takedown-sized appends (tombstones / negated
-  * postings), never index rewrites; physical reclamation stays where it
-  * was — `compact*Index` on the maintenance cadence, and table-side GC
-  * after the next `compact`. The cascade is at-least-once per target:
-  * tombstone replays dedup at probe time via DISTINCT; a BM25 target
-  * replays only when its `__done__` marker is missing, which narrows the
-  * double-negation window to a death between the negation's own appends
-  * and the marker (the same non-atomicity `deleteFromBm25Index`'s three
-  * appends already carry).
+  * The index deletes are takedown-sized commits (deletion vectors on the
+  * index tables / negated postings), never index rewrites; physical
+  * reclamation stays where it was — `compact*Index` on the maintenance
+  * cadence, and table-side GC after the next `compact`. Every index
+  * delete carries the cascade's tag `rc.<cid>.<i>`, so a target replays
+  * at most once: a deletion-vector family skips each table whose
+  * manifest already holds the tag (a doc re-added to the index since the
+  * crash stays served), and a BM25 target resumes at its first missing
+  * sub-append marker instead of negating twice.
   *
   * Concurrency: the capture and the drop are bound together — the drop
   * commits ONLY if the manifest is still the one the capture read
@@ -80,8 +80,8 @@ import org.apache.spark.sql.functions._
   * indexed docs at capture time — the pairing the streaming
   * curate-and-index path maintains (every appended batch also
   * `append*Index`ed, every DV takedown also `deleteFrom*Index`ed). For
-  * the tombstone families an over-capture is harmless (a tombstone for
-  * a never-indexed id matches nothing), but BM25 is COUNT NEGATION:
+  * the deletion-vector families an over-capture is harmless (a vector
+  * key for a never-indexed id matches nothing), but BM25 is COUNT NEGATION:
   * negating a doc that was never indexed (or negating text that differs
   * from what was indexed) leaves df/stats residue that skews every
   * surviving score on the shared terms — `deleteFromBm25Index`'s own
@@ -96,20 +96,21 @@ object Retention {
   private val log = org.slf4j.LoggerFactory.getLogger("graft.retention")
 
   /** One persistent index built over the table being swept.
-    * `numBuckets` (tombstone families) is only consulted by
-    * [[Maintenance.maintain]]'s physical index compaction — 0 means
-    * "delete-only target, never compact". */
+    * `numBuckets` (deletion-vector families) is only
+    * [[Maintenance.maintain]]'s compact-or-skip flag — 0 means
+    * "delete-only target, never compact"; the fold keeps the tables'
+    * own bucket spec. */
   sealed trait IndexTarget
 
-  /** Near-dup LSH index `name` (tombstone family — ids suffice). */
+  /** Near-dup LSH index `name` (deletion-vector family — ids suffice). */
   final case class NearDup(name: String, numBuckets: Int = 0)
       extends IndexTarget
 
-  /** Positional index `name` (tombstone family — ids suffice). */
+  /** Positional index `name` (deletion-vector family — ids suffice). */
   final case class Positional(name: String, numBuckets: Int = 0)
       extends IndexTarget
 
-  /** IVF vector index `name` (tombstone family — ids suffice). */
+  /** IVF vector index `name` (deletion-vector family — ids suffice). */
   final case class Ivf(name: String, numBuckets: Int = 0)
       extends IndexTarget
 
@@ -125,7 +126,7 @@ object Retention {
     * DV-applied / post-drop base, so the view stops serving the erased
     * docs' aggregates as part of the SAME journaled, crash-durable
     * operation as the index deletes (a refresh is idempotent, so a
-    * replay after a crash is harmless — the tombstone-family posture).
+    * replay after a crash is harmless).
     * Register at view definition time via [[defineView]]; unregister
     * BEFORE dropping the view table, or the replay skips it with a loud
     * warning. */
@@ -260,15 +261,12 @@ object Retention {
   /** The identity of a target for drift comparison: family + name, plus
     * the correctness-bearing BM25 parameters (text column and bucket
     * count drive the count negation — a disagreement there IS a sync
-    * drift). Tombstone families' `numBuckets` is only a compaction knob
-    * and deliberately not part of the identity. */
+    * drift). The deletion-vector families' `numBuckets` is only a
+    * compaction flag and deliberately not part of the identity. */
   private def targetKey(t: IndexTarget): (String, String, String, Int) =
     t match {
-      case NearDup(n, _)    => ("neardup", n, "", 0)
-      case Positional(n, _) => ("positional", n, "", 0)
-      case Ivf(n, _)        => ("ivf", n, "", 0)
-      case Bm25(n, tc, nb)  => ("bm25", n, tc, nb)
-      case View(n)          => ("matview", n, "", 0)
+      case _: Bm25 => encodeTarget(t)
+      case _       => encodeTarget(t).copy(_4 = 0)
     }
 
   /** Resolve the effective index list for a cascade: no registry → the
@@ -1005,23 +1003,25 @@ object Retention {
       .where(col("__cascade_id") === cid)
     locally {
       val (t, i) = (target, idx)
+      // tagged: the crash window between a delete completing and the
+      // __done__ marker landing replays the target. A replayed vector
+      // would erase a doc re-added to the index since, a replayed BM25
+      // negation would double-negate; each table's tag proves its delete
+      // landed, so the replay skips it
+      val tag = s"rc.$cid.$i"
       t match {
         case NearDup(n, _) =>
           NearDupIndex.deleteFromNearDupIndex(store, n,
-            payload.select(idCol))
+            payload.select(idCol), tag)
         case Positional(n, _) =>
           Retrieval.deleteFromPositionalIndex(store, n,
-            payload.select(idCol))
+            payload.select(idCol), tag)
         case Ivf(n, _) =>
-          VectorIndex.deleteFromIvfIndex(store, n, payload.select(idCol))
+          VectorIndex.deleteFromIvfIndex(store, n, payload.select(idCol), tag)
         case Bm25(n, textCol, numBuckets) =>
-          // tagged: count negation is not idempotent, and the crash
-          // window between the delete completing and the __done__ marker
-          // landing would otherwise replay it — the tag on the (last)
-          // stats commit proves completion, so the replay skips
           Retrieval.deleteFromBm25IndexTagged(store, n,
             payload.select(col(idCol), col(textCol)), textCol, idCol,
-            numBuckets, tag = s"rc.$cid.$i")
+            numBuckets, tag)
         case View(n) =>
           // derived state follows the erasure: recompute the view from
           // the post-delete base (idempotent — safe to replay). A view

@@ -508,21 +508,11 @@ object Retrieval {
     store.overwrite(s"${name}_stats", stats)
   }
 
-  /** Compact a positional index: physically remove tombstoned docs'
-    * postings and clear the tombstone table — after this, a tombstoned id
-    * may be re-added. */
-  def compactPositionalIndex(
-      store: TableStore, name: String, numBuckets: Int
-  ): Unit = {
-    if (!store.exists(s"${name}_pos_tombstones")) return
-    // size-gated anti-join (TableStore.antiJoinKeys): bulk-erasure
-    // tombstone tables shuffle instead of forcing an executor-OOM build
-    val live = store.antiJoinKeys(store.scan(s"${name}_pos"),
-        s"${name}_pos_tombstones", "doc_id", "doc_id")
-      .select("term", "doc_id", "pos")
-    store.overwriteBucketed(s"${name}_pos", live, Seq("term"), numBuckets)
-    store.drop(s"${name}_pos_tombstones")
-  }
+  /** Compact a positional index: fold `_pos`' deletion vectors into its
+    * files ([[TableStore.compactDeletes]]; bucketing kept). A no-op
+    * without vectors. */
+  def compactPositionalIndex(store: TableStore, name: String): Unit =
+    store.compactDeletes(s"${name}_pos")
 
   /** BM25 top-k served from a [[buildBm25Index]] index — no corpus access.
     * The query vocabulary becomes an `IN` filter on the bucketed `term`
@@ -618,7 +608,9 @@ object Retrieval {
     * each subsequent term joins on (doc_id, pos = start + offset) — every
     * join is posting-list-sized, co-keyed on (doc_id, pos), and the corpus
     * is never touched. Repeated terms in the phrase are handled naturally
-    * (each offset constrains its own occurrence row). */
+    * (each offset constrains its own occurrence row). Docs deleted through
+    * [[deleteFromPositionalIndex]] drop in the scan's deletion-vector
+    * replay, which keeps the bucket pruning. */
   def phraseOccurrences(
       store: TableStore, name: String, phrase: String
   ): DataFrame = {
@@ -628,7 +620,7 @@ object Retrieval {
       .where(col("term").isin(terms.distinct: _*))
     val base = pos.where(col("term") === terms.head)
       .select(col("doc_id"), col("pos").as("start_pos"))
-    val matched = terms.zipWithIndex.tail.foldLeft(base) { case (acc, (t, i)) =>
+    terms.zipWithIndex.tail.foldLeft(base) { case (acc, (t, i)) =>
       acc.join(
         pos.where(col("term") === t)
           .select(col("doc_id").as(s"__d$i"), col("pos").as(s"__p$i")),
@@ -636,26 +628,20 @@ object Retrieval {
           col(s"__p$i") === col("start_pos") + i)
         .select(col("doc_id"), col("start_pos"))
     }
-    // tombstoned docs drop at query time (size-gated anti-join: a
-    // dimension-sized takedown list broadcasts, a bulk-erasure one
-    // shuffles); their postings stay until the next compaction rebuild
-    if (store.exists(s"${name}_pos_tombstones"))
-      store.antiJoinKeys(matched, s"${name}_pos_tombstones",
-        "doc_id", "doc_id")
-    else matched
   }
 
-  /** DELETE documents from a positional index: positions carry no counts
-    * to negate, so takedowns are a tombstone table the query path
-    * anti-joins (Delta/Iceberg deletion-vector role on plain parquet).
-    * Re-adding a tombstoned id requires a compaction rebuild first —
-    * tombstones win over postings unconditionally. */
+  /** DELETE documents from a positional index: one deletion vector on
+    * `_pos` ([[TableStore.deleteByKeysDVTagged]] under `tag`), keyed on
+    * `doc_id` = the first column of `docIds`, cast to bigint. Positions
+    * carry no counts to negate, so the phrase query's scan replays the
+    * vector instead (the store's Delta/Iceberg deletion-vector role); a
+    * doc re-added afterwards is served at once. */
   def deleteFromPositionalIndex(
-      store: TableStore, name: String, docIds: DataFrame
+      store: TableStore, name: String, docIds: DataFrame, tag: String
   ): Unit = {
     val rows = docIds.select(col(docIds.columns.head).cast("bigint")
       .as("doc_id"))
-    store.append(s"${name}_pos_tombstones", rows)
+    store.deleteByKeysDVTagged(s"${name}_pos", Seq("doc_id"), rows, tag)
   }
 
   /** Reciprocal-rank fusion of N ranked-retrieval arms (Cormack, Clarke &

@@ -97,40 +97,33 @@ object VectorIndex {
         numBuckets)
   }
 
-  /** DELETE vectors from the index: a tombstone table the query path
-    * anti-joins (vectors carry no counts to negate — the positional-index
-    * posture, not BM25's). Re-adding a tombstoned id requires a
-    * compaction rebuild first. */
+  /** DELETE vectors from the index: one deletion vector on `_vecs`
+    * ([[TableStore.deleteByKeysDVTagged]] under `tag`), keyed on `vec_id`
+    * = the first column of `vecIds`, cast to bigint. The query path's scan
+    * replays it (vectors carry no counts to negate — not BM25's posture);
+    * a vector re-added afterwards through [[appendIvfIndex]] is served at
+    * once. */
   def deleteFromIvfIndex(
-      store: TableStore, name: String, vecIds: DataFrame
+      store: TableStore, name: String, vecIds: DataFrame, tag: String
   ): Unit = {
     val rows = vecIds.select(col(vecIds.columns.head).cast("bigint")
       .as("vec_id"))
-    store.append(s"${name}_tombstones", rows)
+    store.deleteByKeysDVTagged(s"${name}_vecs", Seq("vec_id"), rows, tag)
   }
 
-  /** Compact the index: physically drop tombstoned vectors and clear the
-    * tombstone table (after which a tombstoned id may re-enter via
-    * [[appendIvfIndex]]). One bucketed rewrite of the live rows; the
-    * codebook is untouched. */
-  def compactIvfIndex(
-      store: TableStore, name: String, numBuckets: Int
-  ): Unit = {
-    if (!store.exists(s"${name}_tombstones")) return
-    // size-gated anti-join (TableStore.antiJoinKeys): bulk-erasure
-    // tombstone tables shuffle instead of forcing an executor-OOM build
-    val live = store.antiJoinKeys(store.scan(s"${name}_vecs"),
-        s"${name}_tombstones", "vec_id", "vec_id")
-      .select("cell_id", "vec_id", "vec")
-    store.overwriteBucketed(s"${name}_vecs", live, Seq("cell_id"), numBuckets)
-    store.drop(s"${name}_tombstones")
-  }
+  /** Compact the index: fold `_vecs`' deletion vectors into its files
+    * ([[TableStore.compactDeletes]]; bucketing kept, codebook untouched).
+    * A no-op without vectors. */
+  def compactIvfIndex(store: TableStore, name: String): Unit =
+    store.compactDeletes(s"${name}_vecs")
 
   /** IVF top-k served from the index — no corpus access: probe the stored
     * codebook for each query's `nProbe` nearest cells, bucket-prune the
     * vectors table to probed cells, rank within them. Output
     * (q_id, c_id, rank, cosine), identical to [[Similarity.ivfTopK]] with
-    * the same codebook. */
+    * the same codebook. Vectors deleted through [[deleteFromIvfIndex]] drop
+    * in the scan's deletion-vector replay, which keeps the bucket
+    * pruning. */
   def ivfTopKIndexed(
       store: TableStore, name: String,
       queries: DataFrame, vecCol: String, idCol: String,
@@ -154,15 +147,7 @@ object VectorIndex {
     // bucketed scan prunes on an IN filter, like the BM25 term filter
     val probed = qAssign.select("cell_id").distinct()
       .collect().map(_.getLong(0)).toIndexedSeq
-    val vecs = store.scan(s"${name}_vecs")
-    // tombstoned vectors drop at query time (size-gated anti-join: a
-    // dimension-sized takedown list broadcasts, a bulk-erasure one
-    // shuffles) — the deleteFromIvfIndex path
-    val live =
-      if (store.exists(s"${name}_tombstones"))
-        store.antiJoinKeys(vecs, s"${name}_tombstones", "vec_id", "vec_id")
-      else vecs
-    val cand = live.where(col("cell_id").isin(probed: _*))
+    val cand = store.scan(s"${name}_vecs").where(col("cell_id").isin(probed: _*))
     val scored = cand.join(broadcast(qAssign), Seq("cell_id"))
       .where(col("vec_id") =!= col("q_id"))
       .withColumn("cosine",

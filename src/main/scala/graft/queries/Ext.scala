@@ -2862,7 +2862,7 @@ object Ext {
 
   /** [[incNearDupOracleSql]] with the corpus (and optionally batch) side
     * swapped — the retention cascade gate replays the identical screen
-    * over the SURVIVING corpus (a tombstoned doc must behave exactly as
+    * over the SURVIVING corpus (a deleted doc must behave exactly as
     * if it was never indexed), probing a batch derived from its own
     * slimmer doc subset. */
   private[queries] def incNearDupOracleSqlOver(src: String,

@@ -614,10 +614,11 @@ object Lifecycle {
     // governance erasure end-to-end through the CRASH-DURABLE cascade:
     // partitioned corpus → near-dup LSH + BM25 indexes → expire lang
     // partitions below 'en' as ONE operation (O(metadata) table drop +
-    // journaled index deletes) → probe both indexes. Tombstones must hide
-    // every dropped doc and the BM25 count negation must cancel exactly,
-    // so both probes must equal the same retrieval computed over the
-    // surviving corpus alone — which is what the oracle replays.
+    // journaled index deletes) → probe both indexes. The near-dup tables'
+    // deletion vectors must hide every dropped doc and the BM25 count
+    // negation must cancel exactly, so both probes must equal the same
+    // retrieval computed over the surviving corpus alone — which is what
+    // the oracle replays.
     "w_retention_cascade" -> ((s, dir) => {
       val store = new TableStore(s,
         Files.createTempDirectory("graft_q_retcasc").toString)
@@ -693,7 +694,7 @@ object Lifecycle {
     // sweep is called with `indexes = Nil` — it must reach the
     // registered family through the registry alone (a caller that
     // forgets an index can no longer leave it serving erased docs).
-    // One tombstone family over a sixth of the corpus: the cheap sibling
+    // One deletion-vector family over a sixth of the corpus: the cheap sibling
     // of w_retention_cascade, which pins the journal + BM25 negation.
     "w_cascade_registry" -> ((s, dir) => {
       val store = new TableStore(s,

@@ -99,8 +99,8 @@ final class TableStore(spark: SparkSession, root: String,
   // operation. Key by (scheme, authority): per-store tables share one FS.
   private val fsCache =
     new java.util.concurrent.ConcurrentHashMap[String, FileSystem]()
-  // immutable-once-committed manifest-entry dir sizes (DV + tombstone
-  // broadcast gates): a snapshot/dv dir never changes after its commit,
+  // immutable-once-committed manifest-entry dir sizes (the DV broadcast
+  // gate): a snapshot/dv dir never changes after its commit,
   // so one getContentSummary per dir serves every later gate probe
   private val dirSizeCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
@@ -215,8 +215,10 @@ final class TableStore(spark: SparkSession, root: String,
     * out of everything that PRECEDES them, so a key re-appended after a
     * takedown is live again — exactly the state a rewrite at each step
     * would have produced, at O(batch)/O(deleted) commit cost. Data
-    * snapshots that all carry one bucket spec ([[overwriteBucketed]]) and
-    * no deletion vector read as ONE bucketed relation. */
+    * snapshots that all carry one bucket spec ([[overwriteBucketed]]) read
+    * bucketed, deletion vectors or not: a filter on the bucket keys still
+    * prunes buckets below the vectors' anti-join. This replay is the one
+    * delete mechanism of the store and of every index built on it. */
   def scan(name: String): DataFrame = {
     val entries = readManifest(name)
     if (entries.isEmpty)
@@ -259,8 +261,10 @@ final class TableStore(spark: SparkSession, root: String,
     * A historic type disagreement the fold cannot widen (pre-contract
     * data) reads one relation per ENTRY, each with its own footer schema,
     * and leaves the coercion to the union. Data snapshots that all carry
-    * one bucket spec, with no vector, file filter or `__file`, read as ONE
-    * bucketed relation.
+    * one bucket spec, with no file filter or `__file`, read as bucketed
+    * relations: ONE when no vector splits the run, and a vector's
+    * anti-join keeps the bucket pruning of a bucket-key filter pushed
+    * through it.
     *
     * @param keepFile when set, only the data files passing the predicate
     *   (footer min/max or Bloom file skipping) enter the relations; a run
@@ -278,14 +282,12 @@ final class TableStore(spark: SparkSession, root: String,
     val folded: Option[StructType] =
       try Some(dataEntries.map(entryFooterSchema(name, _)).reduce(mergeEvolved))
       catch { case _: TypeConflict => None }
-    // bucket i of every snapshot is one bucket of the scan
+    // bucket i of every snapshot is one bucket of the scan; a deletion
+    // vector anti-joins on top and leaves the bucketing (and the bucket
+    // pruning of a filter pushed through it) intact
     val bucketSpec =
-      if (keepFile.isDefined || withFile || folded.isEmpty ||
-          dataEntries.sizeIs < entries.size) None
-      else dataEntries.map(entryBucketing(name, _).map(_._1)).distinct match {
-        case Seq(spec) => spec
-        case _         => None
-      }
+      if (keepFile.isDefined || withFile || folded.isEmpty) None
+      else uniformBucketSpec(name, dataEntries)
     def union(a: DataFrame, b: DataFrame) =
       a.unionByName(b, allowMissingColumns = true)
     // segment the manifest: consecutive DATA entries as one run,
@@ -403,6 +405,16 @@ final class TableStore(spark: SparkSession, root: String,
         })
     }
 
+  /** The one bucket spec every data entry of `entries` carries; None when
+    * any of them is unbucketed or their specs differ. */
+  private def uniformBucketSpec(name: String,
+      entries: Seq[String]): Option[BucketSpec] =
+    entries.filterNot(isDvEntry).map(entryBucketing(name, _).map(_._1))
+      .distinct match {
+        case Seq(spec) => spec
+        case _         => None
+      }
+
   private val BucketingFile = "_bucketspec"
 
   private val bucketingCache = new java.util.concurrent.ConcurrentHashMap[
@@ -427,7 +439,7 @@ final class TableStore(spark: SparkSession, root: String,
       fs(p).makeQualified(p)
     }
     def valueOf(seg: String): String = {
-      val v = unescapePart(seg.dropWhile(_ != '=').drop(1))
+      val v = partValue(seg)
       if (v == org.apache.spark.sql.catalyst.catalog
             .ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
       else v
@@ -626,6 +638,9 @@ final class TableStore(spark: SparkSession, root: String,
     val metas = run.map { e =>
       (entryFooterSchema(name, e).fieldNames.sorted.toIndexedSeq, e) }
     val order = metas.map(_._1).distinct // deterministic: first appearance
+    // a USING join moves its key columns first; the replay keeps the
+    // table's own column order
+    val columns = df.columns.map(c => col("`" + c.replace("`", "``") + "`"))
     order.foldLeft(df) { (acc, cols) =>
       val group = metas.collect { case (c, e) if c == cols => e }
       val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
@@ -638,7 +653,7 @@ final class TableStore(spark: SparkSession, root: String,
           val keys = read.select(cols.map(col): _*)
           a.join(if (hint) broadcast(keys) else keys, cols, "left_anti")
         }
-    }
+    }.select(columns.toIndexedSeq: _*)
   }
 
   /** Cached on-disk bytes of one manifest entry's directory (snapshot,
@@ -675,27 +690,6 @@ final class TableStore(spark: SparkSession, root: String,
     * layout check). */
   def tableLayout(name: String): Seq[String] =
     inferredLayout(name, readManifest(name))
-
-  /** Left-anti-join `df` against the DISTINCT values of `keyCol` in table
-    * `name`, matching on `df`'s `dfCol` — the tombstone-exclusion shape
-    * every persistent index probe and compaction uses. The broadcast hint
-    * on the key side is SIZE-GATED exactly like [[applyDvRun]]'s
-    * deletion-vector gate: hinted only while the table's cached on-disk
-    * bytes clear the session's `autoBroadcastJoinThreshold`. A routine
-    * takedown list broadcasts (the probe side never shuffles); a
-    * bulk-erasure tombstone table past the threshold leaves the planner
-    * free to shuffle both sides instead of OOMing an executor — AQE may
-    * still pick broadcast at runtime if the built side proves small.
-    * Threshold <= 0 (broadcast disabled) never hints. */
-  def antiJoinKeys(df: DataFrame, name: String, keyCol: String,
-      dfCol: String): DataFrame = {
-    val keys = scan(name).select(col(keyCol).as("__graft_anti_key")).distinct()
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val side =
-      if (threshold > 0 && tableDataBytes(name) <= threshold) broadcast(keys)
-      else keys
-    df.join(side, col(dfCol) === col("__graft_anti_key"), "left_anti")
-  }
 
   /** Per-snapshot frames with the physical file path attached (replay
     * semantics identical to [[scan]], DVs applied). */
@@ -1186,7 +1180,6 @@ final class TableStore(spark: SparkSession, root: String,
       values: Seq[String], basis: Option[Seq[String]]): Int = {
     require(values.nonEmpty, "dropPartitions: at least one value")
     val doomed = values.toSet
-    val prefix = s"$partitionCol="
     var raced = false
     val committed = commitManifestCasOpt(name, cur => {
       if (cur.isEmpty) throw new IllegalArgumentException(s"Table not found: $name")
@@ -1195,7 +1188,7 @@ final class TableStore(spark: SparkSession, root: String,
       else {
         val derived = cur.flatMap { e =>
           if (isDvEntry(e)) Seq(e)
-          else deriveDropped(name, e, partitionCol, prefix, doomed)
+          else deriveDropped(name, e, partitionCol, doomed)
         }
         if (derived == cur) None
         else {
@@ -1212,72 +1205,57 @@ final class TableStore(spark: SparkSession, root: String,
   /** One entry's replacement under a drop of `doomed` values on
     * `partitionCol` — the [[dropPartitions]] per-entry step. */
   private def deriveDropped(name: String, e: String, partitionCol: String,
-      prefix: String, doomed: Set[String]): Seq[String] = {
-    val (phys, excl) = parseEntry(e)
-    if (excl.nonEmpty) {
-      // an INCLUDE segment pinning this column takes precedence — the
-      // entry already names its one value at that level (a prior descent),
-      // exclusion or not; without this check a lang-then-source drop
-      // chain would wrongly error on a later lang sweep
-      val ownSeg = phys.split('/').drop(1).find(_.startsWith(prefix))
-      ownSeg match {
-        case Some(seg) =>
-          if (doomed.contains(unescapePart(seg.stripPrefix(prefix)))) Nil
-          else Seq(e)
-        case None =>
-          // the exclusion entry's open level IS its exclusion column:
-          // several of its partitions are live, so any OTHER column is
-          // not leading
-          val exclCol = excl.head.takeWhile(_ != '=')
-          if (exclCol != partitionCol)
-            throw new IllegalArgumentException(
-              s"dropPartitions($partitionCol) on $name: entry $e is partition-" +
-                s"filtered on $exclCol (its leading open column) — " +
-                "overwritePartitioned/compact to re-layout first")
-          val p = new Path(tableDir(name), phys)
-          val exclSet = excl.toSet
-          val live = fs(p).listStatus(p).filter(_.isDirectory)
-            .map(_.getPath.getName)
-            .filter(d => d.startsWith(prefix) && !exclSet.contains(d)).toSeq
-          val (dead, kept) = live.partition(d =>
-            doomed.contains(unescapePart(d.stripPrefix(prefix))))
-          if (dead.isEmpty) Seq(e)
-          else representSubset(phys, kept, (exclSet ++ dead).toSeq)
-      }
-    } else {
-      val p = new Path(tableDir(name), e)
-      val st = fs(p).listStatus(p)
-      val childDirs = st.filter(_.isDirectory).map(_.getPath.getName)
-      val partDirs = childDirs.filter(_.startsWith(prefix))
-      // a prior drop on the SAME column left this entry carrying its
-      // value in its own path — match it directly
-      val ownSeg = e.split('/').drop(1).find(_.startsWith(prefix))
-      if (partDirs.nonEmpty) {
-        val (dead, kept) = partDirs.partition(d =>
-          doomed.contains(unescapePart(d.stripPrefix(prefix))))
+      doomed: Set[String]): Seq[String] =
+    entryPartitions(name, e, partitionCol, "dropPartitions") match {
+      case Left(v) => if (doomed.contains(v)) Nil else Seq(e)
+      case Right((phys, excl, live)) =>
+        val (dead, kept) = live.partition(d => doomed.contains(partValue(d)))
         // a snapshot holding NONE of the doomed values keeps its one
         // entry — expanding it into per-partition references would
         // balloon the manifest (snapshots × partitions entries) and
         // fragment the scan's union for zero benefit
-        if (dead.isEmpty) Seq(e)
-        else representSubset(e, kept.toSeq, dead.toSeq)
-      }
-      else ownSeg match {
-        case Some(seg) =>
-          if (doomed.contains(unescapePart(seg.stripPrefix(prefix)))) Nil
-          else Seq(e)
-        case None =>
-          val hasData = st.exists(s =>
-            !s.isDirectory && s.getPath.getName.startsWith("part-"))
-          if (childDirs.nonEmpty || (hasData && !isZeroRowDir(p)))
-            throw new IllegalArgumentException(
-              s"dropPartitions($partitionCol) on $name: snapshot $e is " +
-                s"not hive-partitioned on $partitionCol (leading " +
-                "column) — overwritePartitioned/compact to re-layout first")
-          else Seq(e) // zero-row snapshot: nothing to drop
-      }
+        if (dead.isEmpty) Seq(e) else representSubset(phys, kept, excl ++ dead)
+    }
+
+  /** How data entry `e` holds `partitionCol`, from the cached listing
+    * ([[listDirCached]]) — the per-entry reader of [[dropPartitions]] and
+    * [[partitionValues]]. `Left(value)` when an include segment pins the
+    * column (a prior descent; it takes precedence over any exclusion, so
+    * a lang-then-source drop chain never errors on a later lang sweep);
+    * else `Right((phys, excluded, live))` — the entry's physical prefix,
+    * its exclusion segments and the `col=value` directories still live
+    * under it — when the column is the entry's leading open level, with
+    * no live directory for a zero-row snapshot. Any other layout is the
+    * strict layout contract's hard error, worded with `verb`. */
+  private def entryPartitions(name: String, e: String, partitionCol: String,
+      verb: String): Either[String, (String, Seq[String], Seq[String])] = {
+    val prefix = s"$partitionCol="
+    val (phys, excl) = parseEntry(e)
+    def refuse(why: String) = throw new IllegalArgumentException(
+      s"$verb($partitionCol) on $name: $why — overwritePartitioned/compact " +
+        "to re-layout first")
+    phys.split('/').drop(1).find(_.startsWith(prefix)) match {
+      case Some(seg) => Left(partValue(seg))
+      case None =>
+        // an exclusion entry's open level IS its exclusion column: several
+        // of its partitions are live, so any OTHER column is not leading
+        excl.headOption.map(_.takeWhile(_ != '=')).filter(_ != partitionCol)
+          .foreach(c => refuse(s"entry $e is partition-filtered on $c " +
+            "(its leading open column)"))
+        val p = new Path(tableDir(name), phys)
+        val (dirs, files) = listDirCached(p)
+        val live = dirs.filter(d => d.startsWith(prefix) && !excl.contains(d))
+        if (live.isEmpty && excl.isEmpty &&
+            (dirs.nonEmpty || (files.nonEmpty && !isZeroRowDir(p))))
+          refuse(s"snapshot $e is not hive-partitioned on $partitionCol " +
+            "(leading column)")
+        Right((phys, excl, live))
     }
   }
+
+  /** The unescaped value of a hive `col=value` path segment. */
+  private def partValue(seg: String): String =
+    unescapePart(seg.dropWhile(_ != '=').drop(1))
 
   /** Above this many include entries a split snapshot folds to the
     * one-entry exclusion form regardless of which side is smaller — the
@@ -1304,49 +1282,13 @@ final class TableStore(spark: SparkSession, root: String,
     * error, not an under-report: a retention sweep computed from a
     * partial listing would silently keep expired data). */
   def partitionValues(name: String, partitionCol: String): Seq[String] = {
-    val prefix = s"$partitionCol="
     val entries = readManifest(name)
     if (entries.isEmpty)
       throw new IllegalArgumentException(s"Table not found: $name")
     entries.filterNot(isDvEntry).flatMap { e =>
-      val (phys, excl) = parseEntry(e)
-      if (excl.nonEmpty) {
-        // an include segment pinning this column answers directly (same
-        // precedence as in [[deriveDropped]])
-        val ownSeg = phys.split('/').drop(1).find(_.startsWith(prefix))
-        ownSeg match {
-          case Some(seg) => Seq(unescapePart(seg.stripPrefix(prefix)))
-          case None =>
-            val exclCol = excl.head.takeWhile(_ != '=')
-            if (exclCol != partitionCol)
-              throw new IllegalArgumentException(
-                s"partitionValues($partitionCol) on $name: entry $e is " +
-                  s"partition-filtered on $exclCol (its leading open column)")
-            val p = new Path(tableDir(name), phys)
-            val exclSet = excl.toSet
-            fs(p).listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
-              .filter(d => d.startsWith(prefix) && !exclSet.contains(d))
-              .map(d => unescapePart(d.stripPrefix(prefix))).toSeq
-        }
-      } else {
-        val p = new Path(tableDir(name), e)
-        val st = fs(p).listStatus(p)
-        val childDirs = st.filter(_.isDirectory).map(_.getPath.getName)
-        val partDirs = childDirs.filter(_.startsWith(prefix))
-        val ownSeg = e.split('/').drop(1).find(_.startsWith(prefix))
-        if (partDirs.nonEmpty)
-          partDirs.map(d => unescapePart(d.stripPrefix(prefix))).toSeq
-        else ownSeg match {
-          case Some(seg) => Seq(unescapePart(seg.stripPrefix(prefix)))
-          case None =>
-            val hasData = st.exists(s =>
-              !s.isDirectory && s.getPath.getName.startsWith("part-"))
-            if (childDirs.nonEmpty || (hasData && !isZeroRowDir(p)))
-              throw new IllegalArgumentException(
-                s"partitionValues($partitionCol) on $name: snapshot $e is " +
-                  s"not hive-partitioned on $partitionCol (leading column)")
-            else Nil // zero-row snapshot
-        }
+      entryPartitions(name, e, partitionCol, "partitionValues") match {
+        case Left(v)             => Seq(v)
+        case Right((_, _, live)) => live.map(partValue)
       }
     }.distinct.sorted
   }
@@ -1601,7 +1543,12 @@ final class TableStore(spark: SparkSession, root: String,
     * (its contract ignores prior state); everything that REWRITES the
     * current state (compact, predicate/key deletes, branch merges) must
     * come through here or a racing takedown could be silently
-    * resurrected by the rewrite's stale snapshot. */
+    * resurrected by the rewrite's stale snapshot.
+    *
+    * The rewrite keeps the basis' physical layout: its uniform hive
+    * layout, else its uniform bucket spec ([[overwriteBucketed]]), so a
+    * compacted or filtered bucketed table still reads bucketed. The spec
+    * comes from the per-entry cache `derive`'s read of the basis filled. */
   private[table] def rewriteConditional(name: String, what: String,
       partitionBy: Seq[String] = Nil)(
       derive: Seq[String] => Option[DataFrame]): Unit = {
@@ -1627,7 +1574,12 @@ final class TableStore(spark: SparkSession, root: String,
           // failing the write
           val layout = if (layout0.forall(df0.columns.contains)) layout0 else Nil
           val df = if (layout.isEmpty) df0 else stringifyParts(df0, layout)
-          val snap = writeSnapshot(name, df, partitionBy = layout)
+          val bucketBy =
+            if (layout.nonEmpty) None
+            else uniformBucketSpec(name, basis)
+              .filter(_.bucketColumnNames.forall(df0.columns.contains))
+          val snap = writeSnapshot(name, df, partitionBy = layout,
+            bucketBy = bucketBy)
           val committed = commitOwning(name, snap)(
             cur => if (cur == basis) Some(Seq(snap)) else None)
           if (committed) return
@@ -1644,12 +1596,11 @@ final class TableStore(spark: SparkSession, root: String,
     * KEEP the row), atomic at the same commit point as any write, and
     * CONDITIONAL on the state it filtered: a concurrent append or DV
     * takedown makes the rewrite re-derive instead of silently dropping
-    * it. The takedown/right-to-erasure primitive for corpus TABLES,
-    * completing the delete lifecycle the persistent indexes already have
-    * (BM25 tombstones, near-dup/vector index deletes): a crash mid-way
+    * it. A predicate takedown for corpus TABLES: a crash mid-way
     * leaves the pre-delete state live, retained versions still time-
     * travel to it ([[scanAsOf]]), and the change feed shows the deletes
-    * ([[diffVersions]] `op = 'delete'`).
+    * ([[diffVersions]] `op = 'delete'`). The rewrite keeps the table's
+    * uniform hive layout or bucket spec ([[rewriteConditional]]).
     *
     * Cost is one filtered table rewrite — O(table), like BigQuery DELETE
     * or a Delta non-partition delete. At 100 TB use [[deleteByKeysDV]]
@@ -1689,18 +1640,8 @@ final class TableStore(spark: SparkSession, root: String,
     * snapshots again. Rows with a null key component never match (SQL
     * equality), like [[deleteByKeys]]. */
   def deleteByKeysDV(name: String, keys: Seq[String], toDelete: DataFrame): Unit = {
-    require(keys.nonEmpty, "deleteByKeysDV: at least one key column")
-    val current = scan(name) // also: table-exists check
-    keys.foreach(k => require(current.columns.contains(k),
-      s"deleteByKeysDV: no such column $k in $name"))
-    val keyList = toDelete.select(keys.map(col): _*).distinct()
-    // empty takedown batch: a zero-row vector is a semantic no-op that
-    // would still cost a manifest entry and an anti-join on EVERY future
-    // scan until compact — routine for streaming takedown cadences
-    if (keyList.limit(1).count() == 0L) return
-    val dv = writeDeletionVector(name, keyList)
-    val done = commitOwning(name, dv)(cur => Some(cur :+ dv))
-    assert(done, s"deleteByKeysDV on $name cannot abort")
+    val r = commitDeletionVector("deleteByKeysDV", name, keys, toDelete)
+    assert(r >= 0, s"deleteByKeysDV on $name cannot abort")
   }
 
   /** EXACTLY-ONCE [[deleteByKeysDV]]: commit the vector with an
@@ -1713,26 +1654,9 @@ final class TableStore(spark: SparkSession, root: String,
     * covers streaming replays of the immediately preceding batch, not
     * arbitrarily delayed re-submission. Returns true iff committed. */
   def deleteByKeysDVTagged(name: String, keys: Seq[String],
-      toDelete: DataFrame, tag: String): Boolean = {
-    require(tag.nonEmpty &&
-        tag.forall(c => c.isLetterOrDigit || c == '.' || c == '_'),
-      s"tag must be [A-Za-z0-9._]+ (dashes delimit it in the name): '$tag'")
-    require(keys.nonEmpty, "deleteByKeysDVTagged: at least one key column")
-    val marker = s"-tag-$tag-"
-    def tagged(cur: Seq[String]) =
-      cur.exists(e => isDvEntry(e) && e.contains(marker))
-    if (exists(name) && tagged(readManifest(name))) return false
-    val current = scan(name)
-    keys.foreach(k => require(current.columns.contains(k),
-      s"deleteByKeysDVTagged: no such column $k in $name"))
-    val keyList = toDelete.select(keys.map(col): _*).distinct()
-    // empty batch: nothing to erase, nothing committed (a replayed empty
-    // batch no-ops identically, so skipping the tag costs nothing)
-    if (keyList.limit(1).count() == 0L) return false
-    val dv = writeDeletionVector(name, keyList, s"tag-$tag-")
-    commitOwning(name, dv)(cur =>
-      if (tagged(cur)) None else Some(cur :+ dv))
-  }
+      toDelete: DataFrame, tag: String): Boolean =
+    commitDeletionVector("deleteByKeysDVTagged", name, keys, toDelete,
+      Some(tag)) == 1
 
   /** [[deleteByKeysDVTagged]] whose commit is additionally CONDITIONAL
     * on the manifest still being `basis` — the capture-and-erase binding
@@ -1744,26 +1668,51 @@ final class TableStore(spark: SparkSession, root: String,
     * (nothing to erase, nothing committed), -1 = the manifest moved off
     * `basis` (re-capture and retry). */
   private[graft] def deleteByKeysDVFromBasis(name: String, keys: Seq[String],
-      toDelete: DataFrame, basis: Seq[String], tag: String): Int = {
+      toDelete: DataFrame, basis: Seq[String], tag: String): Int =
+    math.min(commitDeletionVector("deleteByKeysDVFromBasis", name, keys,
+      toDelete, Some(tag), Some(basis)), 1)
+
+  /** The one deletion-vector commit behind the three `deleteByKeysDV*`
+    * verbs: skip when a live vector already carries `tag`, check the key
+    * columns against the table, dedupe the key list, skip an empty one
+    * (a zero-row vector would still cost a manifest entry and an
+    * anti-join on EVERY future scan until compact — routine for streaming
+    * takedown cadences), then write the vector and commit it unless the
+    * tag landed meanwhile or the manifest moved off `basis`. Returns
+    * 1 = committed, 2 = a live vector already carries `tag`, 0 = empty
+    * key list, -1 = the manifest moved off `basis`. */
+  private def commitDeletionVector(verb: String, name: String,
+      keys: Seq[String], toDelete: DataFrame, tag: Option[String] = None,
+      basis: Option[Seq[String]] = None): Int = {
+    tag.foreach(requireTag)
+    require(keys.nonEmpty, s"$verb: at least one key column")
+    def tagged(cur: Seq[String]) =
+      tag.exists(t => cur.exists(e => isDvEntry(e) && carriesTag(e, t)))
+    if (tagged(readManifest(name))) return 2
+    val current = scan(name) // also: table-exists check
+    keys.foreach(k => require(current.columns.contains(k),
+      s"$verb: no such column $k in $name"))
+    val keyList = toDelete.select(keys.map(col): _*).distinct()
+    if (keyList.limit(1).count() == 0L) return 0
+    var outcome = 1
+    val dv = writeDeletionVector(name, keyList, tag.fold("")(t => s"tag-$t-"))
+    commitOwning(name, dv) { cur =>
+      if (tagged(cur)) { outcome = 2; None } // a replay's commit landed
+      else if (basis.exists(_ != cur)) { outcome = -1; None }
+      else Some(cur :+ dv)
+    }
+    outcome
+  }
+
+  /** Idempotency tags ride a manifest entry's directory name, where
+    * dashes delimit them. */
+  private def requireTag(tag: String): Unit =
     require(tag.nonEmpty &&
         tag.forall(c => c.isLetterOrDigit || c == '.' || c == '_'),
       s"tag must be [A-Za-z0-9._]+ (dashes delimit it in the name): '$tag'")
-    require(keys.nonEmpty, "deleteByKeysDVFromBasis: at least one key column")
-    val marker = s"-tag-$tag-"
-    def tagged(cur: Seq[String]) =
-      cur.exists(e => isDvEntry(e) && e.contains(marker))
-    if (tagged(readManifest(name))) return 1
-    val keyList = toDelete.select(keys.map(col): _*).distinct()
-    if (keyList.limit(1).count() == 0L) return 0
-    var raced = false
-    val dv = writeDeletionVector(name, keyList, s"tag-$tag-")
-    val done = commitOwning(name, dv)(cur => {
-      if (tagged(cur)) None // a replay's commit already landed
-      else if (cur != basis) { raced = true; None }
-      else Some(cur :+ dv)
-    })
-    if (done) 1 else if (raced) -1 else 1
-  }
+
+  private def carriesTag(entry: String, tag: String): Boolean =
+    entry.contains(s"-tag-$tag-")
 
   /** True iff a live DELETION-VECTOR entry of `name` carries `tag` —
     * the ID-level cascade's drop-committed probe (the partition form
@@ -1775,7 +1724,7 @@ final class TableStore(spark: SparkSession, root: String,
     * drains BEFORE it compacts, preserving the probe). */
   def hasDeleteTag(name: String, tag: String): Boolean =
     exists(name) && readManifest(name).exists(e =>
-      isDvEntry(e) && e.contains(s"-tag-$tag-"))
+      isDvEntry(e) && carriesTag(e, tag))
 
   /** Rewrite the manifest's chain into a single snapshot when it grows
     * past `maxSnapshots` entries (appends accumulate read-time union
@@ -1784,11 +1733,22 @@ final class TableStore(spark: SparkSession, root: String,
     * vector into the rewrite — the O(table) cost deferred from each
     * O(deleted) takedown, paid once). Atomic like any commit; no-op
     * below the threshold. Like every conditional rewrite, a UNIFORM
-    * hive layout is preserved (mixed or flat folds flat); see
-    * [[compactPartitioned]] to assert a specific layout. */
+    * hive layout or bucket spec is preserved (mixed or flat folds flat);
+    * see [[compactPartitioned]] to assert a specific layout. */
   def compact(name: String, maxSnapshots: Int = 16): Unit =
     rewriteConditional(name, "compact")(basis =>
       if (basis.size > maxSnapshots) Some(readState(name, basis)) else None)
+
+  /** Fold the table's deletion vectors into one rewrite — [[compact]]
+    * keyed on "the manifest holds a vector" instead of on its length,
+    * decided against the same basis the fold reads and commits on. A
+    * no-op on a table without vectors. The persistent index families
+    * compact their tables through this: the deleted rows leave the
+    * files, the layout and bucket spec stay, and a row appended or
+    * deleted during the fold makes it re-derive. */
+  def compactDeletes(name: String): Unit =
+    rewriteConditional(name, "compactDeletes")(basis =>
+      if (basis.exists(isDvEntry)) Some(readState(name, basis)) else None)
 
   /** [[compact]] for hive-partitioned tables: fold a long manifest into
     * ONE partitioned snapshot, preserving the directory layout that
@@ -2100,6 +2060,12 @@ final class TableStore(spark: SparkSession, root: String,
     fs(p).makeQualified(p).toUri.getPath
   }
 
+  /** True iff a live snapshot of `name` carries [[appendTagged]]'s `tag`
+    * — the replay-detection probe (the tag window is the live manifest,
+    * exactly appendTagged's own skip check). */
+  def hasAppendTag(name: String, tag: String): Boolean =
+    exists(name) && readManifest(name).exists(carriesTag(_, tag))
+
   /** EXACTLY-ONCE append: commit `df` as a new snapshot carrying an
     * idempotency tag, or skip if a live snapshot already carries `tag`.
     * Returns true iff this call committed.
@@ -2117,18 +2083,9 @@ final class TableStore(spark: SparkSession, root: String,
     * drops the tagged snapshot from CURRENT, the tag is forgotten — the
     * contract covers streaming replays (which re-run the immediately
     * preceding uncommitted batch), not arbitrarily delayed re-submission. */
-  /** True iff a live snapshot of `name` carries [[appendTagged]]'s `tag`
-    * — the replay-detection probe (the tag window is the live manifest,
-    * exactly appendTagged's own skip check). */
-  def hasAppendTag(name: String, tag: String): Boolean =
-    exists(name) && readManifest(name).exists(_.contains(s"-tag-$tag-"))
-
   def appendTagged(name: String, df: DataFrame, tag: String): Boolean = {
-    require(tag.nonEmpty &&
-        tag.forall(c => c.isLetterOrDigit || c == '.' || c == '_'),
-      s"tag must be [A-Za-z0-9._]+ (dashes delimit it in the name): '$tag'")
-    val marker = s"-tag-$tag-"
-    if (exists(name) && readManifest(name).exists(_.contains(marker))) false
+    requireTag(tag)
+    if (hasAppendTag(name, tag)) false
     else {
       if (exists(name)) checkNoTypeChanges(name, tableSchema(name), df)
       val snap = writeSnapshot(name, df, s"tag-$tag-")
@@ -2136,7 +2093,7 @@ final class TableStore(spark: SparkSession, root: String,
       // commit time, so two replays racing each other collapse to one
       // committed snapshot — the loser aborts and its orphan dir GCs
       commitOwning(name, snap)(cur =>
-        if (cur.exists(_.contains(marker))) None else Some(cur :+ snap))
+        if (cur.exists(carriesTag(_, tag))) None else Some(cur :+ snap))
     }
   }
 

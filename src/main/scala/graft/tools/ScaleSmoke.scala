@@ -1917,8 +1917,8 @@ object ScaleSmoke {
     // 40e. RETENTION CASCADE at 2M docs: a governance erasure must reach
     // the persistent indexes at O(dropped) cost — capture the doomed ids
     // via a partition-pruned scan, O(metadata) table drop, then
-    // takedown-sized index deletes (near-dup tombstones; BM25 count
-    // negation) — never an index rebuild. Identity check: an exact copy
+    // takedown-sized index deletes (deletion vectors on the near-dup
+    // tables; BM25 count negation) — never an index rebuild. Identity check: an exact copy
     // of a dropped doc must be unfindable through the swept index while
     // a surviving doc still matches. The wall-clock assertion pins
     // cascade < build (the rebuild it replaces).

@@ -11,6 +11,10 @@ import org.apache.spark.sql.functions._
   * same probe against a FRESH index built on the surviving corpus. */
 class DvCascadeSpec extends SparkSpec {
 
+  /** True iff none of `tables`' manifests holds a deletion vector. */
+  private def noDv(s: graft.table.TableStore, tables: String*): Boolean =
+    tables.forall(t => !s.manifestEntries(t).exists(_.startsWith("dv-")))
+
   private def tmpStore() = new graft.table.TableStore(spark,
     java.nio.file.Files.createTempDirectory("graft_dvcasc").toString)
 
@@ -69,12 +73,15 @@ class DvCascadeSpec extends SparkSpec {
       Seq("§") ++ rows(ivf)
   }
 
+  /** `ndReadded`: ids re-added to the near-dup index only, after the
+    * cascade erased them. */
   private def freshFingerprint(swept: graft.table.TableStore,
-      full: DataFrame): Seq[String] = {
+      full: DataFrame, ndReadded: Seq[Long] = Nil): Seq[String] = {
     val sv = survivors(full)
     val fresh = tmpStore()
-    NearDupIndex.buildNearDupIndex(fresh, "nd", sv, "text", "doc_id",
-      numBuckets = 2)
+    NearDupIndex.buildNearDupIndex(fresh, "nd",
+      sv.unionByName(full.where(col("doc_id").isin(ndReadded: _*))),
+      "text", "doc_id", numBuckets = 2)
     Retrieval.buildBm25Index(fresh, "bm", sv, "text", "doc_id",
       numBuckets = 2)
     Retrieval.buildPositionalIndex(fresh, "pos", sv, "text", "doc_id",
@@ -109,10 +116,13 @@ class DvCascadeSpec extends SparkSpec {
   /** Crash-window scenario: die at `label`, optionally mutate the store
     * `between` the crash and the recovery, then recover through a NEW
     * store by re-running the cascade (drains first, then finds nothing
-    * live) and assert all four families equal a fresh rebuild. */
+    * live) and assert all four families equal a fresh rebuild — whose
+    * near-dup index also covers `ndReadded`, the ids `between` re-added
+    * to it. */
   private def crashRecoverScenario(label: String,
       retrievalSeam: Boolean = false,
-      between: graft.table.TableStore => Unit = _ => ()): Unit = {
+      between: graft.table.TableStore => Unit = _ => (),
+      ndReadded: Seq[Long] = Nil): Unit = {
     val arm: (String => Unit) => Unit =
       if (retrievalSeam) f => Retrieval.failpoint = f
       else f => Retention.failpoint = f
@@ -136,8 +146,17 @@ class DvCascadeSpec extends SparkSpec {
     // recovery: re-run (drains first; capture then finds nothing live)
     assert(!Retention.deleteByKeysCascade(s1, "docs", "doc_id",
       doomedIds(full), allTargets))
-    assert(probeAll(s1, full) == freshFingerprint(s1, full),
+    assert(probeAll(s1, full) == freshFingerprint(s1, full, ndReadded),
       s"crash at $label: drained indexes must equal a fresh rebuild")
+    if (ndReadded.nonEmpty) {
+      val served = NearDupIndex.nearDupAgainstIndex(s1, "nd",
+        full.where(col("doc_id").isin(ndReadded: _*))
+          .select((col("doc_id") + 1000L).as("doc_id"), col("text")),
+        "text", "doc_id", threshold = 0.5)
+        .select("corpus_id").collect().map(_.getLong(0)).toSet
+      assert(ndReadded.toSet.subsetOf(served),
+        s"crash at $label: the re-added ids must stay served: $served")
+    }
     assert(!s1.exists(Retention.journalStateName("docs")) ||
       s1.scan(Retention.journalStateName("docs")).isEmpty)
   }
@@ -157,6 +176,18 @@ class DvCascadeSpec extends SparkSpec {
     // back to probing the journaled ids (all dead → the delete happened)
     crashRecoverScenario("dropped",
       between = s => s.compact("docs", maxSnapshots = 0))
+  }
+
+  test("a doc re-added to an index between a crashed delete and the drain stays served") {
+    // the near-dup target's vectors landed but its done marker did not,
+    // and doc 10 is re-indexed before the drain: the replay finds the
+    // cascade's tag on both near-dup tables and commits nothing. An
+    // untagged replay would land a vector AFTER the re-add and erase it
+    crashRecoverScenario("target-pre-mark-0",
+      between = s => NearDupIndex.appendNearDupIndex(s, "nd",
+        corpus().where(col("doc_id") === 10L), "text", "doc_id",
+        numBuckets = 2),
+      ndReadded = Seq(10L))
   }
 
   test("crash mid-targets: only the missing deletes replay") {
@@ -186,7 +217,7 @@ class DvCascadeSpec extends SparkSpec {
     // aborted: journal cleared, no index touched — the docs are live
     assert(!s1.exists(Retention.journalStateName("docs")) ||
       s1.scan(Retention.journalStateName("docs")).isEmpty)
-    assert(!s1.exists("nd_tombstones"))
+    assert(noDv(s1, "nd_bands", "nd_docs", "pos_pos", "ivf_vecs"))
     assert(probeAll(s1, full) == {
       // rebuild over the FULL corpus but with the swept store's codebook
       val f2 = tmpStore()

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** `Maintenance.maintain` is the one scheduled call: post-maintain, every
   * observable result is identical while the physical state is folded —
-  * manifest down to one snapshot, Bloom sidecar refreshed, index tombstones
-  * materialized and cleared, pending cascade journals drained. */
+  * manifest down to one snapshot, Bloom sidecar refreshed, the index
+  * tables' deletion vectors folded, pending cascade journals drained. */
 class MaintenanceSpec extends SparkSpec {
 
   private def corpus(): DataFrame = {
@@ -21,6 +21,10 @@ class MaintenanceSpec extends SparkSpec {
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toString).sorted
+
+  /** True iff none of `tables`' manifests holds a deletion vector. */
+  private def noDv(s: graft.table.TableStore, tables: String*): Boolean =
+    tables.forall(t => !s.manifestEntries(t).exists(_.startsWith("dv-")))
 
   test("maintain folds manifest, sidecars, and index tombstones; results unchanged") {
     val dir = java.nio.file.Files.createTempDirectory("graft_maint").toString
@@ -40,7 +44,7 @@ class MaintenanceSpec extends SparkSpec {
     NearDupIndex.buildNearDupIndex(store, "nd", docs, "text", "doc_id",
       numBuckets = 2)
     NearDupIndex.deleteFromNearDupIndex(store, "nd",
-      docs.where(col("doc_id") < 30).select("doc_id"))
+      docs.where(col("doc_id") < 30).select("doc_id"), tag = "t1")
     val batch = docs.where(col("doc_id").isin(35L, 65L))
       .select((col("doc_id") + 1000L).as("doc_id"),
         concat(col("text"), lit(" edited")).as("text"))
@@ -59,8 +63,8 @@ class MaintenanceSpec extends SparkSpec {
       store.manifestEntries("docs").mkString(","))
     assert(store.tableLayout("docs") == Seq("date"),
       "the fold must preserve the hive layout")
-    assert(!store.exists("nd_tombstones"),
-      "index compaction must clear the tombstones")
+    assert(noDv(store, "nd_bands", "nd_docs"),
+      "index compaction must fold the deletion vectors")
     // …results identical
     assert(rows(store.scan("docs")) == beforeScan)
     assert(rows(probe()) == beforeProbe)
@@ -109,10 +113,10 @@ class MaintenanceSpec extends SparkSpec {
     NearDupIndex.buildNearDupIndex(store, "nd", docs, "text", "doc_id",
       numBuckets = 2)
     NearDupIndex.deleteFromNearDupIndex(store, "nd",
-      docs.where(col("doc_id") < 30).select("doc_id"))
+      docs.where(col("doc_id") < 30).select("doc_id"), tag = "t1")
     Retention.registerIndex(store, "docs", Retention.NearDup("nd", 2))
     Maintenance.maintain(store, "docs", maxSnapshots = 0)
-    assert(!store.exists("nd_tombstones"),
+    assert(noDv(store, "nd_bands", "nd_docs"),
       "the registered family must be physically compacted without the " +
         "caller re-listing it")
     assert(store.scan("nd_docs").agg(min(col("doc_id"))).head.getLong(0)
@@ -160,7 +164,7 @@ class MaintenanceSpec extends SparkSpec {
     // removed the dropped docs' band rows in the same pass
     assert(!s1.exists(Retention.journalStateName("docs")) ||
       s1.scan(Retention.journalStateName("docs")).isEmpty)
-    assert(!s1.exists("nd_tombstones"))
+    assert(noDv(s1, "nd_bands", "nd_docs"))
     assert(s1.scan("nd_docs").agg(min(col("doc_id"))).head.getLong(0) >= 30L,
       "dropped docs' rows must be physically gone from the index")
   }

@@ -137,7 +137,7 @@ class MatViewCascadeSpec extends SparkSpec {
       indexes = Nil))
     val survivors = full.where(col("doc_id") % 5 =!= 0)
     assert(viewRows(store) == expected(survivors))
-    // the index tombstones hide the erased docs: a probe with an erased
+    // the index deletion vectors hide the erased docs: a probe with an erased
     // doc's text must only match survivors
     val fresh = new TableStore(spark, tmp("graft_mvcf"))
     NearDupIndex.buildNearDupIndex(fresh, "nd", survivors, "text",

@@ -87,7 +87,8 @@ class NearDupIndexSpec extends SparkSpec {
     val before = rows(NearDupIndex.nearDupAgainstIndex(store, "nd", b,
       "text", "doc_id", threshold = 0.5))
     assert(before.exists(_._2 == 0L))
-    NearDupIndex.deleteFromNearDupIndex(store, "nd", Seq(0L, 10L).toDF("doc_id"))
+    NearDupIndex.deleteFromNearDupIndex(store, "nd", Seq(0L, 10L).toDF("doc_id"),
+      tag = "t1")
     val after = rows(NearDupIndex.nearDupAgainstIndex(store, "nd", b,
       "text", "doc_id", threshold = 0.5))
     assert(after == before.filterNot(p => p._2 == 0L || p._2 == 10L),
@@ -101,15 +102,37 @@ class NearDupIndexSpec extends SparkSpec {
     val store = tmpStore()
     NearDupIndex.buildNearDupIndex(store, "nd", c, "text", "doc_id",
       numBuckets = 4)
-    NearDupIndex.deleteFromNearDupIndex(store, "nd", Seq(0L).toDF("doc_id"))
+    NearDupIndex.deleteFromNearDupIndex(store, "nd", Seq(0L).toDF("doc_id"),
+      tag = "t1")
     val before = rows(NearDupIndex.nearDupAgainstIndex(store, "nd", b,
       "text", "doc_id", threshold = 0.5))
-    NearDupIndex.compactNearDupIndex(store, "nd", numBuckets = 4)
-    assert(!store.exists("nd_tombstones"))
+    NearDupIndex.compactNearDupIndex(store, "nd")
+    assert(Seq("nd_bands", "nd_docs").forall(t =>
+      !store.manifestEntries(t).exists(_.startsWith("dv-"))),
+      "compaction must fold the deletion vectors into the files")
     assert(store.scan("nd_bands").where(col("doc_id") === 0L).count() == 0)
     assert(store.scan("nd_docs").where(col("doc_id") === 0L).count() == 0)
     assert(rows(NearDupIndex.nearDupAgainstIndex(store, "nd", b,
       "text", "doc_id", threshold = 0.5)) == before)
+  }
+
+  test("a doc re-added after its delete is served at once") {
+    import spark.implicits._
+    val c = corpus(80)
+    val b = batchOf(c)
+    val store = tmpStore()
+    NearDupIndex.buildNearDupIndex(store, "nd", c, "text", "doc_id",
+      numBuckets = 4)
+    def probe() = rows(NearDupIndex.nearDupAgainstIndex(store, "nd", b,
+      "text", "doc_id", threshold = 0.5))
+    val full = probe()
+    assert(full.exists(_._2 == 10L))
+    NearDupIndex.deleteFromNearDupIndex(store, "nd", Seq(10L).toDF("doc_id"),
+      tag = "t1")
+    assert(!probe().exists(_._2 == 10L))
+    NearDupIndex.appendNearDupIndex(store, "nd",
+      c.where(col("doc_id") === 10L), "text", "doc_id", numBuckets = 4)
+    assert(probe() == full, "the re-added doc must be served at once")
   }
 
   test("probe bucket-prunes the bands table; fallback mode is identical") {
@@ -118,6 +141,10 @@ class NearDupIndexSpec extends SparkSpec {
     val store = tmpStore()
     NearDupIndex.buildNearDupIndex(store, "nd", c, "text", "doc_id",
       numBuckets = 4)
+    // a delete must not cost the probe its bucket pruning
+    import spark.implicits._
+    NearDupIndex.deleteFromNearDupIndex(store, "nd", Seq(5L).toDF("doc_id"),
+      tag = "t1")
     val out = NearDupIndex.nearDupAgainstIndex(store, "nd", b,
       "text", "doc_id", threshold = 0.5, materialize = false)
     val p = out.queryExecution.explainString(

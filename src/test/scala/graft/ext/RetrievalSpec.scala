@@ -290,9 +290,11 @@ class RetrievalSpec extends SparkSpec {
     val corpus = Seq(1L -> "hash join wins", 2L -> "hash join")
     Retrieval.buildPositionalIndex(store, "c",
       corpus.toDF("doc_id", "text"), "text", "doc_id", numBuckets = 2)
-    Retrieval.deleteFromPositionalIndex(store, "c", Seq(1L).toDF("doc_id"))
-    Retrieval.compactPositionalIndex(store, "c", numBuckets = 2)
-    assert(!store.exists("c_pos_tombstones"))
+    Retrieval.deleteFromPositionalIndex(store, "c", Seq(1L).toDF("doc_id"),
+      tag = "t1")
+    Retrieval.compactPositionalIndex(store, "c")
+    assert(!store.manifestEntries("c_pos").exists(_.startsWith("dv-")),
+      "compaction must fold the deletion vector into the files")
     assert(store.scan("c_pos").where(col("doc_id") === 1L).count() == 0)
     // re-add the taken-down doc id with fresh content after compaction
     store.appendBucketed("c_pos",
@@ -321,10 +323,49 @@ class RetrievalSpec extends SparkSpec {
       .orderBy("doc_id", "start_pos").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(occ == Seq((1L, 2L), (1L, 6L), (2L, 1L)))
-    Retrieval.deleteFromPositionalIndex(store, "c", Seq(1L).toDF("doc_id"))
+    Retrieval.deleteFromPositionalIndex(store, "c", Seq(1L).toDF("doc_id"),
+      tag = "t1")
     assert(occ == Seq((2L, 1L)), "tombstoned doc must drop")
-    Retrieval.deleteFromPositionalIndex(store, "c", Seq(2L).toDF("doc_id"))
+    // the delete keeps the positions table bucketed: every read of it
+    // still carries the bucket spec a term filter prunes on (the phrase
+    // plan's broadcast joins need no bucketing, so Spark's planner turns
+    // the bucketed scan off here, deletes or not)
+    import org.apache.spark.sql.execution.datasources.{
+      HadoopFsRelation, LogicalRelation}
+    val posRelations = Retrieval.phraseOccurrences(store, "c", "hash join")
+      .queryExecution.optimizedPlan.collect {
+        case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation
+        if r.dataSchema.fieldNames.contains("term") => r }
+    assert(posRelations.nonEmpty && posRelations.forall(_.bucketSpec.isDefined),
+      "the positions relation must stay bucketed after a delete")
+    Retrieval.deleteFromPositionalIndex(store, "c", Seq(2L).toDF("doc_id"),
+      tag = "t2")
     assert(occ.isEmpty, "tombstone appends accumulate")
+  }
+
+  test("a positional doc re-added after its delete is served at once") {
+    import spark.implicits._
+    val store = new graft.table.TableStore(spark,
+      java.nio.file.Files.createTempDirectory("graft_pos_readd").toString)
+    Retrieval.buildPositionalIndex(store, "c",
+      Seq(1L -> "hash join wins", 2L -> "hash join").toDF("doc_id", "text"),
+      "text", "doc_id", numBuckets = 2)
+    Retrieval.deleteFromPositionalIndex(store, "c", Seq(1L).toDF("doc_id"),
+      tag = "t1")
+    // re-add the taken-down id with fresh content, no compaction between
+    store.appendBucketed("c_pos",
+      Seq((1L, "hash join returns")).toDF("doc_id", "text")
+        .select(col("doc_id"),
+          posexplode(split(col("text"), " ")).as(Seq("pos0", "term")))
+        .select(col("term"), col("doc_id"),
+          (col("pos0") + 1).cast("bigint").as("pos")),
+      Seq("term"), 2)
+    val occ = Retrieval.phraseOccurrences(store, "c", "join returns")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(occ == Seq((1L, 2L)), "the re-added doc must be served at once")
+    assert(Retrieval.phraseOccurrences(store, "c", "join wins").isEmpty,
+      "the deleted content stays deleted")
   }
 
   test("rrfFuse: integer contributions sum across arms, ties break on id") {

@@ -4,14 +4,14 @@ import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The size-gated tombstone anti-join (TableStore.antiJoinKeys) across the
-  * persistent index families: a bulk-erasure tombstone table past the
-  * session's autoBroadcastJoinThreshold must plan a NON-broadcast
-  * anti-join (no forced hint — the build side of a forced broadcast is
-  * the executor-OOM at 100M takedown keys) at row-identical results,
-  * while a routine dimension-sized takedown keeps the broadcast
-  * guarantee. Mirrors DvDeleteSpec's gate pins for the deletion-vector
-  * path, which this helper generalizes. */
+/** The size-gated deletion-vector anti-join across the persistent index
+  * families, whose deletes are deletion vectors on their own tables: a
+  * bulk-erasure vector past the session's autoBroadcastJoinThreshold
+  * must plan a NON-broadcast anti-join (no forced hint — the build side
+  * of a forced broadcast is the executor-OOM at 100M takedown keys) at
+  * row-identical results, while a routine dimension-sized takedown keeps
+  * the broadcast guarantee. DvDeleteSpec pins the same gate on plain
+  * tables. */
 class TombstoneGateSpec extends SparkSpec {
 
   private def tmpStore() = new graft.table.TableStore(spark,
@@ -25,7 +25,7 @@ class TombstoneGateSpec extends SparkSpec {
 
   private def assertNoForcedBroadcast(df: DataFrame, what: String): Unit = {
     val joins = leftAntiJoins(df)
-    assert(joins.nonEmpty, s"$what: tombstone anti-join missing from plan")
+    assert(joins.nonEmpty, s"$what: deletion-vector anti-join missing from plan")
     assert(joins.forall(j => j.hint.rightHint.forall(_.strategy.isEmpty)),
       s"$what: bulk tombstones past the threshold must NOT force a " +
         s"broadcast: ${joins.map(_.hint)}")
@@ -64,7 +64,7 @@ class TombstoneGateSpec extends SparkSpec {
       numBuckets = 2)
     // bulk erasure: half the corpus
     NearDupIndex.deleteFromNearDupIndex(store, "nd",
-      spark.range(0, 60).selectExpr("id AS doc_id"))
+      spark.range(0, 60).selectExpr("id AS doc_id"), tag = "t1")
     def probe() = NearDupIndex.nearDupAgainstIndex(store, "nd", batch,
       "text", "doc_id", threshold = 0.5, materialize = false)
     val bulkRows = withThreshold("1024") {
@@ -90,9 +90,9 @@ class TombstoneGateSpec extends SparkSpec {
     NearDupIndex.buildNearDupIndex(store, "nd", c, "text", "doc_id",
       numBuckets = 2)
     NearDupIndex.deleteFromNearDupIndex(store, "nd",
-      spark.range(0, 60).selectExpr("id AS doc_id"))
+      spark.range(0, 60).selectExpr("id AS doc_id"), tag = "t1")
     withThreshold("1024") {
-      NearDupIndex.compactNearDupIndex(store, "nd", numBuckets = 2)
+      NearDupIndex.compactNearDupIndex(store, "nd")
     }
     val fresh = tmpStore()
     NearDupIndex.buildNearDupIndex(fresh, "nd", survivors, "text", "doc_id",
@@ -102,7 +102,8 @@ class TombstoneGateSpec extends SparkSpec {
         .collect().toSeq
     assert(bandRows(store) == bandRows(fresh),
       "compaction through the non-broadcast path must equal a rebuild")
-    assert(!store.exists("nd_tombstones"))
+    assert(Seq("nd_bands", "nd_docs").forall(t =>
+      !store.manifestEntries(t).exists(_.startsWith("dv-"))))
   }
 
   // --- positional index -----------------------------------------------
@@ -116,7 +117,7 @@ class TombstoneGateSpec extends SparkSpec {
     Retrieval.buildPositionalIndex(store, "pos", docs, "text", "doc_id",
       numBuckets = 2)
     Retrieval.deleteFromPositionalIndex(store, "pos",
-      spark.range(0, 40).selectExpr("id AS doc_id"))
+      spark.range(0, 40).selectExpr("id AS doc_id"), tag = "t1")
     def q() = Retrieval.phraseOccurrences(store, "pos", "alpha beta")
     val bulk = withThreshold("1024") {
       val p = q()
@@ -143,7 +144,7 @@ class TombstoneGateSpec extends SparkSpec {
     VectorIndex.buildIvfIndex(store, "ivf", vecs, "vec", "vec_id",
       nCells = 4, numBuckets = 2)
     VectorIndex.deleteFromIvfIndex(store, "ivf",
-      spark.range(0, 30).selectExpr("id AS vec_id"))
+      spark.range(0, 30).selectExpr("id AS vec_id"), tag = "t1")
     val queries = vecs.where(col("vec_id") % 20 === 0)
     def q() = VectorIndex.ivfTopKIndexed(store, "ivf", queries,
       "vec", "vec_id", k = 3, nProbe = 4)

@@ -81,7 +81,7 @@ class VectorIndexSpec extends SparkSpec {
       nCells = 8, numBuckets = 4)
     import spark.implicits._
     val dead = Seq(10L, 20L, 30L)
-    VectorIndex.deleteFromIvfIndex(store, "e", dead.toDF("vec_id"))
+    VectorIndex.deleteFromIvfIndex(store, "e", dead.toDF("vec_id"), tag = "t1")
     val after = VectorIndex.ivfTopKIndexed(store, "e", q,
       "embedding", "vec_id", k = 6, nProbe = 3)
     val rebuilt = tmpStore()
@@ -101,15 +101,37 @@ class VectorIndexSpec extends SparkSpec {
     VectorIndex.buildIvfIndex(store, "e", c, "embedding", "vec_id",
       nCells = 8, numBuckets = 4)
     import spark.implicits._
-    VectorIndex.deleteFromIvfIndex(store, "e", Seq(10L, 20L).toDF("vec_id"))
+    VectorIndex.deleteFromIvfIndex(store, "e", Seq(10L, 20L).toDF("vec_id"),
+      tag = "t1")
     val before = rows(VectorIndex.ivfTopKIndexed(store, "e", q,
       "embedding", "vec_id", k = 6, nProbe = 3))
-    VectorIndex.compactIvfIndex(store, "e", numBuckets = 4)
-    assert(!store.exists("e_tombstones"))
+    VectorIndex.compactIvfIndex(store, "e")
+    assert(!store.manifestEntries("e_vecs").exists(_.startsWith("dv-")),
+      "compaction must fold the deletion vector into the files")
     assert(store.scan("e_vecs")
       .where(col("vec_id").isin(10L, 20L)).count() == 0)
     assert(rows(VectorIndex.ivfTopKIndexed(store, "e", q,
       "embedding", "vec_id", k = 6, nProbe = 3)) == before)
+  }
+
+  test("a vector re-added after its delete is served at once") {
+    val c = corpus(120)
+    val q = c.where(col("vec_id") < 4)
+    val store = tmpStore()
+    VectorIndex.buildIvfIndex(store, "e", c, "embedding", "vec_id",
+      nCells = 8, numBuckets = 4)
+    def probe() = rows(VectorIndex.ivfTopKIndexed(store, "e", q,
+      "embedding", "vec_id", k = 6, nProbe = 3))
+    val full = probe()
+    // a returned neighbour, deleted and then re-added unchanged
+    val id = full.head._2
+    import spark.implicits._
+    VectorIndex.deleteFromIvfIndex(store, "e", Seq(id).toDF("vec_id"),
+      tag = "t1")
+    assert(probe().forall(_._2 != id))
+    VectorIndex.appendIvfIndex(store, "e", c.where(col("vec_id") === id),
+      "embedding", "vec_id", numBuckets = 4)
+    assert(probe() == full, "the re-added vector must be served at once")
   }
 
   test("probe bucket-prunes the vectors table on the probed cell ids") {
@@ -117,6 +139,10 @@ class VectorIndexSpec extends SparkSpec {
     val store = tmpStore()
     VectorIndex.buildIvfIndex(store, "e", c, "embedding", "vec_id",
       nCells = 16, numBuckets = 8)
+    // a delete must not cost the probe its bucket pruning
+    import spark.implicits._
+    VectorIndex.deleteFromIvfIndex(store, "e", Seq(199L).toDF("vec_id"),
+      tag = "t1")
     val out = VectorIndex.ivfTopKIndexed(store, "e",
       c.where(col("vec_id") === 0), "embedding", "vec_id", k = 3, nProbe = 1)
     val p = out.queryExecution.explainString(

@@ -151,6 +151,28 @@ class BucketedMergeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(coBucketedJoin(store.scan("t"), store.scan("t")) == Seq(4, 4))
   }
 
+  test("deleteWhere and compact keep a bucketed table bucket-pruned") {
+    val store = new TableStore(spark, newRoot("graft_bktrw"))
+    store.overwriteBucketed("t", spark.range(0, 1000, 1, 4).toDF("k"),
+      Seq("k"), numBuckets = 4)
+    // an aggregate on the bucket key keeps the scan bucketed (Spark
+    // turns off a bucketed scan no operator above needs)
+    def assertPruned(what: String): Unit = {
+      val q = store.scan("t").where(col("k") === 42L).groupBy("k").count()
+      val scans = collect(q.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s }
+      assert(scans.nonEmpty && scans.forall(s => s.bucketedScan &&
+          s.metadata.contains("SelectedBucketsCount")),
+        s"$what must leave the table bucketed:\n${q.queryExecution.executedPlan}")
+      assert(q.count() == 1)
+    }
+    store.deleteWhere("t", col("k") % 10 === 3)
+    assertPruned("deleteWhere")
+    store.compact("t", maxSnapshots = 0)
+    assertPruned("compact")
+    assert(store.scan("t").count() == 900)
+  }
+
   test("a plain append onto a bucketed table reads unbucketed, every row") {
     val store = new TableStore(spark, newRoot("graft_bktmix"))
     store.overwriteBucketed("t", spark.range(0, 300, 1, 3).toDF("k"),
